@@ -55,25 +55,6 @@ def _packed_step(acc: Column, c: Column) -> Column:
     )
 
 
-def poly_hash_packed(col: Column) -> Column:
-    """BOTH independent polynomial hashes of a string in ONE pass over its
-    characters, bit-packed into a single long (``h1 << 30 | h2``) —
-    bit-identical components to two separate :func:`poly_hash` calls.
-
-    The two-pair span-dedup key needs both components for every token;
-    computing them as two HOF expressions costs two full split+walk passes
-    because Catalyst does no CSE inside lambda bodies, and a
-    ``struct<h1,h2>`` accumulator is SLOWER still (per-step InternalRow
-    allocation in the interpreted lambda outweighs the saved pass —
-    measured). Packing both running hashes into one long keeps the
-    accumulator primitive: one pass, two shift/mask unpacks + two modular
-    updates + one repack per character, ~25% faster than the two-pass form
-    warm and half the array memory downstream.
-    """
-    chars = F.split(col, "")
-    return F.aggregate(chars, F.lit(0).cast("long"), _packed_step)
-
-
 def poly_hash_combined(col: Column) -> Column:
     """The injective ~2^60 combined key ``h1·MOD2 + h2`` of a string, in
     one char pass — for identity-class uses (document fingerprints, span
@@ -89,51 +70,6 @@ def poly_hash_combined(col: Column) -> Column:
         lambda acc: F.shiftright(acc, PACK_SHIFT) * F.lit(MOD2)
         + acc.bitwiseAND(F.lit(PACK_MASK)),
     )
-
-
-def pow_mod(exp: Column, base: int, mod: int, *, bits: int = 31) -> Column:
-    """``base^exp mod mod`` for a non-negative integer COLUMN exponent,
-    as a pure codegen expression: binary exponentiation unrolled over the
-    exponent's bits (``bits`` fixed WHEN steps — no loop, no UDF). Every
-    intermediate product is < mod² < 2^63 for the sub-2^31 primes here.
-
-    This is what lets a position-indexed modular power (e.g. BASE^pos in a
-    rolling-hash prefix scheme) stay JVM-side: the alternative — a Python
-    UDF or an O(exp) fold — is either off the fast path or superlinear.
-
-    Tree-size note: each step multiplies ``acc`` by a per-bit CONDITIONAL
-    FACTOR (``bit set ? base^(2^k) : 1``) so ``acc`` appears exactly once
-    per step and the expression tree is linear in ``bits``. The tempting
-    ``when(bit, acc*sq).otherwise(acc)`` form references ``acc`` twice and
-    doubles the tree each step — 2^31 nodes, a driver OOM at analysis.
-
-    Exponents with bits ABOVE the unroll width would silently wrap (the
-    high bits are never consumed), corrupting every downstream hash for
-    that row — e.g. a single >= 2^31-token document poisoning span
-    detection. A row-level ``raise_error`` guard makes the cap fail loudly
-    instead; it costs one comparison per row.
-    """
-    acc = F.lit(1).cast("long")
-    sq = base % mod
-    for k in range(bits):
-        factor = F.when(
-            exp.bitwiseAND(F.lit(1 << k)) != 0, F.lit(sq)
-        ).otherwise(F.lit(1)).cast("long")
-        acc = (acc * factor) % F.lit(mod)
-        sq = (sq * sq) % mod
-    return F.when(
-        (exp < 0) | (exp >= F.lit(1 << bits)),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"pow_mod: exponent outside [0, 2^{bits}) — the "
-                    "binary-exponentiation unroll would silently drop "
-                    "high bits: "
-                ),
-                exp.cast("string"),
-            )
-        ).cast("long"),
-    ).otherwise(acc)
 
 
 def affine_hash(h: Column, a: int, b: int) -> Column:
@@ -179,7 +115,5 @@ __all__ = [
     "char_shingles",
     "poly_hash",
     "poly_hash_combined",
-    "poly_hash_packed",
-    "pow_mod",
     "word_tokens",
 ]

@@ -10,18 +10,18 @@ single-threaded in numpy (optimization guide §4.2: hand whole batches to
 vectorized native code; the JVM expression interpreter is the slow path,
 not Python).
 
-These kernels are **bit-identical** replacements, not approximations: the
-same per-shingle polynomial hash ``Σ cp·BASE^i mod MOD`` over the same
-codepoint sequence, the same ``(a·h+b) mod MOD`` universal family, the
-same ``len ≥ k`` row filter — pinned by ``tests/test_sigkernel.py``
-against the HOF forms on real corpus rows plus unicode edge cases
-(astral-plane emoji, CJK, combining marks, empty/short/NULL texts). The
-polynomial window hash is evaluated via the Rabin–Karp prefix-sum
-unrolling (the same algebra ``operators/spans.py`` uses for its
-``method="prefix"`` leg): with ``Q[j] = cp[j]·BASE^{−j} (mod M)`` and
-``S`` the running sum of ``Q``, the hash of the window ``[i, i+k−1]`` is
+These kernels are **exact**, not approximations: the per-shingle
+polynomial hash ``Σ cp·BASE^i mod MOD`` over the codepoint sequence, the
+``(a·h+b) mod MOD`` universal family and the ``len ≥ k`` row filter are
+pinned by ``tests/test_sigkernel.py`` against pure-Python folds (and
+against the JVM ``char_shingles``/``poly_hash`` expressions) on real
+corpus rows plus unicode edge cases (astral-plane emoji, CJK, combining
+marks, empty/short/NULL texts). The polynomial window hash is evaluated
+via the Rabin–Karp prefix-sum unrolling: with
+``Q[j] = cp[j]·BASE^{−j} (mod M)`` and ``S`` the running sum of ``Q``,
+the hash of the window ``[i, i+k−1]`` is
 ``BASE^{i+k−1}·(S[i+k−1] − S[i−1]) mod M`` — O(1) per position instead of
-the fold's O(k), and exactly equal because every step is the same modular
+a fold's O(k), and exactly equal because every step is the same modular
 arithmetic.
 
 Arrow mechanics: Spark ships ``mapInArrow`` batches whose string column is
@@ -29,9 +29,8 @@ one contiguous UTF-8 data buffer plus an offsets array. For all-ASCII
 batches (checked with ``pyarrow.compute.string_is_ascii``) the codepoint
 sequence IS the byte sequence, so the kernel reads the buffers zero-copy;
 non-ASCII batches fall back to per-row UTF-32 decode (codepoint-exact,
-matching Spark's ``split('')``/``ascii()`` semantics — verified against
-the HOF form on astral-plane inputs, where both sides consume code
-points, not UTF-16 units).
+matching Spark's ``split('')``/``ascii()`` semantics on astral-plane
+inputs, where both consume code points, not UTF-16 units).
 
 Overflow bounds (all int64): codepoints < 2^21, MOD/MOD2 < 2^30, so
 ``cp·BASE^{-j} mod M`` products < 2^51, prefix sums over ≤ 2^33 windows
@@ -237,7 +236,7 @@ def shingle_array_batches(
     any ``extra_fields`` columns (batch columns 2+) pass through
     untouched. ASCII batches slice the Arrow byte buffer directly; mixed
     batches fall back to per-row codepoint slicing (both pinned
-    equivalent to the HOF form)."""
+    equivalent to the ``char_shingles`` HOF)."""
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -558,8 +557,9 @@ def _token_packed_hashes(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def token_hash_array_batches(batch_iter: Iterator, *, doc_id_field) -> Iterator:
     """``mapInArrow`` body: (doc_id, text) → (doc_id, __th: list<long>) —
-    the exact ``transform(word_tokens(text), poly_hash_packed)`` arrays
-    (``operators/spans.py`` / ``dedup.simhash`` token hashing), one
+    per-token ``poly_hash`` values for both ``(BASE, MOD)`` and
+    ``(BASE2, MOD2)``, packed ``h1·2^30 + h2``, of ``word_tokens(text)``
+    (``dedup.simhash`` token hashing), one
     vectorized pass over :func:`_token_packed_hashes` (tokenization and
     hashing contract documented there); a NULL text yields a NULL array."""
     import pyarrow as pa
@@ -595,9 +595,9 @@ def token_hash_array_df(
 ):
     """DataFrame form of :func:`token_hash_array_batches`: ``(id_col,
     out_col: array<long>)`` — per-token packed ``h1·2^30+h2`` polynomial
-    hashes of the lowercase whitespace tokens, bit-identical to
-    ``F.transform(word_tokens(F.lower(col)), poly_hash_packed)``
-    (equivalence-pinned in ``tests/test_sigkernel.py``). Lower/trim run
+    hashes of the lowercase whitespace tokens: ``poly_hash`` of each
+    ``word_tokens(F.lower(col))`` element for both pairs (pinned in
+    ``tests/test_sigkernel.py``). Lower/trim run
     in the JVM so Spark's own case mapping applies; only the split and
     the per-char modular folds move to the vectorized kernel."""
     import pyarrow as pa
@@ -634,19 +634,13 @@ def token_window_hash_batches(
     """``mapInArrow`` body: (doc_id, text) → exploded (doc_id, pos, h) —
     the combined two-pair polynomial hash of every ``w``-token window
     (1-based start positions), one output row per window of every doc
-    with ≥ w tokens. Bit-identical to the JVM fold/prefix strategies of
-    ``operators/spans.py::window_hashes`` (equivalence-pinned):
+    with ≥ w tokens (``operators/spans.py::window_hashes``):
     ``h = H1·MOD2 + H2`` with ``H_p = Σ t_j·B_p^(e−j) mod M_p`` over the
     per-token component hashes, evaluated via the same Rabin–Karp
     prefix-sum algebra as the shingle kernels — O(1) per window at any
-    ``w``. Docs with < w tokens (and NULL texts) contribute no rows —
-    exactly the ``size(__th) ≥ w`` row filter of the array form.
-
-    This collapses the whole JVM window-hash front end: no per-position
-    interpreted fold (O(w)/window), and none of the rolling strategy's
-    fixed machinery (doc-keyed exchange, per-token posexplode, powers
-    broadcast, two WindowExec layers) — the windows never exist as JVM
-    rows at all, only (id, pos, h) triples leave the kernel."""
+    ``w``. Docs with < w tokens (and NULL texts) contribute no rows. The
+    windows never exist as JVM rows; only (id, pos, h) triples leave the
+    kernel."""
     import pyarrow as pa
 
     from .hashing import BASE2, MOD2, PACK_MASK, PACK_SHIFT
@@ -695,10 +689,9 @@ def token_window_hash_df(
     """DataFrame form of :func:`token_window_hash_batches`: the full
     ``operators/spans.py::window_hashes`` frame ``(id_col, pos, h)`` from
     ONE vectorized Arrow pass — no doc-keyed exchange, no per-token
-    explode, no powers broadcast, no window machinery. Lower/trim stay in
-    the JVM (Spark's own case mapping); ``pos`` is int (matching the JVM
-    strategies' sequence/posexplode type) and ``h`` the injective ~2^60
-    combined key."""
+    explode, no window machinery. Lower/trim stay in the JVM (Spark's own
+    case mapping); ``pos`` is int and ``h`` the injective ~2^60 combined
+    key."""
     import pyarrow as pa
 
     from pyspark.sql import functions as F
@@ -736,8 +729,8 @@ def minhash_signature_batches(
 ) -> Iterator:
     """``mapInArrow`` body: (doc_id, text) record batches → (doc_id, sig)
     record batches, sig = the ``num_hashes`` MinHash mins. Rows with
-    fewer than ``k`` codepoints (and NULL texts) are dropped, matching
-    the HOF form's ``length ≥ k`` filter."""
+    fewer than ``k`` codepoints (and NULL texts) are dropped — Spark's
+    ``length(text) ≥ k``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

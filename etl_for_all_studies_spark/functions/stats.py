@@ -163,9 +163,8 @@ def betainc_expr(a: Column, b: Column, x: Column, *, n_iter: int = 200) -> Colum
 def spearman_p_value_t_expr(rho: Column, n: Column) -> Column:
     """Two-sided **exact Student-t** p-value as native expressions (no UDF):
     ``p = I_{df/(df+t²)}(df/2, ½)`` with ``df = n − 2`` — the SciPy-primary
-    semantics of the reference (``correlation.py:11-12``), previously only
-    available via the pandas UDF (:func:`spearman_p_value_t_udf`, kept as
-    the oracle). Matches the scalar path to < 1e-12 absolute
+    semantics of the reference (``correlation.py:11-12``). Matches the
+    scalar :func:`t_two_sided_p` to < 1e-12 absolute
     (``tests/test_stats_properties.py``). NULL for n < 3; 0.0 at |ρ| ≥ 1.
     """
     df = (n - F.lit(2)).cast("double")
@@ -252,36 +251,6 @@ def t_two_sided_p(t_abs: float, df: float) -> float:
         return float("nan")
     x = df / (df + t_abs * t_abs)
     return min(max(_betainc_scalar(df / 2.0, 0.5, x), 0.0), 1.0)
-
-
-def spearman_p_value_t_udf():
-    """Vectorized (rho, n) → exact t-distribution two-sided p.
-
-    A pandas UDF is acceptable here because it runs on the *aggregated* pair
-    rows (one per gene pair), never on sample-level data — cardinality is
-    pairs, not facts. Semantics match SciPy's ``spearmanr`` p-value.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies them,
-    # which pyspark's hint resolver can't evaluate against local imports;
-    # hint-less pandas_udf defaults to SCALAR, which is what this is
-    @pandas_udf("double")
-    def t_p(rho, n):
-        out = np.empty(len(rho), dtype="float64")
-        for i, (r, nn) in enumerate(zip(rho.to_numpy(), n.to_numpy())):
-            if nn < 3 or np.isnan(r):
-                out[i] = np.nan
-            elif abs(r) >= 1.0:
-                out[i] = 0.0
-            else:
-                t_abs = abs(r) * ((nn - 2) / (1.0 - r * r)) ** 0.5
-                out[i] = t_two_sided_p(t_abs, nn - 2)
-        return pd.Series(out)
-
-    return t_p
 
 
 def average_rank(partition_cols: list[str], value_col: str) -> Column:

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import CacheScope, persist
-from ..functions.hashing import BASE, MOD
 from ..functions.sigkernel import shingle_array_df
 from ..partitioning import compute_spread
 
@@ -234,7 +233,6 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = 5,
     num_hashes: int = 16,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """(doc_id, sig: array<long>) MinHash signatures over k-char shingles.
 
@@ -242,13 +240,11 @@ def minhash_signatures(
     where h is the portable polynomial shingle hash. Evaluated by the
     vectorized Arrow kernel (``functions/sigkernel.py``): one
     ``mapInArrow`` pass, numpy rolling-hash arithmetic, no explode, no
-    shuffle — signatures stay embarrassingly parallel per document. The
-    kernel is bit-identical to the previous HOF form
-    (:func:`minhash_signatures_hof`, kept as the equivalence pin): same
-    polynomial hash over the same codepoints, same affine family, same
-    ``len ≥ k`` filter — but the per-position O(k) interpreted fold
-    becomes O(1) vectorized native arithmetic (optimization guide §4.2;
-    measured ~6 s → ~0.3 s of executor time for the sf0.1 pass).
+    shuffle — signatures stay embarrassingly parallel per document.
+    Texts shorter than ``k`` get no row: an all-NULL signature would
+    band-match every such doc pairwise; they can only be exact dups.
+    ``tests/test_sigkernel.py`` pins the kernel against a pure-Python fold
+    over code points.
     """
     import pyarrow as pa
 
@@ -271,89 +267,6 @@ def minhash_signatures(
     return base.mapInArrow(
         _sig_batches, schema="doc_id long, sig array<bigint>"
     )
-
-
-def minhash_signatures_hof(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    k: int = 5,
-    num_hashes: int = 16,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """The pre-r11 higher-order-function signature pass — retained as the
-    spec the Arrow kernel is equivalence-tested against
-    (``tests/test_sigkernel.py``); no query path calls this form.
-    """
-    seeds = MINHASH_SEEDS[:num_hashes]
-    # Hash every k-shingle from ONE per-doc codepoint array: codepoints are
-    # computed once (length ops) and each position's hash is a k-step fold
-    # of array lookups — the naive form (substring per position, then a
-    # char-split per substring inside the hash) re-materializes k strings
-    # per position and measured ~2× slower on the sf0.1 corpus. Duplicate
-    # shingles are NOT deduped here: min() over the hash multiset equals
-    # min() over the distinct set, so signatures are bit-identical to
-    # hashing ``char_shingles`` (the Jaccard-verify path keeps the distinct
-    # arrays — set semantics matter there).
-    # Materialize the hashed-shingle array first: HOF expressions get no
-    # common-subexpression elimination, so without this barrier the poly
-    # hash would be re-inlined (and re-evaluated) inside all ``num_hashes``
-    # array_min branches — a num_hashes× blowup of the dominant cost.
-    # Shingle-less docs (len < k) are excluded: their signature would be all
-    # NULL, and Spark's structural array equality would band-match every such
-    # doc pairwise (0/0 Jaccard); they can only be exact dups, never fuzzy.
-    txt = F.col(text_col)
-    # the codepoint array MUST be materialized before the per-position fold
-    # references it: HOF lambdas get no common-subexpression elimination, so
-    # an inline ``cps`` would be re-evaluated (a full O(len) pass) for every
-    # single fold step — O(len²·k) per document. Behind the barrier it is a
-    # plain column reference, one array lookup per step.
-    cps_df = persist(
-        # spread the raw rows before the O(len·k) per-position fold — a
-        # single-split scan would serialize the sketch pass onto one task
-        # (partitioning.py; guarded no-op on already-wide scans)
-        compute_spread(
-            docs.select("doc_id", txt.alias("__txt")).where(
-                F.length(txt) >= F.lit(k)
-            )
-        ).select(
-            "doc_id",
-            F.transform(
-                F.split(F.col("__txt"), ""),
-                lambda c: F.ascii(c).cast("long"),
-            ).alias("__cps"),
-        ),
-        scope,
-    )
-    arr = F.col("__cps")
-    positions = F.sequence(F.lit(1), F.size(arr) - F.lit(k - 1))
-    shingle_hashes = F.transform(
-        positions,
-        lambda i: F.aggregate(
-            F.sequence(i, i + F.lit(k - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, j: (acc * F.lit(BASE) + F.element_at(arr, j))
-            % F.lit(MOD),
-        ),
-    )
-    hashed = persist(
-        cps_df.select("doc_id", shingle_hashes.alias("hh")).where(
-            F.size(F.col("hh")) > 0
-        ),
-        scope,
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("hh"), lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MOD)
-                )
-            )
-            for a, b in seeds
-        ]
-    )
-    return hashed.select("doc_id", sig.alias("sig"))
-
 
 
 def _band_explode(
@@ -554,13 +467,13 @@ def incremental_minhash_dedup(
     """
     rows_per_band = exact_rows_per_band(num_hashes, bands)
     sig_new = persist(
-        minhash_signatures(new_docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope)
+        minhash_signatures(new_docs, text_col=text_col, k=k, num_hashes=num_hashes)
         if new_signatures is None
         else new_signatures,
         scope,
     )
     sig_seen = persist(
-        minhash_signatures(seen_docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope)
+        minhash_signatures(seen_docs, text_col=text_col, k=k, num_hashes=num_hashes)
         if seen_signatures is None
         else seen_signatures,
         scope,

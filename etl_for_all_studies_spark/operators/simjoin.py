@@ -69,11 +69,7 @@ from pyspark.sql import functions as F
 
 from ..caching import CacheScope, persist
 from ..functions.sigkernel import distinct_shingle_hash_df
-from .dedup import (
-    exact_rows_per_band,
-    minhash_lsh_candidates,
-    minhash_signatures,
-)
+from .dedup import exact_rows_per_band, minhash_lsh_candidates
 from .prefixjoin import jaccard_prefix_pairs
 
 logger = logging.getLogger(__name__)
@@ -256,6 +252,31 @@ def route_jaccard_join(
     return mode
 
 
+def _shared_kernel_pass(
+    docs: DataFrame,
+    *,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    scope: CacheScope | None,
+) -> DataFrame:
+    """ONE persisted combined signatures+shingles kernel scan: ``(doc_id,
+    sig, __set)`` — ``sig`` NULL for docs shorter than ``k``."""
+    from ..functions.sigkernel import minhash_and_shingles_df
+    from .dedup import MINHASH_SEEDS
+
+    return persist(
+        minhash_and_shingles_df(
+            docs,
+            text_col=text_col,
+            k=k,
+            seeds=MINHASH_SEEDS[:num_hashes],
+            set_col="__set",
+        ),
+        scope,
+    )
+
+
 def _lsh_verified_pairs(
     docs: DataFrame,
     *,
@@ -266,44 +287,23 @@ def _lsh_verified_pairs(
     bands: int,
     max_bucket_size: int | None,
     scope: CacheScope | None,
-    sets: DataFrame | None = None,
-    sigs: DataFrame | None = None,
+    kernel: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidates verified to the ROUTER's output contract —
     same columns as ``jaccard_prefix_pairs`` (sizes included) so the two
     legs are drop-in interchangeable. Approximate recall: a true pair is
     missed only when every band disagrees (same contract as
     ``minhash_dedup``, whose verify this mirrors with size columns).
-    ``sets`` / ``sigs``: optional precomputed persisted ``(doc_id,
-    __set)`` / ``(doc_id, sig)`` tables — the router's shared combined
-    kernel pass (r12) hands BOTH in, so the routed leg reads the text
-    zero more times. Without either (explicit ``mode="lsh"``), ONE
-    combined kernel scan produces both (guide §1.2: one text pass, not
-    two); with only ``sets``, the signature pass reads the text again."""
-    if sets is None:
-        from ..functions.sigkernel import minhash_and_shingles_df
-        from .dedup import MINHASH_SEEDS
-
-        both = persist(
-            minhash_and_shingles_df(
-                docs,
-                text_col=text_col,
-                k=k,
-                seeds=MINHASH_SEEDS[:num_hashes],
-                set_col="__set",
-            ),
-            scope,
+    ``kernel``: the router's persisted combined kernel pass (see
+    ``_shared_kernel_pass``), so the routed leg reads the text zero more
+    times; without it (explicit ``mode="lsh"``) the leg runs that ONE
+    combined scan itself (guide §1.2: one text pass, not two)."""
+    if kernel is None:
+        kernel = _shared_kernel_pass(
+            docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope
         )
-        sigs = both.where(F.col("sig").isNotNull()).select("doc_id", "sig")
-        sets = both.select("doc_id", "__set")
-    elif sigs is None:
-        sigs = persist(
-            minhash_signatures(
-                docs, text_col=text_col, k=k, num_hashes=num_hashes,
-                scope=scope,
-            ),
-            scope,
-        )
+    sigs = kernel.where(F.col("sig").isNotNull()).select("doc_id", "sig")
+    sets = kernel.select("doc_id", "__set")
     candidates = minhash_lsh_candidates(
         sigs,
         bands=bands,
@@ -361,7 +361,7 @@ def jaccard_pairs_auto(
             f"{num_hashes % bands} of the hash functions"
         )
     arrays: DataFrame | None = None
-    sigs: DataFrame | None = None
+    kernel: DataFrame | None = None
     if mode == "auto":
         # ONE text pass for the whole routed call (r11 shared the shingle
         # arrays between the profile and either leg's verify join; r12
@@ -375,21 +375,10 @@ def jaccard_pairs_auto(
         # them. With a sampled profile the arrays cover only the sample,
         # so the legs rebuild their own full-corpus tables.
         if profile_fraction >= 1.0:
-            from ..functions.sigkernel import minhash_and_shingles_df
-            from .dedup import MINHASH_SEEDS
-
-            both = persist(
-                minhash_and_shingles_df(
-                    docs,
-                    text_col=text_col,
-                    k=k,
-                    seeds=MINHASH_SEEDS[:num_hashes],
-                    set_col="__set",
-                ),
-                scope,
+            kernel = _shared_kernel_pass(
+                docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope
             )
-            arrays = both.select("doc_id", "__set")
-            sigs = both.where(F.col("sig").isNotNull()).select("doc_id", "sig")
+            arrays = kernel.select("doc_id", "__set")
         mode = route_jaccard_join(
             docs,
             text_col=text_col,
@@ -418,8 +407,7 @@ def jaccard_pairs_auto(
             bands=bands,
             max_bucket_size=max_bucket_size,
             scope=scope,
-            sets=arrays,
-            sigs=sigs,
+            kernel=kernel,
         )
     raise ValueError(f"mode must be auto|prefix|lsh, got {mode!r}")
 

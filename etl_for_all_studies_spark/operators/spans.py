@@ -10,49 +10,16 @@ whole corpus and merge the hits into contiguous spans a trimmer can cut.
 The suffix-array formulation of the paper is replaced by the Spark-native
 shape — every stage linear and keyed:
 
-1. per-doc token-hash arrays — one portable polynomial hash per token for
-   EACH of two independent ``(base, mod)`` pairs, computed in a single
-   char pass and bit-packed ``h1·2^30 + h2`` into one long per token
-   (:func:`..functions.hashing.poly_hash_packed`) — persisted, the same
-   no-CSE-for-HOFs barrier the MinHash signatures use;
-2. one canonical polynomial window hash per start position and pair,
-   combined into a single ~2^60 key (see *Collision math* below). Two
-   physical strategies produce bit-identical hashes (``method=``):
-
-   - ``"fold"`` — an O(w) fold per position over the in-row token-hash
-     array. No extra shuffle; the measured winner at every practical
-     width (see ``"auto"`` below).
-   - ``"prefix"`` — the Rabin–Karp rolling form, parallelized. The
-     sequential O(1) recurrence ``H(p+1) = (H(p) − t_p·B^{w−1})·B + t_{p+w}``
-     doesn't distribute, but its algebraic unrolling does: with
-     ``weighted_j = t_j·B^{−j} (mod M)``, the window hash ending at e is
-     ``H = B^e · Σ_{j=e−w+1..e} weighted_j (mod M)`` — a *sliding sum* over
-     a per-doc ordered window plus one binary-exponentiation power
-     (:func:`..functions.hashing.pow_mod`, 31 codegen'd WHEN steps), i.e.
-     O(1) amortized per position instead of O(w). Physical shape: one
-     doc-keyed repartition of the compact hash arrays, then
-     posexplode → per-doc sort → sliding sum — the window's required
-     hash distribution is satisfied by the pre-explode repartition, so
-     no token-level shuffle is added.
-   - ``"auto"`` (default) — the vectorized Arrow kernel
-     (:func:`..functions.sigkernel.token_window_hash_df`, r11): ONE
-     ``mapInArrow`` pass tokenizes, hashes, and emits the (id, pos, h)
-     window rows directly via the same prefix-sum algebra as the
-     ``"prefix"`` strategy, O(1)/window at any ``w`` — none of either JVM
-     strategy's machinery (no per-position interpreted fold, no doc-keyed
-     exchange/posexplode/powers-broadcast/WindowExec) survives in the
-     plan. Bit-identical to both JVM forms (test-pinned), lazy plan, no
-     call-time Spark jobs. Historical routing note: before the kernel,
-     ``auto`` routed statically on width between the JVM strategies —
-     fold below ``_AUTO_PREFIX_MIN_W`` (= 25), rolling at or above, the
-     measured JVM crossover (fold 2.3→17.7 s across w = 8→100 vs roll
-     ~3 s flat; SCALE.md round 7). That crossover still governs anyone
-     choosing between the explicit JVM strategies.
-
-3. ONE corpus-wide groupBy on the combined window hash → occurrence
+1. one canonical polynomial hash per ``w``-token window for EACH of two
+   independent ``(base, mod)`` pairs, combined into a single ~2^60 key
+   (see *Collision math* below). One vectorized Arrow pass
+   (:func:`..functions.sigkernel.token_window_hash_df`) tokenizes, hashes
+   every token and emits the (id, pos, h) window rows through the
+   Rabin–Karp prefix-sum algebra — O(1) per window at any ``w``;
+2. ONE corpus-wide groupBy on the combined window hash → occurrence
    counts; windows with count > 1 are duplicated (within-doc repeats
    count too);
-4. per-doc gaps-and-islands merge of overlapping/touching hit windows into
+3. per-doc gaps-and-islands merge of overlapping/touching hit windows into
    spans — a window partitioned by doc_id (per-doc history is the bounded
    dimension, same contract as the event-stream operators).
 
@@ -81,283 +48,12 @@ paths).
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import CacheScope, persist
-from ..partitioning import compute_spread
-from ..functions.hashing import (
-    BASE,
-    BASE2,
-    MOD,
-    MOD2,
-    PACK_MASK,
-    PACK_SHIFT,
-    poly_hash_packed,
-    pow_mod,
-    word_tokens,
-)
-
-# the two independent (base, modulus) pairs behind the combined ~2^60 key
-_PAIRS: tuple[tuple[int, int], ...] = ((BASE, MOD), (BASE2, MOD2))
-# modular inverses of the bases (Fermat: b^(m-2) mod m) — the "divide by
-# B^j" weighting the prefix/sliding-sum form needs
-_INV_BASE: tuple[int, ...] = tuple(pow(b, m - 2, m) for b, m in _PAIRS)
-
-# auto-routing threshold on WINDOW WIDTH: fold is O(w)/window with no
-# shuffle; the rolling form is O(1)/window behind one doc-keyed exchange +
-# sort + a broadcast powers table (~2.5 s of fixed machinery at local
-# scale, amortizing at cluster scale). Measured crossover at equal
-# parallelism (13.5M windows, 32 tasks): fold 2.3/5.0/9.5/17.7 s vs
-# rolling ~3 s flat at w = 8/25/50/100 — the lines cross near w ≈ 16;
-# 25 keeps small-fixture folds shuffle-free with margin (SCALE.md round 7)
-_AUTO_PREFIX_MIN_W = 25
-
-# Practical per-document length bound for the prefix/rolling path: its
-# position-keyed powers table holds one broadcast row per distinct token
-# position up to the LONGEST document (5 longs ≈ 40 B raw, ~3× that as a
-# broadcast hash relation), so the driver cost is set by a single outlier
-# doc, not the corpus. 2^21 positions ≈ a 2M-token (~10 MB) document and
-# a worst-case ~250 MB broadcast — far above any real pretraining doc and
-# safely inside an 8 GB driver. Beyond it the arithmetic is still exact
-# (pow_mod is correct to 2^31) but the broadcast would OOM the driver with
-# no useful error, so the plan raises loudly at the first over-long doc
-# and points at the fold strategy, which is O(1) driver memory in doc
-# length (ADVICE r7).
-_MAX_PREFIX_DOC_TOKENS = 1 << 21
-
-
-def _combine(h1: Column, h2: Column) -> Column:
-    """Injective combine of the two component hashes: h1·MOD2 + h2 < 2^60."""
-    return h1 * F.lit(MOD2) + h2
-
-
-def _token_hash_arrays(
-    docs: DataFrame, *, w: int, text_col: str, id_col: str
-) -> DataFrame:
-    """(id, __th: array<long>) for docs with ≥ w tokens — both polynomial
-    token hashes per (base, mod) pair, bit-packed ``h1·2^30 + h2``,
-    lowercase whitespace tokenization. r11: the interpreted per-char HOF
-    fold (``transform(word_tokens(...), poly_hash_packed)``) was the span
-    family's dominant executor stage (19.7 s of 32.2 s on ``dup_spans`` at
-    sf0.1 — tools/profile_query.py); the vectorized Arrow kernel computes
-    the identical arrays (equivalence-pinned with the retained HOF form,
-    ``_token_hash_arrays_hof``/``tests/test_sigkernel.py``)."""
-    from ..functions.sigkernel import token_hash_array_df
-
-    return token_hash_array_df(
-        docs, text_col=text_col, id_col=id_col, out_col="__th"
-    ).where(F.size(F.col("__th")) >= F.lit(w))
-
-
-def _token_hash_arrays_hof(
-    docs: DataFrame, *, w: int, text_col: str, id_col: str
-) -> DataFrame:
-    """The pre-r11 interpreted-HOF token-hash pass — retained as the spec
-    the Arrow kernel is equivalence-tested against; no query path calls
-    this form. (One char pass per token via ``poly_hash_packed``: two
-    separate transform columns would re-split and re-walk every token — no
-    CSE inside HOF lambdas — and a struct element is both slower to build
-    and 2× the persisted footprint.)"""
-    toks = word_tokens(F.lower(F.col(text_col)))
-    # spread the raw (id, text) rows BEFORE the per-char hash pass: a small
-    # single-split scan would otherwise run the whole O(chars) fold on one
-    # task (partitioning.py — guarded no-op when the scan is already wide)
-    return compute_spread(docs.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.transform(toks, lambda t: poly_hash_packed(t)).alias("__th"),
-    ).where(F.size(F.col("__th")) >= F.lit(w))
-
-
-def _window_hashes_fold(hashed: DataFrame, *, w: int, id_col: str) -> DataFrame:
-    """O(w)-per-position fold over the in-row packed token-hash array —
-    BOTH pairs advance in one primitive-long aggregate per position (a
-    second aggregate would double the interpreted per-step iteration; a
-    struct accumulator allocates an InternalRow per step — measured
-    slower). The packed accumulator is unpacked/updated/repacked with
-    shift/mask arithmetic each step, and the aggregate's ``finish`` lambda
-    converts to the injective ~2^60 KEY (h1·MOD2 + h2 — one reference:
-    aliasing the aggregate twice would re-run the whole fold, no CSE in
-    HOFs). Overflow bounds: h1·2^30 < 2^60, update products < 2^37."""
-    positions = F.sequence(F.lit(1), F.size(F.col("__th")) - F.lit(w - 1))
-
-    def _fold(i: Column, arr: Column) -> Column:
-        def step(acc: Column, j: Column) -> Column:
-            t = F.element_at(arr, j)
-            h1 = (
-                F.shiftright(acc, PACK_SHIFT) * _PAIRS[0][0]
-                + F.shiftright(t, PACK_SHIFT)
-            ) % _PAIRS[0][1]
-            h2 = (
-                acc.bitwiseAND(F.lit(PACK_MASK)) * _PAIRS[1][0]
-                + t.bitwiseAND(F.lit(PACK_MASK))
-            ) % _PAIRS[1][1]
-            return h1 * F.lit(1 << PACK_SHIFT) + h2
-
-        return F.aggregate(
-            F.sequence(i, i + F.lit(w - 1)),
-            F.lit(0).cast("long"),
-            step,
-            lambda acc: _combine(
-                F.shiftright(acc, PACK_SHIFT), acc.bitwiseAND(F.lit(PACK_MASK))
-            ),
-        )
-
-    return hashed.select(
-        id_col,
-        F.explode(
-            F.transform(
-                positions,
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    _fold(i, F.col("__th")).alias("h"),
-                ),
-            )
-        ).alias("ph"),
-    ).select(id_col, F.col("ph.pos").alias("pos"), F.col("ph.h").alias("h"))
-
-
-def _window_hashes_prefix(hashed: DataFrame, *, w: int, id_col: str) -> DataFrame:
-    """Rabin–Karp rolling form as a distributed sliding sum (see module
-    docstring step 2): repartition the compact per-doc hash arrays by doc
-    id, posexplode to (id, j, t1, t2) — the explode preserves the hash
-    partitioning, so the per-doc window below needs only a local sort —
-    weight each token hash by B^{−j}, sliding-sum the last w weights, and
-    renormalize by B^e.
-
-    The modular powers come from a POSITION-KEYED BROADCAST TABLE, not a
-    per-row ``pow_mod``: WindowExec evaluates its input and neighboring
-    projections on the interpreted path, where the 31-step unroll measured
-    ~18× its codegen cost (13.5 s vs 0.76 s for the same expressions over
-    13.5M rows) and dominated the whole strategy (~25 s → 1.75 s after the
-    switch, xor-identical; round-7 ablation, SCALE.md). The table is one
-    row per DISTINCT position (Zipf-free: ≤ max doc length), built lazily
-    from the exploded frame itself and broadcast — four ``pow_mod`` chains
-    per distinct position instead of four per window.
-
-    Overflow bounds: every table entry < 2^30; t·inv < 2^60; the running
-    prefix sum < positions·2^30 ≤ 2^61 at the 2^31-token ``pow_mod`` cap.
-    The ARITHMETIC cap is not the practical one: the powers table is one
-    broadcast row per position up to the longest doc, so the plan guards
-    at ``_MAX_PREFIX_DOC_TOKENS`` (2^21) and raises loudly past it rather
-    than silently OOM-ing the driver; (sum mod M)·pw < 2^60."""
-    # PIN the partition count (REPARTITION_BY_NUM): AQE's bytes-based
-    # coalescing sees only the compact packed arrays crossing this exchange
-    # (~20 KB per 2.7k-token doc) and folds the whole corpus into ONE
-    # post-shuffle partition — but the stage downstream explodes each array
-    # into n_tokens rows and runs ~4 pow_mod chains per row, so it is
-    # compute-dense per byte. Measured: the un-pinned form serialized a
-    # 1.3M-window corpus onto a single task (~21 s where 32 tasks take
-    # <1 s — tools/bench_scaleup_spans.py crossover-mixed, round 7).
-    n_part = int(
-        hashed.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    exploded = (
-        hashed.repartition(n_part, F.col(id_col))
-        .select(
-            id_col,
-            F.posexplode(F.col("__th")).alias("__i", "__t"),
-        )
-        .select(
-            id_col,
-            # loud doc-length guard (see _MAX_PREFIX_DOC_TOKENS): one long
-            # comparison per token, dwarfed by the 4 pow_mod chains/row —
-            # keeps the powers broadcast bounded by construction
-            F.when(
-                F.col("__i") < F.lit(_MAX_PREFIX_DOC_TOKENS),
-                F.col("__i") + F.lit(1),
-            )
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "window_hashes(strategy='rolling'): document "
-                        ),
-                        F.col(id_col).cast("string"),
-                        F.lit(
-                            f" exceeds {_MAX_PREFIX_DOC_TOKENS} tokens; "
-                            "the position-keyed powers broadcast is "
-                            "bounded by the longest document — use "
-                            "strategy='fold' for multi-million-token docs"
-                        ),
-                    )
-                )
-            )
-            .alias("__j"),
-            F.shiftright(F.col("__t"), PACK_SHIFT).alias("__t1"),
-            F.col("__t").bitwiseAND(F.lit(PACK_MASK)).alias("__t2"),
-        )
-    )
-    j = F.col("__j")
-    # one row per DISTINCT position, carrying B^{-j} and B^{j} for both
-    # pairs — the pow_mod chains run once per position value, codegen'd,
-    # outside any window machinery; the exploded frame re-derives from the
-    # persisted arrays, so the distinct's second explode pass is cheap
-    pows = F.broadcast(
-        exploded.select("__j")
-        .distinct()
-        .select(
-            "__j",
-            *[
-                pow_mod(j, _INV_BASE[i], _PAIRS[i][1]).alias(f"__inv{i + 1}")
-                for i in range(2)
-            ],
-            *[
-                pow_mod(j, _PAIRS[i][0], _PAIRS[i][1]).alias(f"__pw{i + 1}")
-                for i in range(2)
-            ],
-        )
-    )
-    joined = exploded.join(pows, "__j")
-    # sliding sum as a DIFFERENCE OF RUNNING PREFIX SUMS: a bounded sliding
-    # frame (rowsBetween(-(w-1), current)) re-aggregates all w frame rows
-    # per output row — O(w)/position, exactly the cost the rolling form
-    # exists to avoid — while the unbounded-preceding running sum and the
-    # lag offset are both O(1)/position incremental frames. Same integers:
-    # P(j) − P(j−w) is the exact w-window sum (raw longs, no intermediate
-    # mod). Both window layers share the (id, order by j) sort — one
-    # exchange, one sort.
-    run = (
-        Window.partitionBy(id_col)
-        .orderBy("__j")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    off = Window.partitionBy(id_col).orderBy("__j")
-    weighted = [
-        (F.col(f"__t{i + 1}") * F.col(f"__inv{i + 1}")) % F.lit(_PAIRS[i][1])
-        for i in range(2)
-    ]
-    prefixes = joined.select(
-        id_col,
-        "__j",
-        "__pw1",
-        "__pw2",
-        *[F.sum(weighted[i]).over(run).alias(f"__p{i + 1}") for i in range(2)],
-    )
-    summed = prefixes.select(
-        id_col,
-        "__j",
-        "__pw1",
-        "__pw2",
-        *[
-            (
-                F.col(f"__p{i + 1}")
-                - F.lag(f"__p{i + 1}", w, 0).over(off)
-            ).alias(f"__s{i + 1}")
-            for i in range(2)
-        ],
-    ).where(j >= F.lit(w))
-    comps = [
-        (F.col(f"__s{i + 1}") % F.lit(_PAIRS[i][1]))
-        * F.col(f"__pw{i + 1}")
-        % F.lit(_PAIRS[i][1])
-        for i in range(2)
-    ]
-    return summed.select(
-        id_col,
-        (j - F.lit(w - 1)).alias("pos"),
-        _combine(comps[0], comps[1]).alias("h"),
-    )
+from ..functions.hashing import word_tokens
+from ..functions.sigkernel import token_window_hash_df
 
 
 def window_hashes(
@@ -366,8 +62,6 @@ def window_hashes(
     w: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    scope: CacheScope | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """(id, pos, h) — the combined two-pair polynomial hash of every
     ``w``-token window (1-based start positions; lowercase whitespace
@@ -375,53 +69,13 @@ def window_hashes(
     detectors share; its distinct ``h`` column is also the warehouse state
     the incremental form accrues.
 
-    ``method``: ``"auto"`` (default — the vectorized Arrow kernel, ONE
-    ``mapInArrow`` pass emitting the window rows directly, O(1)/window at
-    any ``w``; see the module docstring), ``"fold"`` (JVM: O(w)/position,
-    in-row, no shuffle), or ``"prefix"`` (JVM: Rabin–Karp rolling
-    sliding-sum, O(1)/position, one doc-keyed exchange). All strategies
-    produce BIT-IDENTICAL (id, pos, h) frames — the canonical
-    ``Σ t_j·B^(e−j) mod M`` polynomial per pair — so the choice is purely
-    physical and the DuckDB oracle replays any of them; the JVM
-    strategies remain the executable spec the kernel is equivalence-
-    pinned against (``tests/test_llm_ops.py``/``test_sigkernel.py``).
-
-    Routing history (SCALE.md rounds 6/7/11): round 6 routed per-doc on
-    LENGTH from probe tables that were a parallelism artifact and ran
-    eager jobs at plan time; round 7 made auto a static width route
-    between the JVM strategies after fixing the roll's two real constants
-    (per-row ``pow_mod`` on WindowExec's interpreted projection path →
-    position-keyed broadcast powers table; O(w) sliding frames →
-    lag-of-running-sums; crossover near w=16). Round 11 moved ``auto`` to
-    the Arrow kernel: the whole front end (tokenize → hash → window) runs
-    vectorized in one pass, so there is nothing left to route — every
-    width gets the O(1)/window algebra with none of the rolling form's
-    ~2.5 s fixed JVM machinery, and the lazy-plan contract from
-    ``caching.py`` holds (no call-time jobs).
+    Per pair, ``h_p = Σ t_j·B_p^(e−j) mod M_p`` over the window's token
+    hashes ``t_j`` (:func:`..functions.hashing.poly_hash` of each token),
+    and ``h = h1·MOD2 + h2`` — plain modular arithmetic the DuckDB oracle
+    replays. Lazy plan, no call-time Spark jobs; callers persist the
+    returned frame when they fan it out (as :func:`duplicated_spans` does).
     """
-    if method not in ("auto", "fold", "prefix"):
-        raise ValueError(f"unknown window_hashes method: {method!r}")
-    if method == "auto":
-        from ..functions.sigkernel import token_window_hash_df
-
-        # one pass, no internal reuse — nothing to persist here (callers
-        # persist the returned frame when they fan it out, as
-        # duplicated_spans does); `scope` only governs the JVM strategies'
-        # internal token-array barrier below
-        return token_window_hash_df(
-            docs, w=w, text_col=text_col, id_col=id_col
-        )
-    # barrier: both JVM methods reference the token-hash arrays many times
-    # downstream (fold: once per window step — no CSE inside HOF lambdas;
-    # prefix: the repartition exchange would otherwise recompute the whole
-    # O(chars) hashing pass per consumer)
-    hashed = persist(
-        _token_hash_arrays(docs, w=w, text_col=text_col, id_col=id_col),
-        scope,
-    )
-    if method == "fold":
-        return _window_hashes_fold(hashed, w=w, id_col=id_col)
-    return _window_hashes_prefix(hashed, w=w, id_col=id_col)
+    return token_window_hash_df(docs, w=w, text_col=text_col, id_col=id_col)
 
 
 def _merge_hit_windows(hits: DataFrame, *, w: int, id_col: str) -> DataFrame:
@@ -458,7 +112,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     keep_first: bool = False,
     scope: CacheScope | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """(id, span_start, span_end, n_windows) — maximal merged spans of
     corpus-duplicated ``w``-token windows, 1-based inclusive token positions.
@@ -479,10 +132,7 @@ def duplicated_spans(
     # barrier: win feeds BOTH the occurrence count and the hit join —
     # unpersisted, the whole window-hash pass would run twice
     win = persist(
-        window_hashes(
-            docs, w=w, text_col=text_col, id_col=id_col, scope=scope,
-            method=method,
-        ),
+        window_hashes(docs, w=w, text_col=text_col, id_col=id_col),
         scope,
     )
     counts = win.groupBy("h").agg(
@@ -568,7 +218,6 @@ def duplicated_spans_incremental(
     id_col: str = "doc_id",
     keep_first: bool = False,
     scope: CacheScope | None = None,
-    method: str = "auto",
     windows: DataFrame | None = None,
 ) -> DataFrame:
     """Per-batch duplicate spans: windows of the NEW batch that already
@@ -613,10 +262,7 @@ def duplicated_spans_incremental(
     win = windows
     if win is None:
         win = persist(
-            window_hashes(
-                new_docs, w=w, text_col=text_col, id_col=id_col, scope=scope,
-                method=method,
-            ),
+            window_hashes(new_docs, w=w, text_col=text_col, id_col=id_col),
             scope,
         )
     seen = (

@@ -215,9 +215,7 @@ def curate_batch(
         # the admitted frame feeds detection, trimming, AND accrual — pin it,
         # and hash it exactly once (detection + accrual share `win`)
         admitted = persist(admitted, scope)
-        win = persist(
-            window_hashes(admitted, w=trim_spans_w, scope=scope), scope
-        )
+        win = persist(window_hashes(admitted, w=trim_spans_w), scope)
         seen_h = seen_window_hashes
         if seen_h is None:
             seen_h = new_docs.sparkSession.createDataFrame([], "h BIGINT")
@@ -257,7 +255,6 @@ def curate_batch(
         junction_h = window_hashes(
             admitted.join(trimmed_ids, "doc_id", "left_semi"),
             w=trim_spans_w,
-            scope=scope,
         ).select("h")
         new_window_hashes = (
             win.select("h").unionByName(junction_h).distinct()
@@ -270,7 +267,7 @@ def curate_batch(
     # accrues NO signature state (the leg never bands), so the result
     # carries None and the streaming fold writes no signatures partition.
     new_signatures = (
-        minhash_signatures(admitted, scope=scope) if mode == "lsh" else None
+        minhash_signatures(admitted) if mode == "lsh" else None
     )
 
     return IncrementalCurationResult(

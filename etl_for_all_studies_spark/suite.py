@@ -6373,24 +6373,17 @@ FROM grp GROUP BY doc_id, g
 
 
 # --------------------------------------------------------------------------
-# rolling-hash duplicate spans — the O(1)/position strategy, driver-checked
+# wide-window duplicate spans (w=20), oracle-checked
 # --------------------------------------------------------------------------
 
 def q_dup_spans_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span dedup at a production-wide window (w=20) through the rolling
-    (Rabin–Karp prefix-sum) hash algebra — O(1)/position vs the in-row
-    fold's O(w). Since r11 the default ``method="auto"`` evaluates that
-    algebra inside the vectorized Arrow window-hash kernel
-    (``functions/sigkernel.py::token_window_hash_df``): one ``mapInArrow``
-    pass tokenizes, hashes, and emits the (id, pos, h) window rows
-    directly, replacing the JVM rolling strategy's ~2.5 s of fixed local
-    machinery (doc-keyed exchange + per-doc sort, distinct-positions
-    pass, powers-table broadcast, two WindowExec layers) that this entry
-    used to carry via ``method="prefix"``. The hashes are BIT-IDENTICAL
-    to both JVM strategies (equivalence-pinned in tests), so the same SQL
-    island-merge oracle pins the spans unchanged; at w=20 this entry
-    keeps the production-wide-window regime — where O(w) folding degrades
-    — under the driver's correctness gate."""
+    """Span dedup at a production-wide window (w=20). The window hashes
+    come from the Rabin–Karp prefix-sum algebra inside the vectorized
+    Arrow kernel (``functions/sigkernel.py::token_window_hash_df``) — one
+    ``mapInArrow`` pass, O(1) per window at any width — so the same SQL
+    island-merge oracle (an explicit per-window fold) pins the spans; the
+    entry keeps the wide-window regime under the oracle's correctness
+    gate."""
     from .operators.spans import duplicated_spans
 
     docs = _t(spark, sf_dir, "documents")
@@ -6907,19 +6900,10 @@ FROM comp JOIN csize USING (cluster_id)
 # --------------------------------------------------------------------------
 
 QUERY_REGISTRY: dict[str, QueryDef] = {
-    # ROUND-7 ROTATION (standing rule: lead the first-50 snapshot window
-    # with never-driver-checked entries, then plans modified since their
-    # last driver check, then oldest-checked-first).
-    # Order: [1] dup_spans_incr_keepfirst — the round-6 addition no driver
-    # round has sampled (judge directive r6 #2); [2-9] the plans whose
-    # engines changed in the post-r6-artifact advisory commit (110252f):
-    # the span family (pow_mod loud exponent guard on the prefix path) and
-    # the global-NTILE trio (NULL / >2^53 runtime guards); [10-18] the
-    # nine r3-checked queries (oldest cohort); [19-39] the twenty-one
-    # r4-checked queries; [40-50] the eleven oldest r5-checked queries in
-    # prior relative order. The remaining 33 r5-checked queries rotate in
-    # next round; r6-checked entries (checked last round, unmodified) sit
-    # at the back. Nothing renamed, dropped, or re-oracled.
+    # definition order only — the rotation block below sets the registry
+    # order (standing rule: lead the first-50 snapshot window with
+    # never-checked entries, then plans modified since their last oracle
+    # check, then oldest-checked-first)
     "dup_spans_incr_keepfirst": QueryDef(
         q_dup_spans_incr_keepfirst, _SQL_DUP_SPANS_INCR_KEEPFIRST
     ),
@@ -7090,98 +7074,25 @@ QUERY_REGISTRY: dict[str, QueryDef] = {
     ),
 }
 
-# ROUND-11 ROTATION. The standing rule is CODE, not a comment:
-# ``tools/last_checked.json`` (regenerated per round by
-# ``tools/gen_last_checked.py`` from the CORRECTNESS_r*.json artifacts)
-# records each query's latest driver check, and
-# ``tests/test_registry_rotation.py`` asserts that the first-50 snapshot
-# window is exactly {never-checked} ∪ {ROTATION_MODIFIED} ∪ {the oldest-
-# checked remainder}, with the stale cohort ordered oldest-first.
+# REGISTRY ROTATION. The standing rule is CODE, not a comment:
+# ``tools/last_checked.json`` (regenerated by ``tools/gen_last_checked.py``
+# from the CORRECTNESS_r*.json artifacts) records each query's latest
+# oracle check, and ``tests/test_registry_rotation.py`` asserts that the
+# first-50 snapshot window is exactly {never-checked} ∪
+# {ROTATION_MODIFIED} ∪ {the oldest-checked remainder}, with the stale
+# cohort ordered oldest-first.
 #
-# This round (VERDICT r10 #1): lead with the ONE new round-11 query (the
-# routed-LSH branch of the similarity-join router, closing its oracle gap —
-# VERDICT r10 #4), then the two round-11-modified plans, then the full
-# 33-query cohort last driver-checked in r8, then fill the window's 14
-# remaining slots with the oldest r9-checked entries. After this window
-# lands, no registry entry's latest check is older than r9.
-# ROTATION_MODIFIED holds the four entries whose round-11 diffs reach their
-# physical plans: dedup_jaccard_auto (slice widened from mod-4 to the full
-# table so the oracle hash has surface — VERDICT r10 wrong #3),
-# dedup_minhash_incr (the verify stage's shingle arrays now build behind a
-# candidate-id semi-join with a lineage-truncating checkpoint — ADVICE
-# r10), and dup_spans_incr / dup_spans_incr_keepfirst (the accrued-hash
-# probe is now restricted to the batch's own hash values through a
-# broadcast semi-join BEFORE the distinct, so history streams through the
-# probe instead of shuffling — identical results, new plan). Everything
-# else is a pure reorder: nothing renamed, dropped, or re-oracled.
-ROTATION_MODIFIED: list[str] = [
-    "dedup_jaccard_auto",
-    "dedup_minhash_incr",
-    "dup_spans_incr",
-    "dup_spans_incr_keepfirst",
-]
-_R11_NEW: list[str] = [
-    # round-11 addition — never driver-checked, head of the window
-    "dedup_jaccard_auto_lsh",
-]
-_R11_R8_COHORT: list[str] = [
-    # last checked r8 (CORRECTNESS_r08.json), prior relative order — the
-    # whole stale cohort fits the window this round (VERDICT r10 missing #1)
-    "events_auc",
-    "events_calibration",
-    "events_anomaly_expanding",
-    "classifier_score",
-    "splits_leakage_safe",
-    "corpus_shard",
-    "dedup_normalized",
-    "events_sessions_native",
-    "kmeans_embeddings",
-    "vocab_topk",
-    "events_scd2",
-    "value_deciles",
-    "skew_report",
-    "orders_above_avg",
-    "customer_set_ops",
-    "regional_revenue",
-    "cube_revenue",
-    "spearman_block",
-    "events_error_window",
-    "embedding_quantize",
-    "token_heavy_hitters",
-    "embedding_pipeline",
-    "sample_per_source",
-    "tfidf_similar",
-    "orders_snapshot_diff",
-    "semantic_decontam",
-    "dup_spans_rolling",
-    "spearman_suppliers",
-    "spearman_dense_auto",
-    "pricing_summary",
-    "star_join_revenue",
-    "whitelist_semi_join",
-    "anti_join_customers",
-]
-_R11_R9_FILL: list[str] = [
-    # last checked r9 — the first 14 complete the window, prior order
-    "dedup_jaccard_prefix",
-    "triangle_parts",
-    "small_qty_revenue",
-    "promo_revenue",
-    "high_balance_inactive",
-    "dedup_clusters_prefix",
-    "unpivot_part",
-    "props_normalize",
-    "dq_completion",
-    "nations_with_orders",
-    "average_rank",
-    "top_parts_per_brand",
-]
-_R11_R9_REST: list[str] = [
-    # displaced from the fill when ROTATION_MODIFIED grew to four (the
-    # window stays exactly 50): oldest-first continuity preserved
+# As of the r12 artifact: every entry has been oracle-checked, and the
+# plans modified in r11/r12 were all checked in r12, so ROTATION_MODIFIED
+# is empty. The window is the whole r9-checked cohort (the span family,
+# curation_pipeline and dedup_keeper among them) plus the 15 oldest
+# r10-checked entries. Each cohort keeps its prior relative order. A pure
+# reorder: nothing renamed, dropped, or re-oracled.
+ROTATION_MODIFIED: list[str] = []
+_R9_COHORT: list[str] = [
+    # last checked r9 (CORRECTNESS_r09.json) — all inside the window
     "dedup_exact",
     "embedding_topk",
-    # last checked r9, prior relative order (outside the window)
     "embedding_ivf",
     "dedup_embedding",
     "dedup_embedding_ivf",
@@ -7216,9 +7127,8 @@ _R11_R9_REST: list[str] = [
     "decontaminate",
     "doc_repetition",
 ]
-_R11_R10_COHORT: list[str] = [
-    # last checked r10, prior relative order (dedup_jaccard_auto moved to
-    # ROTATION_MODIFIED)
+_R10_COHORT: list[str] = [
+    # last checked r10 — the first 15 complete the window
     "doc_novelty",
     "dedup_editdist",
     "embedding_standardize",
@@ -7269,12 +7179,64 @@ _R11_R10_COHORT: list[str] = [
     "events_anomaly",
     "weighted_median",
 ]
-_R11_ORDER = (
-    _R11_NEW + ROTATION_MODIFIED + _R11_R8_COHORT + _R11_R9_FILL
-    + _R11_R9_REST + _R11_R10_COHORT
+_R12_COHORT: list[str] = [
+    # last checked r12 — the previous window
+    "dedup_jaccard_auto_lsh",
+    "dedup_jaccard_auto",
+    "dedup_minhash_incr",
+    "dup_spans_incr",
+    "dup_spans_incr_keepfirst",
+    "events_auc",
+    "events_calibration",
+    "events_anomaly_expanding",
+    "classifier_score",
+    "splits_leakage_safe",
+    "corpus_shard",
+    "dedup_normalized",
+    "events_sessions_native",
+    "kmeans_embeddings",
+    "vocab_topk",
+    "events_scd2",
+    "value_deciles",
+    "skew_report",
+    "orders_above_avg",
+    "customer_set_ops",
+    "regional_revenue",
+    "cube_revenue",
+    "spearman_block",
+    "events_error_window",
+    "embedding_quantize",
+    "token_heavy_hitters",
+    "embedding_pipeline",
+    "sample_per_source",
+    "tfidf_similar",
+    "orders_snapshot_diff",
+    "semantic_decontam",
+    "dup_spans_rolling",
+    "spearman_suppliers",
+    "spearman_dense_auto",
+    "pricing_summary",
+    "star_join_revenue",
+    "whitelist_semi_join",
+    "anti_join_customers",
+    "dedup_jaccard_prefix",
+    "triangle_parts",
+    "small_qty_revenue",
+    "promo_revenue",
+    "high_balance_inactive",
+    "dedup_clusters_prefix",
+    "unpivot_part",
+    "props_normalize",
+    "dq_completion",
+    "nations_with_orders",
+    "average_rank",
+    "top_parts_per_brand",
+]
+_ROTATION_ORDER = ROTATION_MODIFIED + _R9_COHORT + _R10_COHORT + _R12_COHORT
+assert sorted(_ROTATION_ORDER) == sorted(QUERY_REGISTRY), (
+    "rotation must be a pure reorder"
 )
-assert sorted(_R11_ORDER) == sorted(QUERY_REGISTRY), "rotation must be a pure reorder"
-QUERY_REGISTRY = {k: QUERY_REGISTRY[k] for k in _R11_ORDER}
+QUERY_REGISTRY = {k: QUERY_REGISTRY[k] for k in _ROTATION_ORDER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -958,39 +958,6 @@ def test_duplicated_spans_exact_boundaries_and_merging(spark):
     assert not any(k[0] == 3 for k in out)
 
 
-def test_poly_hash_packed_matches_component_hashes(spark):
-    """The packed single-pass form must carry EXACTLY the two component
-    polynomial hashes (h1<<30 | h2) for adversarial inputs: empty string,
-    single char, digits/punctuation, non-ASCII codepoints (ascii() returns
-    the full codepoint, multiplying past 2^7·2^30 in the update product —
-    still < 2^63), long tokens, and whitespace-free blobs."""
-    from pyspark.sql import functions as F
-
-    from etl_for_all_studies_spark.functions.hashing import (
-        BASE2,
-        MOD2,
-        PACK_MASK,
-        PACK_SHIFT,
-        poly_hash,
-        poly_hash_packed,
-    )
-
-    samples = [
-        "", "a", "Z9!", "0123456789" * 8, "café emoji ❤ text",
-        "世界", "x" * 500, "MiXeD CaSe ToKeN", " ", "\t\n",
-    ]
-    df = spark.createDataFrame([(s,) for s in samples], "s string")
-    bad = df.select(
-        (
-            (F.shiftright(poly_hash_packed(F.col("s")), PACK_SHIFT)
-             != poly_hash(F.col("s")))
-            | (poly_hash_packed(F.col("s")).bitwiseAND(F.lit(PACK_MASK))
-               != poly_hash(F.col("s"), base=BASE2, mod=MOD2))
-        ).alias("bad")
-    ).where("bad").count()
-    assert bad == 0
-
-
 def test_duplicated_spans_survives_single_hash_collision(spark):
     """A REAL single-hash collision must not merge unrelated windows. The
     two 8-grams below are distinct texts that collide under the first
@@ -1195,92 +1162,6 @@ def test_incremental_spans_agree_with_full_on_random_corpora(spark):
     assert incr  # non-vacuous: the template mixing produced real spans
 
 
-def test_window_hashes_prefix_bit_identical_to_fold(spark):
-    """The two physical window-hash strategies (O(w)-per-position in-row
-    fold vs the distributed Rabin–Karp sliding-sum) must produce
-    BIT-IDENTICAL (id, pos, h) frames — the property that makes the
-    ``method`` knob purely physical and keeps the DuckDB oracle valid for
-    either. Checked below and above the auto-crossover width, on docs
-    ranging from exactly-w tokens to multi-hundred-token with repeats."""
-    import random
-
-    from etl_for_all_studies_spark.operators.spans import window_hashes
-
-    rng = random.Random(7)
-    shared = " ".join(f"s{i}" for i in range(30))
-    rows = []
-    for d in range(12):
-        n = rng.choice([8, 20, 21, 57, 200])
-        toks = [f"d{d}t{rng.randint(0, 9)}" for i in range(n)]
-        if rng.random() < 0.5:
-            rows.append((d, " ".join(toks) + " " + shared))
-        else:
-            rows.append((d, " ".join(toks)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for w in (8, 20):  # fold-default width and a roll-default width
-        fold = {
-            (r["doc_id"], r["pos"]): r["h"]
-            for r in window_hashes(docs, w=w, method="fold").collect()
-        }
-        roll = {
-            (r["doc_id"], r["pos"]): r["h"]
-            for r in window_hashes(docs, w=w, method="prefix").collect()
-        }
-        assert fold == roll and fold, f"w={w} mismatch"
-
-
-def test_window_hashes_prefix_doc_length_guard(spark, monkeypatch):
-    """The prefix/rolling path's powers broadcast is one row per position
-    up to the LONGEST doc, so an outlier multi-million-token doc would OOM
-    the driver; the plan instead raises loudly at the first over-long doc
-    (bound shrunk via monkeypatch so the test stays tiny) and the error
-    names the fold fallback. Docs at the bound still hash correctly."""
-    import pytest
-
-    from etl_for_all_studies_spark.operators import spans
-
-    monkeypatch.setattr(spans, "_MAX_PREFIX_DOC_TOKENS", 16)
-    ok = spark.createDataFrame(
-        [(1, " ".join(f"t{i}" for i in range(16)))], "doc_id long, text string"
-    )
-    assert spans.window_hashes(ok, w=8, method="prefix").count() == 9
-    over = spark.createDataFrame(
-        [(2, " ".join(f"t{i}" for i in range(17)))], "doc_id long, text string"
-    )
-    with pytest.raises(Exception, match="strategy='fold'"):
-        spans.window_hashes(over, w=8, method="prefix").count()
-
-
-def test_pow_mod_matches_python_pow(spark):
-    """The 31-step binary-exponentiation unroll equals Python ``pow`` for
-    both (base, mod) pairs and for the modular-inverse bases the rolling
-    form weights by, across exponents spanning the full 31-bit range."""
-    from etl_for_all_studies_spark.functions.hashing import (
-        BASE,
-        BASE2,
-        MOD,
-        MOD2,
-        pow_mod,
-    )
-
-    exps = [0, 1, 2, 7, 31, 1000, 123456, 2**20 + 3, 2**31 - 1]
-    df = spark.createDataFrame([(e,) for e in exps], "e long")
-    for base, mod in [
-        (BASE, MOD),
-        (BASE2, MOD2),
-        (pow(BASE, MOD - 2, MOD), MOD),
-        (pow(BASE2, MOD2 - 2, MOD2), MOD2),
-    ]:
-        got = {
-            r["e"]: r["p"]
-            for r in df.select(
-                "e", pow_mod(F.col("e"), base, mod).alias("p")
-            ).collect()
-        }
-        for e in exps:
-            assert got[e] == pow(base, e, mod), (base, mod, e)
-
-
 def test_incremental_keep_first_one_copy_survives(spark):
     """ADVICE r5: the incremental form's keep_first must exempt the
     canonical in-batch occurrence of a batch-internal passage (else the
@@ -1352,12 +1233,11 @@ def test_trim_spans_null_text_passthrough(spark):
     assert out[2] == ("x0", 10)
 
 
-def test_window_hashes_methods_bit_identical_and_auto_lazy(spark):
-    """All three methods produce identical (doc, pos, h) rows on a corpus
-    of mixed doc lengths, and ``auto`` builds its plan LAZILY — zero Spark
-    jobs at call time (the round-6 length-routing ran an eager count; the
-    round-7 correction makes auto a static fold, restoring the caching.py
-    lazy-plan contract for scope=None callers)."""
+def test_window_hashes_is_lazy_single_kernel_pass(spark):
+    """``window_hashes`` builds its plan LAZILY — zero Spark jobs at call
+    time (the caching.py lazy-plan contract for scope=None callers) — as
+    ONE MapInArrow pass with no Window operator and no exchange, and
+    covers every doc with ≥ w tokens, including one of exactly w."""
     from etl_for_all_studies_spark.operators.spans import window_hashes
 
     shared = " ".join(f"s{i}" for i in range(12))
@@ -1369,74 +1249,19 @@ def test_window_hashes_methods_bit_identical_and_auto_lazy(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sc = spark.sparkContext
-    sc.setJobGroup("auto-lazy-check", "window_hashes(auto) plan build")
+    sc.setJobGroup("lazy-check", "window_hashes plan build")
     try:
-        auto_df = window_hashes(docs, w=8, method="auto")
-        assert sc.statusTracker().getJobIdsForGroup("auto-lazy-check") == []
+        df = window_hashes(docs, w=8)
+        assert sc.statusTracker().getJobIdsForGroup("lazy-check") == []
     finally:
         sc.setJobGroup(None, None)
-    out = {"auto": sorted(
-        (r["doc_id"], r["pos"], r["h"]) for r in auto_df.collect()
-    )}
-    for method in ("fold", "prefix"):
-        out[method] = sorted(
-            (r["doc_id"], r["pos"], r["h"])
-            for r in window_hashes(docs, w=8, method=method).collect()
-        )
-    assert out["auto"] == out["fold"] == out["prefix"]
-    assert {d for d, *_ in out["auto"]} == {1, 2, 3, 4}
-
-
-def test_window_hashes_auto_is_kernel_at_every_width(spark):
-    """auto is the vectorized Arrow kernel at EVERY width (r11): one
-    MapInArrow node, none of the JVM strategies' machinery — no Window
-    operator, no exchange — on both sides of the old JVM fold/roll
-    crossover; and the values stay bit-identical to both explicit JVM
-    strategies at each width."""
-    from etl_for_all_studies_spark.operators.spans import (
-        _AUTO_PREFIX_MIN_W,
-        window_hashes,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"t{i % 13}" for i in range(3 * _AUTO_PREFIX_MIN_W)))],
-        "doc_id long, text string",
-    )
-    below = window_hashes(docs, w=_AUTO_PREFIX_MIN_W - 1, method="auto")
-    above = window_hashes(docs, w=_AUTO_PREFIX_MIN_W, method="auto")
-    for df in (below, above):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in plan
-        assert "Window" not in plan
-        assert "Exchange" not in plan
-    for w, df in ((_AUTO_PREFIX_MIN_W - 1, below), (_AUTO_PREFIX_MIN_W, above)):
-        got = sorted((r["pos"], r["h"]) for r in df.collect())
-        assert got
-        for method in ("fold", "prefix"):
-            ref = sorted(
-                (r["pos"], r["h"])
-                for r in window_hashes(docs, w=w, method=method).collect()
-            )
-            assert got == ref
-
-
-def test_pow_mod_out_of_range_exponent_fails_loudly(spark):
-    """ADVICE r6: exponent bits above the 31-step unroll were silently
-    dropped (wrong hash, not an error) — the guard must raise instead, and
-    the cap boundary (2^31 - 1) must still compute."""
-    from etl_for_all_studies_spark.functions.hashing import BASE, MOD, pow_mod
-
-    ok = spark.createDataFrame([(2**31 - 1,)], "e long").select(
-        pow_mod(F.col("e"), BASE, MOD).alias("p")
-    )
-    assert ok.first()["p"] == pow(BASE, 2**31 - 1, MOD)
-
-    for bad in (2**31, -1):
-        df = spark.createDataFrame([(bad,)], "e long").select(
-            pow_mod(F.col("e"), BASE, MOD).alias("p")
-        )
-        with pytest.raises(Exception, match="pow_mod: exponent outside"):
-            df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "Window" not in plan
+    assert "Exchange" not in plan
+    got = df.collect()
+    assert {r["doc_id"] for r in got} == {1, 2, 3, 4}
+    assert len(got) == (42 - 7) + (256 - 7) + (780 - 7) + 1
 
 
 def test_incremental_new_documents_md5_digests_version_stable(spark):

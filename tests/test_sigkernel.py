@@ -1,11 +1,13 @@
-"""Equivalence pins for the vectorized Arrow shingle-hash kernels.
+"""Equivalence pins for the vectorized Arrow shingle/token-hash kernels.
 
-The r11 optimization round replaced the interpreted HOF MinHash signature
-pass with ``functions/sigkernel.py`` (numpy over ``mapInArrow``). These
-tests pin the contract that makes that a pure optimization: bit-identical
-output to the retained HOF form on real corpus rows AND on the unicode
-edge cases where a byte-level shortcut would diverge (astral-plane emoji,
-CJK, combining marks, empty/short/NULL texts).
+Each kernel is checked against a short pure-Python reference: the MinHash
+signatures against a fold over ``ord()`` code points, the token and window
+hashes against folds over per-token hashes computed by the JVM
+``poly_hash`` over ``word_tokens(lower(text))`` (so Spark's own case
+mapping and ``\\s+`` split stay the spec, not a re-implementation). Every
+reference runs on real corpus rows AND on the unicode/whitespace edge
+cases where a byte-level shortcut would diverge (astral-plane emoji, CJK,
+combining marks, tabs and unicode spaces, empty/short/NULL texts).
 """
 from __future__ import annotations
 
@@ -13,7 +15,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from etl_for_all_studies_spark.functions.hashing import BASE, MOD
+from etl_for_all_studies_spark.functions.hashing import (
+    BASE,
+    BASE2,
+    MOD,
+    MOD2,
+    PACK_SHIFT,
+    poly_hash,
+    word_tokens,
+)
 from etl_for_all_studies_spark.functions.sigkernel import (
     mod_powers,
     window_hashes,
@@ -21,7 +31,6 @@ from etl_for_all_studies_spark.functions.sigkernel import (
 from etl_for_all_studies_spark.operators.dedup import (
     MINHASH_SEEDS,
     minhash_signatures,
-    minhash_signatures_hof,
 )
 
 NASTY = [
@@ -34,10 +43,85 @@ NASTY = [
     (7, "emoji \U0001f600\U0001f600\U0001f600 test \U0001f600 more text"),
     (8, "a" * 5),
     (9, "tab\tand\nnewline chars mixed in here"),
-    (10, "combining: café naivë x"),
+    (10, "combining: cafe\u0301 naive\u0308 x"),  # decomposed (NFD)
     (11, "exactly5c"),
     (12, "ascii only but fairly long " * 40),
 ]
+
+TOKEN_NASTY = [
+    (21, ""),
+    (22, None),
+    (23, "\tleading tab"),
+    (24, "trailing tab\t"),
+    (25, "  spaces  around  "),
+    (26, "MiXeD CaSe ß İ"),
+    (27, "a\x0bb\x0cc\rd\ne"),
+    (28, "nb\u00a0space und\u2009thin"),  # unicode spaces are NOT separators
+    (29, "\t\t"),
+    (30, "emoji \U0001f600 tok \U0001f600x"),
+    (31, "日本語 テキスト 短い"),
+]
+
+# edge-doc ids offset past the corpus id range: every comparison below is
+# keyed by doc id, so ids must be globally unique across the union
+_EDGE_ID = 1_000_000
+
+
+def _docs(spark, corpus=None):
+    """The ``corpus`` sample's rows plus every NASTY/TOKEN_NASTY doc, built
+    from collected rows so the kernel and the Python reference see the
+    SAME rows (a re-evaluated ``limit`` need not pick the same ones)."""
+    rows = [] if corpus is None else [
+        (r["doc_id"], r["text"]) for r in corpus.collect()
+    ]
+    rows += [(_EDGE_ID + i, t) for i, t in NASTY + TOKEN_NASTY]
+    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+
+
+def _fold(values, base=BASE, mod=MOD) -> int:
+    acc = 0
+    for v in values:
+        acc = (acc * base + v) % mod
+    return acc
+
+
+def _py_minhash(text, k: int, num_hashes: int):
+    """Reference signature: per seed, the min over every k-code-point
+    window's polynomial hash of ``(a·h + b) mod MOD``; no row (None) for
+    NULL texts and texts shorter than k."""
+    if text is None or len(text) < k:
+        return None
+    cps = [ord(c) for c in text]
+    hs = {_fold(cps[i : i + k]) for i in range(len(cps) - k + 1)}
+    return [
+        min((h * a + b) % MOD for h in hs)
+        for a, b in MINHASH_SEEDS[:num_hashes]
+    ]
+
+
+def _py_minhash_sigs(docs, k: int, num_hashes: int) -> dict:
+    out = {}
+    for r in docs.collect():
+        sig = _py_minhash(r["text"], k, num_hashes)
+        if sig is not None:
+            out[r["doc_id"]] = sig
+    return out
+
+
+def _jvm_token_hashes(docs) -> dict:
+    """doc id → (t1, t2): JVM ``poly_hash`` of each lowercase whitespace
+    token under both (base, mod) pairs; None for NULL texts."""
+    toks = word_tokens(F.lower(F.col("text")))
+    return {
+        r["doc_id"]: None if r["t1"] is None else (r["t1"], r["t2"])
+        for r in docs.select(
+            "doc_id",
+            F.transform(toks, lambda t: poly_hash(t)).alias("t1"),
+            F.transform(
+                toks, lambda t: poly_hash(t, base=BASE2, mod=MOD2)
+            ).alias("t2"),
+        ).collect()
+    }
 
 
 def _collect_sigs(df):
@@ -77,25 +161,24 @@ def test_window_hashes_match_direct_fold():
 
 @pytest.mark.parametrize("k,num_hashes", [(5, 16), (9, 16), (5, 8)])
 def test_arrow_kernel_matches_hof_on_nasty_docs(spark, k, num_hashes):
-    docs = spark.createDataFrame(NASTY, "doc_id BIGINT, text STRING")
-    got = _collect_sigs(
-        minhash_signatures(docs, k=k, num_hashes=num_hashes)
-    )
-    want = _collect_sigs(
-        minhash_signatures_hof(docs, k=k, num_hashes=num_hashes)
-    )
-    assert got == want
+    """The MinHash kernel equals the pure-Python code-point fold on the
+    edge docs: astral-plane emoji count as ONE code point each, and
+    NULL/empty/short texts get no signature row."""
+    docs = _docs(spark)
+    got = _collect_sigs(minhash_signatures(docs, k=k, num_hashes=num_hashes))
+    assert got == _py_minhash_sigs(docs, k, num_hashes)
 
 
 def test_arrow_kernel_matches_hof_on_corpus_sample(spark):
-    docs = (
+    docs = _docs(
+        spark,
         spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
         .select("doc_id", "text")
-        .limit(200)
+        .limit(200),
     )
     got = _collect_sigs(minhash_signatures(docs))
-    want = _collect_sigs(minhash_signatures_hof(docs))
-    assert got == want
+    assert got == _py_minhash_sigs(docs, 5, 16)
+    assert len(got) > 200  # corpus rows plus the long edge docs
 
 
 @pytest.mark.parametrize("k", [5, 9])
@@ -183,85 +266,58 @@ def test_profile_hashed_histogram_matches_string_histogram(spark):
     assert got == want
 
 
-TOKEN_NASTY = [
-    (21, ""),
-    (22, None),
-    (23, "\tleading tab"),
-    (24, "trailing tab\t"),
-    (25, "  spaces  around  "),
-    (26, "MiXeD CaSe ß İ"),
-    (27, "a\x0bb\x0cc\rd\ne"),
-    (28, "nb space und thin"),  # unicode spaces are NOT separators
-    (29, "\t\t"),
-    (30, "emoji \U0001f600 tok \U0001f600x"),
-    (31, "日本語 テキスト 短い"),
-]
-
-
 @pytest.mark.parametrize("w", [1, 8])
 def test_token_hash_kernel_matches_hof(spark, w):
-    """The span family's token-hash pass: the Arrow kernel must replay the
-    interpreted ``transform(word_tokens(lower(text)), poly_hash_packed)``
-    fold exactly — including Java-regex \\s semantics (leading/trailing
-    empty tokens hash to 0; unicode spaces are token characters), the
-    empty-string guard, and the ≥w row filter."""
-    from etl_for_all_studies_spark.operators.spans import (
-        _token_hash_arrays,
-        _token_hash_arrays_hof,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .select("doc_id", "text")
-        .limit(150)
-        .unionByName(
-            spark.createDataFrame(TOKEN_NASTY, "doc_id BIGINT, text STRING")
-        )
-    )
-    got = {
-        r["doc_id"]: r["__th"]
-        for r in _token_hash_arrays(
-            docs, w=w, text_col="text", id_col="doc_id"
-        ).collect()
-    }
-    want = {
-        r["doc_id"]: r["__th"]
-        for r in _token_hash_arrays_hof(
-            docs, w=w, text_col="text", id_col="doc_id"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_simhash_token_hashes_match_hof(spark):
-    """SimHash's vote hashes (the packed kernel's first component) must
-    equal the old ``transform(word_tokens(lower(text)), poly_hash)`` —
-    NULL texts keeping their NULL array (explode_outer contract)."""
-    from etl_for_all_studies_spark.functions.hashing import (
-        PACK_SHIFT,
-        poly_hash,
-        word_tokens,
-    )
+    """The span/SimHash token-hash pass: the Arrow kernel must carry, per
+    token, the JVM ``poly_hash`` under both pairs, packed ``h1·2^30 + h2``
+    — including Java-regex \\s semantics (leading/trailing empty tokens
+    hash to 0; unicode spaces are token characters), the empty-string
+    guard, and NULL texts keeping a NULL array (below the ``≥ w`` row
+    filter the span family applies)."""
     from etl_for_all_studies_spark.functions.sigkernel import (
         token_hash_array_df,
     )
 
-    docs = (
+    docs = _docs(
+        spark,
         spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
         .select("doc_id", "text")
-        .limit(150)
-        .unionByName(
-            spark.createDataFrame(TOKEN_NASTY, "doc_id BIGINT, text STRING")
-        )
+        .limit(150),
+    )
+    got = {
+        r["doc_id"]: r["__th"]
+        for r in token_hash_array_df(docs, text_col="text", id_col="doc_id")
+        .where(F.size(F.col("__th")) >= F.lit(w))
+        .collect()
+    }
+    want = {}
+    for d, th in _jvm_token_hashes(docs).items():
+        if th is not None and len(th[0]) >= w:
+            want[d] = [(a << PACK_SHIFT) + b for a, b in zip(*th)]
+    assert got == want
+    nulls = token_hash_array_df(
+        docs.where(F.col("text").isNull()), text_col="text", id_col="doc_id"
+    ).collect()
+    assert nulls and all(r["__th"] is None for r in nulls)
+
+
+def test_simhash_token_hashes_match_hof(spark):
+    """SimHash's vote hashes (the packed kernel's first component) must
+    equal ``transform(word_tokens(lower(text)), poly_hash)`` — NULL texts
+    keeping their NULL array (explode_outer contract)."""
+    from etl_for_all_studies_spark.functions.sigkernel import (
+        token_hash_array_df,
+    )
+
+    docs = _docs(
+        spark,
+        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        .select("doc_id", "text")
+        .limit(150),
     )
     want = {
-        r["doc_id"]: r["th"]
-        for r in docs.select(
-            "doc_id",
-            F.transform(
-                word_tokens(F.lower(F.col("text"))), lambda t: poly_hash(t)
-            ).alias("th"),
-        ).collect()
+        d: None if th is None else th[0]
+        for d, th in _jvm_token_hashes(docs).items()
     }
     got = {
         r["doc_id"]: r["th"]
@@ -281,45 +337,36 @@ def test_simhash_token_hashes_match_hof(spark):
 
 @pytest.mark.parametrize("w", [2, 8, 20, 50])
 def test_window_hash_kernel_matches_jvm_strategies(spark, w):
-    """The r11 window-hash kernel (``token_window_hash_df`` — one
-    mapInArrow pass emitting the exploded (id, pos, h) window rows) must
-    replay BOTH JVM strategies bit-for-bit at every width: same row set
-    (docs with ≥ w tokens only; NULL/empty/short texts dropped), same
-    1-based positions with the same int type, same combined ~2^60 keys —
-    across real corpus rows plus the whitespace/unicode edge docs."""
-    from etl_for_all_studies_spark.functions.sigkernel import (
-        token_window_hash_df,
-    )
+    """``spans.window_hashes`` (the one-pass Arrow window kernel) against a
+    Python fold over the JVM token hashes: same row set (docs with ≥ w
+    tokens only; NULL/empty/short texts dropped), same 1-based int
+    positions, same combined ``h1·MOD2 + h2`` keys — across real corpus
+    rows plus the whitespace/unicode edge docs."""
     from etl_for_all_studies_spark.operators.spans import window_hashes
 
-    # nasty ids offset past the corpus range: doc_id is the PER-DOC key of
-    # the JVM prefix strategy's window partitioning, so a duplicated id
-    # would merge two texts into one logical doc there (row-wise forms
-    # don't care) — the comparison needs globally unique ids
-    nasty = [(i + 1_000_000, t) for i, t in TOKEN_NASTY]
-    docs = (
+    docs = _docs(
+        spark,
         spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
         .select("doc_id", "text")
-        .limit(120)
-        .unionByName(
-            spark.createDataFrame(nasty, "doc_id BIGINT, text STRING")
-        )
+        .limit(120),
     )
-    kern = token_window_hash_df(docs, w=w, text_col="text", id_col="doc_id")
+    kern = window_hashes(docs, w=w, text_col="text", id_col="doc_id")
     assert [f.dataType.simpleString() for f in kern.schema.fields] == [
         "bigint",
         "int",
         "bigint",
     ]
     got = {(r["doc_id"], r["pos"]): r["h"] for r in kern.collect()}
-    for method in ("fold", "prefix"):
-        want = {
-            (r["doc_id"], r["pos"]): r["h"]
-            for r in window_hashes(
-                docs, w=w, text_col="text", id_col="doc_id", method=method
-            ).collect()
-        }
-        assert got == want, f"w={w} method={method}"
+    want = {}
+    for d, th in _jvm_token_hashes(docs).items():
+        if th is None:
+            continue
+        t1, t2 = th
+        for p in range(len(t1) - w + 1):
+            want[(d, p + 1)] = _fold(t1[p : p + w]) * MOD2 + _fold(
+                t2[p : p + w], BASE2, MOD2
+            )
+    assert got == want, f"w={w}"
     if w <= 20:
         assert got  # non-degenerate at widths the corpus actually has
 

@@ -266,7 +266,8 @@ def test_t_pvalue_expr_matches_scalar_grid(spark):
     """spearman_p_value_t_expr (incomplete-beta continued fraction as a
     ``sequence`` fold) vs the scalar lgamma/Lentz oracle across the whole
     (rho, n) envelope — small and large n, both CF symmetric branches,
-    knife-edge rhos. Contract: < 1e-12 absolute."""
+    knife-edge rhos, plus a 200-point pseudo-random (rho, n) sweep.
+    Contract: < 1e-12 absolute."""
     import itertools
 
     from pyspark.sql import functions as F
@@ -277,6 +278,9 @@ def test_t_pvalue_expr_matches_scalar_grid(spark):
     ns = [3, 4, 5, 10, 30, 100, 1000, 100000]
     rows = [(float(r), int(n)) for r, n in itertools.product(rhos, ns)]
     rows += [(0.5, 2), (0.5, 1)]  # n < 3 → NULL
+    rows += [
+        (math.sin(i * 1.7) * 0.999, 3 + (i * 37) % 500) for i in range(200)
+    ]
     df = spark.createDataFrame(rows, "rho double, n long")
     got = df.select(
         "rho", "n", spearman_p_value_t_expr(F.col("rho"), F.col("n")).alias("p")
@@ -293,28 +297,6 @@ def test_t_pvalue_expr_matches_scalar_grid(spark):
         t_abs = abs(rho) * math.sqrt((n - 2) / (1.0 - rho * rho))
         want = t_two_sided_p(t_abs, n - 2)
         assert p == pytest.approx(want, abs=1e-12), (rho, n, p, want)
-
-
-def test_t_pvalue_expr_matches_udf_oracle(spark):
-    """The retired-from-production pandas UDF stays as the cross-check: both
-    paths produce identical p-values over a random-ish grid."""
-    from pyspark.sql import functions as F
-
-    from etl_for_all_studies_spark.functions.stats import (
-        spearman_p_value_t_expr,
-        spearman_p_value_t_udf,
-    )
-
-    rows = [
-        (math.sin(i * 1.7) * 0.999, 3 + (i * 37) % 500) for i in range(200)
-    ]
-    df = spark.createDataFrame([(float(r), int(n)) for r, n in rows], "rho double, n long")
-    got = df.select(
-        spearman_p_value_t_expr(F.col("rho"), F.col("n")).alias("p_expr"),
-        spearman_p_value_t_udf()(F.col("rho"), F.col("n")).alias("p_udf"),
-    ).collect()
-    for row in got:
-        assert row["p_expr"] == pytest.approx(row["p_udf"], abs=1e-12)
 
 
 def test_lgamma_expr_matches_math(spark):

@@ -11,10 +11,8 @@ window-hash aggregation (the operator's only corpus-wide shuffle) from
 above. Near-linear growth is the pass criterion.
 
 Usage: python tools/bench_scaleup_spans.py [multiplier]
-       python tools/bench_scaleup_spans.py crossover [multiplier]
        python tools/bench_scaleup_spans.py incremental [multiplier]
        python tools/bench_scaleup_spans.py series [k1,k2,...]
-       python tools/bench_scaleup_spans.py crossover-mixed [multiplier]
 
 ``series`` mode (default ``1,10,100``) is the 100x probe: at each
 multiplier the ciphered corpus is WRITTEN TO PARQUET and read back (the
@@ -23,12 +21,6 @@ REST API records shuffle read/write bytes per run — the window-hash
 exchange is the operator's one scale axis, and 100x is where it first
 dominates fixed overhead. Pass = near-linear wall AND shuffle-byte
 growth across the series.
-
-``crossover`` mode instead measures the fold-vs-prefix window-hash
-strategies across window widths on the replicated corpus — the
-measurement behind the ``method="auto"`` threshold in
-``operators/spans.py`` (fold is O(w)/position in-row; prefix is the
-O(1)/position distributed Rabin–Karp sliding sum).
 
 ``incremental`` mode measures the per-BATCH cost contract of
 ``duplicated_spans_incremental``: a fixed 1x batch detected against seen
@@ -43,154 +35,6 @@ import sys
 import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
-
-
-def crossover(mult: int, long_docs: bool = False) -> None:
-    """Fold vs prefix wall clock by window width on a mult-x corpus."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from etl_for_all_studies_spark.operators.spans import window_hashes
-    from etl_for_all_studies_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench-spans-crossover",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-        },
-    )
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    if long_docs:
-        # long-doc regime (the one the prefix form exists for): each doc's
-        # text repeated 50x → ~3k-token docs, heavy internal repetition
-        base = base.select(
-            "doc_id",
-            F.array_join(F.array_repeat(F.col("text"), 50), " ").alias("text"),
-        )
-    docs = base
-    if mult > 1:
-        copies = [
-            base.select(
-                (F.col("doc_id") + F.lit(i * 1_000_000)).alias("doc_id"),
-                "text",
-            )
-            for i in range(mult)
-        ]
-        docs = copies[0]
-        for c in copies[1:]:
-            docs = docs.unionByName(c)
-    # ALWAYS equalize partitioning (round-7 lesson): sf0.1 documents is ONE
-    # parquet split, so an unrepartitioned mult=1 corpus runs the
-    # shuffle-free fold on a single task while the prefix branch's internal
-    # repartition gets 32 — the round-6 tables measured that parallelism
-    # gap, not the algorithms, and routed auto wrong (SCALE.md round 7)
-    docs = docs.repartition(32).persist()
-    docs.count()
-    print(f"corpus: {mult}x sf0.1 documents (long_docs={long_docs})")
-    for w in (8, 16, 24, 32, 50, 100, 200) if long_docs else (8, 16, 24, 32, 50):
-        row = {}
-        for method in ("fold", "prefix"):
-            best = None
-            for _ in range(2):
-                t0 = _time.monotonic()
-                n = (
-                    window_hashes(docs, w=w, method=method)
-                    .agg(F.count(F.lit(1)), F.bit_xor("h"))
-                    .collect()
-                )
-                el = _time.monotonic() - t0
-                best = el if best is None else min(best, el)
-            row[method] = (round(best, 2), n[0][0], n[0][1])
-        assert row["fold"][1:] == row["prefix"][1:], f"hash mismatch at w={w}"
-        print(
-            f"w={w:3d}  fold={row['fold'][0]:6.2f}s  "
-            f"prefix={row['prefix'][0]:6.2f}s  "
-            f"({row['fold'][1]} windows, checksums equal)"
-        )
-
-
-def crossover_mixed(mult: int) -> None:
-    """Fold vs prefix vs AUTO on a LENGTH-SKEWED corpus (the real shape):
-    90% natural ~45-token docs + 10% docs repeated 50x to ~2.7k tokens
-    (~53% of all tokens in the long tail).
-
-    Round-7 history: this probe is what EXPOSED the round-6 routing
-    artifact — per-doc-length auto ran 16x slower than pure fold here
-    (23.4 s vs 1.4 s at w=8) because the prefix branch it routed the long
-    tail into is slower than fold at equal parallelism at every practical
-    w (and was additionally being serialized onto one task by AQE's
-    bytes-based coalescing until the REPARTITION_BY_NUM pin). Pass now =
-    auto == fold wall (same plan) and prefix checksum-identical.
-    """
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from etl_for_all_studies_spark.operators.spans import window_hashes
-    from etl_for_all_studies_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench-spans-crossover-mixed",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-        },
-    )
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    if mult > 1:
-        copies = [
-            base.select(
-                (F.col("doc_id") + F.lit(i * 1_000_000)).alias("doc_id"),
-                "text",
-            )
-            for i in range(mult)
-        ]
-        base = copies[0]
-        for c in copies[1:]:
-            base = base.unionByName(c)
-    mixed = base.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.array_join(F.array_repeat(F.col("text"), 50), " "),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    ).repartition(32).persist()
-    n = mixed.count()
-    print(f"mixed corpus: {n} docs ({mult}x sf0.1; every 10th repeated 50x)")
-    for w in (8, 50):
-        row = {}
-        for method in ("fold", "prefix", "auto"):
-            best = None
-            for _ in range(2):
-                t0 = _time.monotonic()
-                agg = (
-                    window_hashes(mixed, w=w, method=method)
-                    .agg(F.count(F.lit(1)), F.bit_xor("h"))
-                    .collect()
-                )
-                el = _time.monotonic() - t0
-                best = el if best is None else min(best, el)
-                spark.catalog.clearCache()
-                mixed.persist().count()
-            row[method] = (round(best, 2), agg[0][0], agg[0][1])
-        assert row["fold"][1:] == row["prefix"][1:] == row["auto"][1:], (
-            f"hash mismatch at w={w}: {row}"
-        )
-        print(
-            f"w={w:3d}  fold={row['fold'][0]:6.2f}s  "
-            f"prefix={row['prefix'][0]:6.2f}s  auto={row['auto'][0]:6.2f}s  "
-            f"({row['fold'][1]} windows, checksums equal)"
-        )
 
 
 def incremental(mult: int) -> None:
@@ -349,17 +193,8 @@ def main() -> None:
         ]
         series(mults)
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "crossover-mixed":
-        crossover_mixed(int(sys.argv[2]) if len(sys.argv) > 2 else 1)
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "incremental":
         incremental(int(sys.argv[2]) if len(sys.argv) > 2 else 10)
-        return
-    if len(sys.argv) > 1 and sys.argv[1] in ("crossover", "crossover-long"):
-        crossover(
-            int(sys.argv[2]) if len(sys.argv) > 2 else 5,
-            long_docs=sys.argv[1] == "crossover-long",
-        )
         return
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 

@@ -26,6 +26,17 @@ _A1, _A2, _A3, _A4, _A5 = (
 _P = 0.3275911
 
 
+def round6(x: Column | str) -> Column:
+    """Round onto the 1e-6 grid every cross-engine comparison uses:
+    ``floor(x·10⁶ + 0.5001)/10⁶``, the form the DuckDB oracle SQL spells
+    out verbatim. The 1e-4 bias moves a value sitting on a half-grid
+    boundary to the same side in both engines despite last-ulp summation
+    differences."""
+    if isinstance(x, str):
+        x = F.col(x)
+    return (F.floor(x * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
+
+
 def erf_expr(x: Column) -> Column:
     """erf(x) via A&S 7.1.26 (odd-symmetric)."""
     ax = F.abs(x)
@@ -328,7 +339,7 @@ def benjamini_hochberg_scalable(
 
     The classic window form partitions rank + running-min by family: one
     20k-gene study's pair family is ~2×10⁸ rows funneled into ONE window
-    task — re-serializing exactly the fan-out ``mode="block"`` spread across
+    task — re-serializing exactly the fan-out the block route spread across
     reducers. This form keeps every stage partitioned by
     (family, p-bucket), parallelism = families × ``num_buckets``:
 
@@ -362,7 +373,7 @@ def benjamini_hochberg_scalable(
     # ways (invalid-row union branch, percentile edges, bucketed rank,
     # bucket counts, bucket minima) and Catalyst reuses no exchange across
     # them once column pruning diverges — without the barrier the caller's
-    # entire upstream (for block-mode correlation: the quadratic pair join +
+    # entire upstream (for block-route correlation: the quadratic pair join +
     # aggregation) recomputes once per branch. Default MEMORY_AND_DISK, so a
     # 100 TB-scale pair table spills instead of evicting; release via
     # ``scope`` (caching.CacheScope) or the harness (bench clearCache).
@@ -712,10 +723,7 @@ def weighted_quantile(
     # not hinge on last-ulp summation order (the suite's boundary
     # discipline, applied inside the operator since the decision IS the
     # result here)
-    share = F.floor(
-        (F.sum("__w").over(w_cum) / F.sum("__w").over(w_tot)) * 1000000.0
-        + F.lit(0.5001)
-    ) / 1000000.0
+    share = round6(F.sum("__w").over(w_cum) / F.sum("__w").over(w_tot))
     stepped = base.withColumn("__share", share)
     return (
         stepped.where(F.col("__share") >= q)
@@ -917,6 +925,7 @@ __all__ = [
     "mann_whitney_u",
     "normal_cdf_expr",
     "proportions_z_test",
+    "round6",
     "spearman_p_value_expr",
     "spearman_p_value_t_expr",
     "weighted_quantile",

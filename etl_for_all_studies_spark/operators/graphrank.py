@@ -31,14 +31,11 @@ exactly once), so five rounds evaluate in one pass; for deep runs pass
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import CacheScope, persist
-
-
-def _q6(col: Column) -> Column:
-    return F.floor(col * 1_000_000.0 + F.lit(0.5001)) / 1_000_000.0
+from ..functions.stats import round6
 
 
 def pagerank(
@@ -83,7 +80,7 @@ def pagerank(
         scope,
     )
 
-    ranks = nodes.select("node", _q6(F.lit(1.0 / n)).alias("rank"))
+    ranks = nodes.select("node", round6(F.lit(1.0 / n)).alias("rank"))
     teleport = (1.0 - damping) / n
     for i in range(n_iter):
         contribs = (
@@ -95,7 +92,7 @@ def pagerank(
             contribs.withColumnRenamed("dst", "node"), "node", "left"
         ).select(
             "node",
-            _q6(
+            round6(
                 F.lit(teleport)
                 + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
             ).alias("rank"),

@@ -15,7 +15,7 @@ Design:
   across engines and partitionings (same discipline as the k-means
   centroid grid in ``similarity.py``).
 * **encode** — a narrow per-row ``transform`` against the broadcast
-  codebook: ``code = floor(q6((x−lo)/(hi−lo)·255) + 0.5001)`` clamped to
+  codebook: ``code = floor(round6((x−lo)/(hi−lo)·255) + 0.5001)`` clamped to
   [0, 255]; degenerate dimensions (hi == lo) encode to 0. The 1e-6
   pre-quantization + epsilon-round makes the boundary decision
   deterministic — a knife-edge float must not flip codes between runs.
@@ -26,12 +26,10 @@ dimensionality), so it broadcasts for free.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _q6(col: Column) -> Column:
-    return (F.floor(col * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
+from ..functions.stats import round6
 
 
 def fit_scalar_quantizer(
@@ -42,8 +40,8 @@ def fit_scalar_quantizer(
         vectors.select(F.posexplode(F.col(vec_col)).alias("p0", "x"))
         .groupBy((F.col("p0") + 1).alias("pos"))
         .agg(
-            _q6(F.min(F.col("x").cast("double"))).alias("lo"),
-            _q6(F.max(F.col("x").cast("double"))).alias("hi"),
+            round6(F.min(F.col("x").cast("double"))).alias("lo"),
+            round6(F.max(F.col("x").cast("double"))).alias("hi"),
         )
     )
 
@@ -79,7 +77,7 @@ def quantize_embeddings(
             lambda x, i: F.least(
                 F.greatest(
                     F.floor(
-                        _q6(
+                        round6(
                             (x.cast("double") - F.element_at("lo_arr", i + 1))
                             / F.nullif(
                                 F.element_at("hi_arr", i + 1)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import word_tokens
+from ..functions.stats import round6
 
 
 def bm25_scores(
@@ -194,9 +195,8 @@ def tfidf_doc_similarity(
     scored = tfidf_doc_scores(
         docs, probe_ids, max_df=max_df, id_col=id_col, text_col=text_col
     )
-    q6 = (F.floor(F.col("cos_sim") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
     rw = Window.partitionBy("probe_id").orderBy(
-        q6.desc(), F.col(id_col).asc()
+        round6("cos_sim").desc(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(rw))

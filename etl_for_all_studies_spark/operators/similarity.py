@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import CacheScope, persist
+from ..functions.stats import round6
 from ..partitioning import compute_spread
 from .dedup_graph import fresh_stats_checkpoint
 
@@ -391,12 +392,6 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-def _q6(col: Column) -> Column:
-    """Quantize to a 1e-6 grid (floor + epsilon, the suite's cross-engine
-    rounding form)."""
-    return (F.floor(col * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
-
 def kmeans_predict(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -475,7 +470,7 @@ def kmeans_fit(
             asg.join(vecs, "vid")
             .select("cell", F.posexplode("v").alias("pos", "val"))
             .groupBy("cell", "pos")
-            .agg(_q6(F.avg("val")).alias("m"))
+            .agg(round6(F.avg("val")).alias("m"))
             .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select("cell", F.transform("pm", lambda s: s["m"]).alias("c_new"))

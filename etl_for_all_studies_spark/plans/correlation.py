@@ -7,18 +7,23 @@ Re-expresses the reference's correlation engine
   Pearson-on-ranks ``corr()`` (O-36) → normal-approx p (O-37) → NaN-ρ drop
   (O-38) → BH FDR per study (O-40) → p NULL→1.0 at store time (O-39).
 
-Two physical strategies, same semantics on dense matrices:
+``compute_gene_pair_correlations`` classifies each study with one cheap
+aggregation and sends it through one of three pair builders, all feeding
+the one gates → ρ → p → BH tail (``_correlate``). Results are identical on
+every route (tests pin them equal); only the physical plan differs:
 
-* ``mode="exact"`` (default): ranks are computed **within each pair's shared
-  sample set** after the self-join — bit-faithful to the reference even when
-  genes cover ragged sample sets (the reference intersects per pair,
-  ``correlation.py:118``). Cost: windows over the pair-expanded table.
-* ``mode="dense"``: ranks computed once per (study, gene) **before** the
-  self-join — identical results when every gene in a study covers the same
-  samples (the common dense-matrix case) at a fraction of the cost; this is
-  the 100 TB-scale path (one window over the long table, then the join's
-  equi-keys (study, sample) drive a sort-merge join and the aggregation is
-  map-side partial).
+* ragged studies (some gene misses some sample) → ``_ragged_pairs``: ranks
+  are computed **within each pair's shared sample set** after the
+  self-join — bit-faithful to the reference, which intersects per pair
+  (``correlation.py:118``). Cost: windows over the pair-expanded table.
+* dense studies up to ``_WIDE_GENE_THRESHOLD`` genes → ``_dense_pairs``:
+  ranks computed once per (study, gene) **before** the self-join —
+  identical results when every gene covers every sample, at a fraction of
+  the cost (one window over the long table; the join's equi-keys (study,
+  sample) drive a sort-merge join and the aggregation is map-side partial).
+* wider dense studies → ``_block_pairs``: the same pre-ranked pairs,
+  enumerated in gene blocks so one (study, sample) key's quadratic fan-out
+  spreads over B(B+1)/2 reducers.
 
 The join is equi on (study_key, gsm_accession) with ``gene_a < gene_b`` —
 Catalyst plans the equi part as the join key and the inequality as a
@@ -27,6 +32,7 @@ post-join filter; AQE handles skewed studies.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,25 +47,39 @@ from ..functions.stats import (
 
 MIN_SAMPLES_FOR_CORRELATION = 2  # reference correlation.py:65
 
+# Dense studies wider than this take the block route. Measured dense/block
+# crossover (SCALE.md round-8 envelope series: dense wins at 1k genes, block
+# wins from 2k up, both regimes) — 1024 is the last power-of-two width where
+# the dense plan's single-reducer-per-sample fan-out (~0.5M pairs) still
+# beats block's B+1× input replication.
+_WIDE_GENE_THRESHOLD = 1024
+
+# Block sizing: keep each block pair's output near (_GENES_PER_BLOCK)² ≈ 4M
+# rows per (sample, block-pair) task. Measured round-8 envelope sweep
+# (SCALE.md): at 20k genes B=10 (2k genes/block) was the sweet spot; smaller
+# blocks buy nothing locally and pay B+1× input replication, larger blocks
+# push per-task output toward the single-reducer pathology the block route
+# exists to remove.
+_GENES_PER_BLOCK = 2000
+
 
 def _utc_now_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds")
 
 
 def _split_dense_studies(
-    e: DataFrame, wide_gene_threshold: int | None = None
+    e: DataFrame,
 ) -> tuple[list[int], list[int], list[int], dict[int, int]]:
     """Classify studies as dense (every gene covers every sample exactly
-    once), WIDE dense (dense with ``n_genes > wide_gene_threshold`` — the
+    once), WIDE dense (dense with ``n_genes > _WIDE_GENE_THRESHOLD`` — the
     beyond-envelope shape that needs block pair enumeration), or ragged.
     Also returns the per-study gene counts the classification aggregation
-    already paid for, so auto mode can size ``n_blocks`` from the widest
-    study instead of a guess.
+    already paid for, so the router can size the block count from the
+    widest study instead of a guess.
 
     A study is dense iff (a) no (gene, sample) cell repeats and (b) the
     distinct cells fill the full gene × sample grid. Two-phase screen so the
-    router's fixed cost stays small (it is pure latency on every auto-routed
-    query):
+    router's fixed cost stays small (it is pure latency on every call):
 
     1. ONE aggregation computes (total, n_genes, n_samples). If
        ``total != n_genes · n_samples`` the study cannot be dense — this
@@ -72,15 +92,13 @@ def _split_dense_studies(
        on the pre-ranked plan); a duplicated-cell impostor is demoted to
        ragged, so routing can never change results.
     """
-    from pyspark.sql import functions as SF
-
     per_study = e.groupBy("study_key").agg(
-        SF.count(SF.lit(1)).alias("total"),
-        SF.count_distinct("gene_key").alias("n_genes"),
-        SF.count_distinct("gsm_accession").alias("n_samples"),
+        F.count(F.lit(1)).alias("total"),
+        F.count_distinct("gene_key").alias("n_genes"),
+        F.count_distinct("gsm_accession").alias("n_samples"),
     )
     rows = per_study.withColumn(
-        "candidate", SF.col("total") == SF.col("n_genes") * SF.col("n_samples")
+        "candidate", F.col("total") == F.col("n_genes") * F.col("n_samples")
     ).collect()
     candidates = [r["study_key"] for r in rows if r["candidate"]]
     expected = {r["study_key"]: r["total"] for r in rows}
@@ -92,55 +110,98 @@ def _split_dense_studies(
             .select("study_key", "gene_key", "gsm_accession")
             .distinct()
             .groupBy("study_key")
-            .agg(SF.count(SF.lit(1)).alias("cells"))
+            .agg(F.count(F.lit(1)).alias("cells"))
             .collect()
         )
         dense = [r["study_key"] for r in cells if r["cells"] == expected[r["study_key"]]]
     genes = {r["study_key"]: r["n_genes"] for r in rows}
-    wide = (
-        [k for k in dense if genes[k] > wide_gene_threshold]
-        if wide_gene_threshold is not None
-        else []
-    )
+    wide = [k for k in dense if genes[k] > _WIDE_GENE_THRESHOLD]
     dense = [k for k in dense if k not in set(wide)]
     ragged = [r["study_key"] for r in rows if r["study_key"] not in set(dense) | set(wide)]
     return dense, wide, ragged, genes
 
 
-# Auto-mode block sizing: keep each block pair's output near
-# (_GENES_PER_BLOCK)² ≈ 4M rows per (sample, block-pair) task. Measured
-# round-8 envelope sweep (SCALE.md): at 20k genes B=10 (2k genes/block)
-# was the sweet spot; smaller blocks buy nothing locally and pay B+1×
-# input replication, larger blocks push per-task output toward the
-# single-reducer pathology block mode exists to remove.
-_GENES_PER_BLOCK = 2000
-
-
 def _derive_n_blocks(max_genes: int) -> int:
-    """Blocks for the widest auto-routed study: ceil(width / 2k), min 2
-    (one block would make the block plan a strictly worse dense plan)."""
+    """Blocks for the widest routed study: ceil(width / 2k), min 2 (one
+    block would make the block plan a strictly worse dense plan)."""
     return max(2, -(-max_genes // _GENES_PER_BLOCK))
 
 
+def _ranked(e: DataFrame) -> DataFrame:
+    """Average rank once per (study, gene) — valid on dense studies only."""
+    return e.withColumn(
+        "rank", average_rank(["study_key", "gene_key"], "expression_value")
+    )
+
+
+def _self_join(e: DataFrame) -> DataFrame:
+    """Pairs of genes sharing a (study, sample), ``gene_a < gene_b``, with
+    each side's value (``va``/``vb``) and, on a pre-ranked input, each
+    side's rank (``ra``/``rb``)."""
+    a = e.alias("a")
+    b = e.alias("b")
+    sides = [
+        F.col("a.expression_value").alias("va"),
+        F.col("b.expression_value").alias("vb"),
+    ]
+    if "rank" in e.columns:
+        sides += [F.col("a.rank").alias("ra"), F.col("b.rank").alias("rb")]
+    return a.join(
+        b,
+        on=[
+            F.col("a.study_key") == F.col("b.study_key"),
+            F.col("a.gsm_accession") == F.col("b.gsm_accession"),
+            F.col("a.gene_key") < F.col("b.gene_key"),
+        ],
+    ).select(
+        F.col("a.study_key").alias("study_key"),
+        F.col("a.gene_key").alias("gene_a_key"),
+        F.col("b.gene_key").alias("gene_b_key"),
+        *sides,
+    )
+
+
+def _ragged_pairs(e: DataFrame) -> DataFrame:
+    """Ragged route: ranks within the pair's shared sample set — exact
+    reference semantics for ragged matrices (correlation.py:118 intersects
+    first)."""
+    pair_cols = ["study_key", "gene_a_key", "gene_b_key"]
+    return (
+        _self_join(e)
+        .withColumn("ra", average_rank(pair_cols, "va"))
+        .withColumn("rb", average_rank(pair_cols, "vb"))
+    )
+
+
+def _dense_pairs(e: DataFrame) -> DataFrame:
+    """Dense route: pre-ranked self-join."""
+    return _self_join(_ranked(e))
+
+
 def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
-    """Bucketed pair enumeration over a pre-ranked long table (``block``
-    mode's core). Every unordered gene pair {g₁, g₂} with blocks p ≤ q is
-    produced by exactly one block pair (p, q):
+    """Wide dense route: bucketed pair enumeration over the pre-ranked long
+    table. The plain dense join keys the shuffle on (study, sample), so ONE
+    task must emit all n_genes²/2 pairs for its sample — at 20k genes that
+    is 2·10⁸ rows from a single task, an unsplittable hot key (AQE splits
+    skewed *partitions*, not single keys). Here every unordered gene pair
+    {g₁, g₂} with blocks p ≤ q is produced by exactly one block pair (p, q):
 
     * as the LEFT side, a row with block g is replicated to block pairs
       (g, g), (g, g+1), …, (g, B−1) — a per-row ``sequence`` explode;
     * as the RIGHT side, to (0, g), …, (g, g).
 
     The join is then a pure equi-join on (study, sample, block_a, block_b) —
-    the block columns join the shuffle key, so one (study, sample)'s
-    quadratic pair fan-out is spread over B(B+1)/2 independent reducers
-    instead of one. Off-diagonal block pairs contain each unordered pair
-    once with arbitrary side order (blocks differ ⇒ genes differ), so the
-    output is canonicalized with least/greatest + a conditional swap of the
-    value/rank columns; diagonal pairs keep the usual ``gene_a < gene_b``
-    predicate. Block id is ``pmod(hash(gene_key), B)`` — hash, not range, so
-    dense and sparse gene-key spaces both balance.
+    the block columns join the shuffle key, so each task emits at most
+    (n_genes/B)² pairs, at the cost of replicating each input row B+1 times
+    (the classic triangle-enumeration tradeoff). Off-diagonal block pairs
+    contain each unordered pair once with arbitrary side order (blocks
+    differ ⇒ genes differ), so the output is canonicalized with
+    least/greatest + a conditional swap of the value/rank columns; diagonal
+    pairs keep the usual ``gene_a < gene_b`` predicate. Block id is
+    ``pmod(hash(gene_key), B)`` — hash, not range, so dense and sparse
+    gene-key spaces both balance.
     """
+    e = _ranked(e)
     blk = F.pmod(F.hash(F.col("gene_key")), F.lit(n_blocks)).alias("blk")
     base = e.select("*", blk)
     left = base.select(
@@ -157,7 +218,7 @@ def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
     # INPUT bytes, but this join amplifies output ~n_genes/B× per input row —
     # on a wide-gene study the tiny replicated input coalesces into one
     # partition and the whole quadratic fan-out lands on a single reducer,
-    # recreating exactly the hot-spot block mode exists to remove. An
+    # recreating exactly the hot-spot the block route exists to remove. An
     # explicit numbered repartition on the join keys is non-coalescible, so
     # the B(B+1)/2 × samples key groups keep their full reducer spread.
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -197,152 +258,26 @@ def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
     )
 
 
-def compute_gene_pair_correlations(
-    expression: DataFrame,
+def _correlate(
+    paired: DataFrame,
     *,
+    bucketed_bh: bool,
+    computed_at: str,
     min_samples: int = MIN_SAMPLES_FOR_CORRELATION,
-    mode: str = "exact",
-    computed_at: str | None = None,
     pvalue_dist: str = "normal",
-    n_blocks: int | None = None,
-    wide_gene_threshold: int = 1024,
     scope=None,
 ) -> DataFrame:
-    """Long-form expression → fact_gene_pair_corr rows.
+    """The shared tail: (study, gene_a, gene_b, va, vb, ra, rb) pair rows →
+    gates → ρ → p → BH q → fact_gene_pair_corr rows.
 
-    ``expression`` needs columns (study_key, gene_key, gsm_accession,
-    expression_value); output matches ``schemas.FACT_GENE_PAIR_CORR``.
-
-    ``mode="auto"`` classifies each study (one cheap aggregation) and routes
-    dense studies through the pre-ranked plan, WIDE dense studies
-    (``n_genes > wide_gene_threshold``) through the block-bucketed plan,
-    and ragged ones through the exact per-pair plan — identical results
-    every way, since the physical plans only diverge on ragged matrices
-    and block ≡ dense is pinned by tests.
-
-    ``mode="block"`` is the beyond-envelope scale path (SURVEY §7.4.7) for
-    studies whose gene count far exceeds the reference's ~hundreds: dense
-    semantics (pre-ranked), but pair enumeration is **bucketed** into
-    ``n_blocks`` gene blocks. The plain dense join keys the shuffle on
-    (study, sample), so ONE task must emit all n_genes²/2 pairs for its
-    sample — at 20k genes that is 2·10⁸ rows from a single task, an
-    unsplittable hot key (AQE splits skewed *partitions*, not single keys).
-    The block plan keys on (study, sample, block_a, block_b): each task emits
-    at most (n_genes/B)² pairs, giving B(B+1)/2-way parallelism per sample at
-    the cost of replicating each input row B+1 times across the two join
-    sides — the classic triangle-enumeration tradeoff (shuffle grows √P-ish,
-    task output shrinks quadratically). Results are hash-identical to
-    ``mode="dense"`` (tests pin this). ``n_blocks=None`` (default) sizes
-    blocks from the data: auto mode derives ``ceil(width / 2000)`` from
-    the widest routed study (block-pair output stays ~4M rows,
-    ``_derive_n_blocks``); an explicit ``mode="block"`` call falls back
-    to 8. Pass a value to override either.
-
-    ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
-    the reference's no-SciPy fallback — a closed-form JVM-side expression;
-    ``"t"`` is SciPy's primary Student-t semantics — ALSO a pure JVM
-    expression (incomplete-beta continued fraction as a ``sequence`` fold,
-    ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy), so
-    neither p-value path has Python in the row path.
+    ``bucketed_bh`` is set for the block route only: its pair families are
+    n_genes²/2 rows, and the classic per-family window would funnel exactly
+    the fan-out ``_block_pairs`` spread across reducers back into ONE task.
+    The bucketed BH keeps every stage partitioned by (study, p-bucket) with
+    bit-identical output (pinned by
+    ``test_bh_scalable_matches_classic_and_oracle``). On reference-envelope
+    families the window form is cheaper (SCALE.md, "BH follows the route").
     """
-    ts = computed_at or _utc_now_iso()
-    e = expression.select("study_key", "gene_key", "gsm_accession", "expression_value")
-
-    if mode == "auto":
-        dense_keys, wide_keys, ragged_keys, genes = _split_dense_studies(
-            e, wide_gene_threshold=wide_gene_threshold
-        )
-        parts = []
-        if dense_keys:
-            parts.append(
-                compute_gene_pair_correlations(
-                    e.where(F.col("study_key").isin(dense_keys)),
-                    min_samples=min_samples, mode="dense", computed_at=ts,
-                    pvalue_dist=pvalue_dist,
-                )
-            )
-        if wide_keys:
-            nb = (
-                n_blocks
-                if n_blocks is not None
-                else _derive_n_blocks(max(genes[k] for k in wide_keys))
-            )
-            parts.append(
-                compute_gene_pair_correlations(
-                    e.where(F.col("study_key").isin(wide_keys)),
-                    min_samples=min_samples, mode="block", computed_at=ts,
-                    pvalue_dist=pvalue_dist, n_blocks=nb, scope=scope,
-                )
-            )
-        if ragged_keys:
-            parts.append(
-                compute_gene_pair_correlations(
-                    e.where(F.col("study_key").isin(ragged_keys)),
-                    min_samples=min_samples, mode="exact", computed_at=ts,
-                    pvalue_dist=pvalue_dist,
-                )
-            )
-        if not parts:
-            return compute_gene_pair_correlations(
-                e, min_samples=min_samples, mode="exact", computed_at=ts,
-                pvalue_dist=pvalue_dist,
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    if mode == "dense":
-        e = e.withColumn(
-            "rank", average_rank(["study_key", "gene_key"], "expression_value")
-        )
-        a = e.alias("a")
-        b = e.alias("b")
-        paired = a.join(
-            b,
-            on=[
-                F.col("a.study_key") == F.col("b.study_key"),
-                F.col("a.gsm_accession") == F.col("b.gsm_accession"),
-                F.col("a.gene_key") < F.col("b.gene_key"),
-            ],
-        ).select(
-            F.col("a.study_key").alias("study_key"),
-            F.col("a.gene_key").alias("gene_a_key"),
-            F.col("b.gene_key").alias("gene_b_key"),
-            F.col("a.expression_value").alias("va"),
-            F.col("b.expression_value").alias("vb"),
-            F.col("a.rank").alias("ra"),
-            F.col("b.rank").alias("rb"),
-        )
-    elif mode == "block":
-        e = e.withColumn(
-            "rank", average_rank(["study_key", "gene_key"], "expression_value")
-        )
-        paired = _block_pairs(e, 8 if n_blocks is None else n_blocks)
-    else:
-        a = e.alias("a")
-        b = e.alias("b")
-        paired = a.join(
-            b,
-            on=[
-                F.col("a.study_key") == F.col("b.study_key"),
-                F.col("a.gsm_accession") == F.col("b.gsm_accession"),
-                F.col("a.gene_key") < F.col("b.gene_key"),
-            ],
-        ).select(
-            F.col("a.study_key").alias("study_key"),
-            F.col("a.gene_key").alias("gene_a_key"),
-            F.col("b.gene_key").alias("gene_b_key"),
-            F.col("a.expression_value").alias("va"),
-            F.col("b.expression_value").alias("vb"),
-        )
-        # Ranks within the pair's shared sample set — exact reference
-        # semantics for ragged matrices (correlation.py:118 intersects first).
-        pair_cols = ["study_key", "gene_a_key", "gene_b_key"]
-        paired = paired.withColumn("ra", average_rank(pair_cols, "va")).withColumn(
-            "rb", average_rank(pair_cols, "vb")
-        )
-
     stats = (
         paired.groupBy("study_key", "gene_a_key", "gene_b_key")
         .agg(
@@ -393,12 +328,7 @@ def compute_gene_pair_correlations(
         )
     )
 
-    # q-values: block mode's pair families are n_genes²/2 rows — the classic
-    # per-family window would funnel exactly the fan-out _block_pairs spread
-    # across reducers back into ONE task. The bucketed BH keeps every stage
-    # partitioned by (study, p-bucket) with bit-identical output (pinned by
-    # test_bh_scalable_matches_classic_and_oracle).
-    if mode == "block":
+    if bucketed_bh:
         with_q = benjamini_hochberg_scalable(
             stats, p_col="p_value", q_col="q_value", family_cols=["study_key"],
             scope=scope,
@@ -416,8 +346,63 @@ def compute_gene_pair_correlations(
         F.coalesce(F.col("p_value"), F.lit(1.0)).alias("p_value"),  # O-39
         F.col("q_value"),
         F.col("n_samples").cast("int").alias("n_samples"),
-        F.lit(ts).alias("computed_at"),
+        F.lit(computed_at).alias("computed_at"),
         "study_key",
+    )
+
+
+def compute_gene_pair_correlations(
+    expression: DataFrame,
+    *,
+    min_samples: int = MIN_SAMPLES_FOR_CORRELATION,
+    computed_at: str | None = None,
+    pvalue_dist: str = "normal",
+    scope=None,
+) -> DataFrame:
+    """Long-form expression → fact_gene_pair_corr rows.
+
+    ``expression`` needs columns (study_key, gene_key, gsm_accession,
+    expression_value); output matches ``schemas.FACT_GENE_PAIR_CORR``.
+
+    Each study is classified (``_split_dense_studies``) and routed: dense
+    studies through the pre-ranked plan, WIDE dense studies
+    (``n_genes > _WIDE_GENE_THRESHOLD``) through the block-bucketed plan
+    with B derived from the widest of them (``_derive_n_blocks``), and
+    ragged ones through the per-pair plan — identical results every way,
+    since the physical plans only diverge on ragged matrices.
+
+    ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
+    the reference's no-SciPy fallback — a closed-form JVM-side expression;
+    ``"t"`` is SciPy's primary Student-t semantics — ALSO a pure JVM
+    expression (incomplete-beta continued fraction as a ``sequence`` fold,
+    ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy), so
+    neither p-value path has Python in the row path. ``scope`` (a
+    ``caching.CacheScope``) releases the block route's BH barrier.
+    """
+    ts = computed_at or _utc_now_iso()
+    e = expression.select("study_key", "gene_key", "gsm_accession", "expression_value")
+
+    def only(keys: list[int]) -> DataFrame:
+        return e.where(F.col("study_key").isin(keys))
+
+    dense_keys, wide_keys, ragged_keys, genes = _split_dense_studies(e)
+    routes: list[tuple[DataFrame, bool]] = []  # (pair rows, bucketed BH)
+    if dense_keys:
+        routes.append((_dense_pairs(only(dense_keys)), False))
+    if wide_keys:
+        n_blocks = _derive_n_blocks(max(genes[k] for k in wide_keys))
+        routes.append((_block_pairs(only(wide_keys), n_blocks), True))
+    if ragged_keys or not routes:
+        routes.append((_ragged_pairs(only(ragged_keys)), False))
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            _correlate(
+                paired, bucketed_bh=bucketed, computed_at=ts,
+                min_samples=min_samples, pvalue_dist=pvalue_dist, scope=scope,
+            )
+            for paired, bucketed in routes
+        ],
     )
 
 

@@ -40,16 +40,8 @@ def run_correlation_job(
     accessions: Sequence[str] | None = None,
     spark: SparkSession | None = None,
     *,
-    mode: str = "auto",
     pvalue_dist: str = "normal",
 ) -> CorrelationJobResult:
-    # mode="auto" default (round 9): results are identical in every mode —
-    # the router sends ragged studies to the exact per-pair plan and dense
-    # ones to the pre-ranked plan — but the default was "exact", which at
-    # SAMPLE depth pays per-pair intersection ranking: measured 58.4 s
-    # exact vs 7.8 s auto at 120 genes x 10,000 samples (the reference's
-    # stated sample floor). The classification aggregation auto adds is
-    # one bounded job (SCALE.md round 9).
     t0 = time.monotonic()
     spark = spark or get_spark(
         app_name=config.spark.app_name,
@@ -102,9 +94,8 @@ def run_correlation_job(
             compute_gene_pair_correlations(
                 expression,
                 min_samples=config.processing.min_samples,
-                mode=mode,
                 pvalue_dist=pvalue_dist,
-                scope=scope,  # releases block-mode's BH barrier with the job
+                scope=scope,  # releases the block route's BH barrier with the job
             )
         )  # computed once, used for both the count and the write
 

@@ -77,7 +77,6 @@ def run_pipeline(
     config: AppConfig,
     spark: SparkSession | None = None,
     *,
-    correlation_mode: str = "auto",
     with_correlations: bool = False,
 ) -> PipelineResult:
     """Run the full ETL over every study under ``processing.input_directory``."""
@@ -264,7 +263,7 @@ def run_pipeline(
         if with_correlations:
             from .correlation_job import run_correlation_job
 
-            run_correlation_job(config, spark=spark, mode=correlation_mode)
+            run_correlation_job(config, spark=spark)
 
         elapsed = time.monotonic() - t0
         if config.logging.log_processing_time:

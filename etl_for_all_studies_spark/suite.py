@@ -32,7 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.stats import average_rank
+from .functions.stats import average_rank, round6
 from .operators.dedup import (
     exact_duplicates,
     incremental_new_documents,
@@ -43,7 +43,11 @@ from .operators.dedup import (
 )
 from .operators.similarity import brute_force_topk, ivf_topk
 from .operators.textops import annotate_documents
-from .plans.correlation import compute_gene_pair_correlations
+from .plans.correlation import (
+    _block_pairs,
+    _correlate,
+    compute_gene_pair_correlations,
+)
 
 
 @dataclasses.dataclass(frozen=True)
@@ -426,33 +430,47 @@ WHERE rk <= 3
 #     runs, bound to suppliers-as-genes × parts-as-samples)
 # --------------------------------------------------------------------------
 
-def q_spearman_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    base = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum("l_quantity").cast("double").alias("expression_value")
-    )
+def _spearman_rows(
+    base: DataFrame, gene: str, sample: str, *, n_blocks: int | None = None
+) -> DataFrame:
+    """Shared body of the Spearman queries: ``base`` (one row per
+    ``gene`` × ``sample`` with an ``expression_value``) as ONE study, all
+    pairs correlated, projected onto the oracle's 1e-6 grid. ``n_blocks``
+    calls the block route directly at that B instead of the router."""
     expr = base.select(
         F.lit(1).cast("long").alias("study_key"),
-        F.col("l_suppkey").cast("long").alias("gene_key"),
-        F.col("l_partkey").cast("string").alias("gsm_accession"),
+        F.col(gene).cast("long").alias("gene_key"),
+        F.col(sample).cast("string").alias("gsm_accession"),
         "expression_value",
-    ).persist()  # both sides of the pair self-join read this (~600k rows)
-    # mode="auto": one cheap classification agg routes each study — this
-    # supplier×part matrix is RAGGED (each supplier covers ~3% of parts), so
-    # the router provably picks the exact per-pair-intersection plan the
-    # reference semantics require; spearman_dense_auto below is the matrix
-    # shape where the same router takes the pre-ranked dense path.
-    corr = compute_gene_pair_correlations(
-        expr, min_samples=2, mode="auto", computed_at="fixed"
-    )
+    ).persist()  # both sides of the pair self-join read this
+    if n_blocks is None:
+        corr = compute_gene_pair_correlations(expr, min_samples=2, computed_at="fixed")
+    else:
+        corr = _correlate(
+            _block_pairs(expr, n_blocks), bucketed_bh=True, min_samples=2,
+            computed_at="fixed",
+        )
     return corr.select(
         "gene_a_key",
         "gene_b_key",
         F.col("n_samples").cast("long").alias("n_samples"),
-        ((F.floor(F.col("rho_spearman") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("rho"),
-        ((F.floor(F.col("p_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("p"),
-        ((F.floor(F.col("q_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("q"),
+        round6("rho_spearman").alias("rho"),
+        round6("p_value").alias("p"),
+        round6("q_value").alias("q"),
     )
+
+
+def q_spearman_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # ~600k rows. The router's one cheap classification agg finds this
+    # supplier×part matrix RAGGED (each supplier covers ~3% of parts), so
+    # it picks the exact per-pair-intersection plan the reference semantics
+    # require; spearman_dense_auto below is the matrix shape where the same
+    # router takes the pre-ranked dense path.
+    li = _t(spark, sf_dir, "lineitem")
+    base = li.groupBy("l_suppkey", "l_partkey").agg(
+        F.sum("l_quantity").cast("double").alias("expression_value")
+    )
+    return _spearman_rows(base, "l_suppkey", "l_partkey")
 
 
 _T_EXPR = "ABS(rho*SQRT((n-2)/(1.0-rho*rho)))"
@@ -466,7 +484,7 @@ def _spearman_sql(base_select: str) -> str:
     """Shared DuckDB oracle skeleton for the Spearman+BH plan; ranks are
     computed within each pair's shared sample set (reference semantics) —
     identical to per-gene ranks when the matrix is dense, so one oracle
-    covers both physical routes of ``mode="auto"``."""
+    covers every physical route."""
     return f"""
 WITH base AS (
   {base_select}
@@ -527,7 +545,7 @@ _SQL_SPEARMAN = _spearman_sql(
 
 # --------------------------------------------------------------------------
 # 10b. DENSE-route Spearman: supplier × line-number matrix — every supplier
-#      covers all 7 line numbers, so mode="auto" classifies the study dense
+#      covers all 7 line numbers, so the router classifies the study dense
 #      and takes the pre-ranked plan (one window over the long table instead
 #      of two windows over the pair-expanded table). Same oracle skeleton:
 #      per-pair ranks == per-gene ranks on a dense matrix.
@@ -538,23 +556,7 @@ def q_spearman_dense_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.groupBy("l_suppkey", "l_linenumber").agg(
         F.sum("l_quantity").cast("double").alias("expression_value")
     )
-    expr = base.select(
-        F.lit(1).cast("long").alias("study_key"),
-        F.col("l_suppkey").cast("long").alias("gene_key"),
-        F.col("l_linenumber").cast("string").alias("gsm_accession"),
-        "expression_value",
-    ).persist()
-    corr = compute_gene_pair_correlations(
-        expr, min_samples=2, mode="auto", computed_at="fixed"
-    )
-    return corr.select(
-        "gene_a_key",
-        "gene_b_key",
-        F.col("n_samples").cast("long").alias("n_samples"),
-        ((F.floor(F.col("rho_spearman") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("rho"),
-        ((F.floor(F.col("p_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("p"),
-        ((F.floor(F.col("q_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("q"),
-    )
+    return _spearman_rows(base, "l_suppkey", "l_linenumber")
 
 
 _SQL_SPEARMAN_DENSE = _spearman_sql(
@@ -565,12 +567,14 @@ _SQL_SPEARMAN_DENSE = _spearman_sql(
 
 # --------------------------------------------------------------------------
 # 10c. BLOCK-route Spearman (SURVEY §7.4.7 beyond-envelope): 250-gene dense
-#      matrix (part-bucket × order-priority) through mode="block" — pair
-#      enumeration bucketed into gene blocks so one (study, sample) key's
-#      quadratic fan-out is spread over B(B+1)/2 reducers (an unsplittable
-#      hot key under the plain dense join; AQE splits partitions, not keys).
-#      The oracle is the SAME Spearman skeleton — block mode must be
-#      value-identical to dense, only the physical bucketing differs.
+#      matrix (part-bucket × order-priority) through the block route at a
+#      fixed B=4 — called directly, since the router only picks it past
+#      1024 genes — pair enumeration bucketed into gene blocks so one
+#      (study, sample) key's quadratic fan-out is spread over B(B+1)/2
+#      reducers (an unsplittable hot key under the plain dense join; AQE
+#      splits partitions, not keys). The oracle is the SAME Spearman
+#      skeleton — the block route must be value-identical to dense, only
+#      the physical bucketing differs.
 # --------------------------------------------------------------------------
 
 def q_spearman_block(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,23 +585,7 @@ def q_spearman_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("l_partkey") % 250).alias("gene"), F.col("o_orderpriority"))
         .agg(F.sum("l_quantity").cast("double").alias("expression_value"))
     )
-    expr = base.select(
-        F.lit(1).cast("long").alias("study_key"),
-        F.col("gene").cast("long").alias("gene_key"),
-        F.col("o_orderpriority").cast("string").alias("gsm_accession"),
-        "expression_value",
-    ).persist()
-    corr = compute_gene_pair_correlations(
-        expr, min_samples=2, mode="block", n_blocks=4, computed_at="fixed"
-    )
-    return corr.select(
-        "gene_a_key",
-        "gene_b_key",
-        F.col("n_samples").cast("long").alias("n_samples"),
-        ((F.floor(F.col("rho_spearman") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("rho"),
-        ((F.floor(F.col("p_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("p"),
-        ((F.floor(F.col("q_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("q"),
-    )
+    return _spearman_rows(base, "gene", "o_orderpriority", n_blocks=4)
 
 
 _SQL_SPEARMAN_BLOCK = _spearman_sql(
@@ -637,7 +625,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", "common",
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -681,7 +669,7 @@ def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", "common",
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -725,8 +713,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", "common",
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("containment") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("containment"),
+        round6("containment").alias("containment"),
         "contained",
     )
 
@@ -774,7 +761,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_a", "doc_b", "n_shared_bands",
         F.col("common").cast("long").alias("common"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -865,7 +852,7 @@ def q_dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_a", "doc_b", "n_shared_bands",
         F.col("common").cast("long").alias("common"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -1350,10 +1337,6 @@ FROM sessions GROUP BY 1, 2
 # 19. document quality filtering (C4/Gopher-style rule pipeline)
 # --------------------------------------------------------------------------
 
-def _r6(col: F.Column) -> F.Column:
-    """Cross-engine 6-dp rounding (floor + epsilon — see module docstring)."""
-    return (F.floor(col * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import annotate_quality
@@ -1363,9 +1346,9 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "n_words",
-        _r6(F.col("mean_word_len")).alias("mean_word_len"),
-        _r6(F.col("type_token_ratio")).alias("type_token_ratio"),
-        _r6(F.col("stopword_ratio")).alias("stopword_ratio"),
+        round6("mean_word_len").alias("mean_word_len"),
+        round6("type_token_ratio").alias("type_token_ratio"),
+        round6("stopword_ratio").alias("stopword_ratio"),
         "pass_n_words",
         "pass_word_len",
         "pass_ttr",
@@ -1645,10 +1628,10 @@ def q_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "min_tokens",
         "max_tokens",
-        _r6(F.col("p25_raw")).alias("p25"),
-        _r6(F.col("p50_raw")).alias("p50"),
-        _r6(F.col("p75_raw")).alias("p75"),
-        _r6(F.col("p90_raw")).alias("p90"),
+        round6("p25_raw").alias("p25"),
+        round6("p50_raw").alias("p50"),
+        round6("p75_raw").alias("p75"),
+        round6("p90_raw").alias("p90"),
     )
 
 
@@ -1740,10 +1723,10 @@ def q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts_us",
-        _r6(
+        round6(
             F.avg("value").over(w.rowsBetween(-4, Window.currentRow))
         ).alias("avg5"),
-        _r6(
+        round6(
             F.sum("value").over(
                 w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             )
@@ -1826,8 +1809,8 @@ def q_events_skewed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type",
         "n_events",
-        _r6(F.col("sum_value")).alias("sum_value"),
-        _r6(F.col("max_value")).alias("max_value"),
+        round6("sum_value").alias("sum_value"),
+        round6("max_value").alias("max_value"),
         "min_ts_us",
     )
 
@@ -1926,7 +1909,7 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id",
         *[
-            _r6(F.coalesce(F.col(t), F.lit(0.0))).alias(f"{t}_value")
+            round6(F.coalesce(F.col(t), F.lit(0.0))).alias(f"{t}_value")
             for t in _PIVOT_TYPES
         ],
     )
@@ -2172,8 +2155,8 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rep.select(
         "doc_id",
         "n_grams",
-        _r6(F.col("top_gram_frac")).alias("top_gram_frac"),
-        _r6(F.col("dup_token_frac")).alias("dup_token_frac"),
+        round6("top_gram_frac").alias("top_gram_frac"),
+        round6("dup_token_frac").alias("dup_token_frac"),
     )
 
 
@@ -2284,7 +2267,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ranking import bm25_topk
 
     out = bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=20)
-    return out.select("doc_id", "n_hit_terms", _r6(F.col("score")).alias("score"))
+    return out.select("doc_id", "n_hit_terms", round6("score").alias("score"))
 
 
 _SQL_BM25 = f"""
@@ -2571,7 +2554,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asg.select(
         "vec_id",
         "cell",
-        ((F.floor(F.col("sq_dist") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("sq_dist"),
+        round6("sq_dist").alias("sq_dist"),
     )
 
 
@@ -2926,7 +2909,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_logprob_scores(docs).select(
         "doc_id",
         "n_tokens",
-        _r6(F.col("mean_log10_prob")).alias("mean_log10_prob"),
+        round6("mean_log10_prob").alias("mean_log10_prob"),
     )
 
 
@@ -2979,9 +2962,9 @@ def q_vocab_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return lr.agg(
         F.count(F.lit(1)).alias("vocab_size"),
-        _r6(F.expr("regr_slope(lf, lr)")).alias("zipf_slope"),
-        _r6(F.expr("regr_intercept(lf, lr)")).alias("zipf_intercept"),
-        _r6(F.expr("regr_r2(lf, lr)")).alias("r2"),
+        round6(F.expr("regr_slope(lf, lr)")).alias("zipf_slope"),
+        round6(F.expr("regr_intercept(lf, lr)")).alias("zipf_intercept"),
+        round6(F.expr("regr_r2(lf, lr)")).alias("r2"),
     )
 
 
@@ -3113,7 +3096,7 @@ def q_dedup_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vs_seen",
         "n_shared_bands",
         F.col("common").cast("long").alias("common"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -3195,7 +3178,7 @@ def q_events_error_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("err_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        _r6(F.sum("value")).alias("sum_value"),
+        round6(F.sum("value")).alias("sum_value"),
     )
 
 
@@ -3227,7 +3210,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         "n_bigrams",
-        _r6(F.col("mean_log10_bigram_prob")).alias("mean_log10_bigram_prob"),
+        round6("mean_log10_bigram_prob").alias("mean_log10_bigram_prob"),
     )
 
 
@@ -3309,7 +3292,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .join(err, "vec_id")
-        .select("vec_id", "n_dims", "sum_codes", _r6(F.col("max_abs_err")).alias("max_abs_err"))
+        .select("vec_id", "n_dims", "sum_codes", round6("max_abs_err").alias("max_abs_err"))
     )
 
 
@@ -3369,7 +3352,7 @@ def q_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = heavy_hitters(toks, item_col="item", k=20, m=4096)
     return out.select(
-        "item", "cnt", "rank", _r6(F.col("support_bound")).alias("support_bound")
+        "item", "cnt", "rank", round6("support_bound").alias("support_bound")
     )
 
 
@@ -3486,7 +3469,7 @@ def q_tfidf_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     out = tfidf_doc_similarity(docs, probe_ids=[0, 1, 2], k=10)
     return out.select(
-        "probe_id", "doc_id", _r6(F.col("cos_sim")).alias("cos_sim"), "rank"
+        "probe_id", "doc_id", round6("cos_sim").alias("cos_sim"), "rank"
     )
 
 
@@ -3695,7 +3678,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("key").alias("user_id"),
         "bucket",
-        _r6(F.col("value")).alias("value"),
+        round6("value").alias("value"),
         "n_events",
         "gap_filled",
     )
@@ -3757,7 +3740,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, group_cols=["source"], key_col="doc_id", weight_col="n_chars", n=8
     )
     return out.select(
-        "doc_id", "source", "n_chars", _r6(F.col("es_key")).alias("es_key"),
+        "doc_id", "source", "n_chars", round6("es_key").alias("es_key"),
         "sample_rank",
     )
 
@@ -3797,11 +3780,11 @@ def q_profile_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     out = profile_columns(cust)
     return out.select(
-        "column", "n_rows", "n_nulls", _r6(F.col("null_frac")).alias("null_frac"),
+        "column", "n_rows", "n_nulls", round6("null_frac").alias("null_frac"),
         "n_distinct",
-        _r6(F.col("min_num")).alias("min_num"),
-        _r6(F.col("max_num")).alias("max_num"),
-        _r6(F.col("mean")).alias("mean"),
+        round6("min_num").alias("min_num"),
+        round6("max_num").alias("max_num"),
+        round6("mean").alias("mean"),
         "min_str", "max_str",
     )
 
@@ -3904,9 +3887,9 @@ def q_acctbal_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.select(
         "c_custkey",
         "c_mktsegment",
-        _r6(F.col("c_acctbal")).alias("acctbal"),
-        _r6(F.percent_rank().over(w)).alias("pct_rank"),
-        _r6(F.cume_dist().over(w)).alias("cume_dist"),
+        round6("c_acctbal").alias("acctbal"),
+        round6(F.percent_rank().over(w)).alias("pct_rank"),
+        round6(F.cume_dist().over(w)).alias("cume_dist"),
     )
 
 
@@ -4038,7 +4021,7 @@ def q_revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ym",
         "revenue",
         "n_orders",
-        _r6((F.col("revenue") - prev) / prev).alias("mom_growth"),
+        round6((F.col("revenue") - prev) / prev).alias("mom_growth"),
     )
 
 
@@ -4212,8 +4195,7 @@ def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dim").cast("long").alias("dim"),
             # biased-floor grid, not ROUND: z values land on half-boundaries
             # where 1e-12 aggregation-order noise in mu/sigma flips ROUND
-            ((F.floor(F.col("zval") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-             + F.lit(0.0)).alias("zval"),
+            round6("zval").alias("zval"),
         )
     )
 
@@ -4363,8 +4345,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_chars",
         F.col("qn_rank").cast("long").alias("qn_rank"),
-        ((F.floor(F.col("qn_value") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("qn_value"),
+        round6("qn_value").alias("qn_value"),
     )
 
 
@@ -4403,15 +4384,12 @@ def q_welch_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value", cohort_a=0, cohort_b=1,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "n_a", "n_b",
-        _g("mean_a").alias("mean_a"), _g("mean_b").alias("mean_b"),
-        _g("var_a").alias("var_a"), _g("var_b").alias("var_b"),
-        _g("t_stat").alias("t_stat"), _g("df_welch").alias("df_welch"),
-        _g("p_value").alias("p_value"),
+        round6("mean_a").alias("mean_a"), round6("mean_b").alias("mean_b"),
+        round6("var_a").alias("var_a"), round6("var_b").alias("var_b"),
+        round6("t_stat").alias("t_stat"), round6("df_welch").alias("df_welch"),
+        round6("p_value").alias("p_value"),
     )
 
 
@@ -4476,12 +4454,9 @@ def q_mannwhitney_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value", cohort_a=0, cohort_b=1,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "n_a", "n_b",
-        _g("u_a").alias("u_a"), _g("z").alias("z"), _g("p_value").alias("p_value"),
+        round6("u_a").alias("u_a"), round6("z").alias("z"), round6("p_value").alias("p_value"),
     )
 
 
@@ -4553,12 +4528,9 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value", n_replicates=100, ci=0.95,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
-        "event_type", _g("mean").alias("mean"),
-        _g("ci_lo").alias("ci_lo"), _g("ci_hi").alias("ci_hi"),
+        "event_type", round6("mean").alias("mean"),
+        round6("ci_lo").alias("ci_lo"), round6("ci_hi").alias("ci_hi"),
         "n", "n_replicates",
     )
 
@@ -4629,12 +4601,9 @@ def q_events_ks_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value", cohort_a=0, cohort_b=1,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "n_a", "n_b",
-        _g("d_stat").alias("d_stat"), _g("p_value").alias("p_value"),
+        round6("d_stat").alias("d_stat"), round6("p_value").alias("p_value"),
     )
 
 
@@ -4709,8 +4678,7 @@ def q_events_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "event_type", "n_ref", "n_cmp",
-        ((F.floor(F.col("psi") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("psi"),
+        round6("psi").alias("psi"),
     )
 
 
@@ -4786,13 +4754,10 @@ def q_events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         pre_col="pre", post_col="post",
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "user_id",
-        _g("pre").alias("pre"), _g("post").alias("post"),
-        _g("theta").alias("theta"), _g("adjusted").alias("adjusted"),
+        round6("pre").alias("pre"), round6("post").alias("post"),
+        round6("theta").alias("theta"), round6("adjusted").alias("adjusted"),
     )
 
 
@@ -4856,8 +4821,7 @@ def q_user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "cohort", "duration_days", "n_risk", "n_events", "n_censored",
-        ((F.floor(F.col("survival") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("survival"),
+        round6("survival").alias("survival"),
     )
 
 
@@ -4936,13 +4900,10 @@ def q_user_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         cohort_a=0, cohort_b=1,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "family", "n_a", "n_b",
-        _g("o_minus_e").alias("o_minus_e"), _g("var_oe").alias("var_oe"),
-        _g("chi2").alias("chi2"), _g("p_value").alias("p_value"),
+        round6("o_minus_e").alias("o_minus_e"), round6("var_oe").alias("var_oe"),
+        round6("chi2").alias("chi2"), round6("p_value").alias("p_value"),
     )
 
 
@@ -5028,8 +4989,7 @@ def q_lineitem_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         _g4(F.col("intercept")).alias("intercept"),
         _g4(F.col("coef")[0]).alias("coef_qty"),
         _g4(F.col("coef")[1]).alias("coef_disc"),
-        ((F.floor(F.col("r2") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("r2"),
+        round6("r2").alias("r2"),
     )
 
 
@@ -5096,8 +5056,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = attribution_summary(credits)
     return out.select(
         "touch_type", "n_touches",
-        ((F.floor(F.col("credit") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("credit"),
+        round6("credit").alias("credit"),
     )
 
 
@@ -5153,8 +5112,7 @@ def q_segment_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "c_custkey", "c_mktsegment",
-        ((F.floor(F.col("te") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("te"),
+        round6("te").alias("te"),
     )
 
 
@@ -5191,13 +5149,10 @@ def q_events_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         success_col="conv", cohort_a=0, cohort_b=1,
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "n_a", "n_b",
-        _g("rate_a").alias("rate_a"), _g("rate_b").alias("rate_b"),
-        _g("z").alias("z"), _g("p_value").alias("p_value"),
+        round6("rate_a").alias("rate_a"), round6("rate_b").alias("rate_b"),
+        round6("z").alias("z"), round6("p_value").alias("p_value"),
     )
 
 
@@ -5256,12 +5211,9 @@ def q_events_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, group_cols=["family"], row_col="event_type", col_col="cohort"
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
-        "family", "n", "df", _g("chi2").alias("chi2"),
-        _g("p_value").alias("p_value"),
+        "family", "n", "df", round6("chi2").alias("chi2"),
+        round6("p_value").alias("p_value"),
     )
 
 
@@ -5312,12 +5264,9 @@ def q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = benford_test(orders, group_cols=["family"], value_col="o_totalprice")
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
-        "family", "n", _g("chi2").alias("chi2"),
-        _g("p_value").alias("p_value"), _g("max_dev").alias("max_dev"),
+        "family", "n", round6("chi2").alias("chi2"),
+        round6("p_value").alias("p_value"), round6("max_dev").alias("max_dev"),
     )
 
 
@@ -5379,12 +5328,9 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="o_custkey",
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "c_mktsegment", "n", F.round("total", 2).alias("total"),
-        _g("gini").alias("gini"), _g("hhi").alias("hhi"),
+        round6("gini").alias("gini"), round6("hhi").alias("hhi"),
     )
 
 
@@ -5435,8 +5381,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_row = Window.partitionBy("cur")
     return counts.select(
         "cur", "nxt", "n",
-        ((F.floor((F.col("n") / F.sum("n").over(w_row)) * 1000000.0
-                  + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("p"),
+        round6(F.col("n") / F.sum("n").over(w_row)).alias("p"),
     )
 
 
@@ -5479,8 +5424,7 @@ def q_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ent = F.log("n") - F.col("__clogc") / F.col("n")
     return per_user.select(
         "user_id", "n",
-        ((F.floor(ent * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("entropy"),
+        round6(ent).alias("entropy"),
     )
 
 
@@ -5658,8 +5602,7 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_doc.select(
         "doc_id", "n_grams", "n_unique",
-        ((F.floor((F.col("n_unique") / F.col("n_grams")) * 1000000.0
-                  + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("novelty"),
+        round6(F.col("n_unique") / F.col("n_grams")).alias("novelty"),
     )
 
 
@@ -5710,7 +5653,7 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantize BEFORE the threshold: sliding-frame aggregates may sum in
     # different orders across engines, and the flag must not depend on
     # last-ulp noise at |z| = 3
-    zq = (F.floor(z * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
+    zq = round6(z)
     out = ev.select(
         "event_id", "user_id", "ts_us", "value",
         F.when((cnt >= 5) & (sd > 0), zq).alias("z"),
@@ -5809,8 +5752,7 @@ def q_events_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "event_type", "n_pos", "n_neg",
-        ((F.floor(F.col("auc") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("auc"),
+        round6("auc").alias("auc"),
     )
 
 
@@ -5869,13 +5811,10 @@ def q_events_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("brier"),
     )
 
-    def _g(c):
-        return (F.floor(F.col(c) * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
-
     return out.select(
         "event_type", "bucket", "n",
-        _g("mean_p").alias("mean_p"), _g("obs_rate").alias("obs_rate"),
-        _g("brier").alias("brier"),
+        round6("mean_p").alias("mean_p"), round6("obs_rate").alias("obs_rate"),
+        round6("brier").alias("brier"),
     )
 
 
@@ -5926,7 +5865,7 @@ def q_events_anomaly_expanding(spark: SparkSession, sf_dir: str) -> DataFrame:
     sd = F.stddev_samp("value").over(w)
     cnt = F.count("value").over(w)
     z = (F.col("value") - mu) / sd
-    zq = (F.floor(z * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)
+    zq = round6(z)
     out = ev.select(
         "event_id", "user_id", "ts_us", "value",
         F.when((cnt >= 5) & (sd > 0), zq).alias("z"),
@@ -5987,8 +5926,7 @@ def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id",
         "n_tokens",
-        ((F.floor(F.col("score") * 1000000.0 + F.lit(0.5001)) / 1000000.0)
-         + F.lit(0.0)).alias("score"),
+        round6("score").alias("score"),
     )
 
 
@@ -6560,7 +6498,7 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.col("common").cast("long").alias("common"),
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -6616,7 +6554,7 @@ def q_dedup_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.col("common").cast("long").alias("common"),
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -6671,7 +6609,7 @@ def q_dedup_jaccard_auto_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.col("common").cast("long").alias("common"),
         F.col("size_a").cast("long").alias("size_a"),
         F.col("size_b").cast("long").alias("size_b"),
-        ((F.floor(F.col("jaccard") * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("jaccard"),
+        round6("jaccard").alias("jaccard"),
     )
 
 
@@ -6784,7 +6722,7 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     share = F.col("__promo") / F.col("__total") * 100.0
     return out.select(
-        ((F.floor(share * 1000000.0 + F.lit(0.5001)) / 1000000.0) + F.lit(0.0)).alias("promo_pct"),
+        round6(share).alias("promo_pct"),
         F.round(F.col("__promo"), 2).alias("promo_revenue"),
         F.col("n_lineitems"),
     )

@@ -11,21 +11,17 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
 def main(argv: list[str] | None = None) -> int:
-    parser = argparse.ArgumentParser(description="Refresh gene-pair correlations (Spark)")
+    parser = argparse.ArgumentParser(
+        description="Refresh gene-pair correlations (Spark). Each study's "
+        "physical plan (per-pair ranks, pre-ranked, or block-bucketed) is "
+        "picked from its matrix shape; results are identical on every plan."
+    )
     parser.add_argument("--config", required=True, help="Path to YAML config file")
     parser.add_argument(
         "--study",
         action="append",
         default=None,
         help="Restrict to this study accession (repeatable)",
-    )
-    parser.add_argument(
-        "--mode",
-        choices=["exact", "dense", "auto"],
-        default="auto",
-        help="Ranking strategy: exact per-pair ranks, dense pre-ranking, or "
-        "auto (per-study dense detection; identical results every way — "
-        "measured 7.5x faster than exact at 10k samples)",
     )
     parser.add_argument(
         "--pvalue-dist",
@@ -43,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
 
     configure_logging(config)
     result = run_correlation_job(
-        config, accessions=args.study, mode=args.mode, pvalue_dist=args.pvalue_dist
+        config, accessions=args.study, pvalue_dist=args.pvalue_dist
     )
     total = sum(result.pair_counts.values())
     print(

@@ -4,6 +4,7 @@ import math
 
 import pytest
 
+from etl_for_all_studies_spark.plans import correlation as corr_mod
 from etl_for_all_studies_spark.plans.correlation import compute_gene_pair_correlations
 from oracle import all_pairs
 
@@ -25,19 +26,38 @@ def _to_df(spark, matrix, study_key=1):
     )
 
 
-def _run(spark, matrix, mode="exact", min_samples=2):
-    df = compute_gene_pair_correlations(
-        _to_df(spark, matrix), min_samples=min_samples, mode=mode
+# Each physical route called directly, past the router: pair builder plus
+# the BH form the router pairs it with. "exact" is the ragged route.
+ROUTES = {
+    "exact": (corr_mod._ragged_pairs, False),
+    "dense": (corr_mod._dense_pairs, False),
+    "block": (lambda e: corr_mod._block_pairs(e, 4), True),
+}
+
+
+def _route(df, route, min_samples=2):
+    pairs, bucketed = ROUTES[route]
+    return corr_mod._correlate(
+        pairs(df), bucketed_bh=bucketed, min_samples=min_samples, computed_at="x"
     )
+
+
+def _run(spark, matrix, route=None, min_samples=2):
+    """Rows keyed by pair: through the router, or one ``route`` directly."""
+    df = _to_df(spark, matrix)
+    if route is None:
+        out = compute_gene_pair_correlations(df, min_samples=min_samples)
+    else:
+        out = _route(df, route, min_samples=min_samples)
     return {
         (r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in df.collect()
+        for r in out.collect()
     }
 
 
-@pytest.mark.parametrize("mode", ["exact", "dense", "block"])
-def test_canonical_three_gene_study(spark, mode):
-    got = _run(spark, CANONICAL, mode=mode)
+@pytest.mark.parametrize("route", ["exact", "dense", "block"])
+def test_canonical_three_gene_study(spark, route):
+    got = _run(spark, CANONICAL, route=route)
     expected = {(s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(CANONICAL)}
     assert set(got) == set(expected) == {(1, 2), (1, 3), (2, 3)}
     for key, exp in expected.items():
@@ -75,14 +95,14 @@ def test_constant_series_dropped(spark):
     assert set(got) == {(2, 3)}  # pairs involving constant gene 1 dropped
 
 
-@pytest.mark.parametrize("mode", ["exact", "dense"])
-def test_tie_heavy_matches_average_rank_oracle(spark, mode):
+@pytest.mark.parametrize("route", ["exact", "dense"])
+def test_tie_heavy_matches_average_rank_oracle(spark, route):
     matrix = {
         1: {f"S{i}": v for i, v in enumerate([1.0, 1.0, 2.0, 2.0, 3.0, 7.0])},
         2: {f"S{i}": v for i, v in enumerate([2.0, 2.0, 2.0, 5.0, 4.0, 4.0])},
         3: {f"S{i}": v for i, v in enumerate([9.0, 1.0, 1.0, 1.0, 2.0, 3.0])},
     }
-    got = _run(spark, matrix, mode=mode)
+    got = _run(spark, matrix, route=route)
     expected = {(s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(matrix)}
     assert set(got) == set(expected)
     for key, exp in expected.items():
@@ -101,7 +121,7 @@ def test_ragged_matrix_exact_mode_intersects_per_pair(spark):
         2: {"S1": 4.0, "S2": 3.0, "S3": 2.0, "S4": 1.0},
         3: {"S1": 2.0, "S2": 9.0, "S4": 5.0},
     }
-    got = _run(spark, matrix, mode="exact")
+    got = _run(spark, matrix, route="exact")
     expected = {(s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(matrix)}
     assert set(got) == set(expected)
     for key, exp in expected.items():
@@ -132,7 +152,8 @@ def test_bh_family_larger_study(spark):
 
 
 def test_auto_mode_routes_dense_and_ragged(spark):
-    """auto must equal exact on a mix of dense and ragged studies."""
+    """The router must equal the exact route on a mix of dense and ragged
+    studies."""
     dense = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(6)} for g in (1, 2, 3)}
     ragged = {
         1: {"S1": 1.0, "S2": 2.0, "S3": 3.0},
@@ -141,11 +162,11 @@ def test_auto_mode_routes_dense_and_ragged(spark):
     df = _to_df(spark, dense, study_key=1).unionByName(_to_df(spark, ragged, study_key=2))
     exact = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in compute_gene_pair_correlations(df, mode="exact").collect()
+        for r in _route(df, "exact").collect()
     }
     auto = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in compute_gene_pair_correlations(df, mode="auto").collect()
+        for r in compute_gene_pair_correlations(df).collect()
     }
     assert set(exact) == set(auto)
     for k in exact:
@@ -169,7 +190,7 @@ def test_randomized_matrices_match_oracle(spark):
             # small value domain → frequent ties; occasional constant gene
             domain = [1.0] if rng.random() < 0.15 else [1.0, 2.0, 3.0, 4.5]
             matrix[g] = {s: rng.choice(domain) for s in covered}
-        got = _run(spark, matrix, mode="exact")
+        got = _run(spark, matrix, route="exact")
         expected = {
             (s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(matrix)
         }
@@ -210,8 +231,8 @@ def test_multi_study_families_independent(spark):
 # ---- block (bucketed) pair enumeration — SURVEY §7.4.7 beyond-envelope ----
 
 def test_block_mode_identical_to_dense(spark):
-    """mode="block" must be row-identical to mode="dense" on the same dense
-    matrix — block enumeration only re-buckets the pair fan-out. 40 genes /
+    """The block route must be row-identical to the dense route on the same
+    dense matrix — block enumeration only re-buckets the pair fan-out. 40 genes /
     4 blocks forces multi-gene blocks, diagonal pairs, and off-diagonal
     side-swaps (hash block of the smaller gene can exceed the larger's)."""
     rng_vals = [
@@ -222,8 +243,8 @@ def test_block_mode_identical_to_dense(spark):
         for g in range(40)
     }
     df = _to_df(spark, matrix)
-    dense = compute_gene_pair_correlations(df, mode="dense", computed_at="x")
-    block = compute_gene_pair_correlations(df, mode="block", n_blocks=4, computed_at="x")
+    dense = _route(df, "dense")
+    block = _route(df, "block")
     key = ["study_key", "gene_a_key", "gene_b_key"]
     d = {tuple(r[k] for k in key): r.asDict() for r in dense.collect()}
     b = {tuple(r[k] for k in key): r.asDict() for r in block.collect()}
@@ -234,27 +255,37 @@ def test_block_mode_identical_to_dense(spark):
 
 
 def test_block_mode_single_block_degenerates_to_dense(spark):
-    got_block = _run(spark, CANONICAL, mode="block")
-    got_dense = _run(spark, CANONICAL, mode="dense")
-    assert set(got_block) == set(got_dense)
-    for k in got_dense:
-        assert got_block[k]["rho_spearman"] == pytest.approx(
-            got_dense[k]["rho_spearman"], abs=1e-12
-        )
+    df = _to_df(spark, CANONICAL)
+    rows = {
+        b: {
+            (r["gene_a_key"], r["gene_b_key"]): r["rho_spearman"]
+            for r in corr_mod._correlate(
+                corr_mod._block_pairs(df, b), bucketed_bh=True, computed_at="x"
+            ).collect()
+        }
+        for b in (1, 4)
+    }
+    got_dense = _run(spark, CANONICAL, route="dense")
+    for got_block in rows.values():
+        assert set(got_block) == set(got_dense)
+        for k in got_dense:
+            assert got_block[k] == pytest.approx(
+                got_dense[k]["rho_spearman"], abs=1e-12
+            )
 
 
 def test_block_join_is_keyed_by_block_columns(spark):
-    """Plan shape: the block-mode join's equi-keys must include the block
+    """Plan shape: the block route's join equi-keys must include the block
     columns — that is the whole point (one (study, sample) hot key is spread
     over B(B+1)/2 reducers). Asserted on the optimized plan text."""
     df = _to_df(spark, CANONICAL)
-    block = compute_gene_pair_correlations(df, mode="block", n_blocks=4, computed_at="x")
+    block = _route(df, "block")
     plan = block._jdf.queryExecution().optimizedPlan().toString()
     assert "blk_a" in plan and "blk_b" in plan
 
 
 def test_block_mode_bh_windows_are_bucket_partitioned(spark):
-    """Plan shape: block mode's q-value step must NOT re-serialize the pair
+    """Plan shape: the block route's q-value step must NOT re-serialize the pair
     family into one window task — every window over the pair table that is
     partitioned by study_key alone is forbidden (the bucketed BH partitions
     by (study_key, __bkt) instead). Detected on the optimized plan text:
@@ -264,7 +295,7 @@ def test_block_mode_bh_windows_are_bucket_partitioned(spark):
     import re
 
     df = _to_df(spark, CANONICAL)
-    block = compute_gene_pair_correlations(df, mode="block", n_blocks=4, computed_at="x")
+    block = _route(df, "block")
     plan = block._jdf.queryExecution().optimizedPlan().toString()
     # guard-the-guard: if a Spark upgrade changes the plan-string format and
     # the windowspecdefinition pattern stops matching anything, the per-
@@ -290,31 +321,29 @@ def test_block_mode_bh_windows_are_bucket_partitioned(spark):
     # and the bucketed windows ARE present
     assert "__bkt" in plan and "__lj" in plan
     # the classic path keeps the cheap per-family window for reference-
-    # envelope families (dense mode unchanged)
-    dense = compute_gene_pair_correlations(df, mode="dense", computed_at="x")
+    # envelope families (dense route unchanged)
+    dense = _route(df, "dense")
     dplan = dense._jdf.queryExecution().optimizedPlan().toString()
     assert "__bkt" not in dplan
 
 
-def test_auto_mode_routes_wide_dense_to_block(spark):
-    """auto with a low wide_gene_threshold must route a dense study through
-    the block plan and still equal exact-mode results; the dense-sized study
-    keeps the dense route (threshold respected per study)."""
+def test_auto_mode_routes_wide_dense_to_block(spark, monkeypatch):
+    """With the wide-gene threshold lowered, the router must send a dense
+    study through the block plan and still equal the exact route; the
+    dense-sized study keeps the dense route (threshold respected per
+    study)."""
+    monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
     wide = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(4)} for g in range(12)}
     narrow = {g: {f"S{i}": float((g * 5 + i) % 7) for i in range(4)} for g in (1, 2, 3)}
     df = _to_df(spark, wide, study_key=1).unionByName(_to_df(spark, narrow, study_key=2))
+    assert corr_mod._split_dense_studies(df)[:3] == ([2], [1], [])
     exact = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in compute_gene_pair_correlations(
-            df, mode="exact", computed_at="x"
-        ).collect()
+        for r in _route(df, "exact").collect()
     }
     auto = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in compute_gene_pair_correlations(
-            df, mode="auto", computed_at="x",
-            wide_gene_threshold=8, n_blocks=3,
-        ).collect()
+        for r in compute_gene_pair_correlations(df, computed_at="x").collect()
     }
     assert set(exact) == set(auto)
     for k in exact:
@@ -325,13 +354,11 @@ def test_auto_mode_routes_wide_dense_to_block(spark):
 
 
 def test_auto_mode_derives_n_blocks_from_widest_study(spark, monkeypatch):
-    """n_blocks=None in auto mode must size blocks from the widest routed
-    study (ceil(width/2000), min 2 — the round-8 envelope sweep's
-    ~4M-rows-per-block-pair target), and an explicit n_blocks must still
-    win. Pinned by spying on _block_pairs rather than re-running the 20k
-    probe: the derivation is driver-side arithmetic on counts the router
-    already paid for."""
-    from etl_for_all_studies_spark.plans import correlation as corr_mod
+    """The router must size blocks from the widest routed study
+    (ceil(width/2000), min 2 — the round-8 envelope sweep's
+    ~4M-rows-per-block-pair target). Pinned by spying on _block_pairs
+    rather than re-running the 20k probe: the derivation is driver-side
+    arithmetic on counts the router already paid for."""
     from etl_for_all_studies_spark.plans.correlation import _derive_n_blocks
 
     # the pure derivation: reference envelope (20k genes) => 10 blocks
@@ -351,31 +378,22 @@ def test_auto_mode_derives_n_blocks_from_widest_study(spark, monkeypatch):
         return real(e, n_blocks)
 
     monkeypatch.setattr(corr_mod, "_block_pairs", spy)
-    compute_gene_pair_correlations(
-        df, mode="auto", computed_at="x", wide_gene_threshold=8
-    ).collect()
+    monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
+    compute_gene_pair_correlations(df, computed_at="x").collect()
     assert seen == [_derive_n_blocks(12)] == [2]
-
-    seen.clear()
-    compute_gene_pair_correlations(
-        df, mode="auto", computed_at="x", wide_gene_threshold=8, n_blocks=3
-    ).collect()
-    assert seen == [3]
-
-    # explicit block mode with the default keeps the historical 8
-    seen.clear()
-    compute_gene_pair_correlations(df, mode="block", computed_at="x").collect()
-    assert seen == [8]
 
 
 def test_router_threshold_pinned_to_measured_crossover():
-    """The auto router's default wide_gene_threshold sits at the measured
-    dense/block crossover (SCALE.md round-8 envelope series: dense wins at
-    1k genes, block wins from 2k up, both regimes) — 1024 is the last
-    power-of-two width where the dense plan's single-reducer-per-sample
-    fan-out (~0.5M pairs) still beats block's B+1x input replication."""
+    """The router's wide-gene threshold sits at the measured dense/block
+    crossover (SCALE.md round-8 envelope series: dense wins at 1k genes,
+    block wins from 2k up, both regimes) — 1024 is the last power-of-two
+    width where the dense plan's single-reducer-per-sample fan-out (~0.5M
+    pairs) still beats block's B+1x input replication. The entry point
+    takes no plan-selecting argument: the router alone decides."""
     import inspect
 
+    assert corr_mod._WIDE_GENE_THRESHOLD == 1024
     sig = inspect.signature(compute_gene_pair_correlations)
-    assert sig.parameters["wide_gene_threshold"].default == 1024
-    assert sig.parameters["n_blocks"].default is None
+    assert list(sig.parameters) == [
+        "expression", "min_samples", "computed_at", "pvalue_dist", "scope"
+    ]

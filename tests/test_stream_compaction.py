@@ -82,15 +82,23 @@ def _partition_ids(corpus, sub):
     }
 
 
-@pytest.fixture()
-def folded_corpus(spark, tmp_path):
+@pytest.fixture(scope="module")
+def _folded_template(spark, tmp_path_factory):
     """Four committed folds: batch 2 carries an exact dup of batch 0's doc
-    (dropped vs seen), the rest is novel content."""
-    corpus = str(tmp_path / "corpus")
+    (dropped vs seen), the rest is novel content. Folded once per module;
+    tests get their own copy (``folded_corpus``) because they mutate it."""
+    corpus = str(tmp_path_factory.mktemp("folded") / "corpus")
     _fold(spark, corpus, 0, [(10, _DOCS[0]), (11, _DOCS[1])])
     _fold(spark, corpus, 1, [(20, _DOCS[2])])
     _fold(spark, corpus, 2, [(30, _DOCS[0]), (31, _DOCS[3])])  # 30 = seen dup
     _fold(spark, corpus, 3, [(40, _DOCS[4])])
+    return corpus
+
+
+@pytest.fixture()
+def folded_corpus(_folded_template, tmp_path):
+    corpus = str(tmp_path / "corpus")
+    shutil.copytree(_folded_template, corpus)
     return corpus
 
 

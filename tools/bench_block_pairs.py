@@ -5,9 +5,10 @@
 Builds a synthetic dense study with ``n_genes`` up to the reference's own
 stated envelope (``docs/genomic-etl-requirements.md:35,41``: 20k+ genes ⇒
 C(20k,2) ≈ 2·10⁸ pairs) and times the SAME correlation through
-``mode="dense"`` (the (study, sample)-keyed join: every sample's full n²/2
-pair fan-out is ONE reducer) and ``mode="block"`` (the bucketed join:
-B(B+1)/2 reducers per sample). Reports wall, pairs/s, and the shuffle
+the dense route (the (study, sample)-keyed join: every sample's full n²/2
+pair fan-out is ONE reducer) and the block route at an explicit B (the
+bucketed join: B(B+1)/2 reducers per sample), each called directly — this
+measures the routes, not the router. Reports wall, pairs/s, and the shuffle
 bytes of the newly executed stages (UI REST, ``tools/stage_metrics.py``)
 — the per-task output bound is the actual 100 TB argument: on a cluster
 the single 10⁸-row dense task would blow executor memory, not just time.
@@ -89,8 +90,10 @@ def synth_expression(spark, n_genes: int, n_samples: int):
 
 def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> None:
     from etl_for_all_studies_spark.plans.correlation import (
+        _block_pairs,
+        _correlate,
+        _dense_pairs,
         _split_dense_studies,
-        compute_gene_pair_correlations,
     )
     from etl_for_all_studies_spark.session import get_spark
     from tools.stage_metrics import diff_stages, stage_snapshot
@@ -109,11 +112,9 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
     spark.range(1).count()
     e = synth_expression(spark, n_genes, n_samples)
 
-    # the auto router must classify this width correctly: dense at/below
-    # the threshold, block above (the SCALE envelope contract)
-    dense_k, wide_k, ragged_k, _genes = _split_dense_studies(
-        e, wide_gene_threshold=1024
-    )
+    # the router must classify this width correctly: dense at/below the
+    # threshold, block above (the SCALE envelope contract)
+    dense_k, wide_k, ragged_k, _genes = _split_dense_studies(e)
     pairs = n_genes * (n_genes - 1) // 2
     for token in modes:
         mode, _, variant = token.partition("-")
@@ -122,8 +123,10 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         before = stage_snapshot(UI_PORT)
         t0 = time.monotonic()
-        corr = compute_gene_pair_correlations(
-            e, min_samples=2, mode=mode, n_blocks=n_blocks, computed_at="fixed"
+        block = mode == "block"
+        corr = _correlate(
+            _block_pairs(e, n_blocks) if block else _dense_pairs(e),
+            bucketed_bh=block, min_samples=2, computed_at="fixed",
         )
         corr.write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
@@ -135,7 +138,7 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
                 {
                     "n_genes": n_genes,
                     "n_samples": n_samples,
-                    "n_blocks": n_blocks if mode == "block" else None,
+                    "n_blocks": n_blocks if block else None,
                     "mode": token,
                     "pairs": pairs,
                     "wall_s": round(wall, 1),

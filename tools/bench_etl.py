@@ -131,7 +131,7 @@ def run_wide_gene_bench(
     spark, n_genes: int = 2_000, n_samples: int = 8, n_blocks: int = 8
 ) -> dict:
     """Wide-gene END-TO-END leg: a dense ``n_genes``-gene study through the
-    FULL ``mode="block"`` correlation plan — bucketed pair enumeration AND
+    FULL block-route correlation plan at an explicit B — bucketed pair enumeration AND
     ``benjamini_hochberg_scalable`` q-values (the round-4 bucket-partitioned
     BH measured where it matters, not just the pair join of
     ``tools/bench_block_pairs.py``). The output is the complete correlation
@@ -143,7 +143,8 @@ def run_wide_gene_bench(
     from pyspark.sql import functions as F
 
     from etl_for_all_studies_spark.plans.correlation import (
-        compute_gene_pair_correlations,
+        _block_pairs,
+        _correlate,
     )
 
     e = (
@@ -178,16 +179,15 @@ def run_wide_gene_bench(
 
     for _ in range(repeats):
         t0 = time.monotonic()
-        # a scope per repeat: block mode's BH barriers are released after
+        # a scope per repeat: the block route's BH barriers are released after
         # each run, so repeat N+1 re-executes the full pipeline instead of
         # reading repeat N's cached pair table (CacheManager matches
         # identical plans across invocations)
         with CacheScope() as scope:
-            corr = compute_gene_pair_correlations(
-                e,
+            corr = _correlate(
+                _block_pairs(e, n_blocks),
+                bucketed_bh=True,
                 min_samples=2,
-                mode="block",
-                n_blocks=n_blocks,
                 computed_at="fixed",
                 scope=scope,
             )

@@ -4,9 +4,11 @@ Mirrors the reference's config surface (``src/etl_for_all_studies/config.py:11-7
 same YAML section names (``processing``, ``logging``, ``field_mappings``), same
 field-mapping candidate lists and defaults. The ``database`` section (JDBC
 connection string, batch_size, retries) is replaced by a ``warehouse`` section
-(Parquet path + format) because the Spark engine's sink is a partitioned
-columnar warehouse, not a row-store; ``database`` keys are still accepted and
-mapped for compatibility.
+(a Parquet path) because the Spark engine's sink is a partitioned columnar
+warehouse, not a row-store. A reference YAML still loads: its
+``database.connection_string`` maps to a sibling warehouse directory, and keys
+the engine has no use for (batch_size, retries, max_concurrent_studies, ...)
+are dropped.
 """
 from __future__ import annotations
 
@@ -30,17 +32,11 @@ class WarehouseConfig:
 
     Replaces the reference's ``DatabaseConfig`` (``config.py:12-20``): the Spark
     engine writes Parquet tables partitioned by ``study_key`` instead of batched
-    row inserts, so ``batch_size``/retry knobs become no-ops (kept for YAML
-    compatibility — Spark task retries and job-level atomicity subsume them).
+    row inserts, so it has no ``batch_size``/retry knobs — Spark task retries
+    and job-level atomicity subsume them.
     """
 
     path: pathlib.Path
-    format: str = "parquet"
-    # accepted-for-compat knobs from the reference's database section
-    batch_size: int = 1000
-    connection_timeout: int = 30
-    max_retries: int = 5
-    retry_backoff_seconds: int = 5
 
 
 @dataclasses.dataclass(frozen=True)
@@ -49,8 +45,6 @@ class ProcessingConfig:
 
     input_directory: pathlib.Path
     gene_filter_file: pathlib.Path
-    max_concurrent_studies: int = 6  # compat; Spark parallelism supersedes it
-    state_directory: pathlib.Path | None = None  # compat; idempotent reruns supersede
     min_samples: int = 2  # reference correlation.py:65 MIN_SAMPLES_FOR_CORRELATION
 
 
@@ -164,10 +158,9 @@ def config_from_dict(data: dict[str, Any]) -> AppConfig:
             raise ConfigurationError("database.connection_string or warehouse.path required")
         tail = conn.split("///")[-1] if "///" in conn else conn
         wh_data = {"path": str(pathlib.Path(tail).with_suffix("")) + "_warehouse"}
-    wh_data = {**_filter_known(WarehouseConfig, db_data), **wh_data}
     if "path" not in wh_data:
         raise ConfigurationError("warehouse.path is required")
-    warehouse = WarehouseConfig(**{**wh_data, "path": _path(wh_data["path"])})
+    warehouse = WarehouseConfig(path=_path(wh_data["path"]))
 
     proc_data = _section(data, "processing")
     for required in ("input_directory", "gene_filter_file"):
@@ -176,8 +169,6 @@ def config_from_dict(data: dict[str, Any]) -> AppConfig:
     proc_known = _filter_known(ProcessingConfig, proc_data)
     proc_known["input_directory"] = _path(proc_data["input_directory"], must_exist=True)
     proc_known["gene_filter_file"] = _path(proc_data["gene_filter_file"], must_exist=True)
-    if proc_known.get("state_directory") is not None:
-        proc_known["state_directory"] = _path(proc_known["state_directory"])
     processing = ProcessingConfig(**proc_known)
 
     log_data = _filter_known(LoggingConfig, _section(data, "logging", optional=True))

@@ -214,75 +214,65 @@ def connected_components(
     # Size the per-round label partitioning to the vertex count (~1M labels
     # per partition): the loop runs O(log) rounds of tiny jobs, and paying
     # full shuffle-partition task counts per round is pure scheduler latency
-    # at small n while a cluster-scale graph still fans out.
+    # at small n while a cluster-scale graph still fans out. Every shuffle
+    # input in the loop is an explicit repartition(n_parts, key), so both
+    # sides of each join arrive co-partitioned and the planner keeps the
+    # count; session conf is never touched. At least 2: a one-partition
+    # repartition plans as SinglePartition, which a join re-shuffles at the
+    # session's shuffle width.
     n_nodes = base.count()
     n_parts = max(
-        1, min(spark.sparkContext.defaultParallelism * 4, 1 + n_nodes // 1_000_000)
+        2, min(spark.sparkContext.defaultParallelism * 4, 1 + n_nodes // 1_000_000)
     )
+    sym_by_ev = sym.repartition(n_parts, "ev")
 
-    # Loop-scoped tuning: AQE re-plans every stage of every round (pure
-    # latency on an already-sized iteration), and the default shuffle
-    # partition count fans tiny label tables into many empty tasks. Restore
-    # both afterwards.
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        # fresh_stats_checkpoint, NOT plain localCheckpoint: each round's
-        # estimate would otherwise compound into the next round's leaf and
-        # overflow BigInteger around round 22 (see the helper's docstring)
-        labels = fresh_stats_checkpoint(
-            base.repartition(n_parts, "node").select(
-                "node", F.col("node").alias("comp")
-            )
+    # fresh_stats_checkpoint, NOT plain localCheckpoint: each round's
+    # estimate would otherwise compound into the next round's leaf and
+    # overflow BigInteger around round 22 (see the helper's docstring)
+    labels = fresh_stats_checkpoint(
+        base.repartition(n_parts, "node").select("node", F.col("node").alias("comp"))
+    )
+    for round_no in range(1, max_iter + 1):
+        # the checkpoint drops partitioning; one exchange re-keys the labels
+        # for both of this round's node-keyed joins (reused in the plan)
+        by_node = labels.repartition(n_parts, "node")
+        nbr_min = (
+            sym_by_ev.join(by_node, sym_by_ev.ev == by_node.node)
+            .repartition(n_parts, "eu")
+            .groupBy(F.col("eu").alias("node"))
+            .agg(F.min("comp").alias("nbr_comp"))
         )
-        for round_no in range(1, max_iter + 1):
-            nbr_min = (
-                sym.join(labels, sym.ev == labels.node)
-                .groupBy(F.col("eu").alias("node"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            stepped = labels.join(nbr_min, "node", "left").select(
+        stepped = by_node.join(nbr_min, "node", "left").select(
+            "node",
+            F.col("comp").alias("old_comp"),
+            F.least(
+                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
+            ).alias("comp"),
+        )
+        jump_to = stepped.select(
+            F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
+        )
+        by_comp = stepped.repartition(n_parts, "comp")
+        # the convergence flag rides inside the round's own checkpoint, so
+        # the probe below is a filter over materialized data — no extra
+        # join (and no extra codegen shape) per round
+        jumped = fresh_stats_checkpoint(
+            by_comp.join(jump_to, by_comp.comp == jump_to.jnode, "left").select(
                 "node",
-                F.col("comp").alias("old_comp"),
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
+                F.coalesce(F.col("jcomp"), F.col("comp")).alias("comp"),
+                (F.coalesce(F.col("jcomp"), F.col("comp")) != F.col("old_comp"))
+                .alias("moved"),
             )
-            jump_to = stepped.select(
-                F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
+            .repartition(n_parts, "node")
+        )
+        changed = jumped.where(F.col("moved")).limit(1).count()
+        labels = jumped.select("node", "comp")
+        if changed == 0:
+            logger.info(
+                "connected_components: converged after %d rounds "
+                "(%d edges, %d nodes)", round_no, n_edges, n_nodes,
             )
-            # the convergence flag rides inside the round's own checkpoint, so
-            # the probe below is a filter over materialized data — no extra
-            # join (and no extra codegen shape) per round
-            jumped = fresh_stats_checkpoint(
-                stepped.join(jump_to, stepped.comp == jump_to.jnode, "left")
-                .select(
-                    "node",
-                    F.coalesce(F.col("jcomp"), F.col("comp")).alias("comp"),
-                    (F.coalesce(F.col("jcomp"), F.col("comp")) != F.col("old_comp"))
-                    .alias("moved"),
-                )
-                .repartition(n_parts, "node")
-            )
-            changed = jumped.where(F.col("moved")).limit(1).count()
-            labels = jumped.select("node", "comp")
-            if changed == 0:
-                logger.info(
-                    "connected_components: converged after %d rounds "
-                    "(%d edges, %d nodes)", round_no, n_edges, n_nodes,
-                )
-                return labels.select("node", F.col("comp").alias("cluster_id"))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+            return labels.select("node", F.col("comp").alias("cluster_id"))
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
 

@@ -52,10 +52,7 @@ aggregation — happens ONCE (the df table is persisted; the rarest-mass
 estimate reads a df-VALUE histogram whose row count is provably
 ≤ √(2·total_occurrences), since k distinct df values need at least
 1+2+…+k occurrences — ~450k rows at 10¹² occurrences, one narrow
-column). Pass ``profile_fraction < 1`` to profile a Bernoulli doc
-sample instead (df scales ~linearly in the fraction for non-hapax
-shingles, so both df² estimates are extrapolated by ``1/f²`` —
-conservative for the hot shingles that actually decide the route).
+column).
 
 Reference parity: none — the reference has no set-similarity surface;
 this is beyond-reference curation capability (SURVEY §2.8 extension).
@@ -80,7 +77,6 @@ def profile_shingle_dfs(
     *,
     text_col: str = "text",
     k: int = 5,
-    profile_fraction: float = 1.0,
     threshold: float | None = None,
     shingle_arrays: DataFrame | None = None,
 ) -> dict[str, float]:
@@ -108,22 +104,14 @@ def profile_shingle_dfs(
     shingle pass between this profile and the routed leg's verify join;
     the exchange then carries the 64-bit ``xxhash64`` of each shingle,
     never the strings (narrower aggregation key, same df histogram)."""
-    if not 0.0 < profile_fraction <= 1.0:
-        raise ValueError(f"profile_fraction must be in (0, 1], got {profile_fraction}")
     if shingle_arrays is not None:
-        base = shingle_arrays
-        if profile_fraction < 1.0:
-            base = base.sample(fraction=profile_fraction, seed=7)
-        sh = base.select(F.explode("__set").alias("__sh_s")).select(
+        sh = shingle_arrays.select(F.explode("__set").alias("__sh_s")).select(
             F.xxhash64("__sh_s").alias("sh")
         )
     else:
-        base = docs.select("doc_id", text_col)
-        if profile_fraction < 1.0:
-            base = base.sample(fraction=profile_fraction, seed=7)
-        sh = distinct_shingle_hash_df(base, text_col=text_col, k=k).select(
-            "sh"
-        )
+        sh = distinct_shingle_hash_df(
+            docs.select("doc_id", text_col), text_col=text_col, k=k
+        ).select("sh")
     hist = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -162,17 +150,13 @@ def profile_shingle_dfs(
             ).alias("prefix_mass_df2")
         )
     row = hist.agg(*aggs).collect()[0]
-    f = profile_fraction
     out = {
-        "total_occurrences": float(row["total"]) / f,
+        "total_occurrences": float(row["total"]),
         "vocab": float(row["vocab"]),
-        # df scales ~f for non-hapax shingles → Σdf² scales ~f²; the 1/f²
-        # blow-up over-estimates the hapax tail's contribution, which is
-        # conservative toward LSH (hapax shingles join with nothing)
-        "sum_df2": float(row["sum_df2"]) / (f * f),
+        "sum_df2": float(row["sum_df2"]),
     }
     if threshold is not None:
-        out["prefix_mass_df2"] = float(row["prefix_mass_df2"]) / (f * f)
+        out["prefix_mass_df2"] = float(row["prefix_mass_df2"])
     return out
 
 
@@ -207,7 +191,6 @@ def route_jaccard_join(
     k: int = 5,
     threshold: float = 0.6,
     num_hashes: int = 16,
-    profile_fraction: float = 1.0,
     shingle_arrays: DataFrame | None = None,
 ) -> str:
     """Profile ``docs`` at the join's shingle width and return the mode.
@@ -223,7 +206,6 @@ def route_jaccard_join(
         docs,
         text_col=text_col,
         k=k,
-        profile_fraction=profile_fraction,
         threshold=threshold,
         shingle_arrays=shingle_arrays,
     )
@@ -337,7 +319,6 @@ def jaccard_pairs_auto(
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    profile_fraction: float = 1.0,
     mode: str = "auto",
     scope: CacheScope | None = None,
 ) -> DataFrame:
@@ -372,20 +353,17 @@ def jaccard_pairs_auto(
         # paid a second full text scan for ``minhash_signatures``. The
         # signature columns cost one vectorized numpy pass over windows
         # the kernel hashes anyway; a prefix-routed call simply ignores
-        # them. With a sampled profile the arrays cover only the sample,
-        # so the legs rebuild their own full-corpus tables.
-        if profile_fraction >= 1.0:
-            kernel = _shared_kernel_pass(
-                docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope
-            )
-            arrays = kernel.select("doc_id", "__set")
+        # them.
+        kernel = _shared_kernel_pass(
+            docs, text_col=text_col, k=k, num_hashes=num_hashes, scope=scope
+        )
+        arrays = kernel.select("doc_id", "__set")
         mode = route_jaccard_join(
             docs,
             text_col=text_col,
             k=k,
             threshold=threshold,
             num_hashes=num_hashes,
-            profile_fraction=profile_fraction,
             shingle_arrays=arrays,
         )
     if mode == "prefix":

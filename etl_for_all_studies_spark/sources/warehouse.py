@@ -213,8 +213,8 @@ class Warehouse:
         Mechanics: pick candidates purely from filesystem metadata
         (``n_files > max(min_files_to_compact, ceil(bytes/target))``), then
         rewrite all of them in ONE job — ``repartition("study_key")``
-        clusters each study into one task while
-        ``spark.sql.files.maxRecordsPerFile`` (derived from the observed
+        clusters each study into one task while the write's own
+        ``maxRecordsPerFile`` option (derived from the observed
         bytes-per-row) re-splits any partition larger than the target. The
         subset is checkpointed first: Spark (correctly) refuses a write that
         overwrites its own input files, and the checkpoint also pins the
@@ -247,15 +247,13 @@ class Warehouse:
         if total_rows == 0:
             return []
         rows_per_file = max(1, int(target_file_bytes / max(1, total_bytes / total_rows)))
-        conf = self.spark.conf
-        saved = conf.get("spark.sql.files.maxRecordsPerFile", "0")
-        conf.set("spark.sql.files.maxRecordsPerFile", str(rows_per_file))
-        try:
-            self.overwrite_study_partitions(
-                table, sub.repartition("study_key")
-            )
-        finally:
-            conf.set("spark.sql.files.maxRecordsPerFile", saved)
+        (
+            sub.repartition("study_key")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", rows_per_file)
+            .partitionBy("study_key")
+            .parquet(self.path(table))
+        )
         return sorted(candidates)
 
 

@@ -45,6 +45,29 @@ def spark():
 
 
 @pytest.fixture()
+def conf_writes(monkeypatch):
+    """Records every ``RuntimeConfig.set``/``unset`` call made while the
+    test runs (the calls still go through). Operators must leave session
+    conf alone, so tests assert this stays empty around an operator call."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    orig_set, orig_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        calls.append(("set", key, value))
+        return orig_set(self, key, value)
+
+    def spy_unset(self, key):
+        calls.append(("unset", key))
+        return orig_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+    return calls
+
+
+@pytest.fixture()
 def study_tree(tmp_path):
     """Canonical fixture study (FIXTURES.md F1-F4)."""
     studies = tmp_path / "studies"

@@ -1,6 +1,8 @@
 """Curation-operator unit tests: quality rules, packing/chunking, sampling,
 incremental dedup, and connected-components clustering (hand-checkable inline
 fixtures; the suite-level DuckDB oracles cover the at-SF formulations)."""
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,17 +156,34 @@ def test_connected_components_chain_and_isolates(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_connected_components_long_path_converges(spark):
+def test_connected_components_long_path_converges(spark, conf_writes, monkeypatch):
     # a 64-node path exercises pointer jumping (plain neighbor-min would need
     # 63 rounds; the jump step collapses it well inside max_iter).
     # local_edge_threshold=0 forces the distributed loop — the scale path —
     # so this test covers it even though the graph fits the local solver.
+    from etl_for_all_studies_spark.operators import dedup_graph
+
+    round_plans = []
+    checkpoint = dedup_graph.fresh_stats_checkpoint
+
+    def record_plan(df):
+        round_plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df)
+
+    monkeypatch.setattr(dedup_graph, "fresh_stats_checkpoint", record_plan)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "u long, v long"
     )
     out = connected_components(edges, max_iter=12, local_edge_threshold=0)
     assert out.where(F.col("cluster_id") != 0).count() == 0
     assert out.count() == 64
+    # the loop sizes its shuffles with explicit repartition counts (2 for
+    # this graph, the session has 4) and never sets or restores session conf
+    assert conf_writes == []
+    loop_plan = round_plans[1]
+    widths = re.findall(r"hashpartitioning\([^)]*, (\d+)\)", loop_plan)
+    assert widths and set(widths) == {"2"}, widths
+    assert "ENSURE_REQUIREMENTS" not in loop_plan
 
 
 def test_connected_components_local_and_distributed_agree(spark):

@@ -7,9 +7,7 @@ when every clone pair collides in some band); (3) the routing rule is
 pure and test-pinnable: EVERY threshold routes by the df profile — the
 prefix-cost proxy is max(uniform-placement bound, rarest-mass estimate),
 each loose DOWN where the other is loose UP (the r10 t≥0.8 short-circuit
-measured ~2.5× wrong at k=5, SCALE.md r11); (4) the sampled profile
-stays on the full profile's side of the decision boundary on a corpus
-with margin.
+measured ~2.5× wrong at k=5, SCALE.md r11).
 """
 import pytest
 from pyspark.sql import functions as F
@@ -146,7 +144,7 @@ def test_choose_mode_max_of_two_estimates():
     )
 
 
-def test_profile_counts_are_exact_and_sampling_extrapolates(spark):
+def test_profile_counts_are_exact(spark):
     # 3 docs of one repeated shingle-rich text: profile numbers are checkable
     docs = _docs(spark, ["abcdefgh", "abcdefgh", "xyzuvwpq"])
     prof = profile_shingle_dfs(docs, k=5)
@@ -162,12 +160,6 @@ def test_profile_counts_are_exact_and_sampling_extrapolates(spark):
     assert profile_shingle_dfs(docs, k=5, threshold=0.5)["prefix_mass_df2"] == 20
     # t=1.0: zero mass target → no bucket → 0 (routes prefix: exact dups)
     assert profile_shingle_dfs(docs, k=5, threshold=1.0)["prefix_mass_df2"] == 0
-    sampled = profile_shingle_dfs(docs, k=5, profile_fraction=0.5)
-    # extrapolation scales by 1/f and 1/f²; exact values depend on the
-    # sample draw, but the dominant-term ORDER must survive sampling
-    assert sampled["sum_df2"] >= sampled["total_occurrences"] >= 0
-    with pytest.raises(ValueError):
-        profile_shingle_dfs(docs, profile_fraction=0.0)
     with pytest.raises(ValueError):
         jaccard_pairs_auto(docs, mode="bogus")
 

@@ -12,8 +12,8 @@ from the vs-seen joins' seen-side scans), NOT by fold index — a
 superlinear trend would mean per-batch cost compounds and the stream dies
 by accretion.
 
-Shards are cipher-disjoint slices of the sf0.1 corpus (one affine cipher
-index per shard, same family as ``bench_scaleup_curation.py``) so every
+Shards are cipher-disjoint slices of the sf0.1 corpus (one affine letter
+cipher per shard with stopwords kept, ``cipher`` in ``main``) so every
 batch is mostly-new content — the steady-state regime. doc_ids are offset
 per shard (stream-wide uniqueness contract).
 

@@ -1,39 +1,32 @@
 """All-pairs per-study Spearman correlation with p-values and BH FDR.
 
 Re-expresses the reference's correlation engine
-(``src/etl_for_all_studies/correlation.py:95-162``) as one declarative plan:
+(``src/etl_for_all_studies/correlation.py:95-162``): per-pair ranks over
+the shared samples (O-24/O-25/O-35) → gates (O-33/O-34/O-38) → ρ (O-36) →
+p (O-37) → BH FDR per study (O-40) → p NULL→1.0 at store time (O-39).
 
-  pair self-join (O-24/O-25) → gates (O-33/O-34) → average ranks (O-35) →
-  Pearson-on-ranks ``corr()`` (O-36) → normal-approx p (O-37) → NaN-ρ drop
-  (O-38) → BH FDR per study (O-40) → p NULL→1.0 at store time (O-39).
+``compute_gene_pair_correlations`` routes each study to one of two pair
+builders. Both emit gated ``(study_key, gene_a_key, gene_b_key, n_samples,
+rho_spearman)`` rows into the one JVM p → BH → select tail (``_correlate``):
 
-``compute_gene_pair_correlations`` classifies each study with one cheap
-aggregation and sends it through one of three pair builders, all feeding
-the one gates → ρ → p → BH tail (``_correlate``). Results are identical on
-every route (tests pin them equal); only the physical plan differs:
+* ``_kernel_pairs`` — every study but the wide dense ones: one grouped
+  Arrow kernel per study (``_study_spearman``), ranking each pair within
+  its shared samples as the reference does (``correlation.py:118``),
+  from one exchange of the cells and no pair-expanded rows;
+* ``_block_pairs`` — dense studies wider than ``_WIDE_GENE_THRESHOLD``:
+  ranks once per gene, pairs enumerated in gene blocks so one (study,
+  sample) key's fan-out spreads over B(B+1)/2 reducers, bucketed BH.
 
-* ragged studies (some gene misses some sample) → ``_ragged_pairs``: ranks
-  are computed **within each pair's shared sample set** after the
-  self-join — bit-faithful to the reference, which intersects per pair
-  (``correlation.py:118``). Cost: windows over the pair-expanded table.
-* dense studies up to ``_WIDE_GENE_THRESHOLD`` genes → ``_dense_pairs``:
-  ranks computed once per (study, gene) **before** the self-join —
-  identical results when every gene covers every sample, at a fraction of
-  the cost (one window over the long table; the join's equi-keys (study,
-  sample) drive a sort-merge join and the aggregation is map-side partial).
-* wider dense studies → ``_block_pairs``: the same pre-ranked pairs,
-  enumerated in gene blocks so one (study, sample) key's quadratic fan-out
-  spreads over B(B+1)/2 reducers.
-
-The join is equi on (study_key, gsm_accession) with ``gene_a < gene_b`` —
-Catalyst plans the equi part as the join key and the inequality as a
-post-join filter; AQE handles skewed studies.
+Tests pin both to the retired pair-expanded plan and the DuckDB oracle.
 """
 from __future__ import annotations
 
 import datetime as dt
 import functools
+import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,78 +40,62 @@ from ..functions.stats import (
 
 MIN_SAMPLES_FOR_CORRELATION = 2  # reference correlation.py:65
 
-# Dense studies wider than this take the block route. Measured dense/block
-# crossover (SCALE.md round-8 envelope series: dense wins at 1k genes, block
-# wins from 2k up, both regimes) — 1024 is the last power-of-two width where
-# the dense plan's single-reducer-per-sample fan-out (~0.5M pairs) still
-# beats block's B+1× input replication.
+# Dense studies wider than this take the block route: the measured
+# dense-join/block crossover lies between 1k and 2k genes (SCALE.md, round-8
+# envelope series); the kernel/block crossover is not measured yet.
 _WIDE_GENE_THRESHOLD = 1024
 
-# Block sizing: keep each block pair's output near (_GENES_PER_BLOCK)² ≈ 4M
-# rows per (sample, block-pair) task. Measured round-8 envelope sweep
-# (SCALE.md): at 20k genes B=10 (2k genes/block) was the sweet spot; smaller
-# blocks buy nothing locally and pay B+1× input replication, larger blocks
-# push per-task output toward the single-reducer pathology the block route
-# exists to remove.
+# Block sizing: ~(2k genes)² ≈ 4M pair rows per (sample, block-pair) task,
+# the sweet spot of the round-8 sweep at 20k genes (B=10; SCALE.md).
 _GENES_PER_BLOCK = 2000
+
+# The kernel ranks a study in gene blocks whose (partner genes × rows)
+# float64 arrays hold about this many elements: 8 MB each at any width.
+_KERNEL_BLOCK_ELEMS = 1 << 20
 
 
 def _utc_now_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds")
 
 
-def _split_dense_studies(
-    e: DataFrame,
-) -> tuple[list[int], list[int], list[int], dict[int, int]]:
-    """Classify studies as dense (every gene covers every sample exactly
-    once), WIDE dense (dense with ``n_genes > _WIDE_GENE_THRESHOLD`` — the
-    beyond-envelope shape that needs block pair enumeration), or ragged.
-    Also returns the per-study gene counts the classification aggregation
-    already paid for, so the router can size the block count from the
-    widest study instead of a guess.
-
-    A study is dense iff (a) no (gene, sample) cell repeats and (b) the
-    distinct cells fill the full gene × sample grid. Two-phase screen so the
-    router's fixed cost stays small (it is pure latency on every call):
-
-    1. ONE aggregation computes (total, n_genes, n_samples). If
-       ``total != n_genes · n_samples`` the study cannot be dense — this
-       rejects ragged matrices (the common case at warehouse scale) without
-       ever paying a distinct over (gene, sample) pairs. The screen's Expand
-       is over two single columns, not a two-column struct.
-    2. Only screen-passing candidates get the exact no-duplicate-cells
-       verification: a distinct count over (gene, sample), filtered to just
-       those studies. A truly dense study pays it (and then saves far more
-       on the pre-ranked plan); a duplicated-cell impostor is demoted to
-       ragged, so routing can never change results.
-    """
-    per_study = e.groupBy("study_key").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count_distinct("gene_key").alias("n_genes"),
-        F.count_distinct("gsm_accession").alias("n_samples"),
+def _split_wide_dense(e: DataFrame) -> tuple[list[int], dict[int, int]]:
+    """``(kernel study keys, {wide dense study: n_genes})``. Wide dense
+    means more than ``_WIDE_GENE_THRESHOLD`` genes, each covering every
+    sample once. ONE aggregation gives (total, n_genes, n_samples) per
+    study; only a wide study with ``total == n_genes · n_samples`` pays
+    the exact distinct-cells check. The kernel is exact on every shape,
+    so routing never changes results."""
+    rows = (
+        e.groupBy("study_key")
+        .agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count_distinct("gene_key").alias("n_genes"),
+            F.count_distinct("gsm_accession").alias("n_samples"),
+        )
+        .collect()
     )
-    rows = per_study.withColumn(
-        "candidate", F.col("total") == F.col("n_genes") * F.col("n_samples")
-    ).collect()
-    candidates = [r["study_key"] for r in rows if r["candidate"]]
-    expected = {r["study_key"]: r["total"] for r in rows}
-
-    dense: list[int] = []
+    candidates = {
+        r["study_key"]: r
+        for r in rows
+        if r["n_genes"] > _WIDE_GENE_THRESHOLD
+        and r["total"] == r["n_genes"] * r["n_samples"]
+    }
+    wide: dict[int, int] = {}
     if candidates:
         cells = (
-            e.where(F.col("study_key").isin(candidates))
+            e.where(F.col("study_key").isin(list(candidates)))
             .select("study_key", "gene_key", "gsm_accession")
             .distinct()
             .groupBy("study_key")
             .agg(F.count(F.lit(1)).alias("cells"))
             .collect()
         )
-        dense = [r["study_key"] for r in cells if r["cells"] == expected[r["study_key"]]]
-    genes = {r["study_key"]: r["n_genes"] for r in rows}
-    wide = [k for k in dense if genes[k] > _WIDE_GENE_THRESHOLD]
-    dense = [k for k in dense if k not in set(wide)]
-    ragged = [r["study_key"] for r in rows if r["study_key"] not in set(dense) | set(wide)]
-    return dense, wide, ragged, genes
+        wide = {
+            r["study_key"]: candidates[r["study_key"]]["n_genes"]
+            for r in cells
+            if r["cells"] == candidates[r["study_key"]]["total"]
+        }
+    return [r["study_key"] for r in rows if r["study_key"] not in wide], wide
 
 
 def _derive_n_blocks(max_genes: int) -> int:
@@ -127,92 +104,145 @@ def _derive_n_blocks(max_genes: int) -> int:
     return max(2, -(-max_genes // _GENES_PER_BLOCK))
 
 
-def _ranked(e: DataFrame) -> DataFrame:
-    """Average rank once per (study, gene) — valid on dense studies only."""
-    return e.withColumn(
+def _study_spearman(key, table: pa.Table, min_samples: int) -> pa.Table:
+    """``applyInArrow`` body: one study's rows → its gated pair rows.
+
+    Pair (a, b) sees one row per (a-cell, b-cell) sharing a sample, as a
+    self-join would: a (gene, sample) cell present k times meets each
+    partner cell k times. Average ranks are taken in that multiset, NULL
+    first and NaN last as a Spark window orders them; ρ is Pearson on the
+    ranks; gates: n ≥ ``min_samples``, both rank variances > 0, ρ not NaN.
+
+    Masked ranks in O(G²·S): with ``C[g, s]`` the cell count of gene g at
+    sample s, a's row at sample s weighs ``C[b, s]`` in pair (a, b). Along
+    a's rows sorted by value once, one cumulative sum of those weights
+    gives every partner's rank: ``below`` (weight before the row's tie
+    group) + ``(ties + 1) / 2`` (weight inside it). Ranks are kept centred
+    on the pair's mean ``(n + 1) / 2``: half-integers, so every sum below
+    is exact in float64 and ρ does not depend on row order. Rows are still
+    sorted by (gene_key, gsm_accession) before any sum.
+    """
+    t = table.sort_by([("gene_key", "ascending"), ("gsm_accession", "ascending")])
+    genes, g = np.unique(t["gene_key"].to_numpy(), return_inverse=True)
+    s_enc = t["gsm_accession"].combine_chunks().dictionary_encode()
+    s = s_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    n_genes, n_samp = len(genes), len(s_enc.dictionary)
+    vals = t["expression_value"].combine_chunks()
+    null = vals.is_null().to_numpy(zero_copy_only=False)
+    v = vals.fill_null(0.0).to_numpy(zero_copy_only=False)
+
+    # value order within each gene: NULL first, ascending, NaN last; the
+    # sort is stable, so (gene_key, gsm_accession) order breaks ties
+    order = np.lexsort((v, ~null, g))
+    gv, sv, vv, nv = g[order], s[order], v[order], null[order]
+    tie = (gv[1:] == gv[:-1]) & (nv[1:] == nv[:-1]) & (
+        (vv[1:] == vv[:-1]) | (np.isnan(vv[1:]) & np.isnan(vv[:-1]))
+    )
+    new_tie = np.concatenate(([True], ~tie))
+    tie_start = np.flatnonzero(new_tie)
+    tie_id = np.cumsum(new_tie) - 1
+    tie_lo, tie_hi = tie_start[tie_id], np.append(tie_start[1:], len(gv))[tie_id]
+    gene_lo = np.searchsorted(g, np.arange(n_genes + 1))  # same in both orders
+    seg_lo = gene_lo[gv]
+    # cells are contiguous in (gene_key, gsm_accession) order; ``order``
+    # maps each value-ordered row back to it
+    cell_new = np.concatenate(([True], (g[1:] != g[:-1]) | (s[1:] != s[:-1])))
+    cf = np.bincount(g * n_samp + s, minlength=n_genes * n_samp)
+    cf = cf.reshape(n_genes, n_samp).astype(np.float64)
+    npairs = cf @ cf.T  # rows each pair sees; exact (integers < 2^53)
+
+    def ranks(blk: range, partners: range) -> tuple[np.ndarray, np.ndarray]:
+        """Centred ranks of genes ``blk``'s rows against each partner:
+        (Σ w·c² per [partner, gene], Σ c per [partner, gene, sample])."""
+        lo, hi = gene_lo[blk.start], gene_lo[blk.stop]
+        p = slice(partners.start, partners.stop)
+        w = cf[p][:, sv[lo:hi]]
+        cum = np.zeros((w.shape[0], hi - lo + 1))
+        np.cumsum(w, axis=1, out=cum[:, 1:])
+        start = cum[:, tie_lo[lo:hi] - lo]
+        below = start - cum[:, seg_lo[lo:hi] - lo]
+        ties = cum[:, tie_hi[lo:hi] - lo] - start
+        c = (2.0 * below + ties - npairs[p][:, gv[lo:hi]]) / 2.0
+        c[w == 0] = 0.0
+        ss = np.add.reduceat(w * c * c, gene_lo[blk.start:blk.stop] - lo, axis=1)
+        by_cell = np.empty_like(c)
+        by_cell[:, order[lo:hi] - lo] = c
+        cell_lo = np.flatnonzero(cell_new[lo:hi])
+        per_sample = np.zeros((w.shape[0], len(blk) * n_samp))
+        cell = (g[lo:hi][cell_lo] - blk.start) * n_samp + s[lo:hi][cell_lo]
+        per_sample[:, cell] = np.add.reduceat(by_cell, cell_lo, axis=1)
+        return ss, per_sample.reshape(w.shape[0], len(blk), n_samp)
+
+    widest = int(np.diff(gene_lo).max())
+    step = max(1, math.isqrt(_KERNEL_BLOCK_ELEMS // max(widest, n_samp)))
+    blocks = [range(i, min(i + step, n_genes)) for i in range(0, n_genes, step)]
+    out = []
+    for i, bi in enumerate(blocks):
+        for bj in blocks[i:]:
+            ss_i, cs_i = ranks(bi, bj)  # [b, a], [b, a, s]
+            ss_j, cs_j = (ss_i, cs_i) if bj is bi else ranks(bj, bi)  # [a, b]
+            a, b = np.meshgrid(np.asarray(bi), np.asarray(bj), indexing="ij")
+            with np.errstate(invalid="ignore", divide="ignore"):
+                rho = np.einsum("bas,abs->ab", cs_i, cs_j) / np.sqrt(ss_i.T * ss_j)
+            ok = (a < b) & (npairs[a, b] >= min_samples) & (ss_i.T > 0) & (ss_j > 0)
+            ok &= ~np.isnan(rho)
+            out.append((a[ok], b[ok], np.clip(rho[ok], -1.0, 1.0)))
+    a, b, rho = (np.concatenate(col) for col in zip(*out))
+    return pa.table({
+        "study_key": np.full(len(a), key[0].as_py(), dtype=np.int64),
+        "gene_a_key": genes[a],
+        "gene_b_key": genes[b],
+        "n_samples": npairs[a, b].astype(np.int64),
+        "rho_spearman": rho,
+    })
+
+
+def _kernel_pairs(e: DataFrame, min_samples: int) -> DataFrame:
+    """Gated pair rows of every study in ``e``, one kernel call per study.
+    Rows with a NULL study, gene or sample key never meet a partner on an
+    equi-join, so they are dropped first. The numbered repartition is the
+    grouping's exchange; AQE does not coalesce it, so a few small studies
+    do not share one task."""
+    n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    keys = ["study_key", "gene_key", "gsm_accession"]
+    keyed = e.dropna(subset=keys).repartition(n_part, "study_key")
+
+    def kernel(key, table):  # no annotations: applyInArrow infers its API from them
+        return _study_spearman(key, table, min_samples)
+
+    return keyed.groupBy("study_key").applyInArrow(
+        kernel,
+        schema="study_key long, gene_a_key long, gene_b_key long, "
+        "n_samples long, rho_spearman double",
+    )
+
+
+def _block_pairs(
+    e: DataFrame, n_blocks: int, min_samples: int = MIN_SAMPLES_FOR_CORRELATION
+) -> DataFrame:
+    """Wide dense route: gated pair rows from a bucketed pair enumeration
+    over the pre-ranked long table (ranking once per gene is exact because
+    every gene covers every sample once). A (study, sample)-keyed join
+    makes ONE task emit all n_genes²/2 pairs of its sample — an
+    unsplittable hot key (AQE splits skewed *partitions*, not keys). Here
+    each unordered pair with blocks p ≤ q comes from exactly one block pair
+    (p, q): a LEFT row of block g is replicated to (g, g), …, (g, B−1), a
+    RIGHT row to (0, g), …, (g, g). The equi-join on (study, sample, blk_a,
+    blk_b) bounds each task at (n_genes/B)² pairs for B+1× input
+    replication. Off-diagonal pairs arrive in arbitrary side order and are
+    canonicalized with least/greatest + a conditional rank swap; diagonal
+    blocks keep ``gene_a < gene_b``. Block id is ``pmod(hash(gene_key), B)``
+    — hash, not range, so dense and sparse gene-key spaces both balance.
+    """
+    e = e.withColumn(
         "rank", average_rank(["study_key", "gene_key"], "expression_value")
     )
-
-
-def _self_join(e: DataFrame) -> DataFrame:
-    """Pairs of genes sharing a (study, sample), ``gene_a < gene_b``, with
-    each side's value (``va``/``vb``) and, on a pre-ranked input, each
-    side's rank (``ra``/``rb``)."""
-    a = e.alias("a")
-    b = e.alias("b")
-    sides = [
-        F.col("a.expression_value").alias("va"),
-        F.col("b.expression_value").alias("vb"),
-    ]
-    if "rank" in e.columns:
-        sides += [F.col("a.rank").alias("ra"), F.col("b.rank").alias("rb")]
-    return a.join(
-        b,
-        on=[
-            F.col("a.study_key") == F.col("b.study_key"),
-            F.col("a.gsm_accession") == F.col("b.gsm_accession"),
-            F.col("a.gene_key") < F.col("b.gene_key"),
-        ],
-    ).select(
-        F.col("a.study_key").alias("study_key"),
-        F.col("a.gene_key").alias("gene_a_key"),
-        F.col("b.gene_key").alias("gene_b_key"),
-        *sides,
-    )
-
-
-def _ragged_pairs(e: DataFrame) -> DataFrame:
-    """Ragged route: ranks within the pair's shared sample set — exact
-    reference semantics for ragged matrices (correlation.py:118 intersects
-    first)."""
-    pair_cols = ["study_key", "gene_a_key", "gene_b_key"]
-    return (
-        _self_join(e)
-        .withColumn("ra", average_rank(pair_cols, "va"))
-        .withColumn("rb", average_rank(pair_cols, "vb"))
-    )
-
-
-def _dense_pairs(e: DataFrame) -> DataFrame:
-    """Dense route: pre-ranked self-join."""
-    return _self_join(_ranked(e))
-
-
-def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
-    """Wide dense route: bucketed pair enumeration over the pre-ranked long
-    table. The plain dense join keys the shuffle on (study, sample), so ONE
-    task must emit all n_genes²/2 pairs for its sample — at 20k genes that
-    is 2·10⁸ rows from a single task, an unsplittable hot key (AQE splits
-    skewed *partitions*, not single keys). Here every unordered gene pair
-    {g₁, g₂} with blocks p ≤ q is produced by exactly one block pair (p, q):
-
-    * as the LEFT side, a row with block g is replicated to block pairs
-      (g, g), (g, g+1), …, (g, B−1) — a per-row ``sequence`` explode;
-    * as the RIGHT side, to (0, g), …, (g, g).
-
-    The join is then a pure equi-join on (study, sample, block_a, block_b) —
-    the block columns join the shuffle key, so each task emits at most
-    (n_genes/B)² pairs, at the cost of replicating each input row B+1 times
-    (the classic triangle-enumeration tradeoff). Off-diagonal block pairs
-    contain each unordered pair once with arbitrary side order (blocks
-    differ ⇒ genes differ), so the output is canonicalized with
-    least/greatest + a conditional swap of the value/rank columns; diagonal
-    pairs keep the usual ``gene_a < gene_b`` predicate. Block id is
-    ``pmod(hash(gene_key), B)`` — hash, not range, so dense and sparse
-    gene-key spaces both balance.
-    """
-    e = _ranked(e)
-    blk = F.pmod(F.hash(F.col("gene_key")), F.lit(n_blocks)).alias("blk")
-    base = e.select("*", blk)
+    base = e.select("*", F.pmod(F.hash("gene_key"), F.lit(n_blocks)).alias("blk"))
     left = base.select(
-        "*",
-        F.explode(
-            F.sequence(F.col("blk"), F.lit(n_blocks - 1))
-        ).alias("blk_b"),
+        "*", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("blk_b")
     ).withColumnRenamed("blk", "blk_a")
     right = base.select(
-        "*",
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("blk_a"),
+        "*", F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("blk_a")
     ).withColumnRenamed("blk", "blk_b")
     # PIN the join parallelism: AQE's coalescing sizes partitions by shuffle
     # INPUT bytes, but this join amplifies output ~n_genes/B× per input row —
@@ -222,13 +252,9 @@ def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
     # explicit numbered repartition on the join keys is non-coalescible, so
     # the B(B+1)/2 × samples key groups keep their full reducer spread.
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    left = left.repartition(
-        n_part, "study_key", "gsm_accession", "blk_a", "blk_b"
-    )
-    a = left.alias("a")
-    b = right.alias("b")
-    joined = a.join(
-        b,
+    a = left.repartition(n_part, "study_key", "gsm_accession", "blk_a", "blk_b")
+    joined = a.alias("a").join(
+        right.alias("b"),
         on=[
             F.col("a.study_key") == F.col("b.study_key"),
             F.col("a.gsm_accession") == F.col("b.gsm_accession"),
@@ -236,64 +262,30 @@ def _block_pairs(e: DataFrame, n_blocks: int) -> DataFrame:
             F.col("a.blk_b") == F.col("b.blk_b"),
         ],
     ).where(
-        # diagonal block: classic ordered-pair predicate; off-diagonal: the
-        # sides are distinct blocks, every unordered pair appears once
         (F.col("a.blk_a") != F.col("a.blk_b"))
         | (F.col("a.gene_key") < F.col("b.gene_key"))
     )
     swap = F.col("a.gene_key") > F.col("b.gene_key")
-
-    def pick(col: str, flipped: bool) -> F.Column:
-        first, second = ("b", "a") if flipped else ("a", "b")
-        return F.when(swap, F.col(f"{first}.{col}")).otherwise(F.col(f"{second}.{col}"))
-
-    return joined.select(
+    paired = joined.select(
         F.col("a.study_key").alias("study_key"),
-        F.least(F.col("a.gene_key"), F.col("b.gene_key")).alias("gene_a_key"),
-        F.greatest(F.col("a.gene_key"), F.col("b.gene_key")).alias("gene_b_key"),
-        pick("expression_value", True).alias("va"),
-        pick("expression_value", False).alias("vb"),
-        pick("rank", True).alias("ra"),
-        pick("rank", False).alias("rb"),
+        F.least("a.gene_key", "b.gene_key").alias("gene_a_key"),
+        F.greatest("a.gene_key", "b.gene_key").alias("gene_b_key"),
+        F.when(swap, F.col("b.rank")).otherwise(F.col("a.rank")).alias("ra"),
+        F.when(swap, F.col("a.rank")).otherwise(F.col("b.rank")).alias("rb"),
     )
-
-
-def _correlate(
-    paired: DataFrame,
-    *,
-    bucketed_bh: bool,
-    computed_at: str,
-    min_samples: int = MIN_SAMPLES_FOR_CORRELATION,
-    pvalue_dist: str = "normal",
-    scope=None,
-) -> DataFrame:
-    """The shared tail: (study, gene_a, gene_b, va, vb, ra, rb) pair rows →
-    gates → ρ → p → BH q → fact_gene_pair_corr rows.
-
-    ``bucketed_bh`` is set for the block route only: its pair families are
-    n_genes²/2 rows, and the classic per-family window would funnel exactly
-    the fan-out ``_block_pairs`` spread across reducers back into ONE task.
-    The bucketed BH keeps every stage partitioned by (study, p-bucket) with
-    bit-identical output (pinned by
-    ``test_bh_scalable_matches_classic_and_oracle``). On reference-envelope
-    families the window form is cheaper (SCALE.md, "BH follows the route").
-    """
-    stats = (
+    return (
         paired.groupBy("study_key", "gene_a_key", "gene_b_key")
         .agg(
             F.count(F.lit(1)).alias("n_samples"),
-            # Pearson-on-ranks assembled from covariance/variance aggregates
-            # instead of corr(): ANSI-safe on zero-variance series (corr()
-            # raises DIVIDE_BY_ZERO under ANSI; the reference's semantics are
-            # "NaN ρ → drop the pair", O-38), numerically identical otherwise.
+            # Pearson-on-ranks from covariance/variance aggregates instead of
+            # corr(): ANSI-safe on zero-variance series (corr() raises
+            # DIVIDE_BY_ZERO under ANSI; O-38 drops NaN-ρ pairs instead)
             F.covar_samp("ra", "rb").alias("cov_ab"),
             F.var_samp("ra").alias("var_a"),
             F.var_samp("rb").alias("var_b"),
         )
-        # O-33 min-samples gate + O-34 constant-series gate + O-38 NaN-ρ drop.
-        # var(rank) > 0 ⇔ ≥2 distinct values — the reference's
-        # len(set(values)) < 2 gate without a count_distinct (which would
-        # force an Expand tripling the aggregation input).
+        # O-33 min-samples gate + O-34 constant-series gate: var(rank) > 0 ⇔
+        # ≥2 distinct values, without a count_distinct's Expand
         .where(
             (F.col("n_samples") >= min_samples)
             & (F.col("var_a") > 0)
@@ -311,33 +303,49 @@ def _correlate(
                 F.lit(1.0),
             ),
         )
-        .where(F.col("rho_spearman").isNotNull() & ~F.isnan("rho_spearman"))
+        .where(F.col("rho_spearman").isNotNull() & ~F.isnan("rho_spearman"))  # O-38
         .drop("cov_ab", "var_a", "var_b")
-        .withColumn(
-            "p_value",
-            spearman_p_value_expr(F.col("rho_spearman"), F.col("n_samples"))
-            if pvalue_dist == "normal"
-            else spearman_p_value_t_expr(F.col("rho_spearman"), F.col("n_samples")),
-        )
-        # normalize any NaN to NULL so BH's valid-p accounting is uniform
-        .withColumn(
-            "p_value",
-            F.when(F.isnan("p_value"), F.lit(None).cast("double")).otherwise(
-                F.col("p_value")
-            ),
-        )
     )
 
+
+def _correlate(
+    stats: DataFrame,
+    *,
+    bucketed_bh: bool,
+    computed_at: str,
+    pvalue_dist: str = "normal",
+    scope=None,
+) -> DataFrame:
+    """The shared tail: gated pair rows (study, gene_a, gene_b, n_samples,
+    ρ) → p → BH q → fact_gene_pair_corr rows.
+
+    ``bucketed_bh`` is set for the block route only: its n_genes²/2-row
+    families would funnel back into ONE task under the per-family window.
+    The bucketed BH keeps every stage partitioned by (study, p-bucket) with
+    bit-identical output (``test_bh_scalable_matches_classic_and_oracle``);
+    on reference-envelope families the window form is cheaper (SCALE.md,
+    "BH follows the route").
+    """
+    rho, n = F.col("rho_spearman"), F.col("n_samples")
+    p = (
+        spearman_p_value_expr(rho, n)
+        if pvalue_dist == "normal"
+        else spearman_p_value_t_expr(rho, n)
+    )
+    # NaN p → NULL, so BH's valid-p accounting is uniform
+    nan_null = F.when(F.isnan("p_value"), F.lit(None).cast("double"))
+    with_p = stats.withColumn("p_value", p).withColumn(
+        "p_value", nan_null.otherwise(F.col("p_value"))
+    )
     if bucketed_bh:
         with_q = benjamini_hochberg_scalable(
-            stats, p_col="p_value", q_col="q_value", family_cols=["study_key"],
+            with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"],
             scope=scope,
         )
     else:
         with_q = benjamini_hochberg(
-            stats, p_col="p_value", q_col="q_value", family_cols=["study_key"]
+            with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"]
         )
-
     return with_q.select(
         "gene_a_key",
         "gene_b_key",
@@ -359,49 +367,40 @@ def compute_gene_pair_correlations(
     pvalue_dist: str = "normal",
     scope=None,
 ) -> DataFrame:
-    """Long-form expression → fact_gene_pair_corr rows.
+    """Long-form expression (study_key, gene_key, gsm_accession,
+    expression_value) → rows matching ``schemas.FACT_GENE_PAIR_CORR``.
 
-    ``expression`` needs columns (study_key, gene_key, gsm_accession,
-    expression_value); output matches ``schemas.FACT_GENE_PAIR_CORR``.
-
-    Each study is classified (``_split_dense_studies``) and routed: dense
-    studies through the pre-ranked plan, WIDE dense studies
-    (``n_genes > _WIDE_GENE_THRESHOLD``) through the block-bucketed plan
-    with B derived from the widest of them (``_derive_n_blocks``), and
-    ragged ones through the per-pair plan — identical results every way,
-    since the physical plans only diverge on ragged matrices.
+    Each study is routed by ``_split_wide_dense``: wide dense studies to the
+    block plan with B from the widest of them (``_derive_n_blocks``), every
+    other study to the per-study rank kernel — identical results either way.
 
     ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
-    the reference's no-SciPy fallback — a closed-form JVM-side expression;
-    ``"t"`` is SciPy's primary Student-t semantics — ALSO a pure JVM
-    expression (incomplete-beta continued fraction as a ``sequence`` fold,
-    ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy), so
-    neither p-value path has Python in the row path. ``scope`` (a
-    ``caching.CacheScope``) releases the block route's BH barrier.
+    the reference's no-SciPy fallback; ``"t"`` is SciPy's primary Student-t
+    semantics (incomplete-beta continued fraction as a ``sequence`` fold,
+    ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy). Both
+    are JVM expressions. ``scope`` (a ``caching.CacheScope``) releases the
+    block route's BH barrier.
     """
     ts = computed_at or _utc_now_iso()
     e = expression.select("study_key", "gene_key", "gsm_accession", "expression_value")
 
-    def only(keys: list[int]) -> DataFrame:
-        return e.where(F.col("study_key").isin(keys))
-
-    dense_keys, wide_keys, ragged_keys, genes = _split_dense_studies(e)
-    routes: list[tuple[DataFrame, bool]] = []  # (pair rows, bucketed BH)
-    if dense_keys:
-        routes.append((_dense_pairs(only(dense_keys)), False))
-    if wide_keys:
-        n_blocks = _derive_n_blocks(max(genes[k] for k in wide_keys))
-        routes.append((_block_pairs(only(wide_keys), n_blocks), True))
-    if ragged_keys or not routes:
-        routes.append((_ragged_pairs(only(ragged_keys)), False))
+    narrow_keys, wide = _split_wide_dense(e)
+    routes: list[tuple[DataFrame, bool]] = []  # (gated pair rows, bucketed BH)
+    if narrow_keys or not wide:
+        narrow = e.where(~F.col("study_key").isin(list(wide))) if wide else e
+        routes.append((_kernel_pairs(narrow, min_samples), False))
+    if wide:
+        wide_e = e.where(F.col("study_key").isin(list(wide)))
+        n_blocks = _derive_n_blocks(max(wide.values()))
+        routes.append((_block_pairs(wide_e, n_blocks, min_samples), True))
     return functools.reduce(
         DataFrame.unionByName,
         [
             _correlate(
-                paired, bucketed_bh=bucketed, computed_at=ts,
-                min_samples=min_samples, pvalue_dist=pvalue_dist, scope=scope,
+                stats, bucketed_bh=bucketed, computed_at=ts,
+                pvalue_dist=pvalue_dist, scope=scope,
             )
-            for paired, bucketed in routes
+            for stats, bucketed in routes
         ],
     )
 

@@ -57,22 +57,21 @@ def run_correlation_job(
         logger.warning("Warehouse has no expression data; nothing to do")
         return CorrelationJobResult([], list(accessions or []), {}, time.monotonic() - t0)
 
-    # O-7b: studies that actually have expression facts (left-semi), ordered.
-    with_data = (
-        dim_study.join(fact.select("study_key"), on="study_key", how="left_semi")
-        .orderBy("gse_accession")
-    )
+    # O-7b: studies that actually have expression facts (left-semi), ordered
+    # by accession on the driver (a handful of rows; no range-partition job).
+    with_data = dim_study.join(fact.select("study_key"), on="study_key", how="left_semi")
     if accessions:
         requested = sorted(set(accessions))
         with_data = with_data.where(F.col("gse_accession").isin(requested))
-        found = {r["gse_accession"] for r in with_data.collect()}
-        missing = sorted(set(requested) - found)  # O-26
-        if missing:
-            logger.warning("Requested studies without expression data: %s", missing)
-    else:
-        missing = []
-
-    targets = [(r["study_key"], r["gse_accession"]) for r in with_data.collect()]
+    targets = sorted(
+        ((r["study_key"], r["gse_accession"]) for r in with_data.collect()),
+        key=lambda t: t[1],
+    )
+    missing = (
+        sorted(set(requested) - {acc for _, acc in targets}) if accessions else []
+    )  # O-26
+    if missing:
+        logger.warning("Requested studies without expression data: %s", missing)
     if not targets:
         return CorrelationJobResult([], missing, {}, time.monotonic() - t0)
     target_keys = [k for k, _ in targets]

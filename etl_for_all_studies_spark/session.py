@@ -8,6 +8,8 @@ overwrite so per-study correlation refresh is an atomic partition swap
 """
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import SparkSession
 
 _ENGINE_DEFAULTS: dict[str, str] = {
@@ -32,6 +34,10 @@ _ENGINE_DEFAULTS: dict[str, str] = {
     # storage). Shuffle compression stays on the lz4 default: local and
     # well-provisioned clusters are CPU-bound there, not network-bound.
     "spark.sql.parquet.compression.codec": "zstd",
+    # Python workers import this package to run its Arrow kernels (the
+    # correlation rank kernel among them): put its checkout on their path,
+    # so a CLI works from any working directory
+    "spark.executorEnv.PYTHONPATH": str(pathlib.Path(__file__).resolve().parent.parent),
 }
 
 

@@ -87,11 +87,18 @@ class Warehouse:
     # -- reads --
     def read(self, table: str) -> DataFrame | None:
         """Read a table, or None if it doesn't exist yet (repairing any
-        interrupted dim swap first — see :meth:`_repair`)."""
+        interrupted dim swap first — see :meth:`_repair`).
+
+        A star-schema table is read with its declared schema, so the reader
+        starts no footer-inference job and a partition column keeps its
+        declared type. Other tables (e.g. quarantine side tables) infer."""
         self._repair(table)
         if not self.exists(table):
             return None
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read
+        if table in TABLE_SCHEMAS:
+            reader = reader.schema(TABLE_SCHEMAS[table])
+        return reader.parquet(self.path(table))
 
     def read_or_empty(self, table: str) -> DataFrame:
         df = self.read(table)

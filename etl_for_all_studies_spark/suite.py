@@ -442,13 +442,12 @@ def _spearman_rows(
         F.col(gene).cast("long").alias("gene_key"),
         F.col(sample).cast("string").alias("gsm_accession"),
         "expression_value",
-    ).persist()  # both sides of the pair self-join read this
+    ).persist()  # the router's size aggregate and the pair builder read this
     if n_blocks is None:
         corr = compute_gene_pair_correlations(expr, min_samples=2, computed_at="fixed")
     else:
         corr = _correlate(
-            _block_pairs(expr, n_blocks), bucketed_bh=True, min_samples=2,
-            computed_at="fixed",
+            _block_pairs(expr, n_blocks, 2), bucketed_bh=True, computed_at="fixed"
         )
     return corr.select(
         "gene_a_key",
@@ -461,11 +460,10 @@ def _spearman_rows(
 
 
 def q_spearman_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ~600k rows. The router's one cheap classification agg finds this
-    # supplier×part matrix RAGGED (each supplier covers ~3% of parts), so
-    # it picks the exact per-pair-intersection plan the reference semantics
-    # require; spearman_dense_auto below is the matrix shape where the same
-    # router takes the pre-ranked dense path.
+    # ~600k rows. This supplier×part matrix is RAGGED (each supplier covers
+    # ~3% of parts): the rank kernel ranks each pair within its shared
+    # parts, as the reference semantics require; spearman_dense_auto below
+    # is a dense matrix through the same kernel.
     li = _t(spark, sf_dir, "lineitem")
     base = li.groupBy("l_suppkey", "l_partkey").agg(
         F.sum("l_quantity").cast("double").alias("expression_value")
@@ -544,11 +542,9 @@ _SQL_SPEARMAN = _spearman_sql(
 
 
 # --------------------------------------------------------------------------
-# 10b. DENSE-route Spearman: supplier × line-number matrix — every supplier
-#      covers all 7 line numbers, so the router classifies the study dense
-#      and takes the pre-ranked plan (one window over the long table instead
-#      of two windows over the pair-expanded table). Same oracle skeleton:
-#      per-pair ranks == per-gene ranks on a dense matrix.
+# 10b. DENSE Spearman: supplier × line-number matrix — every supplier
+#      covers all 7 line numbers, the kernel's all-ones-mask case. Same
+#      oracle skeleton: per-pair ranks == per-gene ranks on a dense matrix.
 # --------------------------------------------------------------------------
 
 def q_spearman_dense_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,8 +569,8 @@ _SQL_SPEARMAN_DENSE = _spearman_sql(
 #      (study, sample) key's quadratic fan-out is spread over B(B+1)/2
 #      reducers (an unsplittable hot key under the plain dense join; AQE
 #      splits partitions, not keys). The oracle is the SAME Spearman
-#      skeleton — the block route must be value-identical to dense, only
-#      the physical bucketing differs.
+#      skeleton — the block route must be value-identical to the kernel,
+#      only the physical plan differs.
 # --------------------------------------------------------------------------
 
 def q_spearman_block(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7020,13 +7016,14 @@ QUERY_REGISTRY: dict[str, QueryDef] = {
 # {ROTATION_MODIFIED} ∪ {the oldest-checked remainder}, with the stale
 # cohort ordered oldest-first.
 #
-# As of the r12 artifact: every entry has been oracle-checked, and the
-# plans modified in r11/r12 were all checked in r12, so ROTATION_MODIFIED
-# is empty. The window is the whole r9-checked cohort (the span family,
-# curation_pipeline and dedup_keeper among them) plus the 15 oldest
+# As of the r12 artifact every entry has been oracle-checked. Since then
+# the two routed Spearman queries moved from the pair-expanded plan to the
+# per-study rank kernel, so they lead the window as ROTATION_MODIFIED. The
+# rest of the window is the whole r9-checked cohort (the span family,
+# curation_pipeline and dedup_keeper among them) plus the oldest
 # r10-checked entries. Each cohort keeps its prior relative order. A pure
 # reorder: nothing renamed, dropped, or re-oracled.
-ROTATION_MODIFIED: list[str] = []
+ROTATION_MODIFIED: list[str] = ["spearman_suppliers", "spearman_dense_auto"]
 _R9_COHORT: list[str] = [
     # last checked r9 (CORRECTNESS_r09.json) — all inside the window
     "dedup_exact",
@@ -7151,8 +7148,6 @@ _R12_COHORT: list[str] = [
     "orders_snapshot_diff",
     "semantic_decontam",
     "dup_spans_rolling",
-    "spearman_suppliers",
-    "spearman_dense_auto",
     "pricing_summary",
     "star_join_revenue",
     "whitelist_semi_join",

@@ -13,8 +13,9 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(
         description="Refresh gene-pair correlations (Spark). Each study's "
-        "physical plan (per-pair ranks, pre-ranked, or block-bucketed) is "
-        "picked from its matrix shape; results are identical on every plan."
+        "physical plan (the per-study rank kernel, or block-bucketed for wide "
+        "dense studies) is picked from its matrix shape; results are identical "
+        "on every plan."
     )
     parser.add_argument("--config", required=True, help="Path to YAML config file")
     parser.add_argument(

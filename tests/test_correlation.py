@@ -7,6 +7,7 @@ import pytest
 from etl_for_all_studies_spark.plans import correlation as corr_mod
 from etl_for_all_studies_spark.plans.correlation import compute_gene_pair_correlations
 from oracle import all_pairs
+from spearman_reference import pair_expanded_stats
 
 CANONICAL = {
     1: {"S1": 1.0, "S2": 2.0, "S3": 3.0},
@@ -27,18 +28,20 @@ def _to_df(spark, matrix, study_key=1):
 
 
 # Each physical route called directly, past the router: pair builder plus
-# the BH form the router pairs it with. "exact" is the ragged route.
+# the BH form the router pairs it with. "exact" is the per-study rank
+# kernel, "reference" the pair-expanded plan it replaced (tests/
+# spearman_reference.py), "block" the wide dense route.
 ROUTES = {
-    "exact": (corr_mod._ragged_pairs, False),
-    "dense": (corr_mod._dense_pairs, False),
-    "block": (lambda e: corr_mod._block_pairs(e, 4), True),
+    "exact": (corr_mod._kernel_pairs, False),
+    "reference": (pair_expanded_stats, False),
+    "block": (lambda e, ms: corr_mod._block_pairs(e, 4, ms), True),
 }
 
 
 def _route(df, route, min_samples=2):
     pairs, bucketed = ROUTES[route]
     return corr_mod._correlate(
-        pairs(df), bucketed_bh=bucketed, min_samples=min_samples, computed_at="x"
+        pairs(df, min_samples), bucketed_bh=bucketed, computed_at="x"
     )
 
 
@@ -55,7 +58,7 @@ def _run(spark, matrix, route=None, min_samples=2):
     }
 
 
-@pytest.mark.parametrize("route", ["exact", "dense", "block"])
+@pytest.mark.parametrize("route", ["exact", "reference", "block"])
 def test_canonical_three_gene_study(spark, route):
     got = _run(spark, CANONICAL, route=route)
     expected = {(s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(CANONICAL)}
@@ -95,7 +98,7 @@ def test_constant_series_dropped(spark):
     assert set(got) == {(2, 3)}  # pairs involving constant gene 1 dropped
 
 
-@pytest.mark.parametrize("route", ["exact", "dense"])
+@pytest.mark.parametrize("route", ["exact", "reference"])
 def test_tie_heavy_matches_average_rank_oracle(spark, route):
     matrix = {
         1: {f"S{i}": v for i, v in enumerate([1.0, 1.0, 2.0, 2.0, 3.0, 7.0])},
@@ -152,8 +155,8 @@ def test_bh_family_larger_study(spark):
 
 
 def test_auto_mode_routes_dense_and_ragged(spark):
-    """The router must equal the exact route on a mix of dense and ragged
-    studies."""
+    """The router must equal the pair-expanded reference form on a mix of
+    dense and ragged studies."""
     dense = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(6)} for g in (1, 2, 3)}
     ragged = {
         1: {"S1": 1.0, "S2": 2.0, "S3": 3.0},
@@ -162,7 +165,7 @@ def test_auto_mode_routes_dense_and_ragged(spark):
     df = _to_df(spark, dense, study_key=1).unionByName(_to_df(spark, ragged, study_key=2))
     exact = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in _route(df, "exact").collect()
+        for r in _route(df, "reference").collect()
     }
     auto = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
@@ -231,9 +234,9 @@ def test_multi_study_families_independent(spark):
 # ---- block (bucketed) pair enumeration — SURVEY §7.4.7 beyond-envelope ----
 
 def test_block_mode_identical_to_dense(spark):
-    """The block route must be row-identical to the dense route on the same
-    dense matrix — block enumeration only re-buckets the pair fan-out. 40 genes /
-    4 blocks forces multi-gene blocks, diagonal pairs, and off-diagonal
+    """On a dense matrix the block route must be row-identical to the kernel
+    — block enumeration only re-buckets the pair fan-out. 40 genes / 4
+    blocks forces multi-gene blocks, diagonal pairs, and off-diagonal
     side-swaps (hash block of the smaller gene can exceed the larger's)."""
     rng_vals = [
         ((i * 37 + j * 11) % 29) + 0.25 * ((i + j) % 5) for i in range(40) for j in range(12)
@@ -243,7 +246,7 @@ def test_block_mode_identical_to_dense(spark):
         for g in range(40)
     }
     df = _to_df(spark, matrix)
-    dense = _route(df, "dense")
+    dense = _route(df, "exact")
     block = _route(df, "block")
     key = ["study_key", "gene_a_key", "gene_b_key"]
     d = {tuple(r[k] for k in key): r.asDict() for r in dense.collect()}
@@ -265,7 +268,7 @@ def test_block_mode_single_block_degenerates_to_dense(spark):
         }
         for b in (1, 4)
     }
-    got_dense = _run(spark, CANONICAL, route="dense")
+    got_dense = _run(spark, CANONICAL, route="exact")
     for got_block in rows.values():
         assert set(got_block) == set(got_dense)
         for k in got_dense:
@@ -320,26 +323,25 @@ def test_block_mode_bh_windows_are_bucket_partitioned(spark):
     assert not per_family_only, per_family_only
     # and the bucketed windows ARE present
     assert "__bkt" in plan and "__lj" in plan
-    # the classic path keeps the cheap per-family window for reference-
-    # envelope families (dense route unchanged)
-    dense = _route(df, "dense")
+    # the kernel route keeps the cheap per-family window for reference-
+    # envelope families
+    dense = _route(df, "exact")
     dplan = dense._jdf.queryExecution().optimizedPlan().toString()
     assert "__bkt" not in dplan
 
 
 def test_auto_mode_routes_wide_dense_to_block(spark, monkeypatch):
     """With the wide-gene threshold lowered, the router must send a dense
-    study through the block plan and still equal the exact route; the
-    dense-sized study keeps the dense route (threshold respected per
-    study)."""
+    study through the block plan and still equal the reference form; the
+    narrow study keeps the kernel (threshold respected per study)."""
     monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
     wide = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(4)} for g in range(12)}
     narrow = {g: {f"S{i}": float((g * 5 + i) % 7) for i in range(4)} for g in (1, 2, 3)}
     df = _to_df(spark, wide, study_key=1).unionByName(_to_df(spark, narrow, study_key=2))
-    assert corr_mod._split_dense_studies(df)[:3] == ([2], [1], [])
+    assert corr_mod._split_wide_dense(df) == ([2], {1: 12})
     exact = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in _route(df, "exact").collect()
+        for r in _route(df, "reference").collect()
     }
     auto = {
         (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
@@ -373,9 +375,9 @@ def test_auto_mode_derives_n_blocks_from_widest_study(spark, monkeypatch):
     seen = []
     real = corr_mod._block_pairs
 
-    def spy(e, n_blocks):
+    def spy(e, n_blocks, *args):
         seen.append(n_blocks)
-        return real(e, n_blocks)
+        return real(e, n_blocks, *args)
 
     monkeypatch.setattr(corr_mod, "_block_pairs", spy)
     monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
@@ -397,3 +399,120 @@ def test_router_threshold_pinned_to_measured_crossover():
     assert list(sig.parameters) == [
         "expression", "min_samples", "computed_at", "pvalue_dist", "scope"
     ]
+
+
+# ---- the per-study rank kernel vs its executable spec ----------------------
+
+_LONG = "study_key long, gene_key long, gsm_accession string, expression_value double"
+
+
+def _random_studies(seed, n_studies, *, special=False):
+    """Ragged multi-study long rows: tie-heavy value domains, duplicated
+    (gene, sample) cells, constant genes, 1-sample overlaps and, with
+    ``special``, NULL and NaN values."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for study in range(1, n_studies + 1):
+        n_genes, n_samples = rng.randint(2, 7), rng.randint(1, 9)
+        for g in range(n_genes):
+            gene = 100 + 7 * g
+            domain = [1.0] if rng.random() < 0.15 else [1.0, 2.0, 3.0, 4.5, -0.5]
+            if special:
+                domain = domain + [None, float("nan")]
+            for s in range(n_samples):
+                copies = rng.choice([0, 1, 1, 1, 2]) if rng.random() < 0.6 else 1
+                rows += [
+                    (study, gene, f"GSM{s}", rng.choice(domain)) for _ in range(copies)
+                ]
+    rng.shuffle(rows)
+    return rows
+
+
+def _fact_rows(df):
+    return {
+        (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
+        for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("special", [False, True])
+@pytest.mark.parametrize("min_samples", [2, 4])
+def test_kernel_matches_pair_expanded_form(spark, special, min_samples):
+    """The kernel equals the pair-expanded plan it replaced on randomized
+    ragged multi-study input: duplicated cells (the self-join's multiset),
+    ties, constants, n = 2 pairs (NULL p, NULL q), ``min_samples`` and, with
+    ``special``, NULL/NaN values ranked as a Spark window ranks them. ρ
+    pins at 1e-12; p and q at 1e-6, since the erf approximation turns a
+    one-ulp ρ difference near 0 into ~1e-9 of p."""
+    df = spark.createDataFrame(_random_studies(11 + min_samples, 12, special=special), _LONG)
+    got = _fact_rows(_route(df, "exact", min_samples))
+    want = _fact_rows(_route(df, "reference", min_samples))
+    assert got.keys() == want.keys() and len(got) > 20
+    for k, w in want.items():
+        g = got[k]
+        assert g["n_samples"] == w["n_samples"], k
+        assert g["rho_spearman"] == pytest.approx(w["rho_spearman"], abs=1e-12), k
+        assert g["p_value"] == pytest.approx(w["p_value"], abs=1e-6), k
+        if w["q_value"] is None:
+            assert g["q_value"] is None, k
+        else:
+            assert g["q_value"] == pytest.approx(w["q_value"], abs=1e-6), k
+
+
+def test_kernel_matches_duckdb_oracle(spark):
+    """The kernel equals the suite's DuckDB Spearman oracle
+    (``suite._spearman_sql``) study by study, on the oracle's 1e-6 grid."""
+    import duckdb
+    import pandas as pd
+
+    from etl_for_all_studies_spark.suite import _spearman_sql
+
+    rows = _random_studies(5, 8)
+    got = _fact_rows(_route(spark.createDataFrame(rows, _LONG), "exact"))
+    base = pd.DataFrame(rows, columns=["study", "g", "s", "v"])
+    con = duckdb.connect()
+    con.register("base_rows", base)
+    want = {}
+    for study in sorted(base["study"].unique()):
+        sql = _spearman_sql(f"SELECT g, s, v FROM base_rows WHERE study = {study}")
+        for ga, gb, n, rho, p, q in con.execute(sql).fetchall():
+            want[(study, ga, gb)] = (n, rho, p, q)
+    assert got.keys() == want.keys() and len(got) > 20
+    for k, (n, rho, p, q) in want.items():
+        g = got[k]
+        assert g["n_samples"] == n, k
+        assert g["rho_spearman"] == pytest.approx(rho, abs=1e-6), k
+        assert g["p_value"] == pytest.approx(p, abs=1e-6), k
+        assert (g["q_value"] is None) == (q is None), k
+        if q is not None:
+            assert g["q_value"] == pytest.approx(q, abs=1e-6), k
+
+
+def test_kernel_rows_independent_of_input_order(spark):
+    """Reversed or repartitioned input gives bit-identical rows."""
+    rows = _random_studies(23, 6, special=True)
+    runs = [
+        spark.createDataFrame(rows, _LONG),
+        spark.createDataFrame(rows[::-1], _LONG),
+        spark.createDataFrame(rows, _LONG).repartition(3, "gene_key"),
+    ]
+    first, *rest = [sorted(map(tuple, _route(df, "exact").collect())) for df in runs]
+    assert first and all(r == first for r in rest)
+
+
+def test_kernel_route_shuffles_cells_once(spark):
+    """Plan shape: the kernel's input is one numbered exchange of the cells
+    by study_key — no pair-expanded rows, no rank windows. The only other
+    exchange carries the kernel's gated pair rows to the BH windows (a
+    grouped-map output is a new attribute, so its partitioning is not
+    reused)."""
+    df = _to_df(spark, CANONICAL)
+    plan = _route(df, "exact")._jdf.queryExecution().executedPlan().toString()
+    above, below = plan.split("FlatMapGroupsInArrow", 1)
+    assert below.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(study_key" in below
+    assert "REPARTITION_BY_NUM" in below, plan
+    assert above.count("Exchange") == 1, plan
+    assert "Window" not in below and "Join" not in plan, plan

@@ -63,6 +63,29 @@ def test_overwrite_dim_reading_its_own_previous_version(spark, wh):
     assert _read_ids(wh) == {"A": 1, "B": 2}
 
 
+def test_read_uses_declared_schemas_without_a_job(spark, app_config):
+    """Every star-schema table reads with its declared column names and
+    types (``study_key`` bigint also as a partition column), and a read
+    starts no Spark job: the schema is given, not inferred from footers."""
+    from etl_for_all_studies_spark import run_correlation_job, run_pipeline
+    from etl_for_all_studies_spark.schemas import TABLE_SCHEMAS
+
+    run_pipeline(app_config, spark=spark)
+    run_correlation_job(app_config, spark=spark)
+    wh = Warehouse(spark, str(app_config.warehouse.path))
+    sc = spark.sparkContext
+    sc.setJobGroup("warehouse-read", "reads only")
+    try:
+        frames = {t: wh.read(t) for t in TABLE_SCHEMAS}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("warehouse-read")) == []
+    for table, schema in TABLE_SCHEMAS.items():
+        got = [(f.name, f.dataType) for f in frames[table].schema.fields]
+        assert got == [(f.name, f.dataType) for f in schema.fields], table
+        assert frames[table].count() > 0, table
+
+
 # ---- JDBC sink retry/backoff (O-44) --------------------------------------
 
 

@@ -1,31 +1,31 @@
 #!/usr/bin/env python
-"""Wide-gene correlation probe: dense vs block pair enumeration (SURVEY
-§7.4.7; SCALE.md, round-8 envelope series).
+"""Wide-gene correlation probe: rank kernel vs block pair enumeration
+(SURVEY §7.4.7; SCALE.md, round-8 envelope series).
 
 Builds a synthetic dense study with ``n_genes`` up to the reference's own
 stated envelope (``docs/genomic-etl-requirements.md:35,41``: 20k+ genes ⇒
 C(20k,2) ≈ 2·10⁸ pairs) and times the SAME correlation through
-the dense route (the (study, sample)-keyed join: every sample's full n²/2
-pair fan-out is ONE reducer) and the block route at an explicit B (the
-bucketed join: B(B+1)/2 reducers per sample), each called directly — this
-measures the routes, not the router. Reports wall, pairs/s, and the shuffle
-bytes of the newly executed stages (UI REST, ``tools/stage_metrics.py``)
-— the per-task output bound is the actual 100 TB argument: on a cluster
-the single 10⁸-row dense task would blow executor memory, not just time.
+the kernel route (one grouped Arrow task per study) and the block route at
+an explicit B (the bucketed join: B(B+1)/2 reducers per sample), each
+called directly — this measures the routes, not the router. Reports wall,
+pairs/s, and the shuffle bytes of the newly executed stages (UI REST,
+``tools/stage_metrics.py``). Runs on ``local[N]`` with N the CPUs this
+process may use and a 3g driver heap, as ``perfbench`` does.
 
 Usage:
   python tools/bench_block_pairs.py one <n_genes> <n_samples> <n_blocks> <modes>
-      # modes: comma list of dense,block — one JSON line per mode
+      # modes: comma list of kernel,block — one JSON line per mode
   python tools/bench_block_pairs.py series
       # the round-8 envelope grid, each config in its OWN subprocess so
       # shuffle files are reclaimed between configs (the 20k runs write
       # tens of GB); prints a markdown table for SCALE.md
   python tools/bench_block_pairs.py [n_genes] [n_samples] [n_blocks]
-      # legacy single-run form (dense + block, no shuffle capture)
+      # legacy single-run form (kernel + block)
 """
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import subprocess
 import sys
@@ -35,25 +35,22 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 UI_PORT = 4055
 
-# the round-8 envelope grid: crossover anchors (dense vs block at 1k-8k),
+# the round-8 envelope grid: crossover anchors (kernel vs block at 1k-8k),
 # the n_blocks sweep at 8k, and the reference's 20k envelope (block only:
-# dense at 20k is one reducer emitting 2e8 rows per sample — the
-# pathology block mode exists to remove; probed at 8k instead).
+# the kernel at 20k is one task computing 2e8 pairs).
 # ``-nobc`` variants run with autoBroadcastJoinThreshold=-1: locally the
-# tiny synthetic expression table BROADCASTS, which hides the dense
-# mode's single-reducer pathology (the self-join never shuffles on
-# (study, sample) at all); on a cluster where the expression leg is TBs
-# the join shuffles, and that is the regime block mode exists for — the
-# nobc rows are the honest cluster proxy.
+# tiny synthetic expression table BROADCASTS, so the block join never
+# shuffles on (study, sample); on a cluster where the expression leg is
+# TBs the join shuffles — the nobc rows are the honest cluster proxy.
 SERIES: list[tuple[int, int, int, str]] = [
-    (1000, 4, 8, "dense,block"),
-    (2000, 4, 8, "dense,block"),
-    (4000, 4, 8, "dense,block"),
+    (1000, 4, 8, "kernel,block"),
+    (2000, 4, 8, "kernel,block"),
+    (4000, 4, 8, "kernel,block"),
     (8000, 4, 4, "block"),
-    (8000, 4, 8, "dense,block"),
+    (8000, 4, 8, "kernel,block"),
     (8000, 4, 16, "block"),
-    (4000, 4, 8, "dense-nobc,block-nobc"),
-    (8000, 4, 8, "dense-nobc,block-nobc"),
+    (4000, 4, 8, "block-nobc"),
+    (8000, 4, 8, "block-nobc"),
     (20000, 4, 10, "block"),
     (20000, 4, 16, "block"),
 ]
@@ -77,7 +74,7 @@ def synth_expression(spark, n_genes: int, n_samples: int):
                 .cast("double")
             ).alias("expression_value"),
         )
-        .repartition(32)
+        .repartition(len(os.sched_getaffinity(0)))
         .persist()
     )
     e.count()
@@ -91,29 +88,30 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
     from etl_for_all_studies_spark.plans.correlation import (
         _block_pairs,
         _correlate,
-        _dense_pairs,
-        _split_dense_studies,
+        _kernel_pairs,
+        _split_wide_dense,
     )
     from etl_for_all_studies_spark.session import get_spark
     from tools.stage_metrics import diff_stages, stage_snapshot
 
+    cores = len(os.sched_getaffinity(0))
     spark = get_spark(
         app_name="bench-block-pairs",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": str(UI_PORT),
-            "spark.driver.memory": "48g",
+            "spark.driver.memory": "3g",
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         },
     )
     spark.range(1).count()
     e = synth_expression(spark, n_genes, n_samples)
 
-    # the router must classify this width correctly: dense at/below the
+    # the router must classify this width correctly: kernel at/below the
     # threshold, block above (the SCALE envelope contract)
-    dense_k, wide_k, ragged_k, _genes = _split_dense_studies(e)
+    _kernel_keys, wide = _split_wide_dense(e)
     pairs = n_genes * (n_genes - 1) // 2
     for token in modes:
         mode, _, variant = token.partition("-")
@@ -126,8 +124,8 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
         # stored rows ride on the write itself (no extra job)
         stored = Observation(f"stored-{token}")
         corr = _correlate(
-            _block_pairs(e, n_blocks) if block else _dense_pairs(e),
-            bucketed_bh=block, min_samples=2, computed_at="fixed",
+            _block_pairs(e, n_blocks) if block else _kernel_pairs(e, 2),
+            bucketed_bh=block, computed_at="fixed",
         ).observe(stored, F.count(F.lit(1)).alias("rows"))
         corr.write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
@@ -147,9 +145,7 @@ def run_one(n_genes: int, n_samples: int, n_blocks: int, modes: list[str]) -> No
                     "wall_s": round(wall, 1),
                     "pairs_per_s": int(n_stored / wall),
                     "shuffle_write": stages["shuffle_write"],
-                    "router": "block"
-                    if wide_k
-                    else ("dense" if dense_k else "exact"),
+                    "router": "block" if wide else "kernel",
                 }
             ),
             flush=True,
@@ -204,7 +200,7 @@ def main() -> None:
     n_genes = int(sys.argv[1]) if len(sys.argv) > 1 else 3000
     n_samples = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     n_blocks = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-    run_one(n_genes, n_samples, n_blocks, ["dense", "block"])
+    run_one(n_genes, n_samples, n_blocks, ["kernel", "block"])
 
 
 if __name__ == "__main__":

@@ -9,6 +9,7 @@ Usage: python tools/bench_etl.py [n_samples n_genes]
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import random
 import sys
@@ -62,8 +63,6 @@ def run_etl_bench(spark, n_samples: int = 163, n_genes: int = 20_000) -> dict:
 
     from etl_for_all_studies_spark import run_correlation_job, run_pipeline
     from etl_for_all_studies_spark.config import config_from_dict
-
-    import os
 
     root = pathlib.Path(tempfile.mkdtemp(prefix="etl_bench_"))
     try:
@@ -138,8 +137,6 @@ def run_wide_gene_bench(
     schema (ρ, p, q per pair) materialized to a noop sink; pair count =
     n_genes·(n_genes−1)/2 rows through every stage including the
     (family × p-bucket)-partitioned FDR ranking."""
-    import os
-
     from pyspark.sql import functions as F
 
     from etl_for_all_studies_spark.plans.correlation import (
@@ -169,7 +166,7 @@ def run_wide_gene_bench(
                 ).cast("double")
             ).alias("expression_value"),
         )
-        .repartition(32)
+        .repartition(_cores())
         .persist()
     )
     e.count()
@@ -185,9 +182,8 @@ def run_wide_gene_bench(
         # identical plans across invocations)
         with CacheScope() as scope:
             corr = _correlate(
-                _block_pairs(e, n_blocks),
+                _block_pairs(e, n_blocks, 2),
                 bucketed_bh=True,
-                min_samples=2,
                 computed_at="fixed",
                 scope=scope,
             )
@@ -260,16 +256,22 @@ def run_multi_study_bench(
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _cores() -> int:
+    """CPUs this process may run on: the tool drives ``local[N]`` with a
+    3g heap, as ``perfbench`` does."""
+    return len(os.sched_getaffinity(0))
+
+
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "multi":
         from etl_for_all_studies_spark.session import get_spark
 
         spark = get_spark(
-            master="local[32]",
-            shuffle_partitions=32,
+            master=f"local[{_cores()}]",
+            shuffle_partitions=_cores(),
             extra_conf={
                 "spark.ui.enabled": "false",
-                "spark.driver.memory": "32g",
+                "spark.driver.memory": "3g",
                 "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
             },
         )
@@ -283,11 +285,11 @@ def main() -> None:
     from etl_for_all_studies_spark.session import get_spark
 
     spark = get_spark(
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{_cores()}]",
+        shuffle_partitions=_cores(),
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "32g",
+            "spark.driver.memory": "3g",
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         },
     )

@@ -18,6 +18,7 @@ Usage: python tools/bench_etl_wide.py [n_samples] [n_genes]
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import random
 import resource
@@ -86,13 +87,14 @@ def main() -> None:
     from etl_for_all_studies_spark.config import config_from_dict
     from etl_for_all_studies_spark.session import get_spark
 
+    cores = len(os.sched_getaffinity(0))  # local[N], 3g heap, as perfbench
     spark = get_spark(
         app_name="bench-etl-wide",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
+            "spark.driver.memory": "3g",
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         },
     )

@@ -35,6 +35,7 @@ Usage: python tools/bench_stream_curation.py [n_batches] [trim_w] \
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import shutil
 import sys
@@ -61,7 +62,9 @@ def main() -> None:
     trim_w = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     docs_per_batch = int(sys.argv[3]) if len(sys.argv) > 3 else 0  # 0 = all
     compact_every = int(sys.argv[4]) if len(sys.argv) > 4 else 0  # 0 = never
-    partitions = int(sys.argv[5]) if len(sys.argv) > 5 else 32
+    partitions = (
+        int(sys.argv[5]) if len(sys.argv) > 5 else len(os.sched_getaffinity(0))
+    )
 
     from pyspark.sql import functions as F
 
@@ -79,7 +82,7 @@ def main() -> None:
         shuffle_partitions=partitions,
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
+            "spark.driver.memory": "3g",  # as perfbench
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         },
     )

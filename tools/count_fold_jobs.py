@@ -20,6 +20,7 @@ Usage: python tools/count_fold_jobs.py [docs_per_batch] [trim_w] [folds]
 """
 from __future__ import annotations
 
+import os
 import pathlib
 import sys
 import tempfile
@@ -39,11 +40,12 @@ def main() -> None:
     from etl_for_all_studies_spark.session import get_spark
     from etl_for_all_studies_spark.streaming.curation import fold_batch
 
+    cores = len(os.sched_getaffinity(0))  # local[N], 3g heap, as perfbench
     spark = get_spark(
         app_name="count-fold-jobs",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "false"},
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
+        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "3g"},
     )
     sc = spark.sparkContext
     base = (

@@ -140,9 +140,9 @@ def main() -> None:
         etl = {"error": f"{type(exc).__name__}: {exc}"}
     spark.catalog.clearCache()
 
-    # wide-gene leg: a 2k-gene dense study through the FULL block-mode plan
-    # (bucketed pair join + bucket-partitioned BH) — the beyond-envelope
-    # correlation path measured end-to-end, 2M pair rows with ρ/p/q each run
+    # wide-gene leg: a 2k-gene dense study through the rank kernel and the
+    # per-study BH — the beyond-envelope correlation path measured end to
+    # end, 2M pair rows with ρ/p/q each run and the pairs stored reported
     try:
         wide = run_wide_gene_bench(spark)
     except Exception as exc:
@@ -183,7 +183,7 @@ def main() -> None:
     # spread exceeds 2x the suite's p90 spread ran under a load wave —
     # their committed min is still the best steady-state estimate, but a
     # round-over-round delta on a flagged entry is NOT attributable to the
-    # plan without a re-measure (tools/bench_one.py)
+    # plan without a re-measure (tools/profile_query.py)
     file_payload["noisy_queries"] = sorted(
         name
         for name, ts in timings_all.items()

@@ -326,152 +326,6 @@ def benjamini_hochberg(
     return with_raw.withColumn(q_col, q).drop("__bh_raw")
 
 
-def benjamini_hochberg_scalable(
-    df: DataFrame,
-    p_col: str = "p_value",
-    q_col: str = "q_value",
-    family_cols: list[str] | None = None,
-    num_buckets: int = 64,
-    scope=None,
-) -> DataFrame:
-    """BH q-values with NO per-family single-partition sort — the wide-gene
-    companion to :func:`benjamini_hochberg`, bit-identical output.
-
-    The classic window form partitions rank + running-min by family: one
-    20k-gene study's pair family is ~2×10⁸ rows funneled into ONE window
-    task — re-serializing exactly the fan-out the block route spread across
-    reducers. This form keeps every stage partitioned by
-    (family, p-bucket), parallelism = families × ``num_buckets``:
-
-    1. per-family ``approx_percentile`` p-value edges (ONE aggregation;
-       edges affect only load balance, never values — ranks stay exact);
-    2. bucket assignment by comparison fold against the broadcast edges;
-    3. local ``row_number`` per (family, bucket) + per-bucket counts →
-       cumulative offsets (tiny families×B table, broadcast back) — the
-       same per-partition-offset global numbering ``operators/dims.py``
-       uses for dim_sample keys. Global rank j = local rank + offset;
-    4. ``raw_j = p_j·m/j``; q = suffix-min of raw from the least-significant
-       end, computed as min(within-bucket suffix-min via a descending
-       window, all-later-buckets min via a tiny broadcast) — two passes,
-       no global window anywhere.
-
-    Tie note: suffix-min over row_number order is tie-invariant (among equal
-    p the largest-j row has the smallest raw, and every tied row's suffix
-    contains it or starts at it), so arbitrary tie placement across bucket
-    edges is safe. NULL/NaN p rows keep NULL q and are excluded from m.
-
-    NULL family-key values are real families (the classic
-    ``Window.partitionBy`` form keeps them); plain equi-joins would silently
-    drop those rows, so every groupBy/join/window below keys on ONE struct
-    surrogate of the family columns — struct equality is null-safe (NULL
-    fields compare equal), preserving the bit-identical contract even when
-    e.g. ``study_key`` is NULL.
-    """
-    from ..caching import persist as _persist
-
-    # materialization barrier on the INPUT: the stages below consume it five
-    # ways (invalid-row union branch, percentile edges, bucketed rank,
-    # bucket counts, bucket minima) and Catalyst reuses no exchange across
-    # them once column pruning diverges — without the barrier the caller's
-    # entire upstream (for block-route correlation: the quadratic pair join +
-    # aggregation) recomputes once per branch. Default MEMORY_AND_DISK, so a
-    # 100 TB-scale pair table spills instead of evicting; release via
-    # ``scope`` (caching.CacheScope) or the harness (bench clearCache).
-    df = _persist(df, scope)
-    fam = family_cols or []
-    valid = F.col(p_col).isNotNull() & ~F.isnan(F.col(p_col))
-    dfv = df.where(valid)
-    dfi = df.where(~F.coalesce(valid, F.lit(False)))
-    key = "__bh_fk"
-    fam_key = F.struct(*fam) if fam else F.lit(1)
-    dfv = dfv.withColumn(key, fam_key)
-
-    # bucket edges never affect VALUES (only load balance), so the
-    # degenerate num_buckets=1 is silently promoted to 2 — an empty
-    # percentile list has no aggregate form
-    num_buckets = max(2, num_buckets)
-    qs = [i / num_buckets for i in range(1, num_buckets)]
-    edges = dfv.groupBy(key).agg(
-        F.percentile_approx(F.col(p_col), qs).alias("__edges"),
-        F.count(F.lit(1)).alias("__m"),
-    )
-    # bucket = #edges strictly below p — a comparison fold over ≤ B−1
-    # literals per row, codegen'd; ascending in p by construction
-    bucketed = dfv.join(F.broadcast(edges), key).withColumn(
-        "__bkt",
-        F.aggregate(
-            "__edges",
-            F.lit(0),
-            lambda acc, e: acc + F.when(F.col(p_col) > e, 1).otherwise(0),
-        ),
-    ).drop("__edges")
-
-    w_local = Window.partitionBy(key, "__bkt").orderBy(F.col(p_col).asc())
-    ranked = bucketed.withColumn("__lj", F.row_number().over(w_local))
-
-    # narrow projection before the re-aggregation: keeps the plan cheap AND
-    # gives the self-join branch distinct attribute lineage
-    counts = (
-        bucketed.select(key, "__bkt")
-        .groupBy(key, "__bkt")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    w_off = (
-        Window.partitionBy(key)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        key, "__bkt", F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off")
-    )
-    ranked = ranked.join(F.broadcast(offsets), [key, "__bkt"])
-    raw = (F.col(p_col) * F.col("__m") / (F.col("__lj") + F.col("__off"))).alias(
-        "__raw"
-    )
-    with_raw = ranked.select("*", raw)
-
-    # pass 1: suffix-min WITHIN the bucket (descending rank order)
-    w_sfx = (
-        Window.partitionBy(key, "__bkt")
-        .orderBy(F.col("__lj").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # second barrier: the windowed frame feeds both the bucket-minima
-    # derivation and the final join — without it the (fam, bucket) sort
-    # executes once per consumer; with it the window runs exactly once
-    with_sfx = _persist(
-        with_raw.withColumn("__sfx", F.min("__raw").over(w_sfx)), scope
-    )
-    # pass 2: min over all LATER buckets (tiny families×B table). A
-    # bucket's minimum is simply the suffix-min at its rank-1 row (the last
-    # row of the descending-rank frame spans the whole bucket) — a filter
-    # on the cached window output, not a second aggregation over the pairs
-    bmin = with_sfx.where(F.col("__lj") == 1).select(
-        key, "__bkt", F.col("__sfx").alias("__bm")
-    )
-    w_later = (
-        Window.partitionBy(key)
-        .orderBy(F.col("__bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    later = bmin.select(
-        key, "__bkt", F.min("__bm").over(w_later).alias("__later")
-    )
-    out_cols = list(df.columns)
-    qv = F.least(
-        F.least(F.col("__sfx"), F.coalesce(F.col("__later"), F.lit(1.0))),
-        F.lit(1.0),
-    )
-    done = (
-        with_sfx.join(F.broadcast(later), [key, "__bkt"])
-        .select(*out_cols, qv.alias(q_col))
-    )
-    skipped = dfi.select(
-        *out_cols, F.lit(None).cast("double").alias(q_col)
-    )
-    return done.unionByName(skipped)
-
-
 def welch_t_test(
     df: DataFrame,
     *,
@@ -915,7 +769,6 @@ __all__ = [
     "auc_score",
     "average_rank",
     "benjamini_hochberg",
-    "benjamini_hochberg_scalable",
     "betainc_expr",
     "chi2_independence",
     "chi2_sf_even_df_expr",

@@ -15,8 +15,8 @@ the choice was manual (VERDICT r9, missing #4):
   the threshold. Keeps the low-t regime where prefixes lengthen toward
   |T|/2 and the prefix bound weakens.
 
-Routing rule (mirrors the correlation router, ``plans/correlation.py``:
-one bounded classification pass, then identical-semantics legs). The
+Routing rule (one bounded classification pass, then legs with identical
+result semantics, each kept by a measured regime where it wins). The
 shingle df profile is taken at EVERY threshold — round 10 short-circuited
 ``t ≥ 0.8`` to prefix, and the round-11 curation measurement falsified
 that rule's corpus-independence: at k=5 shingles (vocab ~2k, hot dfs) the

@@ -5,24 +5,17 @@ Re-expresses the reference's correlation engine
 the shared samples (O-24/O-25/O-35) → gates (O-33/O-34/O-38) → ρ (O-36) →
 p (O-37) → BH FDR per study (O-40) → p NULL→1.0 at store time (O-39).
 
-``compute_gene_pair_correlations`` routes each study to one of two pair
-builders. Both emit gated ``(study_key, gene_a_key, gene_b_key, n_samples,
-rho_spearman)`` rows into the one JVM p → BH → select tail (``_correlate``):
-
-* ``_kernel_pairs`` — every study but the wide dense ones: one grouped
-  Arrow kernel per study (``_study_spearman``), ranking each pair within
-  its shared samples as the reference does (``correlation.py:118``),
-  from one exchange of the cells and no pair-expanded rows;
-* ``_block_pairs`` — dense studies wider than ``_WIDE_GENE_THRESHOLD``:
-  ranks once per gene, pairs enumerated in gene blocks so one (study,
-  sample) key's fan-out spreads over B(B+1)/2 reducers, bucketed BH.
-
-Tests pin both to the retired pair-expanded plan and the DuckDB oracle.
+One route serves every study shape: ``_kernel_pairs`` runs one grouped
+Arrow kernel per study (``_study_spearman``), ranking each pair within its
+shared samples as the reference does (``correlation.py:118``), from one
+exchange of the cells and no pair-expanded rows. Its gated ``(study_key,
+gene_a_key, gene_b_key, n_samples, rho_spearman)`` rows feed the JVM p →
+BH → select tail (``_correlate``). Tests pin it to the retired
+pair-expanded plan and the DuckDB oracle.
 """
 from __future__ import annotations
 
 import datetime as dt
-import functools
 import math
 
 import numpy as np
@@ -31,23 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.stats import (
-    average_rank,
     benjamini_hochberg,
-    benjamini_hochberg_scalable,
     spearman_p_value_expr,
     spearman_p_value_t_expr,
 )
 
 MIN_SAMPLES_FOR_CORRELATION = 2  # reference correlation.py:65
-
-# Dense studies wider than this take the block route: the measured
-# dense-join/block crossover lies between 1k and 2k genes (SCALE.md, round-8
-# envelope series); the kernel/block crossover is not measured yet.
-_WIDE_GENE_THRESHOLD = 1024
-
-# Block sizing: ~(2k genes)² ≈ 4M pair rows per (sample, block-pair) task,
-# the sweet spot of the round-8 sweep at 20k genes (B=10; SCALE.md).
-_GENES_PER_BLOCK = 2000
 
 # The kernel ranks a study in gene blocks whose (partner genes × rows)
 # float64 arrays hold about this many elements: 8 MB each at any width.
@@ -58,53 +40,9 @@ def _utc_now_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds")
 
 
-def _split_wide_dense(e: DataFrame) -> tuple[list[int], dict[int, int]]:
-    """``(kernel study keys, {wide dense study: n_genes})``. Wide dense
-    means more than ``_WIDE_GENE_THRESHOLD`` genes, each covering every
-    sample once. ONE aggregation gives (total, n_genes, n_samples) per
-    study; only a wide study with ``total == n_genes · n_samples`` pays
-    the exact distinct-cells check. The kernel is exact on every shape,
-    so routing never changes results."""
-    rows = (
-        e.groupBy("study_key")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count_distinct("gene_key").alias("n_genes"),
-            F.count_distinct("gsm_accession").alias("n_samples"),
-        )
-        .collect()
-    )
-    candidates = {
-        r["study_key"]: r
-        for r in rows
-        if r["n_genes"] > _WIDE_GENE_THRESHOLD
-        and r["total"] == r["n_genes"] * r["n_samples"]
-    }
-    wide: dict[int, int] = {}
-    if candidates:
-        cells = (
-            e.where(F.col("study_key").isin(list(candidates)))
-            .select("study_key", "gene_key", "gsm_accession")
-            .distinct()
-            .groupBy("study_key")
-            .agg(F.count(F.lit(1)).alias("cells"))
-            .collect()
-        )
-        wide = {
-            r["study_key"]: candidates[r["study_key"]]["n_genes"]
-            for r in cells
-            if r["cells"] == candidates[r["study_key"]]["total"]
-        }
-    return [r["study_key"] for r in rows if r["study_key"] not in wide], wide
-
-
-def _derive_n_blocks(max_genes: int) -> int:
-    """Blocks for the widest routed study: ceil(width / 2k), min 2 (one
-    block would make the block plan a strictly worse dense plan)."""
-    return max(2, -(-max_genes // _GENES_PER_BLOCK))
-
-
-def _study_spearman(key, table: pa.Table, min_samples: int) -> pa.Table:
+def _study_spearman(
+    key, table: pa.Table, min_samples: int, block_elems: int
+) -> pa.Table:
     """``applyInArrow`` body: one study's rows → its gated pair rows.
 
     Pair (a, b) sees one row per (a-cell, b-cell) sharing a sample, as a
@@ -174,7 +112,7 @@ def _study_spearman(key, table: pa.Table, min_samples: int) -> pa.Table:
         return ss, per_sample.reshape(w.shape[0], len(blk), n_samp)
 
     widest = int(np.diff(gene_lo).max())
-    step = max(1, math.isqrt(_KERNEL_BLOCK_ELEMS // max(widest, n_samp)))
+    step = max(1, math.isqrt(block_elems // max(widest, n_samp)))
     blocks = [range(i, min(i + step, n_genes)) for i in range(0, n_genes, step)]
     out = []
     for i, bi in enumerate(blocks):
@@ -206,9 +144,10 @@ def _kernel_pairs(e: DataFrame, min_samples: int) -> DataFrame:
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     keys = ["study_key", "gene_key", "gsm_accession"]
     keyed = e.dropna(subset=keys).repartition(n_part, "study_key")
+    block_elems = _KERNEL_BLOCK_ELEMS  # read here: workers import the module afresh
 
     def kernel(key, table):  # no annotations: applyInArrow infers its API from them
-        return _study_spearman(key, table, min_samples)
+        return _study_spearman(key, table, min_samples, block_elems)
 
     return keyed.groupBy("study_key").applyInArrow(
         kernel,
@@ -217,115 +156,12 @@ def _kernel_pairs(e: DataFrame, min_samples: int) -> DataFrame:
     )
 
 
-def _block_pairs(
-    e: DataFrame, n_blocks: int, min_samples: int = MIN_SAMPLES_FOR_CORRELATION
-) -> DataFrame:
-    """Wide dense route: gated pair rows from a bucketed pair enumeration
-    over the pre-ranked long table (ranking once per gene is exact because
-    every gene covers every sample once). A (study, sample)-keyed join
-    makes ONE task emit all n_genes²/2 pairs of its sample — an
-    unsplittable hot key (AQE splits skewed *partitions*, not keys). Here
-    each unordered pair with blocks p ≤ q comes from exactly one block pair
-    (p, q): a LEFT row of block g is replicated to (g, g), …, (g, B−1), a
-    RIGHT row to (0, g), …, (g, g). The equi-join on (study, sample, blk_a,
-    blk_b) bounds each task at (n_genes/B)² pairs for B+1× input
-    replication. Off-diagonal pairs arrive in arbitrary side order and are
-    canonicalized with least/greatest + a conditional rank swap; diagonal
-    blocks keep ``gene_a < gene_b``. Block id is ``pmod(hash(gene_key), B)``
-    — hash, not range, so dense and sparse gene-key spaces both balance.
-    """
-    e = e.withColumn(
-        "rank", average_rank(["study_key", "gene_key"], "expression_value")
-    )
-    base = e.select("*", F.pmod(F.hash("gene_key"), F.lit(n_blocks)).alias("blk"))
-    left = base.select(
-        "*", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("blk_b")
-    ).withColumnRenamed("blk", "blk_a")
-    right = base.select(
-        "*", F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("blk_a")
-    ).withColumnRenamed("blk", "blk_b")
-    # PIN the join parallelism: AQE's coalescing sizes partitions by shuffle
-    # INPUT bytes, but this join amplifies output ~n_genes/B× per input row —
-    # on a wide-gene study the tiny replicated input coalesces into one
-    # partition and the whole quadratic fan-out lands on a single reducer,
-    # recreating exactly the hot-spot the block route exists to remove. An
-    # explicit numbered repartition on the join keys is non-coalescible, so
-    # the B(B+1)/2 × samples key groups keep their full reducer spread.
-    n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    a = left.repartition(n_part, "study_key", "gsm_accession", "blk_a", "blk_b")
-    joined = a.alias("a").join(
-        right.alias("b"),
-        on=[
-            F.col("a.study_key") == F.col("b.study_key"),
-            F.col("a.gsm_accession") == F.col("b.gsm_accession"),
-            F.col("a.blk_a") == F.col("b.blk_a"),
-            F.col("a.blk_b") == F.col("b.blk_b"),
-        ],
-    ).where(
-        (F.col("a.blk_a") != F.col("a.blk_b"))
-        | (F.col("a.gene_key") < F.col("b.gene_key"))
-    )
-    swap = F.col("a.gene_key") > F.col("b.gene_key")
-    paired = joined.select(
-        F.col("a.study_key").alias("study_key"),
-        F.least("a.gene_key", "b.gene_key").alias("gene_a_key"),
-        F.greatest("a.gene_key", "b.gene_key").alias("gene_b_key"),
-        F.when(swap, F.col("b.rank")).otherwise(F.col("a.rank")).alias("ra"),
-        F.when(swap, F.col("a.rank")).otherwise(F.col("b.rank")).alias("rb"),
-    )
-    return (
-        paired.groupBy("study_key", "gene_a_key", "gene_b_key")
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            # Pearson-on-ranks from covariance/variance aggregates instead of
-            # corr(): ANSI-safe on zero-variance series (corr() raises
-            # DIVIDE_BY_ZERO under ANSI; O-38 drops NaN-ρ pairs instead)
-            F.covar_samp("ra", "rb").alias("cov_ab"),
-            F.var_samp("ra").alias("var_a"),
-            F.var_samp("rb").alias("var_b"),
-        )
-        # O-33 min-samples gate + O-34 constant-series gate: var(rank) > 0 ⇔
-        # ≥2 distinct values, without a count_distinct's Expand
-        .where(
-            (F.col("n_samples") >= min_samples)
-            & (F.col("var_a") > 0)
-            & (F.col("var_b") > 0)
-        )
-        # single sqrt of the variance product (not sd_a*sd_b) keeps perfect
-        # monotone pairs at exactly ±1.0; clamp guards residual FP noise
-        .withColumn(
-            "rho_spearman",
-            F.least(
-                F.greatest(
-                    F.col("cov_ab") / F.sqrt(F.col("var_a") * F.col("var_b")),
-                    F.lit(-1.0),
-                ),
-                F.lit(1.0),
-            ),
-        )
-        .where(F.col("rho_spearman").isNotNull() & ~F.isnan("rho_spearman"))  # O-38
-        .drop("cov_ab", "var_a", "var_b")
-    )
-
-
 def _correlate(
-    stats: DataFrame,
-    *,
-    bucketed_bh: bool,
-    computed_at: str,
-    pvalue_dist: str = "normal",
-    scope=None,
+    stats: DataFrame, *, computed_at: str, pvalue_dist: str = "normal"
 ) -> DataFrame:
-    """The shared tail: gated pair rows (study, gene_a, gene_b, n_samples,
-    ρ) → p → BH q → fact_gene_pair_corr rows.
-
-    ``bucketed_bh`` is set for the block route only: its n_genes²/2-row
-    families would funnel back into ONE task under the per-family window.
-    The bucketed BH keeps every stage partitioned by (study, p-bucket) with
-    bit-identical output (``test_bh_scalable_matches_classic_and_oracle``);
-    on reference-envelope families the window form is cheaper (SCALE.md,
-    "BH follows the route").
-    """
+    """The tail: gated pair rows (study, gene_a, gene_b, n_samples, ρ) →
+    p → BH q per study (one window family each) → fact_gene_pair_corr
+    rows."""
     rho, n = F.col("rho_spearman"), F.col("n_samples")
     p = (
         spearman_p_value_expr(rho, n)
@@ -337,15 +173,9 @@ def _correlate(
     with_p = stats.withColumn("p_value", p).withColumn(
         "p_value", nan_null.otherwise(F.col("p_value"))
     )
-    if bucketed_bh:
-        with_q = benjamini_hochberg_scalable(
-            with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"],
-            scope=scope,
-        )
-    else:
-        with_q = benjamini_hochberg(
-            with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"]
-        )
+    with_q = benjamini_hochberg(
+        with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"]
+    )
     return with_q.select(
         "gene_a_key",
         "gene_b_key",
@@ -365,43 +195,22 @@ def compute_gene_pair_correlations(
     min_samples: int = MIN_SAMPLES_FOR_CORRELATION,
     computed_at: str | None = None,
     pvalue_dist: str = "normal",
-    scope=None,
 ) -> DataFrame:
     """Long-form expression (study_key, gene_key, gsm_accession,
     expression_value) → rows matching ``schemas.FACT_GENE_PAIR_CORR``.
-
-    Each study is routed by ``_split_wide_dense``: wide dense studies to the
-    block plan with B from the widest of them (``_derive_n_blocks``), every
-    other study to the per-study rank kernel — identical results either way.
+    Lazy: builds the plan and runs no job.
 
     ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
     the reference's no-SciPy fallback; ``"t"`` is SciPy's primary Student-t
     semantics (incomplete-beta continued fraction as a ``sequence`` fold,
     ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy). Both
-    are JVM expressions. ``scope`` (a ``caching.CacheScope``) releases the
-    block route's BH barrier.
+    are JVM expressions.
     """
-    ts = computed_at or _utc_now_iso()
     e = expression.select("study_key", "gene_key", "gsm_accession", "expression_value")
-
-    narrow_keys, wide = _split_wide_dense(e)
-    routes: list[tuple[DataFrame, bool]] = []  # (gated pair rows, bucketed BH)
-    if narrow_keys or not wide:
-        narrow = e.where(~F.col("study_key").isin(list(wide))) if wide else e
-        routes.append((_kernel_pairs(narrow, min_samples), False))
-    if wide:
-        wide_e = e.where(F.col("study_key").isin(list(wide)))
-        n_blocks = _derive_n_blocks(max(wide.values()))
-        routes.append((_block_pairs(wide_e, n_blocks, min_samples), True))
-    return functools.reduce(
-        DataFrame.unionByName,
-        [
-            _correlate(
-                stats, bucketed_bh=bucketed, computed_at=ts,
-                pvalue_dist=pvalue_dist, scope=scope,
-            )
-            for stats, bucketed in routes
-        ],
+    return _correlate(
+        _kernel_pairs(e, min_samples),
+        computed_at=computed_at or _utc_now_iso(),
+        pvalue_dist=pvalue_dist,
     )
 
 

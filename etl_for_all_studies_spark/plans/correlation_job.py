@@ -94,7 +94,6 @@ def run_correlation_job(
                 expression,
                 min_samples=config.processing.min_samples,
                 pvalue_dist=pvalue_dist,
-                scope=scope,  # releases the block route's BH barrier with the job
             )
         )  # computed once, used for both the count and the write
 

@@ -43,11 +43,7 @@ from .operators.dedup import (
 )
 from .operators.similarity import brute_force_topk, ivf_topk
 from .operators.textops import annotate_documents
-from .plans.correlation import (
-    _block_pairs,
-    _correlate,
-    compute_gene_pair_correlations,
-)
+from .plans.correlation import compute_gene_pair_correlations
 
 
 @dataclasses.dataclass(frozen=True)
@@ -430,25 +426,17 @@ WHERE rk <= 3
 #     runs, bound to suppliers-as-genes × parts-as-samples)
 # --------------------------------------------------------------------------
 
-def _spearman_rows(
-    base: DataFrame, gene: str, sample: str, *, n_blocks: int | None = None
-) -> DataFrame:
+def _spearman_rows(base: DataFrame, gene: str, sample: str) -> DataFrame:
     """Shared body of the Spearman queries: ``base`` (one row per
     ``gene`` × ``sample`` with an ``expression_value``) as ONE study, all
-    pairs correlated, projected onto the oracle's 1e-6 grid. ``n_blocks``
-    calls the block route directly at that B instead of the router."""
+    pairs correlated, projected onto the oracle's 1e-6 grid."""
     expr = base.select(
         F.lit(1).cast("long").alias("study_key"),
         F.col(gene).cast("long").alias("gene_key"),
         F.col(sample).cast("string").alias("gsm_accession"),
         "expression_value",
-    ).persist()  # the router's size aggregate and the pair builder read this
-    if n_blocks is None:
-        corr = compute_gene_pair_correlations(expr, min_samples=2, computed_at="fixed")
-    else:
-        corr = _correlate(
-            _block_pairs(expr, n_blocks, 2), bucketed_bh=True, computed_at="fixed"
-        )
+    )
+    corr = compute_gene_pair_correlations(expr, min_samples=2, computed_at="fixed")
     return corr.select(
         "gene_a_key",
         "gene_b_key",
@@ -482,7 +470,7 @@ def _spearman_sql(base_select: str) -> str:
     """Shared DuckDB oracle skeleton for the Spearman+BH plan; ranks are
     computed within each pair's shared sample set (reference semantics) —
     identical to per-gene ranks when the matrix is dense, so one oracle
-    covers every physical route."""
+    covers dense and ragged matrices alike."""
     return f"""
 WITH base AS (
   {base_select}
@@ -562,15 +550,10 @@ _SQL_SPEARMAN_DENSE = _spearman_sql(
 
 
 # --------------------------------------------------------------------------
-# 10c. BLOCK-route Spearman (SURVEY §7.4.7 beyond-envelope): 250-gene dense
-#      matrix (part-bucket × order-priority) through the block route at a
-#      fixed B=4 — called directly, since the router only picks it past
-#      1024 genes — pair enumeration bucketed into gene blocks so one
-#      (study, sample) key's quadratic fan-out is spread over B(B+1)/2
-#      reducers (an unsplittable hot key under the plain dense join; AQE
-#      splits partitions, not keys). The oracle is the SAME Spearman
-#      skeleton — the block route must be value-identical to the kernel,
-#      only the physical plan differs.
+# 10c. 250-gene dense Spearman (part-bucket × order-priority): the
+#      widest registry matrix through the same rank kernel; the name is
+#      kept from the retired block-enumeration route it used to exercise.
+#      The oracle is the same Spearman skeleton.
 # --------------------------------------------------------------------------
 
 def q_spearman_block(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,7 +564,7 @@ def q_spearman_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("l_partkey") % 250).alias("gene"), F.col("o_orderpriority"))
         .agg(F.sum("l_quantity").cast("double").alias("expression_value"))
     )
-    return _spearman_rows(base, "gene", "o_orderpriority", n_blocks=4)
+    return _spearman_rows(base, "gene", "o_orderpriority")
 
 
 _SQL_SPEARMAN_BLOCK = _spearman_sql(
@@ -6527,10 +6510,10 @@ WHERE common / (sa.set_size + sb.set_size - common) >= 0.9
 # --------------------------------------------------------------------------
 # 46b. routed similarity join at LOW threshold (round 10; slice widened
 #      round 11) — the auto-router (operators/simjoin.py) picks prefix vs
-#      MinHash-LSH from the threshold and a one-aggregation df profile, the
-#      same shape as the correlation router. This entry pins the low-t
-#      PREFIX regime with an exact oracle: with k=9 shingles the vocabulary
-#      is large and dfs low, so at the correctness SF the profile routes
+#      MinHash-LSH from the threshold and a one-aggregation df profile.
+#      This entry pins the low-t PREFIX regime with an exact oracle: with
+#      k=9 shingles the vocabulary is large and dfs low, so at the
+#      correctness SF the profile routes
 #      "prefix" (est. candidates (1−t)²·Σdf² ≈ 6.3e5 vs LSH's
 #      16·occurrences ≈ 2.2e6 at sf0.01 — 3.6× margin, route pinned by
 #      test) and the result is the exact t=0.6 Jaccard answer the
@@ -7017,13 +7000,18 @@ QUERY_REGISTRY: dict[str, QueryDef] = {
 # cohort ordered oldest-first.
 #
 # As of the r12 artifact every entry has been oracle-checked. Since then
-# the two routed Spearman queries moved from the pair-expanded plan to the
-# per-study rank kernel, so they lead the window as ROTATION_MODIFIED. The
+# the three Spearman queries moved to the per-study rank kernel (two from
+# the pair-expanded plan, spearman_block from the block-enumeration route),
+# so they lead the window as ROTATION_MODIFIED. The
 # rest of the window is the whole r9-checked cohort (the span family,
 # curation_pipeline and dedup_keeper among them) plus the oldest
 # r10-checked entries. Each cohort keeps its prior relative order. A pure
 # reorder: nothing renamed, dropped, or re-oracled.
-ROTATION_MODIFIED: list[str] = ["spearman_suppliers", "spearman_dense_auto"]
+ROTATION_MODIFIED: list[str] = [
+    "spearman_suppliers",
+    "spearman_dense_auto",
+    "spearman_block",
+]
 _R9_COHORT: list[str] = [
     # last checked r9 (CORRECTNESS_r09.json) — all inside the window
     "dedup_exact",
@@ -7138,7 +7126,6 @@ _R12_COHORT: list[str] = [
     "customer_set_ops",
     "regional_revenue",
     "cube_revenue",
-    "spearman_block",
     "events_error_window",
     "embedding_quantize",
     "token_heavy_hitters",

@@ -27,26 +27,18 @@ def _to_df(spark, matrix, study_key=1):
     )
 
 
-# Each physical route called directly, past the router: pair builder plus
-# the BH form the router pairs it with. "exact" is the per-study rank
-# kernel, "reference" the pair-expanded plan it replaced (tests/
-# spearman_reference.py), "block" the wide dense route.
-ROUTES = {
-    "exact": (corr_mod._kernel_pairs, False),
-    "reference": (pair_expanded_stats, False),
-    "block": (lambda e, ms: corr_mod._block_pairs(e, 4, ms), True),
-}
+# Pair builders called directly, each through the shared p → BH tail:
+# "exact" is the per-study rank kernel, "reference" the pair-expanded plan
+# it replaced (tests/spearman_reference.py).
+ROUTES = {"exact": corr_mod._kernel_pairs, "reference": pair_expanded_stats}
 
 
 def _route(df, route, min_samples=2):
-    pairs, bucketed = ROUTES[route]
-    return corr_mod._correlate(
-        pairs(df, min_samples), bucketed_bh=bucketed, computed_at="x"
-    )
+    return corr_mod._correlate(ROUTES[route](df, min_samples), computed_at="x")
 
 
 def _run(spark, matrix, route=None, min_samples=2):
-    """Rows keyed by pair: through the router, or one ``route`` directly."""
+    """Rows keyed by pair: through the entry point, or one ``route``."""
     df = _to_df(spark, matrix)
     if route is None:
         out = compute_gene_pair_correlations(df, min_samples=min_samples)
@@ -58,7 +50,7 @@ def _run(spark, matrix, route=None, min_samples=2):
     }
 
 
-@pytest.mark.parametrize("route", ["exact", "reference", "block"])
+@pytest.mark.parametrize("route", ["exact", "reference"])
 def test_canonical_three_gene_study(spark, route):
     got = _run(spark, CANONICAL, route=route)
     expected = {(s["gene_a_key"], s["gene_b_key"]): s for s in all_pairs(CANONICAL)}
@@ -155,7 +147,7 @@ def test_bh_family_larger_study(spark):
 
 
 def test_auto_mode_routes_dense_and_ragged(spark):
-    """The router must equal the pair-expanded reference form on a mix of
+    """The entry point must equal the pair-expanded reference form on a mix of
     dense and ragged studies."""
     dense = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(6)} for g in (1, 2, 3)}
     ragged = {
@@ -231,173 +223,14 @@ def test_multi_study_families_independent(spark):
             assert r["q_value"] == pytest.approx(exp["q"], abs=1e-6)
 
 
-# ---- block (bucketed) pair enumeration — SURVEY §7.4.7 beyond-envelope ----
-
-def test_block_mode_identical_to_dense(spark):
-    """On a dense matrix the block route must be row-identical to the kernel
-    — block enumeration only re-buckets the pair fan-out. 40 genes / 4
-    blocks forces multi-gene blocks, diagonal pairs, and off-diagonal
-    side-swaps (hash block of the smaller gene can exceed the larger's)."""
-    rng_vals = [
-        ((i * 37 + j * 11) % 29) + 0.25 * ((i + j) % 5) for i in range(40) for j in range(12)
-    ]
-    matrix = {
-        g: {f"S{j:02d}": rng_vals[g * 12 + j] for j in range(12)}
-        for g in range(40)
-    }
-    df = _to_df(spark, matrix)
-    dense = _route(df, "exact")
-    block = _route(df, "block")
-    key = ["study_key", "gene_a_key", "gene_b_key"]
-    d = {tuple(r[k] for k in key): r.asDict() for r in dense.collect()}
-    b = {tuple(r[k] for k in key): r.asDict() for r in block.collect()}
-    assert set(d) == set(b) and len(d) == 40 * 39 // 2
-    for k in d:
-        for col in ("n_samples", "rho_spearman", "p_value", "q_value"):
-            assert d[k][col] == pytest.approx(b[k][col], abs=1e-12), (k, col)
-
-
-def test_block_mode_single_block_degenerates_to_dense(spark):
-    df = _to_df(spark, CANONICAL)
-    rows = {
-        b: {
-            (r["gene_a_key"], r["gene_b_key"]): r["rho_spearman"]
-            for r in corr_mod._correlate(
-                corr_mod._block_pairs(df, b), bucketed_bh=True, computed_at="x"
-            ).collect()
-        }
-        for b in (1, 4)
-    }
-    got_dense = _run(spark, CANONICAL, route="exact")
-    for got_block in rows.values():
-        assert set(got_block) == set(got_dense)
-        for k in got_dense:
-            assert got_block[k] == pytest.approx(
-                got_dense[k]["rho_spearman"], abs=1e-12
-            )
-
-
-def test_block_join_is_keyed_by_block_columns(spark):
-    """Plan shape: the block route's join equi-keys must include the block
-    columns — that is the whole point (one (study, sample) hot key is spread
-    over B(B+1)/2 reducers). Asserted on the optimized plan text."""
-    df = _to_df(spark, CANONICAL)
-    block = _route(df, "block")
-    plan = block._jdf.queryExecution().optimizedPlan().toString()
-    assert "blk_a" in plan and "blk_b" in plan
-
-
-def test_block_mode_bh_windows_are_bucket_partitioned(spark):
-    """Plan shape: the block route's q-value step must NOT re-serialize the pair
-    family into one window task — every window over the pair table that is
-    partitioned by study_key alone is forbidden (the bucketed BH partitions
-    by (study_key, __bkt) instead). Detected on the optimized plan text:
-    a windowspecdefinition whose FIRST argument is study_key and whose
-    SECOND argument is already a sort item (ASC/DESC) is a per-family
-    single-partition window."""
-    import re
-
-    df = _to_df(spark, CANONICAL)
-    block = _route(df, "block")
-    plan = block._jdf.queryExecution().optimizedPlan().toString()
-    # guard-the-guard: if a Spark upgrade changes the plan-string format and
-    # the windowspecdefinition pattern stops matching anything, the per-
-    # family assertion below would pass vacuously — fail loudly instead
-    all_specs = re.findall(
-        r"windowspecdefinition\(([A-Za-z_][A-Za-z0-9_]*)#\d+",
-        plan,
-    )
-    assert all_specs, "no windowspecdefinition parsed — plan format drifted"
-    per_family_only = [
-        m
-        for m in re.findall(
-            r"windowspecdefinition\((?:study_key|__bh_fk)#\d+L?,"
-            r" ([A-Za-z_][A-Za-z0-9_]*)#\d+L? (?:ASC|DESC)",
-            plan,
-        )
-        # windows over the tiny families×B bucket-count table sort by __bkt
-        # and are bounded by construction; any other sort column means a
-        # window over the quadratic pair table partitioned by family alone
-        if m != "__bkt"
-    ]
-    assert not per_family_only, per_family_only
-    # and the bucketed windows ARE present
-    assert "__bkt" in plan and "__lj" in plan
-    # the kernel route keeps the cheap per-family window for reference-
-    # envelope families
-    dense = _route(df, "exact")
-    dplan = dense._jdf.queryExecution().optimizedPlan().toString()
-    assert "__bkt" not in dplan
-
-
-def test_auto_mode_routes_wide_dense_to_block(spark, monkeypatch):
-    """With the wide-gene threshold lowered, the router must send a dense
-    study through the block plan and still equal the reference form; the
-    narrow study keeps the kernel (threshold respected per study)."""
-    monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
-    wide = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(4)} for g in range(12)}
-    narrow = {g: {f"S{i}": float((g * 5 + i) % 7) for i in range(4)} for g in (1, 2, 3)}
-    df = _to_df(spark, wide, study_key=1).unionByName(_to_df(spark, narrow, study_key=2))
-    assert corr_mod._split_wide_dense(df) == ([2], {1: 12})
-    exact = {
-        (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in _route(df, "reference").collect()
-    }
-    auto = {
-        (r["study_key"], r["gene_a_key"], r["gene_b_key"]): r.asDict()
-        for r in compute_gene_pair_correlations(df, computed_at="x").collect()
-    }
-    assert set(exact) == set(auto)
-    for k in exact:
-        assert auto[k]["rho_spearman"] == pytest.approx(
-            exact[k]["rho_spearman"], abs=1e-12
-        ), k
-        assert auto[k]["n_samples"] == exact[k]["n_samples"]
-
-
-def test_auto_mode_derives_n_blocks_from_widest_study(spark, monkeypatch):
-    """The router must size blocks from the widest routed study
-    (ceil(width/2000), min 2 — the round-8 envelope sweep's
-    ~4M-rows-per-block-pair target). Pinned by spying on _block_pairs
-    rather than re-running the 20k probe: the derivation is driver-side
-    arithmetic on counts the router already paid for."""
-    from etl_for_all_studies_spark.plans.correlation import _derive_n_blocks
-
-    # the pure derivation: reference envelope (20k genes) => 10 blocks
-    assert _derive_n_blocks(20_000) == 10
-    assert _derive_n_blocks(20_001) == 11
-    assert _derive_n_blocks(2_000) == 2   # min 2: one block = worse dense
-    assert _derive_n_blocks(12) == 2
-
-    wide = {g: {f"S{i}": float((g * 7 + i * 3) % 11) for i in range(4)} for g in range(12)}
-    df = _to_df(spark, wide, study_key=1)
-
-    seen = []
-    real = corr_mod._block_pairs
-
-    def spy(e, n_blocks, *args):
-        seen.append(n_blocks)
-        return real(e, n_blocks, *args)
-
-    monkeypatch.setattr(corr_mod, "_block_pairs", spy)
-    monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 8)
-    compute_gene_pair_correlations(df, computed_at="x").collect()
-    assert seen == [_derive_n_blocks(12)] == [2]
-
-
-def test_router_threshold_pinned_to_measured_crossover():
-    """The router's wide-gene threshold sits at the measured dense/block
-    crossover (SCALE.md round-8 envelope series: dense wins at 1k genes,
-    block wins from 2k up, both regimes) — 1024 is the last power-of-two
-    width where the dense plan's single-reducer-per-sample fan-out (~0.5M
-    pairs) still beats block's B+1x input replication. The entry point
-    takes no plan-selecting argument: the router alone decides."""
+def test_entry_point_takes_no_plan_selecting_argument():
+    """One route serves every study shape, so the entry point takes no
+    argument that picks a plan, a block count or a cache scope."""
     import inspect
 
-    assert corr_mod._WIDE_GENE_THRESHOLD == 1024
     sig = inspect.signature(compute_gene_pair_correlations)
     assert list(sig.parameters) == [
-        "expression", "min_samples", "computed_at", "pvalue_dist", "scope"
+        "expression", "min_samples", "computed_at", "pvalue_dist"
     ]
 
 
@@ -437,15 +270,29 @@ def _fact_rows(df):
     }
 
 
-@pytest.mark.parametrize("special", [False, True])
-@pytest.mark.parametrize("min_samples", [2, 4])
-def test_kernel_matches_pair_expanded_form(spark, special, min_samples):
+@pytest.mark.parametrize(
+    "min_samples, special, block_elems",
+    [
+        pytest.param(ms, sp, be, id=f"{ms}-{sp}" + (f"-blk{be}" if be else ""))
+        for be in (None, 16)
+        for ms in (2, 4)
+        for sp in (False, True)
+    ],
+)
+def test_kernel_matches_pair_expanded_form(
+    spark, monkeypatch, min_samples, special, block_elems
+):
     """The kernel equals the pair-expanded plan it replaced on randomized
     ragged multi-study input: duplicated cells (the self-join's multiset),
     ties, constants, n = 2 pairs (NULL p, NULL q), ``min_samples`` and, with
     ``special``, NULL/NaN values ranked as a Spark window ranks them. ρ
     pins at 1e-12; p and q at 1e-6, since the erf approximation turns a
-    one-ulp ρ difference near 0 into ~1e-9 of p."""
+    one-ulp ρ difference near 0 into ~1e-9 of p. With ``block_elems`` 16
+    each gene is its own rank block, so every pair crosses two blocks
+    (``ranks(bj, bi)``), the path of every study wider than a few hundred
+    genes."""
+    if block_elems:
+        monkeypatch.setattr(corr_mod, "_KERNEL_BLOCK_ELEMS", block_elems)
     df = spark.createDataFrame(_random_studies(11 + min_samples, 12, special=special), _LONG)
     got = _fact_rows(_route(df, "exact", min_samples))
     want = _fact_rows(_route(df, "reference", min_samples))

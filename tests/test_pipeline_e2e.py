@@ -220,21 +220,17 @@ def test_enrichment_on_rerun(spark, tmp_path):
     assert rows["S2"]["sex"] == "male"  # never downgraded
 
 
-def test_dense_and_ragged_studies_share_the_kernel_in_e2e_job(
-    spark, tmp_path, monkeypatch
-):
-    """The genomic e2e path (TSV -> star schema -> correlation job) routes a
-    dense and a ragged study through the one rank kernel, and the stored
-    rows equal those of the block route value-for-value on every stored
-    column when the dense study is forced onto it.
+def test_dense_and_ragged_studies_share_the_kernel_in_e2e_job(spark, tmp_path):
+    """The genomic e2e path (TSV -> star schema -> correlation job) runs a
+    dense and a ragged study through the one rank kernel and stores every
+    pair of both.
 
-    The unit tests pin the routes on synthetic frames; this test pins that
-    the JOB feeds the router an expression frame the classifier still
-    recognizes after TSV parsing, whitelisting, star-join and key lookup —
-    the integration surface the fixtures never exercised.
+    The unit tests pin the kernel on synthetic frames; this test pins that
+    the JOB feeds it an expression frame that still carries both studies
+    after TSV parsing, whitelisting, star-join and key lookup — the
+    integration surface the fixtures never exercised.
     """
     from etl_for_all_studies_spark.config import config_from_dict
-    from etl_for_all_studies_spark.plans import correlation as corr_mod
 
     studies = tmp_path / "studies"
     genes_f = tmp_path / "genes.tsv"
@@ -258,7 +254,7 @@ def test_dense_and_ragged_studies_share_the_kernel_in_e2e_job(
         "Gene\t" + "\t".join(samples) + "\n" + rows
     )
 
-    # ragged study: one gene misses a sample -> must route exact
+    # ragged study: one gene misses a sample
     r = studies / "GSE_RAGGED"
     r.mkdir(parents=True)
     (r / "metadata_GSE_RAGGED.tsv").write_text(
@@ -285,59 +281,9 @@ def test_dense_and_ragged_studies_share_the_kernel_in_e2e_job(
     )
     run_pipeline(cfg, spark=spark)
 
-    # spy on the router: record the classification the job actually used
-    routes = []
-    real_split = corr_mod._split_wide_dense
-
-    def recording_split(e):
-        out = real_split(e)
-        routes.append(out)
-        return out
-
-    monkeypatch.setattr(corr_mod, "_split_wide_dense", recording_split)
-
-    res_auto = run_correlation_job(cfg, spark=spark)
-    assert res_auto.studies_processed == ["GSE_DENSE", "GSE_RAGGED"]
-    wh = tmp_path / "wh"
-    dim_study = {
-        r2["gse_accession"]: r2["study_key"]
-        for r2 in spark.read.parquet(str(wh / "dim_study")).collect()
-    }
-    assert len(routes) == 1, "the router must classify exactly once"
-    kernel_keys, wide = routes[0]
-    assert sorted(kernel_keys) == sorted(dim_study.values())
-    assert wide == {}
-
-    def stored():
-        return {
-            (r2["study_key"], r2["gene_a_key"], r2["gene_b_key"]): (
-                r2["n_samples"], r2["rho_spearman"], r2["p_value"], r2["q_value"]
-            )
-            for r2 in spark.read.parquet(
-                str(wh / "fact_gene_pair_corr")
-            ).collect()
-        }
-
-    got_kernel = stored()
+    res = run_correlation_job(cfg, spark=spark)
+    assert res.studies_processed == ["GSE_DENSE", "GSE_RAGGED"]
     # the dense study contributes C(5,2)=10 pairs, the ragged one C(3,2)=3
-    assert len(got_kernel) == 13
-
-    # lower the width threshold: the dense study (5 genes) takes the block
-    # route, the ragged one stays on the kernel (refresh-overwrite)
-    monkeypatch.setattr(corr_mod, "_WIDE_GENE_THRESHOLD", 2)
-    run_correlation_job(cfg, spark=spark)
-    assert routes[-1] == ([dim_study["GSE_RAGGED"]], {dim_study["GSE_DENSE"]: 5})
-    got_block = stored()
-    assert set(got_kernel) == set(got_block)
-    for k in got_block:
-        # the kernel's ρ is exact; the block route's covar/var aggregates
-        # accumulate in plan order, so ρ can differ by one FP quantum —
-        # 1e-12 is the suite-wide ρ equivalence pin. The quantum amplifies
-        # through the erf-based p approximation (~1e-9 near ρ = 0), so p/q
-        # pin at the oracle tests' 1e-6.
-        (n_k, rho_k, p_k, q_k) = got_kernel[k]
-        (n_b, rho_b, p_b, q_b) = got_block[k]
-        assert n_k == n_b, k
-        assert rho_k == pytest.approx(rho_b, abs=1e-12), k
-        assert p_k == pytest.approx(p_b, abs=1e-6), k
-        assert q_k == pytest.approx(q_b, abs=1e-6), k
+    assert res.pair_counts == {"GSE_DENSE": 10, "GSE_RAGGED": 3}
+    stored = spark.read.parquet(str(tmp_path / "wh" / "fact_gene_pair_corr"))
+    assert stored.count() == 13

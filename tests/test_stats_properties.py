@@ -147,61 +147,6 @@ def test_spark_bh_windows_match_oracle_many_families(spark):
             assert got[key] == pytest.approx(exp, abs=1e-12), key
 
 
-def test_bh_scalable_matches_classic_and_oracle(spark):
-    """The bucketed (family × p-bucket partitioned) BH must be bit-identical
-    to the classic per-family-window form — including ties, exact 0/1
-    p-values, NULL, NaN, singleton and empty families — across several
-    bucket counts (bucket edges affect only load balance, never values)."""
-    import random
-
-    from etl_for_all_studies_spark.functions.stats import (
-        benjamini_hochberg_scalable,
-    )
-
-    rng = random.Random(17)
-    rows, expected = [], {}
-    # fam=None is a REAL family (Window.partitionBy keeps NULL partitions);
-    # the bucketed form's joins must not drop it (null-safe struct key)
-    for fam in [*range(12), None]:
-        n = rng.randint(0, 40) if fam is not None else 7
-        ps = []
-        for _ in range(n):
-            r = rng.random()
-            p = (
-                None if r < 0.1
-                else float("nan") if r < 0.15
-                else rng.choice([0.0, 1.0]) if r < 0.3
-                else round(rng.random(), 2)  # coarse grid → many ties
-            )
-            ps.append(p)
-        qs = bh_oracle([None if (p is None or p != p) else p for p in ps])
-        for i, (p, q) in enumerate(zip(ps, qs)):
-            rows.append((fam, i, p))
-            expected[(fam, i)] = q
-    df = spark.createDataFrame(rows, "fam long, idx long, p_value double")
-    for n_buckets in (1, 3, 64):
-        out = benjamini_hochberg_scalable(
-            df, family_cols=["fam"], num_buckets=n_buckets
-        )
-        got = {(r["fam"], r["idx"]): r["q_value"] for r in out.collect()}
-        assert set(got) == set(expected), n_buckets
-        for key, exp in expected.items():
-            if exp is None:
-                assert got[key] is None, (n_buckets, key)
-            else:
-                assert got[key] == pytest.approx(exp, abs=1e-12), (n_buckets, key)
-
-    # no-family (global) form works too
-    g = benjamini_hochberg_scalable(
-        spark.createDataFrame([(0, 0.01), (1, 0.5)], "idx long, p_value double"),
-        num_buckets=4,
-    )
-    gq = {r["idx"]: r["q_value"] for r in g.collect()}
-    assert gq[0] == pytest.approx(0.02, abs=1e-12)
-    assert gq[1] == pytest.approx(0.5, abs=1e-12)
-    assert "__bh_fam" not in g.columns
-
-
 def test_bh_nan_p_excluded_from_family(spark):
     # NaN p must behave like NULL: excluded from m, q=NULL — not inflate m
     # or propagate NaN through the running-min (reference correlation.py:72-79)

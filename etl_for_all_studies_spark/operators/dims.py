@@ -1,92 +1,96 @@
 """Dimension builds with deterministic surrogate keys.
 
 Replaces the reference's per-row get-or-create probes + in-memory dim caches
-(``src/etl_for_all_studies/repositories.py:30-185``) with set-oriented builds:
-``distinct()`` natural keys + ``row_number()`` surrogate assignment. Keys are
-**deterministic** (ordered by natural key) so oracle comparison is stable, and
-**preserved across reruns**: existing rows keep their keys; only novel natural
-keys get fresh keys starting at ``max(existing)+1`` (get-or-create semantics,
-set-at-a-time).
+(``src/etl_for_all_studies/repositories.py:30-185``) with set-oriented builds.
+Keys are **deterministic** (ordered by natural key) so oracle comparison is
+stable, and **preserved across reruns**: existing rows keep their keys; only
+novel natural keys get fresh keys starting at ``max(existing)+1``
+(get-or-create semantics, set-at-a-time).
 
-Scale note: genes/studies/platforms/illnesses are small by construction
-(genes ≈ whitelist size, the rest tiny), so their single-partition
-``row_number`` is bounded by dim cardinality and left as-is. ``dim_sample``
-is the one dim that grows with the corpus (10k–50k samples/study × many
-studies), so its keys are assigned **per-study in parallel**: ``row_number``
-partitioned by ``study_key`` plus dense per-study offsets (a window over one
-row per study) — numerically identical to a global sort by
-``(study_key, gsm_accession)`` but with no fact-scale single-partition
-Exchange. The facts side only ever *joins* (broadcast) against these dims.
+Keys of the four small dims — dim_study, dim_illness, dim_platform and
+dim_gene — are assigned on the driver by :func:`key_small_dim`. Each is
+bounded by the study count or by the gene whitelist, and its natural keys
+already reach the driver through the pipeline's one metadata collect (or,
+for genes, one ``distinct`` collect), so a Spark window over them would only
+add jobs. Novel keys are sorted in code-point order, which is the UTF-8
+binary order Spark sorts strings in, so the keys equal the ``row_number()``
+form this replaced (``tests/dim_keys_reference.py`` keeps that form as the
+executable spec). The dim comes back as an Arrow ``LocalRelation``, which
+broadcasts and writes without the RDD round trip a Python-list frame costs.
+
+``dim_sample`` stays in Spark: it is the one dim that grows with the corpus
+(10k–50k samples/study × many studies), so its keys are assigned
+**per-study in parallel** — ``row_number`` partitioned by ``study_key`` plus
+dense per-study offsets (a window over one row per study) — numerically
+identical to a global sort by ``(study_key, gsm_accession)`` but with no
+fact-scale single-partition Exchange and nothing proportional to the
+samples on the driver. The facts side only ever *joins* (broadcast) against
+these dims.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..schemas import UNKNOWN
+from ..schemas import DIM_GENE, DIM_ILLNESS, DIM_PLATFORM, DIM_STUDY, UNKNOWN
+from ..session import local_frame
 
 
-def assign_surrogate_keys(
+def key_small_dim(
+    spark: SparkSession,
+    schema: T.StructType,
     existing: DataFrame | None,
-    natural: DataFrame,
-    key_col: str,
-    natural_cols: list[str],
+    natural: Iterable[str | None],
 ) -> DataFrame:
-    """Union existing dim with novel natural keys, assigning stable keys.
-
-    ``existing`` is the previously-written dim (or None on first build);
-    ``natural`` holds candidate natural-key rows (any duplicates are dropped).
-    """
-    natural = (
-        natural.select(*natural_cols)
-        .where(F.col(natural_cols[0]).isNotNull())
-        .distinct()
-    )
-    if existing is None or existing.isEmpty():
-        w = Window.orderBy(*natural_cols)
-        return natural.withColumn(key_col, F.row_number().over(w).cast("long")).select(
-            key_col, *natural_cols
-        )
-    novel = natural.join(existing.select(*natural_cols), on=natural_cols, how="left_anti")
-    base = existing.agg(F.max(key_col)).collect()[0][0] or 0
-    w = Window.orderBy(*natural_cols)
-    fresh = novel.withColumn(
-        key_col, (F.row_number().over(w) + F.lit(base)).cast("long")
-    ).select(key_col, *natural_cols)
-    return existing.select(key_col, *natural_cols).unionByName(fresh)
+    """``(key, natural key)`` dim of ``schema``: the ``existing`` rows
+    (collected) keep their keys, and each novel non-null natural key, in
+    code-point order, gets the next key after ``max(existing)``."""
+    rows = [] if existing is None else [
+        tuple(r) for r in existing.select(*schema.names).collect()
+    ]
+    known = {n for _, n in rows}
+    base = max((k for k, _ in rows), default=0)
+    novel = sorted({n for n in natural if n is not None} - known)
+    rows += [(base + i, n) for i, n in enumerate(novel, 1)]
+    return local_frame(spark, rows, schema)
 
 
-def build_dim_study(existing: DataFrame | None, metadata: DataFrame) -> DataFrame:
+def build_dim_study(
+    spark: SparkSession, existing: DataFrame | None, accessions: Iterable[str]
+) -> DataFrame:
     """dim_study: 1 row per GSE accession (``models.py:24-31``)."""
-    return assign_surrogate_keys(
-        existing, metadata.select("gse_accession"), "study_key", ["gse_accession"]
-    )
+    return key_small_dim(spark, DIM_STUDY, existing, accessions)
 
 
-def build_dim_gene(existing: DataFrame | None, expression_long: DataFrame) -> DataFrame:
+def build_dim_gene(
+    spark: SparkSession, existing: DataFrame | None, ensembl_ids: Iterable[str]
+) -> DataFrame:
     """dim_gene: 1 row per Ensembl id **seen in loaded facts** (``models.py:15-21``;
     the reference creates gene rows lazily per loaded expression row,
     ``pipeline.py:202``, so unexpressed whitelist genes never get dim rows)."""
-    return assign_surrogate_keys(
-        existing, expression_long.select("ensembl_id"), "gene_key", ["ensembl_id"]
-    )
+    return key_small_dim(spark, DIM_GENE, existing, ensembl_ids)
 
 
-def build_dim_illness(existing: DataFrame | None, metadata: DataFrame) -> DataFrame:
+def _known(labels: Iterable[str | None]) -> list[str]:
+    return [v for v in labels if v not in (None, UNKNOWN, "")]
+
+
+def build_dim_illness(
+    spark: SparkSession, existing: DataFrame | None, labels: Iterable[str | None]
+) -> DataFrame:
     """dim_illness: 1 row per non-UNKNOWN label (``models.py:34-40``; UNKNOWN
     maps to a NULL FK, never to a dim row — ``repositories.py:148-173``)."""
-    labels = metadata.select(F.col("illness").alias("illness_label")).where(
-        (F.col("illness_label") != UNKNOWN) & (F.col("illness_label") != "")
-    )
-    return assign_surrogate_keys(existing, labels, "illness_key", ["illness_label"])
+    return key_small_dim(spark, DIM_ILLNESS, existing, _known(labels))
 
 
-def build_dim_platform(existing: DataFrame | None, metadata: DataFrame) -> DataFrame:
+def build_dim_platform(
+    spark: SparkSession, existing: DataFrame | None, accessions: Iterable[str | None]
+) -> DataFrame:
     """dim_platform: 1 row per non-UNKNOWN accession (``models.py:43-49``)."""
-    accs = metadata.select(F.col("platform").alias("platform_accession")).where(
-        (F.col("platform_accession") != UNKNOWN) & (F.col("platform_accession") != "")
-    )
-    return assign_surrogate_keys(existing, accs, "platform_key", ["platform_accession"])
+    return key_small_dim(spark, DIM_PLATFORM, existing, _known(accessions))
 
 
 def _assign_sample_keys(incoming: DataFrame, base: int) -> DataFrame:
@@ -201,10 +205,10 @@ def build_dim_sample(
 
 
 __all__ = [
-    "assign_surrogate_keys",
     "build_dim_gene",
     "build_dim_illness",
     "build_dim_platform",
     "build_dim_sample",
     "build_dim_study",
+    "key_small_dim",
 ]

@@ -22,7 +22,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from ..session import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -79,7 +82,15 @@ def expression_wide_to_long(
         raise ExpressionSchemaError(
             f"Study {accession}: no expression columns match metadata samples"
         )
-    pruned = wide.select("ensembl_id", *[F.col(f"`{c}`") for c in kept])
+    # Each Column built here is a few driver round trips to the JVM, and a
+    # 100-sample study paid ~0.2 s of planning for two per-sample lists
+    # (this select and unpivot's values). So the select runs only when
+    # there is a column to prune, and unpivot takes every non-id column.
+    pruned = (
+        wide
+        if len(kept) == len(wide.columns) - 1
+        else wide.select("ensembl_id", *[F.col(f"`{c}`") for c in kept])
+    )
     if gene_whitelist is not None:
         wl = gene_whitelist.select(
             F.trim(F.col("ensembl_id")).alias("_wl_ensembl_id")
@@ -91,22 +102,20 @@ def expression_wide_to_long(
         )
     long = pruned.unpivot(
         ids=["ensembl_id"],
-        values=kept,
+        values=None,
         variableColumnName="gsm_accession",
         valueColumnName="raw_value",
     )
-    return (
+    return long.select(
+        F.lit(accession).alias("gse_accession"),
+        F.trim(F.col("ensembl_id")).alias("ensembl_id"),
+        F.col("gsm_accession"),
         # try_cast: ANSI-safe equivalent of the reference's float()-or-skip
-        long.withColumn("expression_value", F.col("raw_value").try_cast("double"))
+        F.col("raw_value").try_cast("double").alias("expression_value"),
+    ).where(
         # O-15: unparseable cells are dropped, not loaded as NULL facts
         # (fact_expression.expression_value is non-nullable, models.py:82)
-        .where(F.col("expression_value").isNotNull())
-        .select(
-            F.lit(accession).alias("gse_accession"),
-            F.trim(F.col("ensembl_id")).alias("ensembl_id"),
-            F.col("gsm_accession"),
-            F.col("expression_value"),
-        )
+        F.col("expression_value").isNotNull()
     )
 
 
@@ -209,7 +218,13 @@ def expression_text_to_long(
         "ensembl_id",
         F.posexplode(F.col("__arr")).alias("pos", "raw_value"),  # pos 0 = gene id
     )
-    pos_df = spark.createDataFrame(kept_pos, "pos int, gsm_accession string")
+    pos_df = local_frame(
+        spark,
+        kept_pos,
+        T.StructType(
+            [T.StructField("pos", T.IntegerType()), T.StructField("gsm_accession", T.StringType())]
+        ),
+    )
     return (
         cells.join(F.broadcast(pos_df), "pos")  # O-14: unkept positions drop here
         .withColumn("expression_value", F.col("raw_value").try_cast("double"))

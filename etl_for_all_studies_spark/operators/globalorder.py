@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..caching import CacheScope, persist
+from ..session import local_frame
 
 
 def attach_global_order(
@@ -131,7 +132,7 @@ def attach_global_order(
             ],
         ]
     )
-    offsets = df.sparkSession.createDataFrame(off_rows, off_schema)
+    offsets = local_frame(df.sparkSession, off_rows, off_schema)
 
     joined = local.join(F.broadcast(offsets), "__go_pid")
     out_cols = list(df.columns)

@@ -17,7 +17,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import FieldMappingConfig
@@ -110,12 +110,14 @@ def normalize_metadata(
     )
 
 
-def metadata_quality(normalized: DataFrame) -> DataFrame:
+def metadata_quality(normalized: DataFrame, *extra: Column) -> DataFrame:
     """Data-quality completion rates (O-27, ``metadata_processing.py:27-38``).
 
     One row per study: sample count, age/sex completion ratios, and the count
     of rows whose source experiment accession mismatched the directory-derived
-    one (O-18 DQ signal).
+    one (O-18 DQ signal). ``extra`` aggregates ride in the same per-study
+    pass, after these columns: the pipeline adds what it needs of each study
+    on the driver, so its DQ report costs no action of its own.
     """
     return normalized.groupBy("gse_accession").agg(
         F.count("*").alias("sample_count"),
@@ -128,6 +130,7 @@ def metadata_quality(normalized: DataFrame) -> DataFrame:
                 1,
             ).otherwise(0)
         ).alias("accession_mismatches"),
+        *extra,
     )
 
 

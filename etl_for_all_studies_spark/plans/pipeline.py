@@ -94,9 +94,9 @@ def run_pipeline(
     failures: list[StudyFailure] = []
 
     # Phase 1 — plan-time discovery: per study, build the normalized-metadata
-    # frame and open the wide expression scan (header-only inference; no
-    # data-scale job). A study with missing/malformed files is quarantined
-    # (O-45).
+    # frame and open the wide expression scan (schema declared from the
+    # sniffed header; no job). A study with missing/malformed files is
+    # quarantined (O-45).
     staged: list[tuple[str, str, DataFrame, DataFrame, str]] = []
     for study_dir in discover_studies(config.processing.input_directory):
         try:
@@ -126,25 +126,32 @@ def run_pipeline(
     # per run, not once per downstream action.
     scope = CacheScope()
     try:
-        # Phase 2 — ONE batched collect of every study's sample list (the
-        # column-pruning driver metadata for O-14) instead of one job per study:
-        # plan construction stays O(1) Spark jobs as the study count grows.
-        # Cardinality is total samples (≤50k/study), same driver footprint as
-        # the per-study collects it replaces.
-        all_md = _union_all([md for _, _, md, _, _ in staged])
-        samples_by_study: dict[str, list[str]] = {}
-        for gse, gsm in (
-            all_md.select("gse_accession", "gsm_accession").distinct().collect()
-        ):
-            samples_by_study.setdefault(gse, []).append(gsm)
+        # Phase 2 — ONE action over every study's metadata instead of one job
+        # per study or per consumer: the per-study DQ aggregates plus what
+        # the driver needs of each study — its sample list (the column-pruning
+        # driver metadata for O-14) and its distinct illness and platform
+        # labels (natural keys of the small dims). Plan construction stays
+        # O(1) Spark jobs as the study count grows; the lists are bounded by
+        # total samples (≤50k/study). The frame is persisted first: the
+        # dim_sample build reads it again.
+        metadata = scope.persist(_union_all([md for _, _, md, _, _ in staged]))
+        by_study = {
+            r["gse_accession"]: r.asDict()
+            for r in metadata_quality(
+                metadata,
+                F.collect_set("gsm_accession").alias("samples"),
+                F.collect_set("illness").alias("illnesses"),
+                F.collect_set("platform").alias("platforms"),
+            ).collect()
+        }
 
         # Phase 3 — per-study unpivot plans against the collected sample lists;
         # a study whose expression header shares no columns with its metadata is
         # quarantined here (ExpressionSchemaError), after the batch job.
-        metadata_parts: list[DataFrame] = []
         expression_parts: list[DataFrame] = []
         processed: list[str] = []
-        for study_dir, accession, md, wide, expr_path in staged:
+        for study_dir, accession, _md, wide, expr_path in staged:
+            samples = by_study.get(accession, {}).get("samples", [])
             try:
                 # whitelist applied on the WIDE side (O-13 before the melt, the
                 # reference's own order): the semi-join probes gene rows, not
@@ -165,37 +172,30 @@ def run_pipeline(
                     and not any('"' in c for c in raw_header)
                 ):
                     long = expression_text_to_long(
-                        spark,
-                        expr_path,
-                        samples_by_study.get(accession, []),
-                        accession,
-                        gene_whitelist=genes,
+                        spark, expr_path, samples, accession, gene_whitelist=genes
                     )
                 else:
                     long = expression_wide_to_long(
-                        wide,
-                        samples_by_study.get(accession, []),
-                        accession,
-                        gene_whitelist=genes,
+                        wide, samples, accession, gene_whitelist=genes
                     )
                 expression_parts.append(long)
-                metadata_parts.append(md)
                 processed.append(accession)
             except Exception as exc:  # noqa: BLE001
                 logger.exception("Study %s failed; quarantined", study_dir)
                 failures.append(StudyFailure(study_dir, f"{type(exc).__name__}: {exc}"))
 
-        if not metadata_parts:
+        if not processed:
             return PipelineResult([], failures, 0, [], time.monotonic() - t0)
+        if len(processed) < len(staged):
+            # phase-3 quarantine: drop those studies from the cached frame
+            metadata = metadata.where(F.col("gse_accession").isin(processed))
+        kept = [by_study[a] for a in processed]  # a processed study has samples
 
-        # both frames have several downstream consumers (metadata: five
-        # dim builds + the DQ report; expression: dim_gene + the fact
-        # build) and each consumer is its own action — without a
-        # barrier every action re-parses the wide TSVs (measured
-        # 60-80 s/scan at the 10k-sample envelope). Sizes are bounded:
-        # metadata by total samples, expression by whitelist-kept
-        # cells (MEMORY_AND_DISK spills rather than evicts).
-        metadata = scope.persist(_union_all(metadata_parts))
+        # the expression frame has two consumers (dim_gene's key collect and
+        # the fact build) and each is its own action — without a barrier
+        # every action re-parses the wide TSVs (measured 60-80 s/scan at the
+        # 10k-sample envelope). Its size is bounded by whitelist-kept cells
+        # (MEMORY_AND_DISK spills rather than evicts).
         expression = scope.persist(_union_all(expression_parts))
 
         # per-phase walls at INFO (O-48): at the wide-sample envelope the
@@ -209,31 +209,35 @@ def run_pipeline(
                 logger.info("phase %s: %.1fs", name, now - phase_t)
             phase_t = now
 
+        def _small_dim(table: str, build, natural) -> DataFrame:
+            """Key a small dim on the driver and swap it in; the frame in
+            hand (an Arrow LocalRelation) serves the later joins, so the
+            table is not read back. One task writes it, so it stays one
+            file."""
+            dim = build(spark, wh.read(table), natural)
+            wh.overwrite_dim(table, dim.coalesce(1))
+            _mark(table)
+            return dim
+
         # -- dimension builds (existing keys preserved; O-46/O-47 set-at-a-time) --
-        dim_study = build_dim_study(wh.read("dim_study"), metadata)
-        wh.overwrite_dim("dim_study", dim_study)
-        dim_study = wh.read("dim_study")
-        _mark("dim_study")
-
-        dim_illness = build_dim_illness(wh.read("dim_illness"), metadata)
-        wh.overwrite_dim("dim_illness", dim_illness)
-        dim_illness = wh.read("dim_illness")
-        _mark("dim_illness")
-
-        dim_platform = build_dim_platform(wh.read("dim_platform"), metadata)
-        wh.overwrite_dim("dim_platform", dim_platform)
-        dim_platform = wh.read("dim_platform")
-        _mark("dim_platform")
-
-        dim_gene = build_dim_gene(wh.read("dim_gene"), expression)
-        wh.overwrite_dim("dim_gene", dim_gene)
-        dim_gene = wh.read("dim_gene")
-        _mark("dim_gene")
+        dim_study = _small_dim("dim_study", build_dim_study, [r["gse_accession"] for r in kept])
+        dim_illness = _small_dim(
+            "dim_illness", build_dim_illness, [v for r in kept for v in r["illnesses"]]
+        )
+        dim_platform = _small_dim(
+            "dim_platform", build_dim_platform, [v for r in kept for v in r["platforms"]]
+        )
+        dim_gene = _small_dim(
+            "dim_gene",
+            build_dim_gene,
+            [r[0] for r in expression.select("ensembl_id").distinct().collect()],
+        )
 
         dim_sample = build_dim_sample(
             wh.read("dim_sample"), metadata, dim_study, dim_illness, dim_platform
         )
         wh.overwrite_dim("dim_sample", dim_sample)
+        # read back: the plan in hand reads the table version the swap replaced
         dim_sample = wh.read("dim_sample")
         _mark("dim_sample")
 
@@ -252,8 +256,8 @@ def run_pipeline(
         )
         _mark("fact_expression")
 
-        quality_rows = [r.asDict() for r in metadata_quality(metadata).collect()]
-        _mark("dq")
+        lists = ("samples", "illnesses", "platforms")
+        quality_rows = [{k: v for k, v in r.items() if k not in lists} for r in kept]
         if config.logging.log_data_quality:
             for row in quality_rows:
                 logger.info("DQ %s", row)

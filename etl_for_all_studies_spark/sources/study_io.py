@@ -4,12 +4,16 @@ whitelist (O-5).
 All three are plain ``spark.read.csv`` scans — header-driven, tab-delimited,
 all-string schema (types are applied downstream so bad cells can be dropped
 with DQ accounting rather than failing the scan; reference semantics
-``expression_processing.py:93-102``).
+``expression_processing.py:93-102``). The schema is declared from the header
+the driver already sniffs, so opening a scan starts no Spark job; Spark's own
+header inference (one job per file) is the fallback for a header the sniff
+cannot name exactly.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class InputFormatError(ValueError):
@@ -51,17 +55,41 @@ def sniff_header(path: str) -> list[str] | None:
         return None
 
 
+def _header_column_names(header: list[str], case_sensitive: bool = False) -> list[str]:
+    """Column names Spark's CSV reader gives a header row: an empty name
+    becomes ``_c{i}``, and every occurrence of a repeated name (compared
+    case-insensitively unless ``case_sensitive``) gets its index appended.
+    A leading byte-order mark is dropped, as the reader drops it."""
+    header = [header[0].removeprefix("\ufeff"), *header[1:]]
+    fold = (lambda s: s) if case_sensitive else str.lower
+    seen: dict[str, int] = {}
+    for name in header:
+        if name:
+            seen[fold(name)] = seen.get(fold(name), 0) + 1
+    return [
+        f"_c{i}" if not name else f"{name}{i}" if seen[fold(name)] > 1 else name
+        for i, name in enumerate(header)
+    ]
+
+
 def _read_tsv(spark: SparkSession, path: str) -> DataFrame:
     header = sniff_header(path)
     max_cols = len(header) + 16 if header else _MAX_TSV_COLUMNS
-    return (
+    reader = (
         spark.read.option("sep", "\t")
         .option("header", True)
-        .option("inferSchema", False)  # all strings; casts are explicit downstream
         .option("encoding", "UTF-8")
         .option("maxColumns", max_cols)
-        .csv(path)
     )
+    # the univocity parser unquotes header cells and skips a blank first
+    # line; the sniff does neither, so those headers keep Spark's inference
+    if header is None or header == [""] or any('"' in c for c in header):
+        return reader.option("inferSchema", False).csv(path)  # all strings
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    schema = T.StructType(
+        [T.StructField(n, T.StringType()) for n in _header_column_names(header, case_sensitive)]
+    )
+    return reader.schema(schema).csv(path)
 
 
 def read_metadata_raw(spark: SparkSession, path: str) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 import logging
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PARTITIONED_BY_STUDY, TABLE_SCHEMAS
@@ -133,9 +133,9 @@ class Warehouse:
 
         The anti-join's build side is only the *keys* of existing rows in the
         touched studies — with study-partition pruning this stays proportional
-        to the studies being loaded, not the whole warehouse. The new rows are
-        persisted once so the returned count and the write share one
-        computation (cheaper than re-scanning the table before/after).
+        to the studies being loaded, not the whole warehouse. The count comes
+        from an ``Observation`` on the write itself, so it costs no job of
+        its own and the rows are computed once.
         """
         df = df.dropDuplicates(dedup_keys)
         existing = self.read(table)
@@ -145,16 +145,12 @@ class Warehouse:
                 *dedup_keys
             )
             df = df.join(existing_keys, on=dedup_keys, how="left_anti")
-        df = df.persist()
-        try:
-            written = df.count()
-            writer = df.write.mode("append")
-            if table in PARTITIONED_BY_STUDY:
-                writer = writer.partitionBy("study_key")
-            writer.parquet(self.path(table))
-        finally:
-            df.unpersist()
-        return written
+        appended = Observation()
+        writer = df.observe(appended, F.count(F.lit(1)).alias("rows")).write.mode("append")
+        if table in PARTITIONED_BY_STUDY:
+            writer = writer.partitionBy("study_key")
+        writer.parquet(self.path(table))
+        return appended.get["rows"]
 
     def overwrite_study_partitions(
         self, table: str, df: DataFrame, *, empty_studies: list[int] | None = None

@@ -9,12 +9,43 @@ single-partition sort, because dim_sample grows with the corpus
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 
+from dim_keys_reference import assign_surrogate_keys
 from etl_for_all_studies_spark.operators.dims import (
     _assign_sample_keys,
     build_dim_sample,
+    key_small_dim,
 )
+from etl_for_all_studies_spark.schemas import DIM_ILLNESS
+
+# novel labels mixing ASCII, Latin-1, CJK and one astral-plane character:
+# U+FF61 sorts before U+1F600 by code point (Spark's UTF-8 binary order) but
+# after it in UTF-16 order, so a UTF-16 comparison would misorder them
+_LABELS = ["b", "a", "É", "e", "ß", "日本", "\uff61", "\U0001f600", "Z", "a", None]
+
+
+@pytest.mark.parametrize(
+    "existing_rows",
+    [None, [], [(1, "e"), (5, "m")], [(3, "\U0001f600"), (2, "Zz")]],
+    ids=["first-build", "empty", "existing-with-gap", "existing-non-ascii"],
+)
+def test_driver_keys_equal_window_form(spark, existing_rows):
+    """Driver key assignment equals the retired Spark-window form: existing
+    rows keep their keys, novel labels follow from ``max(existing)+1`` in
+    code-point order."""
+    existing = (
+        None
+        if existing_rows is None
+        else spark.createDataFrame(existing_rows, DIM_ILLNESS)
+    )
+    got = key_small_dim(spark, DIM_ILLNESS, existing, _LABELS)
+    natural = spark.createDataFrame([(v,) for v in _LABELS], "illness_label string")
+    want = assign_surrogate_keys(existing, natural, "illness_key", ["illness_label"])
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.schema == DIM_ILLNESS
+    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
 
 
 def _incoming(spark, n_studies=5, per_study=40):

@@ -299,3 +299,41 @@ def test_sniff_header_non_utf8_falls_back(tmp_path, spark):
     # the Spark CSV scan still reads it leniently
     df = read_expression_wide(spark, str(p))
     assert df.count() == 1
+
+
+@pytest.mark.parametrize(
+    "header, declared",
+    [
+        ("a\t\tb", True),  # empty name -> _c1
+        ("a\tb\ta", True),  # exact duplicate -> a0, a2
+        ("Gene\tS1\ts1\tS1", True),  # case-only duplicate -> S11, s12, S13
+        ("Gène\tÉchantillon\té\tÉ\tSTRASSE\tstraße", True),  # non-ASCII
+        ("\ufeffGene\tS1", True),  # the reader drops a byte-order mark
+        ('"Gene"\t"S1"', False),  # quoted: Spark unquotes, so it infers
+    ],
+    ids=["empty", "duplicate", "case-duplicate", "non-ascii", "bom", "quoted"],
+)
+def test_declared_tsv_schema_matches_header_inference(spark, tmp_path, header, declared):
+    """The schema ``_read_tsv`` declares from the sniffed header names the
+    columns as Spark's header inference does, reads the same rows, and
+    opening the scan starts no job; a quoted header falls back to
+    inference (one job)."""
+    from etl_for_all_studies_spark.sources.study_io import _read_tsv
+
+    p = tmp_path / "t.tsv"
+    width = len(header.split("\t"))
+    p.write_text(
+        header + "\n" + "\t".join(str(i) for i in range(width)) + "\nx\n",
+        encoding="utf-8",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("declared-tsv", "open the scan only")
+    try:
+        df = _read_tsv(spark, str(p))
+        jobs = len(sc.statusTracker().getJobIdsForGroup("declared-tsv"))
+    finally:
+        sc.setJobGroup(None, None)
+    inferred = spark.read.option("sep", "\t").option("header", True).csv(str(p))
+    assert df.columns == inferred.columns
+    assert df.collect() == inferred.collect()
+    assert jobs == (0 if declared else 1)

@@ -108,6 +108,56 @@ def test_correlation_job_collects_targets_once(spark, app_config, monkeypatch):
     assert calls.count("run_correlation_job") == 2
 
 
+def test_pipeline_job_budget(spark, app_config):
+    """``run_pipeline`` on the fixture launches an exact number of Spark
+    jobs, counted by job group: one metadata collect, one gene-key collect,
+    the whitelist check, one write per dim and the fact write with their
+    broadcasts. TSV scans declare their schema, so no CSV header-inference
+    job runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-budget", "run_pipeline on a fresh warehouse")
+    try:
+        run_pipeline(app_config, spark=spark)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("pipeline-budget")
+    stages = [
+        tracker.getStageInfo(s)
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    header_jobs = [s.name for s in stages if s is not None and s.name.startswith("csv at")]
+    assert header_jobs == []
+    assert len(jobs) == 28
+
+
+def test_phase3_quarantine_leaves_no_trace_in_dims(spark, app_config, study_tree):
+    """A study whose expression header shares no sample with its metadata
+    is quarantined after the metadata collect: none of its labels, samples
+    or DQ rows reach the warehouse or the result."""
+    bad = study_tree["studies"] / "GSE2"
+    bad.mkdir()
+    (bad / "metadata_GSE2.tsv").write_text(
+        "refinebio_accession_code\texperiment_accession\tcharacteristics_ch2_illness\t"
+        "refinebio_platform\nB1\tGSE2\tAsthma\tGPL570\n"
+    )
+    (bad / "expression_GSE2.tsv").write_text("Gene\tZ1\nENSG01\t1.0\n")
+    res = run_pipeline(app_config, spark=spark)
+    assert res.processed_studies == ["GSE1"]
+    assert [f.study_dir for f in res.failures] == [str(bad)]
+    assert [q["gse_accession"] for q in res.quality] == ["GSE1"]
+    wh = pathlib.Path(str(app_config.warehouse.path))
+
+    def col(table, name):
+        return sorted(r[name] for r in spark.read.parquet(str(wh / table)).collect())
+
+    assert col("dim_study", "gse_accession") == ["GSE1"]
+    assert col("dim_illness", "illness_label") == ["Diabetes", "Healthy"]
+    assert col("dim_platform", "platform_accession") == ["GPL96"]
+    assert col("dim_sample", "gsm_accession") == ["S1", "S2", "S3"]
+
+
 def test_incremental_study_load_preserves_keys(spark, tmp_path):
     """Adding a NEW study later must not renumber existing dims/facts, and
     cross-study dims (genes, platforms) must be shared, not duplicated."""

@@ -43,7 +43,8 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={
             "spark.ui.enabled": "true",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            # the heap perfbench uses; SPARK_GRAFT_DRIVER_MEM overrides it
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "3g"),
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         },
     )

@@ -16,7 +16,10 @@ add jobs. Novel keys are sorted in code-point order, which is the UTF-8
 binary order Spark sorts strings in, so the keys equal the ``row_number()``
 form this replaced (``tests/dim_keys_reference.py`` keeps that form as the
 executable spec). The dim comes back as an Arrow ``LocalRelation``, which
-broadcasts and writes without the RDD round trip a Python-list frame costs.
+writes without the RDD round trip a Python-list frame costs and collects
+without a job. Its keys are applied to other frames on the driver's terms
+too: a constant lookup (``session.literal_lookup``) of the natural key,
+where a broadcast join would run one Spark job per dim.
 
 ``dim_sample`` stays in Spark: it is the one dim that grows with the corpus
 (10k–50k samples/study × many studies), so its keys are assigned
@@ -24,19 +27,18 @@ broadcasts and writes without the RDD round trip a Python-list frame costs.
 dense per-study offsets (a window over one row per study) — numerically
 identical to a global sort by ``(study_key, gsm_accession)`` but with no
 fact-scale single-partition Exchange and nothing proportional to the
-samples on the driver. The facts side only ever *joins* (broadcast) against
-these dims.
+samples on the driver.
 """
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DIM_GENE, DIM_ILLNESS, DIM_PLATFORM, DIM_STUDY, UNKNOWN
-from ..session import local_frame
+from ..session import literal_lookup, local_frame
 
 
 def key_small_dim(
@@ -122,41 +124,34 @@ def _assign_sample_keys(incoming: DataFrame, base: int) -> DataFrame:
 def build_dim_sample(
     existing: DataFrame | None,
     metadata: DataFrame,
-    dim_study: DataFrame,
-    dim_illness: DataFrame,
-    dim_platform: DataFrame,
+    study_keys: Mapping[str, int],
+    illness_keys: Mapping[str, int],
+    platform_keys: Mapping[str, int],
 ) -> DataFrame:
     """dim_sample: 1 row per (gsm_accession, study_key) (``models.py:52-69``).
 
-    * UNKNOWN platform/illness → NULL FK (O-17, ``repositories.py:148-173``);
+    ``metadata`` must hold one row per ``(gse_accession, gsm_accession)``:
+    ``study_key`` is a function of the accession, so that is one row per
+    output key, and this build does not deduplicate again. The three
+    mappings are the small dims' natural → surrogate keys, applied as
+    constant lookups (no join, no job):
+
+    * a study without a key drops its rows, as an inner join would;
+    * UNKNOWN (or any unkeyed) platform/illness → NULL FK (O-17,
+      ``repositories.py:148-173``), as a left join would;
     * enrichment on re-run (O-47, ``repositories.py:188-229``): an existing
       sample's UNKNOWN/NULL attributes are filled from new metadata, but a
       known value is never downgraded;
     * surrogate keys preserved for existing (gsm, study) pairs.
-
-    All dim joins broadcast (dims ≪ broadcast threshold).
     """
-    incoming = (
-        metadata.join(F.broadcast(dim_study), on="gse_accession", how="inner")
-        .join(
-            F.broadcast(dim_illness),
-            on=metadata["illness"] == dim_illness["illness_label"],
-            how="left",
-        )
-        .join(
-            F.broadcast(dim_platform),
-            on=metadata["platform"] == dim_platform["platform_accession"],
-            how="left",
-        )
-        .select(
-            "gsm_accession",
-            "study_key",
-            F.col("platform_key"),
-            F.col("illness_key"),
-            F.col("age"),
-            F.col("sex"),
-        )
-        .dropDuplicates(["gsm_accession", "study_key"])
+    study_key = literal_lookup(study_keys)(F.col("gse_accession"))
+    incoming = metadata.where(study_key.isNotNull()).select(
+        "gsm_accession",
+        study_key.alias("study_key"),
+        literal_lookup(platform_keys)(F.col("platform")).alias("platform_key"),
+        literal_lookup(illness_keys)(F.col("illness")).alias("illness_key"),
+        "age",
+        "sex",
     )
     if existing is None or existing.isEmpty():
         return _assign_sample_keys(incoming, 0).select(

@@ -7,25 +7,27 @@ in metadata (warn on missing, error when none survive), each cell parsed with
 ``float()`` and *skipped* (not nulled) when unparseable, and gene rows kept
 only when the id is in the whitelist.
 
-Spark-first formulation: an explicit ``select`` of the intersected columns
-(airtight column pruning — the scan's ReadSchema shrinks to what's needed),
-``DataFrame.unpivot`` to long form (the wide layout is an I/O artifact; long
-is Spark's native shape), a ``cast('double')`` + not-null filter for the
-drop-bad-cells semantics, and a **broadcast left-semi join** against the
-whitelist (never shuffles the big expression side; ~99% selectivity per the
-reference's own envelope, ``docs/genomic-etl-requirements.md:45``).
+Two melts give the same long rows. :func:`expression_text_to_long` reads a
+plain TSV as text lines and splits only the rows the whitelist keeps; the
+pipeline uses it for every study whose raw header it can read and that
+carries no quote character. :func:`expression_wide_to_long` unpivots a CSV
+scan (the full CSV dialect) and serves the rest. Both apply the whitelist
+per gene row, before any cell is emitted, as a constant membership test
+(``session.literal_lookup``): no join, no broadcast job, no shuffle of the
+big side. The cast is a ``try_cast('double')`` + not-null filter, the
+drop-bad-cells semantics.
 """
 from __future__ import annotations
 
 import logging
-from collections.abc import Sequence
+from collections.abc import Collection, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..session import local_frame
+from ..session import literal_array, literal_lookup
+from ..sources.study_io import InputFormatError, header_column_names, sniff_header
 
 logger = logging.getLogger(__name__)
 
@@ -44,35 +46,19 @@ def intersect_sample_columns(
     metadata samples absent from the expression header (warned, reference
     ``expression_processing.py:54-67``).
     """
-    sample_cols = [c for c in wide.columns if c != "ensembl_id"]
+    return _intersect([c for c in wide.columns if c != "ensembl_id"], metadata_samples)
+
+
+def _intersect(
+    sample_cols: Sequence[str], metadata_samples: Sequence[str]
+) -> tuple[list[str], list[str]]:
     wanted = set(metadata_samples)
     kept = [c for c in sample_cols if c in wanted]
     missing = sorted(wanted - set(sample_cols))
     return kept, missing
 
 
-def expression_wide_to_long(
-    wide: DataFrame,
-    metadata_samples: Sequence[str],
-    accession: str,
-    gene_whitelist: DataFrame | None = None,
-) -> DataFrame:
-    """Wide matrix → long `(gse_accession, ensembl_id, gsm_accession,
-    expression_value)` with bad-cell drop semantics (O-14 + melt + O-15).
-
-    ``gene_whitelist`` applies the O-13 gene filter as a broadcast semi-join
-    on the WIDE side, before the unpivot — the reference's own order
-    (``expression_processing.py:83-84`` skips non-whitelist gene rows while
-    still row-oriented, before emitting cells). Catalyst cannot push a
-    semi-join below the unpivot's Expand (only the derived not-null/
-    not-empty predicates migrate), so without the prefilter every CELL pays
-    the Expand + try_cast + hash-probe; with it, only rows do — at the
-    reference's 10k-sample envelope that is a per-study factor of
-    n_samples (10,000×) on the Expand's output volume whenever the
-    whitelist is selective, and one cheap row probe when it isn't.
-    Passing the whitelist here makes :func:`filter_to_whitelist`
-    downstream redundant (kept for long-form callers)."""
-    kept, missing = intersect_sample_columns(wide, metadata_samples)
+def _check_kept(kept: list[str], missing: list[str], accession: str) -> None:
     if missing:
         logger.warning(
             "Study %s: %d metadata samples missing from expression header: %s",
@@ -82,6 +68,32 @@ def expression_wide_to_long(
         raise ExpressionSchemaError(
             f"Study {accession}: no expression columns match metadata samples"
         )
+
+
+def _whitelisted(gene: Column, gene_whitelist: Collection[str]) -> Column:
+    """``gene`` is in the whitelist: a constant test, no join."""
+    return literal_lookup(dict.fromkeys(gene_whitelist, 0))(gene).isNotNull()
+
+
+def expression_wide_to_long(
+    wide: DataFrame,
+    metadata_samples: Sequence[str],
+    accession: str,
+    gene_whitelist: Collection[str] | None = None,
+) -> DataFrame:
+    """Wide matrix → long `(gse_accession, ensembl_id, gsm_accession,
+    expression_value)` with bad-cell drop semantics (O-14 + melt + O-15).
+
+    ``gene_whitelist`` applies the O-13 gene filter on the WIDE side,
+    before the unpivot — the reference's own order
+    (``expression_processing.py:83-84`` skips non-whitelist gene rows while
+    still row-oriented, before emitting cells) — so only gene rows pay the
+    test, not cells: at the reference's 10k-sample envelope a factor of
+    n_samples (10,000×) on the Expand's input whenever the whitelist is
+    selective. Passing the whitelist here makes :func:`filter_to_whitelist`
+    downstream redundant (kept for long-form callers)."""
+    kept, missing = intersect_sample_columns(wide, metadata_samples)
+    _check_kept(kept, missing, accession)
     # Each Column built here is a few driver round trips to the JVM, and a
     # 100-sample study paid ~0.2 s of planning for two per-sample lists
     # (this select and unpivot's values). So the select runs only when
@@ -92,14 +104,7 @@ def expression_wide_to_long(
         else wide.select("ensembl_id", *[F.col(f"`{c}`") for c in kept])
     )
     if gene_whitelist is not None:
-        wl = gene_whitelist.select(
-            F.trim(F.col("ensembl_id")).alias("_wl_ensembl_id")
-        )
-        pruned = pruned.join(
-            F.broadcast(wl),
-            F.trim(F.col("ensembl_id")) == F.col("_wl_ensembl_id"),
-            "left_semi",
-        )
+        pruned = pruned.where(_whitelisted(F.trim(F.col("ensembl_id")), gene_whitelist))
     long = pruned.unpivot(
         ids=["ensembl_id"],
         values=None,
@@ -119,16 +124,13 @@ def expression_wide_to_long(
     )
 
 
-# Above this sample-column count the pipeline melts from a TEXT scan
-# instead of a wide CSV schema. Measured at the 50k-sample envelope
-# (tools/bench_etl_wide.py): Spark's wide-row CSV path is superlinear in
-# column count — per-cell throughput fell 4x from 10k to 50k columns
-# (1.15M → 0.40M cells/s; 2,485 s ETL) because every row materializes a
-# 50k-field UnsafeRow and univocity tokenizes every cell of every row,
-# whitelist-dropped or not. The text melt keeps rows narrow (one string),
-# probes ONLY the first field for the whitelist (substring_index — no full
-# split for dropped genes), and explodes just the kept rows' cells.
-_TEXT_MELT_THRESHOLD = 4096
+def _unquoted(field: Column) -> Column:
+    """A TSV field as the CSV reader gives it: one wrapped in double quotes
+    loses them. The regex runs only on a field that starts with a quote:
+    on every cell it would double the melt's per-cell cost."""
+    return F.when(
+        field.startswith('"'), F.regexp_replace(field, '^"(.*)"$', "$1")
+    ).otherwise(field)
 
 
 def expression_text_to_long(
@@ -136,71 +138,58 @@ def expression_text_to_long(
     path: str,
     metadata_samples: Sequence[str],
     accession: str,
-    gene_whitelist: DataFrame | None = None,
+    gene_whitelist: Collection[str] | None = None,
 ) -> DataFrame:
-    """Ultra-wide twin of :func:`expression_wide_to_long`: same output,
-    same O-13/O-14/O-15 semantics, built from ``spark.read.text``.
+    """Text-scan twin of :func:`expression_wide_to_long`: same rows, same
+    O-13/O-14/O-15 semantics, built from ``spark.read.text``.
 
-    Shape: one narrow string row per line → whitelist semi-join on the
-    FIRST tab field (``substring_index`` — dropped gene rows never pay a
-    full split) → ``split`` + ``posexplode`` of kept rows → broadcast join
-    of cell position → (kept) sample name, which applies the O-14 pruning
-    positionally → ``try_cast`` bad-cell drop. Every cell-level stage runs
-    only on whitelist-kept rows; the full-corpus scan cost is I/O plus one
-    first-field probe per line.
+    Shape: one narrow string row per line → whitelist test on the FIRST tab
+    field (``substring_index`` — dropped gene rows are never split) →
+    ``split`` + ``posexplode`` of kept rows → each cell position's sample
+    name from one array literal (NULL for a position the metadata does not
+    keep: the O-14 pruning, applied positionally) → ``try_cast`` bad-cell
+    drop. Columns are named as the CSV reader names them (duplicates and
+    empty names renamed), so the same samples match. Every cell-level stage
+    runs only on whitelist-kept rows, and a row stays one string, where a
+    CSV scan tokenizes every cell of every row into a row as wide as the
+    header (per-cell throughput fell 4× from 10k to 50k columns on that
+    path, SCALE.md).
 
-    Contract: plain TSV (no quoted fields embedding tabs/newlines) — the
-    format the reference's own reader emits/consumes
+    Contract: plain TSV — a readable, unquoted header (the pipeline checks
+    it with ``is_plain_header``) and no field embedding a tab or a line
+    break, the format the reference's own reader consumes
     (``expression_processing.py:38-52`` splits on the delimiter with no
-    quote handling). The pipeline routes here only above
-    ``_TEXT_MELT_THRESHOLD`` columns and only when the header carries no
-    quote character; under the threshold the univocity path (full CSV
-    dialect) remains the default.
+    quote handling). As in the CSV scan, a byte-order mark, CRLF line ends,
+    blank lines and rows shorter or longer than the header are tolerated,
+    and a quoted cell is unquoted.
     """
-    from ..sources.study_io import InputFormatError, sniff_header
-
     header = sniff_header(path)
     if header is None:
         raise InputFormatError(
             f"Text melt needs a locally sniffable header: {path}"
         )
-    if len(header) < 2:
+    names = header_column_names(spark, header)
+    if len(names) < 2:
         raise InputFormatError(
             f"Expression file must have a gene column plus ≥1 sample column: {path}"
         )
-    first = header[0].strip()
+    first = names[0].strip()
     if first.casefold() not in {"gene", "ensembl_id"}:
         raise InputFormatError(
             f"Expression file's first column must be 'Gene' or 'ensembl_id', got {first!r}: {path}"
         )
-    wanted = set(metadata_samples)
-    kept_pos = [(i, name) for i, name in enumerate(header) if i > 0 and name in wanted]
-    missing = sorted(wanted - {name for _, name in kept_pos})
-    if missing:
-        logger.warning(
-            "Study %s: %d metadata samples missing from expression header: %s",
-            accession, len(missing), missing[:10],
-        )
-    if not kept_pos:
-        raise ExpressionSchemaError(
-            f"Study {accession}: no expression columns match metadata samples"
-        )
+    kept, missing = _intersect(names[1:], metadata_samples)
+    _check_kept(kept, missing, accession)
+    wanted = set(kept)
+    sample_at = literal_array([None, *(n if n in wanted else None for n in names[1:])], "string")
 
-    lines = spark.read.text(path)
-    header_line = "\t".join(header)
-    rows = lines.where(
-        (F.col("value") != header_line) & (F.length(F.col("value")) > 0)
-    )
+    # the header line: the text reader drops its byte-order mark and the CR
+    # of a CRLF, as the sniff does (a blank line yields no cell)
+    keep = F.col("value") != "\t".join(header)
+    gene = F.trim(_unquoted(F.substring_index(F.col("value"), "\t", 1)))
     if gene_whitelist is not None:
-        wl = gene_whitelist.select(
-            F.trim(F.col("ensembl_id")).alias("_wl_ensembl_id")
-        )
-        rows = rows.join(
-            F.broadcast(wl),
-            F.trim(F.substring_index(F.col("value"), "\t", 1))
-            == F.col("_wl_ensembl_id"),
-            "left_semi",
-        )
+        keep &= _whitelisted(gene, gene_whitelist)
+    rows = spark.read.text(path).where(keep)
     # ensembl_id MUST be computed in a projection BELOW the generator:
     # expressions selected alongside posexplode land in the Project above
     # the Generate node and are re-evaluated per EXPLODED row — with
@@ -211,42 +200,31 @@ def expression_text_to_long(
     # column). Two selects keep the split/probe once-per-input-row;
     # CollapseProject cannot merge through Generate.
     parsed = rows.select(
-        F.trim(F.substring_index(F.col("value"), "\t", 1)).alias("ensembl_id"),
+        gene.alias("ensembl_id"),
         F.split(F.col("value"), "\t", -1).alias("__arr"),
     )
     cells = parsed.select(
         "ensembl_id",
         F.posexplode(F.col("__arr")).alias("pos", "raw_value"),  # pos 0 = gene id
     )
-    pos_df = local_frame(
-        spark,
-        kept_pos,
-        T.StructType(
-            [T.StructField("pos", T.IntegerType()), T.StructField("gsm_accession", T.StringType())]
-        ),
-    )
     return (
-        cells.join(F.broadcast(pos_df), "pos")  # O-14: unkept positions drop here
-        .withColumn("expression_value", F.col("raw_value").try_cast("double"))
-        .where(F.col("expression_value").isNotNull())  # O-15 bad-cell drop
-        .select(
+        cells.select(
             F.lit(accession).alias("gse_accession"),
             "ensembl_id",
-            "gsm_accession",
-            "expression_value",
+            # a position past the header (a long row) has no sample: NULL
+            F.try_element_at(sample_at, F.col("pos") + 1).alias("gsm_accession"),
+            _unquoted(F.col("raw_value")).try_cast("double").alias("expression_value"),
         )
+        # O-14: unkept positions drop here; O-15: so do unparseable cells
+        .where(F.col("gsm_accession").isNotNull() & F.col("expression_value").isNotNull())
     )
 
 
-def filter_to_whitelist(long: DataFrame, gene_whitelist: DataFrame) -> DataFrame:
-    """Gene whitelist semi-join (O-13, ``expression_processing.py:83-84``).
-
-    Broadcast left-semi: the whitelist is tiny and the expression side is the
-    100 TB side — the big side is filtered map-side with zero shuffle.
-    """
-    return long.join(
-        F.broadcast(gene_whitelist.select("ensembl_id")), on="ensembl_id", how="left_semi"
-    )
+def filter_to_whitelist(long: DataFrame, gene_whitelist: Collection[str]) -> DataFrame:
+    """Gene whitelist filter on long rows (O-13,
+    ``expression_processing.py:83-84``): a constant membership test, so
+    the big side is filtered where it is scanned, with zero shuffle."""
+    return long.where(_whitelisted(F.col("ensembl_id"), gene_whitelist))
 
 
 def dropped_cell_count(wide: DataFrame, kept: Sequence[str]) -> DataFrame:

@@ -88,6 +88,10 @@ def normalize_metadata(
       (O-18, ``pipeline.py:131-139``) — the raw value is kept as
       ``source_experiment_accession`` so callers can count mismatches for DQ;
     * age/sex/illness/platform coalesced with UNKNOWN fallback (O-10).
+
+    A sample listed twice keeps both rows: the pipeline deduplicates the
+    union of every study's frame by ``(gse_accession, gsm_accession)`` in
+    one shuffle, where a dedup here would cost one shuffle job per study.
     """
     fm = field_mappings or FieldMappingConfig()
     missing = [c for c in REQUIRED_COLUMNS if c not in raw.columns]
@@ -106,7 +110,6 @@ def normalize_metadata(
             _first_non_empty(raw, fm.platform_fields).alias("platform"),
             F.trim(F.col("experiment_accession")).alias("source_experiment_accession"),
         )
-        .dropDuplicates(["gsm_accession"])
     )
 
 

@@ -58,11 +58,15 @@ def _study_spearman(
     group) + ``(ties + 1) / 2`` (weight inside it). Ranks are kept centred
     on the pair's mean ``(n + 1) / 2``: half-integers, so every sum below
     is exact in float64 and ρ does not depend on row order. Rows are still
-    sorted by (gene_key, gsm_accession) before any sum.
+    sorted by (gene_key, sample) before any sum.
+
+    ``table``'s third column is the sample identity, of any sortable type
+    (the job passes ``sample_key``, registry callers ``gsm_accession``).
     """
-    t = table.sort_by([("gene_key", "ascending"), ("gsm_accession", "ascending")])
+    sample = table.column_names[2]
+    t = table.sort_by([("gene_key", "ascending"), (sample, "ascending")])
     genes, g = np.unique(t["gene_key"].to_numpy(), return_inverse=True)
-    s_enc = t["gsm_accession"].combine_chunks().dictionary_encode()
+    s_enc = t[sample].combine_chunks().dictionary_encode()
     s = s_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     n_genes, n_samp = len(genes), len(s_enc.dictionary)
     vals = t["expression_value"].combine_chunks()
@@ -70,7 +74,7 @@ def _study_spearman(
     v = vals.fill_null(0.0).to_numpy(zero_copy_only=False)
 
     # value order within each gene: NULL first, ascending, NaN last; the
-    # sort is stable, so (gene_key, gsm_accession) order breaks ties
+    # sort is stable, so (gene_key, sample) order breaks ties
     order = np.lexsort((v, ~null, g))
     gv, sv, vv, nv = g[order], s[order], v[order], null[order]
     tie = (gv[1:] == gv[:-1]) & (nv[1:] == nv[:-1]) & (
@@ -82,7 +86,7 @@ def _study_spearman(
     tie_lo, tie_hi = tie_start[tie_id], np.append(tie_start[1:], len(gv))[tie_id]
     gene_lo = np.searchsorted(g, np.arange(n_genes + 1))  # same in both orders
     seg_lo = gene_lo[gv]
-    # cells are contiguous in (gene_key, gsm_accession) order; ``order``
+    # cells are contiguous in (gene_key, sample) order; ``order``
     # maps each value-ordered row back to it
     cell_new = np.concatenate(([True], (g[1:] != g[:-1]) | (s[1:] != s[:-1])))
     cf = np.bincount(g * n_samp + s, minlength=n_genes * n_samp)
@@ -136,14 +140,14 @@ def _study_spearman(
 
 
 def _kernel_pairs(e: DataFrame, min_samples: int) -> DataFrame:
-    """Gated pair rows of every study in ``e``, one kernel call per study.
+    """Gated pair rows of every study in ``e`` (study_key, gene_key, a
+    sample identity, expression_value), one kernel call per study.
     Rows with a NULL study, gene or sample key never meet a partner on an
     equi-join, so they are dropped first. The numbered repartition is the
     grouping's exchange; AQE does not coalesce it, so a few small studies
     do not share one task."""
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    keys = ["study_key", "gene_key", "gsm_accession"]
-    keyed = e.dropna(subset=keys).repartition(n_part, "study_key")
+    keyed = e.dropna(subset=e.columns[:3]).repartition(n_part, "study_key")
     block_elems = _KERNEL_BLOCK_ELEMS  # read here: workers import the module afresh
 
     def kernel(key, table):  # no annotations: applyInArrow infers its API from them
@@ -196,9 +200,13 @@ def compute_gene_pair_correlations(
     computed_at: str | None = None,
     pvalue_dist: str = "normal",
 ) -> DataFrame:
-    """Long-form expression (study_key, gene_key, gsm_accession,
-    expression_value) → rows matching ``schemas.FACT_GENE_PAIR_CORR``.
-    Lazy: builds the plan and runs no job.
+    """Long-form expression (study_key, gene_key, sample_key or
+    gsm_accession, expression_value) → rows matching
+    ``schemas.FACT_GENE_PAIR_CORR``. Lazy: builds the plan and runs no job.
+
+    The sample column only identifies a study's samples, so either serves:
+    ``sample_key`` (when present) is one per ``(gsm_accession,
+    study_key)``, and the kernel's rows do not depend on sample order.
 
     ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
     the reference's no-SciPy fallback; ``"t"`` is SciPy's primary Student-t
@@ -206,7 +214,8 @@ def compute_gene_pair_correlations(
     ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy). Both
     are JVM expressions.
     """
-    e = expression.select("study_key", "gene_key", "gsm_accession", "expression_value")
+    sample = "sample_key" if "sample_key" in expression.columns else "gsm_accession"
+    e = expression.select("study_key", "gene_key", sample, "expression_value")
     return _correlate(
         _kernel_pairs(e, min_samples),
         computed_at=computed_at or _utc_now_iso(),

@@ -1,13 +1,15 @@
 """Standalone correlation refresh job (reference entry point #2,
 ``src/etl_for_all_studies/correlation_job.py:165-238``).
 
-Loads the expression matrix **long-form** (fact_expression ⋈ dim_sample,
-O-7a/O-20 — the reference's nested-dict pivot is a single-node artifact and is
-not reproduced), resolves target studies (O-7b with the requested-vs-found
-anti-diff O-26), computes all-pairs Spearman + BH per study in one plan, and
-refreshes ``fact_gene_pair_corr`` via dynamic partition overwrite (O-9b).
-Studies whose matrix is empty get their stale partitions cleared
-(``correlation_job.py:62-82``).
+Loads the expression matrix **long-form** from fact_expression (O-7a/O-20 —
+the reference's nested-dict pivot is a single-node artifact and is not
+reproduced; ``sample_key`` is each study's sample identity, one per
+``(gsm_accession, study_key)``, so dim_sample is not joined), resolves
+target studies (O-7b with the requested-vs-found anti-diff O-26), computes
+all-pairs Spearman + BH per study in one plan, and refreshes
+``fact_gene_pair_corr`` via dynamic partition overwrite (O-9b), counting
+each study's pairs during the write. Studies whose matrix is empty get their
+stale partitions cleared (``correlation_job.py:62-82``).
 """
 from __future__ import annotations
 
@@ -51,9 +53,8 @@ def run_correlation_job(
     )
     wh = Warehouse(spark, str(config.warehouse.path))
     fact = wh.read("fact_expression")
-    dim_sample = wh.read("dim_sample")
     dim_study = wh.read("dim_study")
-    if fact is None or dim_sample is None or dim_study is None:
+    if fact is None or dim_study is None:
         logger.warning("Warehouse has no expression data; nothing to do")
         return CorrelationJobResult([], list(accessions or []), {}, time.monotonic() - t0)
 
@@ -77,36 +78,15 @@ def run_correlation_job(
     target_keys = [k for k, _ in targets]
 
     # O-7a/O-20: per-study matrix, long form; partition pruning via study_key.
-    expression = (
-        fact.where(F.col("study_key").isin(target_keys))
-        .join(
-            F.broadcast(dim_sample.select("sample_key", "gsm_accession")),
-            on="sample_key",
-        )
-        .select("study_key", "gene_key", "gsm_accession", "expression_value")
+    expression = fact.where(F.col("study_key").isin(target_keys)).select(
+        "study_key", "gene_key", "sample_key", "expression_value"
     )
+    corr = compute_gene_pair_correlations(
+        expression, min_samples=config.processing.min_samples, pvalue_dist=pvalue_dist
+    )
+    counts = wh.overwrite_study_partitions("fact_gene_pair_corr", corr, studies=target_keys)
 
-    from ..caching import CacheScope
-
-    with CacheScope() as scope:
-        corr = scope.persist(
-            compute_gene_pair_correlations(
-                expression,
-                min_samples=config.processing.min_samples,
-                pvalue_dist=pvalue_dist,
-            )
-        )  # computed once, used for both the count and the write
-
-        counts = {
-            row["study_key"]: row["cnt"]
-            for row in corr.groupBy("study_key")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        empty = [k for k in target_keys if k not in counts]
-        wh.overwrite_study_partitions("fact_gene_pair_corr", corr, empty_studies=empty)
-
-    by_accession = {acc: counts.get(key, 0) for key, acc in targets}
+    by_accession = {acc: counts[key] for key, acc in targets}
     elapsed = time.monotonic() - t0
     if config.logging.log_processing_time:
         logger.info(

@@ -166,12 +166,7 @@ def quarantine_orphan_facts(wh: Warehouse) -> dict[str, int]:
         .select(*fact.columns)
         .localCheckpoint()  # materialize BEFORE overwriting the source files
     )
-    kept_studies = {r[0] for r in clean.select("study_key").distinct().collect()}
-    wh.overwrite_study_partitions(
-        "fact_expression",
-        clean,
-        empty_studies=[s for s in studies if s not in kept_studies],
-    )
+    wh.overwrite_study_partitions("fact_expression", clean, studies=studies)
     return {"quarantined": n_quarantined, "studies_rewritten": len(studies)}
 
 

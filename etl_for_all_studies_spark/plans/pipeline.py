@@ -33,15 +33,12 @@ from ..operators.dims import (
     build_dim_sample,
     build_dim_study,
 )
-from ..operators.expression import (
-    _TEXT_MELT_THRESHOLD,
-    expression_text_to_long,
-    expression_wide_to_long,
-)
+from ..operators.expression import expression_text_to_long, expression_wide_to_long
 from ..operators.metadata_norm import metadata_quality, normalize_metadata
-from ..session import get_spark
+from ..session import get_spark, literal_lookup
 from ..sources.discovery import discover_studies, discover_study_files
 from ..sources.study_io import (
+    is_plain_header,
     read_expression_wide,
     read_gene_filter,
     read_metadata_raw,
@@ -94,20 +91,25 @@ def run_pipeline(
     failures: list[StudyFailure] = []
 
     # Phase 1 — plan-time discovery: per study, build the normalized-metadata
-    # frame and open the wide expression scan (schema declared from the
-    # sniffed header; no job). A study with missing/malformed files is
-    # quarantined (O-45).
-    staged: list[tuple[str, str, DataFrame, DataFrame, str]] = []
+    # frame and pick its melt. A plain-TSV expression file (its raw header
+    # readable and unquoted) melts from a text scan; any other opens the
+    # wide CSV scan (schema declared from the sniffed header; no job). Quote
+    # detection must read the RAW header: the CSV reader strips quotes, so
+    # a column name never shows one. A study with missing/malformed files
+    # is quarantined (O-45).
+    staged: list[tuple[str, str, DataFrame, DataFrame | None, str]] = []
     for study_dir in discover_studies(config.processing.input_directory):
         try:
             files = discover_study_files(study_dir)
             raw_md = read_metadata_raw(spark, str(files.metadata_path))
             md = normalize_metadata(raw_md, files.accession, config.field_mappings)
-            wide = read_expression_wide(spark, str(files.expression_path))
-            staged.append(
-                (str(study_dir), files.accession, md, wide,
-                 str(files.expression_path))
+            expr_path = str(files.expression_path)
+            wide = (
+                None
+                if is_plain_header(sniff_header(expr_path))
+                else read_expression_wide(spark, expr_path)
             )
+            staged.append((str(study_dir), files.accession, md, wide, expr_path))
         except Exception as exc:  # noqa: BLE001 — quarantine, don't kill the run
             logger.exception("Study %s failed; quarantined", study_dir)
             failures.append(StudyFailure(str(study_dir), f"{type(exc).__name__}: {exc}"))
@@ -132,9 +134,14 @@ def run_pipeline(
         # driver metadata for O-14) and its distinct illness and platform
         # labels (natural keys of the small dims). Plan construction stays
         # O(1) Spark jobs as the study count grows; the lists are bounded by
-        # total samples (≤50k/study). The frame is persisted first: the
-        # dim_sample build reads it again.
-        metadata = scope.persist(_union_all([md for _, _, md, _, _ in staged]))
+        # total samples (≤50k/study). A sample listed twice in a study counts
+        # once: one dedup of the union, one shuffle at any study count. The
+        # frame is persisted first: the dim_sample build reads it again.
+        metadata = scope.persist(
+            _union_all([md for _, _, md, _, _ in staged]).dropDuplicates(
+                ["gse_accession", "gsm_accession"]
+            )
+        )
         by_study = {
             r["gse_accession"]: r.asDict()
             for r in metadata_quality(
@@ -153,31 +160,15 @@ def run_pipeline(
         for study_dir, accession, _md, wide, expr_path in staged:
             samples = by_study.get(accession, {}).get("samples", [])
             try:
-                # whitelist applied on the WIDE side (O-13 before the melt, the
-                # reference's own order): the semi-join probes gene rows, not
-                # cells — Catalyst can't push it below the Expand itself.
-                # Ultra-wide studies (>_TEXT_MELT_THRESHOLD sample columns,
-                # plain-TSV header) melt from a TEXT scan instead: Spark's
-                # wide-row CSV path is superlinear in column count (measured
-                # 4x per-cell slowdown from 10k to 50k columns, SCALE.md r9).
-                # Quote detection must read the RAW header: univocity strips
-                # quotes during parsing, so wide.columns never contains '"'
-                # even for a fully-quoted file — a quoted ultra-wide study
-                # must stay on the CSV path (which unquotes data cells) or
-                # '"1.5"' would fail try_cast in the text melt. The sniff is
-                # a second driver-side header read, so only ultra-wide
-                # candidates pay it (ADVICE r10).
-                if len(wide.columns) - 1 > _TEXT_MELT_THRESHOLD and (
-                    (raw_header := sniff_header(expr_path)) is not None
-                    and not any('"' in c for c in raw_header)
-                ):
-                    long = expression_text_to_long(
+                # the whitelist is applied per gene row, before the melt
+                # emits cells (O-13 first, the reference's own order)
+                long = (
+                    expression_text_to_long(
                         spark, expr_path, samples, accession, gene_whitelist=genes
                     )
-                else:
-                    long = expression_wide_to_long(
-                        wide, samples, accession, gene_whitelist=genes
-                    )
+                    if wide is None
+                    else expression_wide_to_long(wide, samples, accession, gene_whitelist=genes)
+                )
                 expression_parts.append(long)
                 processed.append(accession)
             except Exception as exc:  # noqa: BLE001
@@ -209,42 +200,50 @@ def run_pipeline(
                 logger.info("phase %s: %.1fs", name, now - phase_t)
             phase_t = now
 
-        def _small_dim(table: str, build, natural) -> DataFrame:
-            """Key a small dim on the driver and swap it in; the frame in
-            hand (an Arrow LocalRelation) serves the later joins, so the
-            table is not read back. One task writes it, so it stays one
-            file."""
+        def _small_dim(table: str, build, natural) -> dict[str, int]:
+            """Key a small dim on the driver and swap it in; its natural →
+            surrogate keys come back for the later lookups, so the table is
+            not read back. The dim is an Arrow LocalRelation: collecting it
+            runs no job, and one task writes it, so it stays one file."""
             dim = build(spark, wh.read(table), natural)
             wh.overwrite_dim(table, dim.coalesce(1))
             _mark(table)
-            return dim
+            return {name: key for key, name in dim.collect()}
 
         # -- dimension builds (existing keys preserved; O-46/O-47 set-at-a-time) --
-        dim_study = _small_dim("dim_study", build_dim_study, [r["gse_accession"] for r in kept])
-        dim_illness = _small_dim(
+        study_keys = _small_dim(
+            "dim_study", build_dim_study, [r["gse_accession"] for r in kept]
+        )
+        illness_keys = _small_dim(
             "dim_illness", build_dim_illness, [v for r in kept for v in r["illnesses"]]
         )
-        dim_platform = _small_dim(
+        platform_keys = _small_dim(
             "dim_platform", build_dim_platform, [v for r in kept for v in r["platforms"]]
         )
-        dim_gene = _small_dim(
+        gene_keys = _small_dim(
             "dim_gene",
             build_dim_gene,
             [r[0] for r in expression.select("ensembl_id").distinct().collect()],
         )
 
         dim_sample = build_dim_sample(
-            wh.read("dim_sample"), metadata, dim_study, dim_illness, dim_platform
+            wh.read("dim_sample"), metadata, study_keys, illness_keys, platform_keys
         )
         wh.overwrite_dim("dim_sample", dim_sample)
         # read back: the plan in hand reads the table version the swap replaced
         dim_sample = wh.read("dim_sample")
         _mark("dim_sample")
 
-        # -- fact build: long expression × dims (broadcast probes, O-22/O-23) --
+        # -- fact build: long expression × dims (O-22/O-23): the small dims'
+        # keys are constant lookups (every study and gene of `expression`
+        # has one), dim_sample is a broadcast probe --
         fact = (
-            expression.join(F.broadcast(dim_study), on="gse_accession")
-            .join(F.broadcast(dim_gene), on="ensembl_id")
+            expression.select(
+                literal_lookup(study_keys)(F.col("gse_accession")).alias("study_key"),
+                literal_lookup(gene_keys)(F.col("ensembl_id")).alias("gene_key"),
+                "gsm_accession",
+                "expression_value",
+            )
             .join(
                 F.broadcast(dim_sample.select("sample_key", "gsm_accession", "study_key")),
                 on=["gsm_accession", "study_key"],

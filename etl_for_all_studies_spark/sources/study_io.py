@@ -1,13 +1,14 @@
 """TSV sources: metadata scan (O-3), wide expression scan (O-4), gene-filter
 whitelist (O-5).
 
-All three are plain ``spark.read.csv`` scans — header-driven, tab-delimited,
-all-string schema (types are applied downstream so bad cells can be dropped
-with DQ accounting rather than failing the scan; reference semantics
-``expression_processing.py:93-102``). The schema is declared from the header
-the driver already sniffs, so opening a scan starts no Spark job; Spark's own
-header inference (one job per file) is the fallback for a header the sniff
-cannot name exactly.
+The metadata and expression scans are plain ``spark.read.csv`` scans —
+header-driven, tab-delimited, all-string schema (types are applied
+downstream so bad cells can be dropped with DQ accounting rather than
+failing the scan; reference semantics ``expression_processing.py:93-102``).
+The schema is declared from the header the driver already sniffs, so
+opening a scan starts no Spark job; Spark's own header inference (one job
+per file) is the fallback for a header the sniff cannot name exactly. The
+whitelist is collected to the driver in one job.
 """
 from __future__ import annotations
 
@@ -47,7 +48,8 @@ def sniff_header(path: str) -> list[str] | None:
             f"Header row exceeds {_HEADER_SNIFF_BYTES} bytes: {path}"
         )
     try:
-        return head.decode("utf-8").rstrip("\r\n").split("\t")
+        # utf-8-sig drops a leading byte-order mark, as Spark's readers do
+        return head.decode("utf-8-sig").rstrip("\r\n").split("\t")
     except UnicodeDecodeError:
         # non-UTF-8 first line: fall back to the _MAX_TSV_COLUMNS ceiling
         # rather than failing every _read_tsv at the driver-side sniff —
@@ -55,12 +57,20 @@ def sniff_header(path: str) -> list[str] | None:
         return None
 
 
-def _header_column_names(header: list[str], case_sensitive: bool = False) -> list[str]:
+def is_plain_header(header: list[str] | None) -> bool:
+    """True when a sniffed header names its file's columns exactly: it was
+    readable, is not a blank line, and holds no quote character. The CSV
+    reader unquotes header cells and skips a blank first line; the sniff
+    does neither."""
+    return header is not None and header != [""] and not any('"' in c for c in header)
+
+
+def header_column_names(spark: SparkSession, header: list[str]) -> list[str]:
     """Column names Spark's CSV reader gives a header row: an empty name
     becomes ``_c{i}``, and every occurrence of a repeated name (compared
-    case-insensitively unless ``case_sensitive``) gets its index appended.
-    A leading byte-order mark is dropped, as the reader drops it."""
-    header = [header[0].removeprefix("\ufeff"), *header[1:]]
+    case-insensitively unless ``spark.sql.caseSensitive``) gets its index
+    appended."""
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     fold = (lambda s: s) if case_sensitive else str.lower
     seen: dict[str, int] = {}
     for name in header:
@@ -81,13 +91,10 @@ def _read_tsv(spark: SparkSession, path: str) -> DataFrame:
         .option("encoding", "UTF-8")
         .option("maxColumns", max_cols)
     )
-    # the univocity parser unquotes header cells and skips a blank first
-    # line; the sniff does neither, so those headers keep Spark's inference
-    if header is None or header == [""] or any('"' in c for c in header):
+    if not is_plain_header(header):
         return reader.option("inferSchema", False).csv(path)  # all strings
-    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     schema = T.StructType(
-        [T.StructField(n, T.StringType()) for n in _header_column_names(header, case_sensitive)]
+        [T.StructField(n, T.StringType()) for n in header_column_names(spark, header)]
     )
     return reader.schema(schema).csv(path)
 
@@ -123,31 +130,33 @@ def read_expression_wide(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumnRenamed(columns[0], "ensembl_id")
 
 
-def read_gene_filter(spark: SparkSession, path: str) -> DataFrame:
+def read_gene_filter(spark: SparkSession, path: str) -> list[str]:
     """Gene whitelist (O-5; reference ``gene_filter.py:12-28``).
 
-    Only the ``ensembl_id`` column is read; blank ids are dropped; the file is
-    invalid if the column is missing or yields zero ids. Returned as a
-    single-column DataFrame intended for a **broadcast semi-join** (O-13) —
-    the whitelist is tiny (143 ids in the shipped file) while the expression
-    side is the 100 TB side, so the filter must never shuffle the big side.
+    Only the ``ensembl_id`` column is read; ids are trimmed and blank ids
+    dropped; the file is invalid if the column is missing or yields zero
+    ids. The distinct ids come back sorted, from one collect: the whitelist
+    is small (143 ids in the shipped file, one per gene at most) and the
+    melts filter with it as a constant (``session.literal_lookup``), so the
+    100 TB expression side is filtered where it is scanned, with no
+    shuffle and no broadcast job.
     """
     df = _read_tsv(spark, path)
     if "ensembl_id" not in df.columns:
         raise InputFormatError(f"Gene filter file missing 'ensembl_id' column: {path}")
-    genes = (
-        df.select(F.trim(F.col("ensembl_id")).alias("ensembl_id"))
-        .where(F.col("ensembl_id") != "")
-        .distinct()
-    )
-    if genes.limit(1).count() == 0:
+    ids = F.trim(F.col("ensembl_id"))
+    genes = sorted({r[0] for r in df.select(ids).where(ids != "").collect()})
+    if not genes:
         raise InputFormatError(f"Gene filter file yielded zero gene ids: {path}")
     return genes
 
 
 __all__ = [
     "InputFormatError",
+    "header_column_names",
+    "is_plain_header",
     "read_expression_wide",
     "read_gene_filter",
     "read_metadata_raw",
+    "sniff_header",
 ]

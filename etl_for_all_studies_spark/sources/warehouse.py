@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import logging
 import time
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -34,27 +35,27 @@ class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = str(root).rstrip("/")
+        # filesystem handles (Hadoop FS: works on local, HDFS, object
+        # stores), resolved once: each lookup is several JVM round trips,
+        # and an ETL run makes dozens of filesystem calls
+        hadoop_fs = spark._jvm.org.apache.hadoop.fs
+        self._fs = hadoop_fs.FileSystem.get(spark._jsc.hadoopConfiguration())
+        self._Path = hadoop_fs.Path
 
     def path(self, table: str) -> str:
         return f"{self.root}/{table}"
 
-    # -- filesystem helpers (Hadoop FS: works on local, HDFS, object stores) --
-    def _fs(self):
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        return jvm.org.apache.hadoop.fs.FileSystem.get(conf), jvm
+    def _exists(self, path: str) -> bool:
+        return self._fs.exists(self._Path(path))
 
     def exists(self, table: str) -> bool:
-        fs, jvm = self._fs()
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(self.path(table)))
+        return self._exists(self.path(table))
 
     def _delete(self, path: str) -> None:
-        fs, jvm = self._fs()
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
+        self._fs.delete(self._Path(path), True)
 
     def _rename(self, src: str, dst: str) -> None:
-        fs, jvm = self._fs()
-        fs.rename(jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst))
+        self._fs.rename(self._Path(src), self._Path(dst))
 
     def _repair(self, table: str) -> None:
         """Recover from a crash mid-``overwrite_dim`` swap.
@@ -72,15 +73,13 @@ class Warehouse:
           from a crash after promotion; leave it (next overwrite clears it).
         """
         main, tmp, old = self.path(table), self.path(table) + "__tmp", self.path(table) + "__old"
-        fs, jvm = self._fs()
-        p = jvm.org.apache.hadoop.fs.Path
-        if fs.exists(p(main)):
+        if self._exists(main):
             return
-        if fs.exists(p(tmp)):
+        if self._exists(tmp):
             logger.warning("Repairing %s: promoting interrupted __tmp swap", table)
             self._rename(tmp, main)
             self._delete(old)
-        elif fs.exists(p(old)):
+        elif self._exists(old):
             logger.warning("Repairing %s: restoring __old copy", table)
             self._rename(old, main)
 
@@ -153,32 +152,40 @@ class Warehouse:
         return appended.get["rows"]
 
     def overwrite_study_partitions(
-        self, table: str, df: DataFrame, *, empty_studies: list[int] | None = None
-    ) -> None:
-        """Dynamic partition overwrite (requires
-        ``spark.sql.sources.partitionOverwriteMode=dynamic``, set in session.py).
+        self, table: str, df: DataFrame, *, studies: Sequence[int]
+    ) -> dict[int, int]:
+        """Refresh the partitions of ``studies`` from ``df`` by dynamic
+        partition overwrite (requires
+        ``spark.sql.sources.partitionOverwriteMode=dynamic``, set in
+        session.py). Returns the rows written per study.
 
-        ``empty_studies``: studies whose refresh produced zero rows — their
-        stale partitions are deleted explicitly, matching the reference's
+        The counts come from an ``Observation`` on the write, one
+        ``count_if`` per study, so they cost no job. A study that got no
+        rows has its stale partition deleted, matching the reference's
         delete-stale-correlations-on-empty-matrix behavior
         (``correlation_job.py:62-82``).
         """
+        written = Observation()
+        df = df.observe(
+            written, *[F.count_if(F.col("study_key") == k).alias(str(k)) for k in studies]
+        )
         writer = df.write.mode("overwrite")
         if table in PARTITIONED_BY_STUDY:
             writer = writer.partitionBy("study_key")
         writer.parquet(self.path(table))
-        for study in empty_studies or []:
+        counts = {k: written.get[str(k)] for k in studies}
+        for study in [k for k, n in counts.items() if n == 0]:
             part = f"{self.path(table)}/study_key={study}"
             logger.info("Clearing stale partition %s", part)
             self._delete(part)
+        return counts
 
     def partition_file_stats(self, table: str) -> dict[int, tuple[int, int]]:
         """study_key → (n_data_files, total_bytes) from the filesystem — the
         fragmentation signal for :meth:`compact_fact_partitions`. One
         metadata listing, no data read."""
-        fs, jvm = self._fs()
-        p = jvm.org.apache.hadoop.fs.Path
-        root = p(self.path(table))
+        fs = self._fs
+        root = self._Path(self.path(table))
         stats: dict[int, tuple[int, int]] = {}
         if not fs.exists(root):
             return stats

@@ -99,24 +99,22 @@ def test_build_dim_sample_first_build_dense_keys(spark):
             ("GSM1", "GSE1", "diabetes", "GPL1", "4", "f"),
             ("GSM2", "GSE1", "UNKNOWN", "UNKNOWN", "UNKNOWN", "m"),
             ("GSM3", "GSE2", "healthy", "GPL2", "7", "UNKNOWN"),
+            ("GSM4", "GSE9", "healthy", "GPL2", "7", "f"),  # study without a key
         ],
         "gsm_accession string, gse_accession string, illness string, "
         "platform string, age string, sex string",
     )
-    dim_study = spark.createDataFrame(
-        [(1, "GSE1"), (2, "GSE2")], "study_key long, gse_accession string"
-    )
-    dim_ill = spark.createDataFrame(
-        [(1, "diabetes"), (2, "healthy")], "illness_key long, illness_label string"
-    )
-    dim_plat = spark.createDataFrame(
-        [(1, "GPL1"), (2, "GPL2")], "platform_key long, platform_accession string"
-    )
+    study_keys = {"GSE1": 1, "GSE2": 2}
+    illness_keys = {"diabetes": 1, "healthy": 2}
+    platform_keys = {"GPL1": 1, "GPL2": 2}
     out = {
         r["gsm_accession"]: r.asDict()
-        for r in build_dim_sample(None, meta, dim_study, dim_ill, dim_plat).collect()
+        for r in build_dim_sample(
+            None, meta, study_keys, illness_keys, platform_keys
+        ).collect()
     }
     assert [out[g]["sample_key"] for g in ("GSM1", "GSM2", "GSM3")] == [1, 2, 3]
+    assert "GSM4" not in out  # dropped, as the inner join with dim_study did
     assert out["GSM2"]["illness_key"] is None  # UNKNOWN -> NULL FK (O-17)
     assert out["GSM3"]["platform_key"] == 2
 
@@ -154,14 +152,9 @@ def test_enrichment_property_matrix(spark):
         "gsm_accession string, gse_accession string, illness string, "
         "platform string, age string, sex string",
     )
-    dim_study = spark.createDataFrame(
-        [(1, "GSE1")], "study_key long, gse_accession string"
-    )
-    empty_ill = spark.createDataFrame([], "illness_key long, illness_label string")
-    empty_plat = spark.createDataFrame([], "platform_key long, platform_accession string")
     out = {
         r["gsm_accession"]: r.asDict()
-        for r in build_dim_sample(existing, meta, dim_study, empty_ill, empty_plat).collect()
+        for r in build_dim_sample(existing, meta, {"GSE1": 1}, {}, {}).collect()
     }
     assert len(out) == len(combos)
     for i, (old, new) in enumerate(combos):
@@ -170,3 +163,56 @@ def test_enrichment_property_matrix(spark):
         want = _enrich_oracle(old, new)
         assert row["sex"] == want, f"sex: old={old!r} new={new!r}"
         assert row["age"] == want, f"age: old={old!r} new={new!r}"
+
+
+def _py4j_calls(spark, monkeypatch) -> list:
+    """Every command the driver sends the JVM from here on, but the
+    releases of garbage-collected Java references (py4j's ``m`` commands),
+    which come whenever Python collects."""
+    client = spark.sparkContext._gateway._gateway_client
+    calls, real = [], client.send_command
+
+    def send(cmd, *a, **k):
+        if not cmd.startswith("m\n"):
+            calls.append(cmd)
+        return real(cmd, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", send)
+    return calls
+
+
+def test_literal_lookup_is_exact_jobless_and_size_bounded(spark, monkeypatch):
+    """``literal_lookup`` equals ``dict.get`` (absent and NULL → NULL), its
+    lookups add no Spark job to the query they sit in, and building and
+    planning one costs the same JVM round trips at 20 keys as at 20,000."""
+    from etl_for_all_studies_spark.session import literal_lookup
+
+    keys = {f"ENSG{i:011d}": i + 1 for i in range(20_000)}
+    keys.update({label: 90_000 + i for i, label in enumerate(_LABELS) if label})
+    probes = [*_LABELS, "ENSG00000000000", "ENSG00000019999", "ENSG00000020000", "", "zz"]
+    df = spark.createDataFrame([(p,) for p in probes], "k string").cache()
+    df.count()
+    for mapping in (keys, {}, {"a": 7}):
+        got = df.select("k", literal_lookup(mapping)(F.col("k")).alias("v")).collect()
+        assert got == [(p, mapping.get(p)) for p in probes]
+
+    sc = spark.sparkContext
+    jobs = {}
+    for name, col in (("plain", F.col("k")), ("lookup", literal_lookup(keys)(F.col("k")))):
+        sc.setJobGroup(f"lookup-{name}", name)
+        try:
+            df.select(col).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"lookup-{name}"))
+    assert jobs["lookup"] == jobs["plain"]
+
+    def round_trips(mapping) -> int:
+        calls = _py4j_calls(spark, monkeypatch)
+        df.select(literal_lookup(mapping)(F.col("k")))._jdf.queryExecution().executedPlan()
+        monkeypatch.undo()
+        return len(calls)
+
+    small = dict(list(keys.items())[:20])
+    round_trips(small)  # the first use also resolves JVM classes
+    assert round_trips(small) == round_trips(keys)

@@ -57,8 +57,9 @@ def test_wide_side_whitelist_prefilter_matches_postfilter(
 ):
     """The gene whitelist applied on the WIDE side (before the melt — the
     reference's row-oriented order, expression_processing.py:83-84) must
-    admit exactly the rows the long-side semi-join admits, and its join
-    must execute BELOW the Expand so only gene rows pay the probe."""
+    admit exactly the rows the long-side filter admits, and it must execute
+    BELOW the Expand, as a constant test with no join, so only gene rows
+    pay the probe."""
     genes = read_gene_filter(spark, str(study_tree["genes"]))
     post = filter_to_whitelist(
         expression_wide_to_long(wide, ["S1", "S2", "S3"], "GSE1"), genes
@@ -71,9 +72,10 @@ def test_wide_side_whitelist_prefilter_matches_postfilter(
         map(tuple, post.select(key).collect())
     )
     plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in plan and "BroadcastHashJoin" in plan
-    # top-down tree: Expand printing before the join = join runs below it
-    assert plan.index("Expand") < plan.index("BroadcastHashJoin")
+    assert "Expand" in plan and "Join" not in plan
+    # top-down tree: Expand printing before the whitelist's hash test
+    # (literal_lookup's crc32) = the filter runs below it
+    assert plan.index("Expand") < plan.index("crc32")
 
 
 def test_gene_filter_validation(spark, tmp_path):
@@ -84,6 +86,47 @@ def test_gene_filter_validation(spark, tmp_path):
     f.write_text("ensembl_id\n\n   \n")
     with pytest.raises(InputFormatError):
         read_gene_filter(spark, str(f))
+
+
+def _jobs(spark, group: str, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_whitelist_is_read_in_one_job_and_filters_without_one(spark, study_tree):
+    """``read_gene_filter`` collects the trimmed, distinct, non-blank ids in
+    one job; either melt filtered by them runs the jobs it runs unfiltered
+    (no broadcast of the whitelist)."""
+    from etl_for_all_studies_spark.operators.expression import expression_text_to_long
+
+    genes_file = study_tree["root"] / "padded_genes.tsv"
+    genes_file.write_text("ensembl_id\n ENSG02 \nENSG01\n\n   \nENSG01\n")
+    got = {}
+    assert _jobs(spark, "wl-read", lambda: got.update(ids=read_gene_filter(spark, str(genes_file)))) == 1
+    assert got["ids"] == ["ENSG01", "ENSG02"]
+
+    path = str(study_tree["studies"] / "GSE1" / "expression_GSE1.tsv")
+    melts = {
+        "wide": lambda wl: expression_wide_to_long(
+            read_expression_wide(spark, path), ["S1", "S2", "S3"], "GSE1", gene_whitelist=wl
+        ),
+        "text": lambda wl: expression_text_to_long(
+            spark, path, ["S1", "S2", "S3"], "GSE1", gene_whitelist=wl
+        ),
+    }
+    for name, melt in melts.items():
+        rows = {}
+        counts = [
+            _jobs(spark, f"wl-{name}-{wl is None}", lambda: rows.update({wl is None: melt(wl).collect()}))
+            for wl in (None, got["ids"])
+        ]
+        assert counts[0] == counts[1], name
+        assert {r["ensembl_id"] for r in rows[False]} == {"ENSG01", "ENSG02"}, name
 
 
 def test_quantile_normalize_bolstad_example(spark):
@@ -162,9 +205,29 @@ def _messy_tsv(tmp_path):
     return str(p)
 
 
+# plain files whose edges the CSV reader tolerates: (name, bytes, samples);
+# every one must melt to the same rows on both paths
+_PLAIN_EDGES = [
+    ("bom", "\ufeffGene\tS1\tS2\nENSG01\t1.5\t2\nENSG02\t3\t4\n".encode(), ["S1", "S2"]),
+    ("crlf", b"Gene\tS1\tS2\r\nENSG01\t1.5\t2\r\nENSG02\t3\t4\r\n", ["S1", "S2"]),
+    ("blank-line", b"Gene\tS1\tS2\nENSG01\t1.5\t2\n\nENSG02\t3\t4\n", ["S1", "S2"]),
+    ("short-row", b"Gene\tS1\tS2\tS3\nENSG01\t1.5\nENSG02\t3\t4\t5\n", ["S1", "S2", "S3"]),
+    ("long-row", b"Gene\tS1\tS2\nENSG01\t1.5\t2\t7\t8\nENSG02\t3\t4\n", ["S1", "S2"]),
+    (
+        "quoted-cells",
+        b'Gene\tS1\tS2\n"ENSG01"\t"1.5"\t2\nENSG02\t"3"\t""\n',
+        ["S1", "S2"],
+    ),
+    ("duplicate-names", b"Gene\tS1\tS2\tS1\nENSG01\t1\t2\t3\n", ["S1", "S2"]),
+]
+
+
 def test_text_melt_matches_wide_melt(spark, tmp_path):
     """expression_text_to_long is a bit-exact twin of expression_wide_to_long
-    on the same file — O-13 whitelist, O-14 pruning, O-15 bad-cell drop."""
+    on the same file — O-13 whitelist, O-14 pruning, O-15 bad-cell drop —
+    including the plain-file edges the CSV reader tolerates: a byte-order
+    mark, CRLF, a blank line, rows shorter and longer than the header,
+    quoted cells under an unquoted header, and a repeated column name."""
     from etl_for_all_studies_spark.operators.expression import (
         expression_text_to_long,
     )
@@ -173,9 +236,7 @@ def test_text_melt_matches_wide_melt(spark, tmp_path):
 
     path = _messy_tsv(tmp_path)
     samples = ["S1", "S2", "S3", "SMISSING"]
-    wl = spark.createDataFrame(
-        [("ENSG01",), ("ENSG02",), ("ENSG03",)], "ensembl_id string"
-    )
+    wl = ["ENSG01", "ENSG02", "ENSG03"]
 
     def canon(df):  # NaN == NaN for the comparison (both paths keep "NaN")
         return sorted(
@@ -184,18 +245,31 @@ def test_text_melt_matches_wide_melt(spark, tmp_path):
             for row in df.collect()
         )
 
-    wide_df = read_expression_wide(spark, path)
-    via_wide = canon(
-        expression_wide_to_long(wide_df, samples, "GSEX", gene_whitelist=wl)
-    )
-    via_text = canon(
-        expression_text_to_long(spark, path, samples, "GSEX", gene_whitelist=wl)
-    )
+    def both(path, samples, wl):
+        via_wide = canon(expression_wide_to_long(
+            read_expression_wide(spark, path), samples, "GSEX", gene_whitelist=wl
+        ))
+        via_text = canon(
+            expression_text_to_long(spark, path, samples, "GSEX", gene_whitelist=wl)
+        )
+        return via_wide, via_text
+
+    via_wide, via_text = both(path, samples, wl)
     assert via_text == via_wide
     genes_seen = {r[1] for r in via_text}
     assert "DROPME" not in genes_seen and "ENSG02" in genes_seen
     cols_seen = {r[2] for r in via_text}
     assert cols_seen == {"S1", "S2", "S3"}  # UNKEPT pruned positionally
+
+    for name, content, edge_samples in _PLAIN_EDGES:
+        p = tmp_path / f"{name}.tsv"
+        p.write_bytes(content)
+        for edge_wl in (None, ["ENSG01", "ENSG02"]):
+            via_wide, via_text = both(str(p), edge_samples, edge_wl)
+            assert via_text == via_wide, (name, edge_wl)
+            assert via_text, name
+        if name == "quoted-cells":  # "1.5" is unquoted, not silently lost
+            assert ("GSEX", "ENSG01", "S1", 1.5) in via_text
 
 
 def test_text_melt_validation_parity(spark, tmp_path):
@@ -213,9 +287,21 @@ def test_text_melt_validation_parity(spark, tmp_path):
         expression_text_to_long(spark, str(ok), ["ZZZ"], "GSEX")
 
 
+def _spy_melts(pipeline, monkeypatch) -> list[str]:
+    """Names of the melt-path calls ``run_pipeline`` makes, in order."""
+    calls = []
+    for fn in ("read_expression_wide", "expression_wide_to_long", "expression_text_to_long"):
+        real = getattr(pipeline, fn)
+        monkeypatch.setattr(
+            pipeline, fn, lambda *a, _fn=fn, _real=real, **k: calls.append(_fn) or _real(*a, **k)
+        )
+    return calls
+
+
 def test_pipeline_routes_ultrawide_to_text_melt(spark, study_tree, monkeypatch):
-    """Force the threshold to 1 so the fixture study takes the text path
-    end-to-end through run_pipeline — identical warehouse facts."""
+    """A plain-TSV study of any width, the fixture's included, takes the
+    text path end-to-end through run_pipeline — identical warehouse
+    facts, and the CSV scan is never opened."""
     import etl_for_all_studies_spark.plans.pipeline as pl
     from etl_for_all_studies_spark import run_pipeline
     from etl_for_all_studies_spark.config import config_from_dict
@@ -230,8 +316,9 @@ def test_pipeline_routes_ultrawide_to_text_melt(spark, study_tree, monkeypatch):
             "logging": {"log_level": "WARNING"},
         }
     )
-    monkeypatch.setattr(pl, "_TEXT_MELT_THRESHOLD", 1)
+    melts = _spy_melts(pl, monkeypatch)
     res = run_pipeline(cfg, spark=spark)
+    assert melts == ["expression_text_to_long"]
     assert not res.failures and res.fact_rows_written > 0
     facts = spark.read.parquet(
         str(study_tree["root"] / "wh_textmelt" / "fact_expression")
@@ -240,10 +327,10 @@ def test_pipeline_routes_ultrawide_to_text_melt(spark, study_tree, monkeypatch):
 
 
 def test_quoted_ultrawide_stays_on_csv_path(spark, study_tree, monkeypatch):
-    """A quoted expression TSV above the melt threshold must route to the
-    CSV wide path (which unquotes cells), not the text melt (where '"1.5"'
-    fails try_cast and is silently dropped). univocity strips quotes during
-    parsing, so the guard must read the RAW header (ADVICE r9, medium)."""
+    """A quoted expression TSV must route to the CSV wide path (the full
+    CSV dialect, which unquotes every field), not the text melt. univocity
+    strips quotes during parsing, so the guard must read the RAW header
+    (ADVICE r9, medium)."""
     import etl_for_all_studies_spark.plans.pipeline as pl
     from etl_for_all_studies_spark import run_pipeline
     from etl_for_all_studies_spark.config import config_from_dict
@@ -266,8 +353,9 @@ def test_quoted_ultrawide_stays_on_csv_path(spark, study_tree, monkeypatch):
             "logging": {"log_level": "WARNING"},
         }
     )
-    monkeypatch.setattr(pl, "_TEXT_MELT_THRESHOLD", 1)
+    melts = _spy_melts(pl, monkeypatch)
     res = run_pipeline(cfg, spark=spark)
+    assert melts == ["read_expression_wide", "expression_wide_to_long"]
     assert not res.failures
     facts = spark.read.parquet(
         str(study_tree["root"] / "wh_quoted" / "fact_expression")

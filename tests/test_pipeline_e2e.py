@@ -87,8 +87,8 @@ def test_correlation_job_end_to_end(spark, app_config):
 
 def test_correlation_job_collects_targets_once(spark, app_config, monkeypatch):
     """With ``accessions`` the job resolves found and missing studies from
-    ONE collect of the target list; its only other collect is the per-study
-    pair counts."""
+    ONE collect of the target list, and that is its only collect: the
+    per-study pair counts are observed on the write."""
     import sys
 
     run_pipeline(app_config, spark=spark)
@@ -105,15 +105,16 @@ def test_correlation_job_collects_targets_once(spark, app_config, monkeypatch):
     assert res.studies_missing == ["GSE_NOPE"]
     assert res.studies_processed == ["GSE1"]
     assert res.pair_counts == {"GSE1": 6}
-    assert calls.count("run_correlation_job") == 2
+    assert calls.count("run_correlation_job") == 1
 
 
 def test_pipeline_job_budget(spark, app_config):
     """``run_pipeline`` on the fixture launches an exact number of Spark
-    jobs, counted by job group: one metadata collect, one gene-key collect,
-    the whitelist check, one write per dim and the fact write with their
-    broadcasts. TSV scans declare their schema, so no CSV header-inference
-    job runs."""
+    jobs, counted by job group: the whitelist collect, one metadata collect,
+    one gene-key collect, one write per dim and the fact write. TSV scans
+    declare their schema, so no CSV header-inference job runs, and the
+    small dims' keys and the whitelist are constant lookups, so no job
+    broadcasts them."""
     sc = spark.sparkContext
     sc.setJobGroup("pipeline-budget", "run_pipeline on a fresh warehouse")
     try:
@@ -129,7 +130,7 @@ def test_pipeline_job_budget(spark, app_config):
     ]
     header_jobs = [s.name for s in stages if s is not None and s.name.startswith("csv at")]
     assert header_jobs == []
-    assert len(jobs) == 28
+    assert len(jobs) == 20
 
 
 def test_phase3_quarantine_leaves_no_trace_in_dims(spark, app_config, study_tree):

@@ -1,15 +1,13 @@
 from .stats import (
     average_rank,
-    benjamini_hochberg,
     erf_expr,
     normal_cdf_expr,
-    spearman_p_value_expr,
+    round6,
 )
 
 __all__ = [
     "average_rank",
-    "benjamini_hochberg",
     "erf_expr",
     "normal_cdf_expr",
-    "spearman_p_value_expr",
+    "round6",
 ]

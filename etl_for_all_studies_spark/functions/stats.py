@@ -1,11 +1,11 @@
 """Statistical building blocks as native column expressions (no Python UDFs).
 
 Everything here runs JVM-side inside whole-stage codegen — the hot path stays
-vectorized even at 100 TB. The semantics mirror the reference's no-SciPy
-fallback (``src/etl_for_all_studies/correlation.py:13-61``), which is the
-behavior this environment would exhibit (SciPy absent): average-rank ties,
-Pearson-on-ranks ρ, t-statistic with a **normal-approximation** two-sided
-p-value, and Benjamini–Hochberg FDR per study.
+vectorized even at 100 TB: average-rank ties, the A&S erf and normal CDF,
+the exact incomplete beta, and the per-group A/B tests built on them. The
+Spearman p-value and BH FDR run in numpy inside the correlation kernel
+(``plans/correlation.py``); their JVM forms are kept as the executable spec
+in ``tests/spearman_reference.py``.
 """
 from __future__ import annotations
 
@@ -57,23 +57,6 @@ def normal_cdf_expr(x: Column) -> Column:
     return F.lit(0.5) * (F.lit(1.0) + erf_expr(x / F.lit(2.0 ** 0.5)))
 
 
-def spearman_p_value_expr(rho: Column, n: Column) -> Column:
-    """Two-sided p for Spearman ρ via t-statistic + normal approximation.
-
-    Reference fallback semantics (``correlation.py:50-61``): NULL (NaN) for
-    n < 3; 0.0 when |ρ| ≥ 1; else ``p = 2·(1 − Φ(|t|))`` with
-    ``t = ρ·sqrt((n−2)/(1−ρ²))``, clipped to [0, 1].
-    """
-    t_stat = rho * F.sqrt((n - F.lit(2)) / (F.lit(1.0) - rho * rho))
-    p = F.lit(2.0) * (F.lit(1.0) - normal_cdf_expr(F.abs(t_stat)))
-    p = F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    return (
-        F.when(n < 3, F.lit(None).cast("double"))
-        .when(F.abs(rho) >= 1.0, F.lit(0.0))
-        .otherwise(p)
-    )
-
-
 # Lanczos approximation of ln Γ(z), g=7, n=9 — the classic public-domain
 # coefficient set (Numerical-Recipes/Boost lineage). Valid for z > 0 (all
 # betainc arguments here are ≥ 0.5, so no reflection branch is needed).
@@ -110,7 +93,7 @@ def _betainc_cf_expr(a: Column, b: Column, x: Column, n_iter: int) -> Column:
     evaluated JVM-side: the loop is an ``aggregate`` fold over a
     ``sequence`` of 2·n_iter half-steps with a ``struct(c, d, h)`` running
     state — the same per-element state machine as the scalar oracle
-    (:func:`_betainc_scalar`), just expressed as a higher-order function so
+    (``tests/spearman_reference.py::_betainc_scalar``), just expressed as a higher-order function so
     it runs inside the JVM with no Python in the row path. No early exit:
     the fold always runs ``n_iter`` full Lentz iterations (the scalar form
     stops at |δ−1| < 1e-15, almost always far earlier), which buys
@@ -145,7 +128,8 @@ def _betainc_cf_expr(a: Column, b: Column, x: Column, n_iter: int) -> Column:
 def betainc_expr(a: Column, b: Column, x: Column, *, n_iter: int = 200) -> Column:
     """Regularized incomplete beta I_x(a, b) as native Spark expressions.
 
-    Mirrors :func:`_betainc_scalar` (the Python oracle): the symmetric form
+    Mirrors the scalar oracle ``_betainc_scalar`` (in
+    ``tests/spearman_reference.py``): the symmetric form
     ``I_x(a,b) = 1 − I_{1−x}(b,a)`` is chosen per-row so the continued
     fraction is always evaluated on its fast-converging side — only the
     selected ``when`` branch is evaluated for a given row.
@@ -171,99 +155,6 @@ def betainc_expr(a: Column, b: Column, x: Column, *, n_iter: int = 200) -> Colum
     )
 
 
-def spearman_p_value_t_expr(rho: Column, n: Column) -> Column:
-    """Two-sided **exact Student-t** p-value as native expressions (no UDF):
-    ``p = I_{df/(df+t²)}(df/2, ½)`` with ``df = n − 2`` — the SciPy-primary
-    semantics of the reference (``correlation.py:11-12``). Matches the
-    scalar :func:`t_two_sided_p` to < 1e-12 absolute
-    (``tests/test_stats_properties.py``). NULL for n < 3; 0.0 at |ρ| ≥ 1.
-    """
-    df = (n - F.lit(2)).cast("double")
-    t_sq = rho * rho * df / (F.lit(1.0) - rho * rho)
-    x = df / (df + t_sq)
-    p = betainc_expr(df / F.lit(2.0), F.lit(0.5), x)
-    p = F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    return (
-        F.when(n < 3, F.lit(None).cast("double"))
-        .when(F.abs(rho) >= 1.0, F.lit(0.0))
-        .otherwise(p)
-    )
-
-
-def _betainc_scalar(a: float, b: float, x: float) -> float:
-    """Regularized incomplete beta I_x(a, b) via the standard continued
-    fraction (modified Lentz evaluation). Max rel. error ~1e-14 — used for
-    the exact Student-t p-value path; plain public math, no SciPy."""
-    import math
-
-    if x <= 0.0:
-        return 0.0
-    if x >= 1.0:
-        return 1.0
-    ln_front = (
-        math.lgamma(a + b)
-        - math.lgamma(a)
-        - math.lgamma(b)
-        + a * math.log(x)
-        + b * math.log(1.0 - x)
-    )
-    front = math.exp(ln_front)
-
-    def contfrac(a: float, b: float, x: float) -> float:
-        tiny = 1e-300
-        qab, qap, qam = a + b, a + 1.0, a - 1.0
-        c = 1.0
-        d = 1.0 - qab * x / qap
-        if abs(d) < tiny:
-            d = tiny
-        d = 1.0 / d
-        h = d
-        for m in range(1, 300):
-            m2 = 2 * m
-            aa = m * (b - m) * x / ((qam + m2) * (a + m2))
-            d = 1.0 + aa * d
-            if abs(d) < tiny:
-                d = tiny
-            c = 1.0 + aa / c
-            if abs(c) < tiny:
-                c = tiny
-            d = 1.0 / d
-            h *= d * c
-            aa = -(a + m) * (qab + m) * x / ((a + m2) * (qap + m2))
-            d = 1.0 + aa * d
-            if abs(d) < tiny:
-                d = tiny
-            c = 1.0 + aa / c
-            if abs(c) < tiny:
-                c = tiny
-            d = 1.0 / d
-            delta = d * c
-            h *= delta
-            if abs(delta - 1.0) < 1e-15:
-                break
-        return h
-
-    # use the symmetric form on whichever side converges fast
-    if x < (a + 1.0) / (a + b + 2.0):
-        return front * contfrac(a, b, x) / a
-    return 1.0 - math.exp(
-        math.lgamma(a + b)
-        - math.lgamma(a)
-        - math.lgamma(b)
-        + a * math.log(x)
-        + b * math.log(1.0 - x)
-    ) * contfrac(b, a, 1.0 - x) / b
-
-
-def t_two_sided_p(t_abs: float, df: float) -> float:
-    """Two-sided Student-t p-value: ``I_{df/(df+t²)}(df/2, 1/2)`` — the
-    SciPy-primary semantics of the reference (``correlation.py:11-12``)."""
-    if df <= 0:
-        return float("nan")
-    x = df / (df + t_abs * t_abs)
-    return min(max(_betainc_scalar(df / 2.0, 0.5, x), 0.0), 1.0)
-
-
 def average_rank(partition_cols: list[str], value_col: str) -> Column:
     """Average rank with ties sharing the mean of their positions (O-35).
 
@@ -283,47 +174,6 @@ def average_rank(partition_cols: list[str], value_col: str) -> Column:
     r_asc = F.rank().over(w_asc)
     ties = F.count(F.lit(1)).over(w_peers)
     return r_asc + (ties - F.lit(1)) / F.lit(2.0)
-
-
-def benjamini_hochberg(
-    df: DataFrame,
-    p_col: str = "p_value",
-    q_col: str = "q_value",
-    family_cols: list[str] | None = None,
-) -> DataFrame:
-    """Benjamini–Hochberg FDR q-values per family (O-40).
-
-    Reference semantics (``correlation.py:68-92``): within one family (a
-    study), m = count of non-NULL p-values; sort ascending; ``raw_j = p_j·m/j``;
-    q = running min of raw from the least-significant end, clipped to ≤ 1;
-    NULL-p rows keep NULL q and are excluded from m.
-
-    Window formulation (two passes, no UDF):
-      * ``j`` = ascending rank of p (ties: any order — q is tie-invariant);
-      * running-min uses a **RANGE** frame over descending p so tied p-values
-        share the same min (peer rows included), matching the sequential scan.
-    """
-    fam = family_cols or []
-    # NaN p-values are excluded from m and keep NULL q, matching the
-    # reference's explicit NaN handling (correlation.py:72-79) — NaN must not
-    # inflate the family size even when a caller skips NaN→NULL normalization
-    valid = F.col(p_col).isNotNull() & ~F.isnan(F.col(p_col))
-    w_fam = Window.partitionBy(*fam) if fam else Window.partitionBy(F.lit(1))
-    m = F.sum(valid.cast("long")).over(w_fam)
-    j = F.row_number().over(
-        (Window.partitionBy(*fam) if fam else Window.partitionBy(F.lit(1))).orderBy(
-            F.when(valid, F.lit(0)).otherwise(F.lit(1)), F.col(p_col).asc_nulls_last()
-        )
-    )
-    raw = F.when(valid, F.col(p_col) * m / j)
-    with_raw = df.withColumn("__bh_raw", raw)
-    w_runmin = (
-        (Window.partitionBy(*fam) if fam else Window.partitionBy(F.lit(1)))
-        .orderBy(F.col(p_col).desc_nulls_last())
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    q = F.when(valid, F.least(F.min("__bh_raw").over(w_runmin), F.lit(1.0)))
-    return with_raw.withColumn(q_col, q).drop("__bh_raw")
 
 
 def welch_t_test(
@@ -347,7 +197,7 @@ def welch_t_test(
     * ``t = (m_a − m_b) / √(v_a/n_a + v_b/n_b)``, Welch–Satterthwaite
       ``df = (v_a/n_a + v_b/n_b)² / ((v_a/n_a)²/(n_a−1) + (v_b/n_b)²/(n_b−1))``;
     * two-sided p: ``pvalue_dist="normal"`` uses the shared A&S closed form
-      (oracle-replicable, same policy as :func:`spearman_p_value_expr`);
+      (oracle-replicable, the same policy as the Spearman p);
       ``"t"`` uses the native incomplete-beta exact form
       (:func:`betainc_expr`) with the Welch df.
 
@@ -768,7 +618,6 @@ def chi2_independence(
 __all__ = [
     "auc_score",
     "average_rank",
-    "benjamini_hochberg",
     "betainc_expr",
     "chi2_independence",
     "chi2_sf_even_df_expr",
@@ -779,8 +628,6 @@ __all__ = [
     "normal_cdf_expr",
     "proportions_z_test",
     "round6",
-    "spearman_p_value_expr",
-    "spearman_p_value_t_expr",
     "weighted_quantile",
     "welch_t_test",
 ]

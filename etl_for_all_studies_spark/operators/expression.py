@@ -227,24 +227,6 @@ def filter_to_whitelist(long: DataFrame, gene_whitelist: Collection[str]) -> Dat
     return long.where(_whitelisted(F.col("ensembl_id"), gene_whitelist))
 
 
-def dropped_cell_count(wide: DataFrame, kept: Sequence[str]) -> DataFrame:
-    """DQ helper: count unparseable cells per study column set (O-15 logging)."""
-    if not kept:
-        return wide.sparkSession.createDataFrame([(0,)], "dropped long")
-    exprs = [
-        F.sum(
-            F.when(
-                F.col(f"`{c}`").isNotNull() & F.col(f"`{c}`").try_cast("double").isNull(), 1
-            ).otherwise(0)
-        )
-        for c in kept
-    ]
-    total = exprs[0]
-    for e in exprs[1:]:
-        total = total + e
-    return wide.select(total.alias("dropped"))
-
-
 def quantile_normalize(
     long: DataFrame,
     *,
@@ -293,7 +275,6 @@ def quantile_normalize(
 
 __all__ = [
     "ExpressionSchemaError",
-    "dropped_cell_count",
     "expression_wide_to_long",
     "filter_to_whitelist",
     "intersect_sample_columns",

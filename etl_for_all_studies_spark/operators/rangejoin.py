@@ -92,9 +92,4 @@ def bucketed_interval_join(
     return matched.unionByName(missing.select(*matched.columns))
 
 
-def interval_contains(ts: Column, start: Column, end: Column) -> Column:
-    """The exact predicate the bucketed join verifies — exposed for tests."""
-    return (ts >= start) & (ts < end)
-
-
-__all__ = ["bucketed_interval_join", "interval_contains"]
+__all__ = ["bucketed_interval_join"]

@@ -52,10 +52,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def unit_vectors(
     df: DataFrame,
     *,
@@ -162,22 +158,6 @@ def _assign_cells_from_units(
 def _unit_centroids(centroids: DataFrame, vec_col: str) -> DataFrame:
     return unit_vectors(
         centroids, id_col="cell", vec_col=vec_col, id_alias="cell", vec_alias="ucv"
-    )
-
-
-def assign_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    n_probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its ``n_probes`` nearest centroid cells (by
-    cosine). Centroids are broadcast; output (vid, cell, probe_rank)."""
-    units = unit_vectors(vectors, id_col=id_col, vec_col=vec_col)
-    return _assign_cells_from_units(
-        units, _unit_centroids(centroids, vec_col), n_probes=n_probes
     )
 
 
@@ -489,9 +469,7 @@ def kmeans_fit(
 
 
 __all__ = [
-    "assign_cells",
     "brute_force_topk",
-    "cosine",
     "dot",
     "embedding_near_dup_candidates",
     "embedding_near_duplicates",

@@ -70,27 +70,6 @@ def stopword_ratio(col: Column, stopwords: tuple[str, ...]) -> Column:
     return F.when(total == 0, F.lit(0.0)).otherwise(hits.cast("double") / total)
 
 
-def quality_score(col: Column) -> Column:
-    """Composite document quality in [0, 1]: length, punctuation, stopwords.
-
-    Heuristic mirrors common LLM-data quality filters (length window +
-    punctuation sanity + function-word presence); weights are arbitrary but
-    fixed — the engine contract is the *columnar formulation*, not the exact
-    heuristic.
-    """
-    n_tok = token_count(col).cast("double")
-    length_component = F.least(n_tok / F.lit(20.0), F.lit(1.0))
-    punct_component = F.lit(1.0) - F.least(punct_ratio(col) * 4.0, F.lit(1.0))
-    stop_component = F.least(
-        stopword_ratio(col, LANG_MARKERS["en"]) * 5.0, F.lit(1.0)
-    )
-    return (
-        F.lit(0.4) * length_component
-        + F.lit(0.3) * punct_component
-        + F.lit(0.3) * stop_component
-    )
-
-
 def language_scores(col: Column) -> list[tuple[str, Column]]:
     """Per-language marker-hit counts (the argmax is the predicted language)."""
     lowered = F.lower(col)
@@ -395,7 +374,6 @@ __all__ = [
     "language_scores",
     "predict_language",
     "punct_ratio",
-    "quality_score",
     "stopword_ratio",
     "token_count",
     "unigram_logprob_scores",

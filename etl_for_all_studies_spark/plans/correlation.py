@@ -5,13 +5,16 @@ Re-expresses the reference's correlation engine
 the shared samples (O-24/O-25/O-35) → gates (O-33/O-34/O-38) → ρ (O-36) →
 p (O-37) → BH FDR per study (O-40) → p NULL→1.0 at store time (O-39).
 
-One route serves every study shape: ``_kernel_pairs`` runs one grouped
-Arrow kernel per study (``_study_spearman``), ranking each pair within its
-shared samples as the reference does (``correlation.py:118``), from one
-exchange of the cells and no pair-expanded rows. Its gated ``(study_key,
-gene_a_key, gene_b_key, n_samples, rho_spearman)`` rows feed the JVM p →
-BH → select tail (``_correlate``). Tests pin it to the retired
-pair-expanded plan and the DuckDB oracle.
+One route, one pass: ``_kernel_pairs`` runs one grouped Arrow kernel per
+study (``_study_spearman``) after one exchange of the cells by
+``study_key``. The kernel ranks each pair within its shared samples, as
+the reference does (``correlation.py:118``), and, since its task holds
+the study's whole BH family, finishes the family there too: p
+(``_p_normal`` or ``_p_student_t``) and BH q (``_bh_q``). A projection
+with no exchange adds the constant columns. The numpy p and BH are
+term-for-term ports of the JVM expressions kept as the executable spec
+in ``tests/spearman_reference.py``; tests pin the fused rows to that spec
+on the 1e-6 grid, and to the DuckDB oracle.
 """
 from __future__ import annotations
 
@@ -24,9 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.stats import (
-    benjamini_hochberg,
-    spearman_p_value_expr,
-    spearman_p_value_t_expr,
+    _A1, _A2, _A3, _A4, _A5, _HALF_LN_2PI, _LANCZOS_C, _LANCZOS_G, _P,
 )
 
 MIN_SAMPLES_FOR_CORRELATION = 2  # reference correlation.py:65
@@ -40,10 +41,119 @@ def _utc_now_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds")
 
 
+def _erf(x: np.ndarray) -> np.ndarray:
+    """``stats.erf_expr`` in numpy: A&S 7.1.26, the same terms in the same
+    order, so p agrees with the JVM's to an ulp of each math call."""
+    ax = np.abs(x)
+    t = 1.0 / (1.0 + _P * ax)
+    poly = (
+        _A1 * t
+        + _A2 * np.power(t, 2.0)
+        + _A3 * np.power(t, 3.0)
+        + _A4 * np.power(t, 4.0)
+        + _A5 * np.power(t, 5.0)
+    )
+    return np.sign(x) * (1.0 - poly * np.exp(-ax * ax))
+
+
+def _p_gates(p: np.ndarray, rho: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Clip to [0, 1]; NaN (NULL) for n < 3; 0.0 at |ρ| ≥ 1. Spark orders
+    NaN above every number, so a NaN ρ counts as ≥ 1 and the clip takes a
+    NaN p to 1.0 (``fmin``), as ``least``/``greatest`` do."""
+    p = np.fmin(np.maximum(p, 0.0), 1.0)
+    return np.where(n < 3, np.nan, np.where(np.abs(rho) < 1.0, p, 0.0))
+
+
+def _p_normal(rho: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Two-sided p via the t-statistic and the normal approximation, the
+    reference's no-SciPy fallback (``correlation.py:50-61``)."""
+    with np.errstate(all="ignore"):
+        t_stat = rho * np.sqrt((n - 2) / (1.0 - rho * rho))
+        cdf = 0.5 * (1.0 + _erf(np.abs(t_stat) / 2.0 ** 0.5))
+        return _p_gates(2.0 * (1.0 - cdf), rho, n)
+
+
+def _lgamma(z: np.ndarray) -> np.ndarray:
+    """ln Γ(z), z > 0: the Lanczos sum of ``stats.lgamma_expr``."""
+    zm1 = z - 1.0
+    series = _LANCZOS_C[0]
+    for i, c in enumerate(_LANCZOS_C[1:], start=1):
+        series = series + c / (zm1 + float(i))
+    t = zm1 + (_LANCZOS_G + 0.5)
+    return _HALF_LN_2PI + (zm1 + 0.5) * np.log(t) - t + np.log(series)
+
+
+def _betainc_cf(a, b, x, n_iter: int) -> np.ndarray:
+    """``stats._betainc_cf_expr`` in numpy: modified Lentz over a fixed
+    2·``n_iter`` half-steps, no early exit, |v| < 1e-300 guarded."""
+    def guard(v):
+        return np.where(np.abs(v) < 1e-300, 1e-300, v)
+
+    d = 1.0 / guard(1.0 - (a + b) * x / (a + 1.0))
+    c, h = 1.0, d
+    for e in range(1, 2 * n_iter + 1):
+        m = float((e + 1) // 2)
+        m2 = 2.0 * m
+        if e % 2 == 1:
+            aa = m * (b - m) * x / ((a - 1.0 + m2) * (a + m2))
+        else:
+            aa = -(a + m) * (a + b + m) * x / ((a + m2) * (a + 1.0 + m2))
+        d = 1.0 / guard(1.0 + aa * d)
+        c = guard(1.0 + aa / c)
+        h = h * d * c
+    return h
+
+
+def _p_student_t(rho: np.ndarray, n: np.ndarray, n_iter: int = 200) -> np.ndarray:
+    """Two-sided exact Student-t p, ``I_{df/(df+t²)}(df/2, ½)`` with
+    ``df = n − 2`` (SciPy's semantics, ``correlation.py:11-12``), as
+    ``stats.betainc_expr`` evaluates it: each row runs the continued
+    fraction once, on the side ``x < (a+1)/(a+b+2)`` picks."""
+    with np.errstate(all="ignore"):
+        df = n - 2.0
+        x = df / (df + rho * rho * df / (1.0 - rho * rho))
+        a, b = df / 2.0, 0.5
+        front = np.exp(
+            _lgamma(a + b) - _lgamma(a) - _lgamma(b)
+            + a * np.log(x) + b * np.log(1.0 - x)
+        )
+        direct = x < (a + 1.0) / (a + b + 2.0)
+        ca = np.where(direct, a, b)
+        h = _betainc_cf(ca, np.where(direct, b, a), np.where(direct, x, 1.0 - x), n_iter)
+        inc = np.where(direct, front * h / ca, 1.0 - front * h / ca)
+        inc = np.where(x <= 0.0, 0.0, np.where(x >= 1.0, 1.0, inc))
+        return _p_gates(inc, rho, n)
+
+
+_P_VALUE = {"normal": _p_normal, "t": _p_student_t}
+
+
+def _bh_q(p: np.ndarray) -> np.ndarray:
+    """Benjamini–Hochberg q of one family (``correlation.py:68-92``); NaN is
+    a NULL p. m counts the valid p; ``raw_j = p_j·m/j`` in ascending p
+    order; q is the running minimum of raw from the least significant end,
+    clipped to 1. Every row of a tie group takes the minimum at the group's
+    lowest j, as a RANGE frame over descending p does, so q does not depend
+    on the order within ties. NULL p keeps a NULL q."""
+    q = np.full(len(p), np.nan)
+    valid = np.flatnonzero(~np.isnan(p))
+    order = valid[np.argsort(p[valid], kind="stable")]
+    ps = p[order]
+    m = len(ps)
+    raw = ps * m / np.arange(1, m + 1)
+    run_min = np.minimum.accumulate(raw[::-1])[::-1]
+    new = np.ones(m, dtype=bool)
+    new[1:] = ps[1:] != ps[:-1]
+    lowest_j = np.maximum.accumulate(np.where(new, np.arange(m), 0))
+    q[order] = np.minimum(run_min[lowest_j], 1.0)
+    return q
+
+
 def _study_spearman(
-    key, table: pa.Table, min_samples: int, block_elems: int
+    key, table: pa.Table, min_samples: int, block_elems: int, p_value
 ) -> pa.Table:
-    """``applyInArrow`` body: one study's rows → its gated pair rows.
+    """``applyInArrow`` body: one study's rows → its gated pair rows, with
+    p (``p_value``, one of ``_P_VALUE``) and the study's BH q.
 
     Pair (a, b) sees one row per (a-cell, b-cell) sharing a sample, as a
     self-join would: a (gene, sample) cell present k times meets each
@@ -130,66 +240,41 @@ def _study_spearman(
             ok &= ~np.isnan(rho)
             out.append((a[ok], b[ok], np.clip(rho[ok], -1.0, 1.0)))
     a, b, rho = (np.concatenate(col) for col in zip(*out))
+    n = npairs[a, b]
+    p = p_value(rho, n)
     return pa.table({
         "study_key": np.full(len(a), key[0].as_py(), dtype=np.int64),
         "gene_a_key": genes[a],
         "gene_b_key": genes[b],
-        "n_samples": npairs[a, b].astype(np.int64),
+        "n_samples": n.astype(np.int64),
         "rho_spearman": rho,
+        "p_value": pa.array(p, from_pandas=True),  # NaN → NULL
+        "q_value": pa.array(_bh_q(p), from_pandas=True),
     })
 
 
-def _kernel_pairs(e: DataFrame, min_samples: int) -> DataFrame:
-    """Gated pair rows of every study in ``e`` (study_key, gene_key, a
-    sample identity, expression_value), one kernel call per study.
-    Rows with a NULL study, gene or sample key never meet a partner on an
-    equi-join, so they are dropped first. The numbered repartition is the
-    grouping's exchange; AQE does not coalesce it, so a few small studies
-    do not share one task."""
+def _kernel_pairs(e: DataFrame, min_samples: int, pvalue_dist: str) -> DataFrame:
+    """Finished pair rows (study_key, gene_a_key, gene_b_key, n_samples,
+    rho_spearman, p_value, q_value) of every study in ``e`` (study_key,
+    gene_key, a sample identity, expression_value), one kernel call per
+    study. Rows with a NULL study, gene or sample key never meet a partner
+    on an equi-join, so they are dropped first. The numbered repartition is
+    the grouping's exchange, and the plan's only one; AQE does not coalesce
+    it, so a few small studies do not share one task."""
+    if pvalue_dist not in _P_VALUE:
+        raise ValueError(f"unknown pvalue_dist: {pvalue_dist!r}")
+    p_value = _P_VALUE[pvalue_dist]
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     keyed = e.dropna(subset=e.columns[:3]).repartition(n_part, "study_key")
     block_elems = _KERNEL_BLOCK_ELEMS  # read here: workers import the module afresh
 
     def kernel(key, table):  # no annotations: applyInArrow infers its API from them
-        return _study_spearman(key, table, min_samples, block_elems)
+        return _study_spearman(key, table, min_samples, block_elems, p_value)
 
     return keyed.groupBy("study_key").applyInArrow(
         kernel,
         schema="study_key long, gene_a_key long, gene_b_key long, "
-        "n_samples long, rho_spearman double",
-    )
-
-
-def _correlate(
-    stats: DataFrame, *, computed_at: str, pvalue_dist: str = "normal"
-) -> DataFrame:
-    """The tail: gated pair rows (study, gene_a, gene_b, n_samples, ρ) →
-    p → BH q per study (one window family each) → fact_gene_pair_corr
-    rows."""
-    rho, n = F.col("rho_spearman"), F.col("n_samples")
-    p = (
-        spearman_p_value_expr(rho, n)
-        if pvalue_dist == "normal"
-        else spearman_p_value_t_expr(rho, n)
-    )
-    # NaN p → NULL, so BH's valid-p accounting is uniform
-    nan_null = F.when(F.isnan("p_value"), F.lit(None).cast("double"))
-    with_p = stats.withColumn("p_value", p).withColumn(
-        "p_value", nan_null.otherwise(F.col("p_value"))
-    )
-    with_q = benjamini_hochberg(
-        with_p, p_col="p_value", q_col="q_value", family_cols=["study_key"]
-    )
-    return with_q.select(
-        "gene_a_key",
-        "gene_b_key",
-        F.lit(None).cast("long").alias("illness_key"),  # always NULL, correlation.py:153
-        F.col("rho_spearman"),
-        F.coalesce(F.col("p_value"), F.lit(1.0)).alias("p_value"),  # O-39
-        F.col("q_value"),
-        F.col("n_samples").cast("int").alias("n_samples"),
-        F.lit(computed_at).alias("computed_at"),
-        "study_key",
+        "n_samples long, rho_spearman double, p_value double, q_value double",
     )
 
 
@@ -210,16 +295,24 @@ def compute_gene_pair_correlations(
 
     ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
     the reference's no-SciPy fallback; ``"t"`` is SciPy's primary Student-t
-    semantics (incomplete-beta continued fraction as a ``sequence`` fold,
-    ``functions/stats.py::spearman_p_value_t_expr``; < 1e-12 vs SciPy). Both
-    are JVM expressions.
+    semantics (Lanczos ln Γ and the incomplete-beta continued fraction,
+    ``_p_student_t``; < 1e-12 vs SciPy). Both run in numpy inside the
+    kernel task, as does BH. The projection above the kernel has no
+    exchange: it stores a NULL p as 1.0 (O-39) and adds the constant
+    columns, which keeps strings out of the Arrow batches.
     """
     sample = "sample_key" if "sample_key" in expression.columns else "gsm_accession"
     e = expression.select("study_key", "gene_key", sample, "expression_value")
-    return _correlate(
-        _kernel_pairs(e, min_samples),
-        computed_at=computed_at or _utc_now_iso(),
-        pvalue_dist=pvalue_dist,
+    return _kernel_pairs(e, min_samples, pvalue_dist).select(
+        "gene_a_key",
+        "gene_b_key",
+        F.lit(None).cast("long").alias("illness_key"),  # always NULL, correlation.py:153
+        "rho_spearman",
+        F.coalesce(F.col("p_value"), F.lit(1.0)).alias("p_value"),  # O-39
+        "q_value",
+        F.col("n_samples").cast("int").alias("n_samples"),
+        F.lit(computed_at or _utc_now_iso()).alias("computed_at"),
+        "study_key",
     )
 
 

@@ -2,12 +2,15 @@
 ``tests/test_correlation.py`` + FIXTURES.md F6)."""
 import math
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from etl_for_all_studies_spark.functions.stats import round6
 from etl_for_all_studies_spark.plans import correlation as corr_mod
 from etl_for_all_studies_spark.plans.correlation import compute_gene_pair_correlations
 from oracle import all_pairs
-from spearman_reference import pair_expanded_stats
+from spearman_reference import _correlate, benjamini_hochberg, pair_expanded_stats
 
 CANONICAL = {
     1: {"S1": 1.0, "S2": 2.0, "S3": 3.0},
@@ -27,14 +30,22 @@ def _to_df(spark, matrix, study_key=1):
     )
 
 
-# Pair builders called directly, each through the shared p → BH tail:
-# "exact" is the per-study rank kernel, "reference" the pair-expanded plan
-# it replaced (tests/spearman_reference.py).
-ROUTES = {"exact": corr_mod._kernel_pairs, "reference": pair_expanded_stats}
+# "exact" is the entry point: the per-study rank kernel with p and BH q
+# computed in its task. "reference" is the executable spec
+# (tests/spearman_reference.py): the pair-expanded plan the kernel replaced,
+# through the JVM p → BH window tail.
+ROUTES = {
+    "exact": lambda df, ms, dist: compute_gene_pair_correlations(
+        df, min_samples=ms, computed_at="x", pvalue_dist=dist
+    ),
+    "reference": lambda df, ms, dist: _correlate(
+        pair_expanded_stats(df, ms), computed_at="x", pvalue_dist=dist
+    ),
+}
 
 
-def _route(df, route, min_samples=2):
-    return corr_mod._correlate(ROUTES[route](df, min_samples), computed_at="x")
+def _route(df, route, min_samples=2, pvalue_dist="normal"):
+    return ROUTES[route](df, min_samples, pvalue_dist)
 
 
 def _run(spark, matrix, route=None, min_samples=2):
@@ -351,15 +362,115 @@ def test_kernel_rows_independent_of_input_order(spark):
 
 def test_kernel_route_shuffles_cells_once(spark):
     """Plan shape: the kernel's input is one numbered exchange of the cells
-    by study_key — no pair-expanded rows, no rank windows. The only other
-    exchange carries the kernel's gated pair rows to the BH windows (a
-    grouped-map output is a new attribute, so its partitioning is not
-    reused)."""
+    by study_key — no pair-expanded rows, no rank windows — and that is the
+    plan's only exchange: p and BH q come out of the kernel task, so no
+    exchange or BH window sits above it, only a projection."""
     df = _to_df(spark, CANONICAL)
     plan = _route(df, "exact")._jdf.queryExecution().executedPlan().toString()
     above, below = plan.split("FlatMapGroupsInArrow", 1)
     assert below.count("Exchange") == 1, plan
     assert "Exchange hashpartitioning(study_key" in below
     assert "REPARTITION_BY_NUM" in below, plan
-    assert above.count("Exchange") == 1, plan
-    assert "Window" not in below and "Join" not in plan, plan
+    assert above.count("Exchange") == 0, plan
+    assert "Window" not in plan and "Join" not in plan, plan
+
+
+# ---- the fused p → BH tail vs the JVM tail it replaced ---------------------
+
+
+def _on_grid(df):
+    """(p, q) of each pair on the oracle's 1e-6 grid (``round6``)."""
+    keys = ["study_key", "gene_a_key", "gene_b_key"]
+    return {
+        tuple(r[:3]): (r[3], r[4])
+        for r in df.select(*keys, round6("p_value"), round6("q_value")).collect()
+    }
+
+
+@pytest.mark.parametrize("pvalue_dist", ["normal", "t"])
+def test_fused_tail_matches_jvm_spec(spark, pvalue_dist):
+    """The kernel task's p and BH q equal the JVM tail (the spec's
+    ``_correlate``) fed the kernel's own ρ: no missing row and no value
+    that lands elsewhere on the 1e-6 grid. Input: ragged multi-study
+    families with tie-heavy p (ties, ρ = ±1), n = 2 pairs under
+    ``min_samples`` 2 (NULL p, NULL q), a family whose every p is NULL
+    (m = 0) and a study with no pairs at all."""
+    rows = _random_studies(31, 10, special=True)
+    rows += [(90, g, f"GSM{s}", float(s * g)) for g in (1, 2) for s in (0, 1)]
+    rows += [(91, g, f"GSM{s}", 1.0) for g in (1, 2) for s in range(4)]
+    fused = compute_gene_pair_correlations(
+        spark.createDataFrame(rows, _LONG), computed_at="x", pvalue_dist=pvalue_dist
+    )
+    rho_rows = fused.select(
+        "study_key", "gene_a_key", "gene_b_key",
+        F.col("n_samples").cast("long").alias("n_samples"), "rho_spearman",
+    )
+    got = _on_grid(fused)
+    want = _on_grid(_correlate(rho_rows, computed_at="x", pvalue_dist=pvalue_dist))
+    assert got.keys() == want.keys() and len(got) > 50
+    assert {k: v for k, v in got.items() if k[0] == 90} == {(90, 1, 2): (1.0, None)}
+    p_seen = [p for p, q in got.values() if q is not None]
+    assert len(set(p_seen)) < len(p_seen) and 0.0 in p_seen  # tied p, ρ = ±1
+    assert [k for k in want if got[k] != want[k]] == []
+
+
+@pytest.mark.parametrize("pvalue_dist", ["normal", "t"])
+def test_fused_p_matches_jvm_spec_on_a_grid(spark, pvalue_dist):
+    """The numpy p and BH against the JVM tail on (ρ, n) rows the kernel
+    never emits: knife-edge and NaN ρ, |ρ| = 1, n from 1 to 10⁵, both
+    continued-fraction sides, exactly tied p. 0 flips on the 1e-6 grid."""
+    rhos = [0.0, 1e-9, 0.05, -0.3, 0.5, -0.5, 0.7, -0.9, 0.9999, 1.0, -1.0,
+            float("nan")]
+    ns = [1, 2, 3, 4, 5, 10, 30, 1000, 100000]
+    rows = [(n, i, 1000 + i, n, rho) for n in ns for i, rho in enumerate(rhos)]
+    rows += [(0, i, 2000 + i, 3 + i % 50, math.sin(i * 1.7) * 0.999) for i in range(200)]
+    fused = []
+    for study in sorted({r[0] for r in rows}):
+        fam = [r for r in rows if r[0] == study]
+        rho = np.array([r[4] for r in fam])
+        p = corr_mod._P_VALUE[pvalue_dist](rho, np.array([r[3] for r in fam], float))
+        q = corr_mod._bh_q(p)
+        fused += [
+            (*r[:3], 1.0 if np.isnan(pi) else float(pi), None if np.isnan(qi) else float(qi))
+            for r, pi, qi in zip(fam, p, q)
+        ]
+    spec = _correlate(
+        spark.createDataFrame(rows, "study_key long, gene_a_key long, gene_b_key long, "
+                              "n_samples long, rho_spearman double"),
+        computed_at="x", pvalue_dist=pvalue_dist,
+    )
+    got = _on_grid(spark.createDataFrame(
+        fused, "study_key long, gene_a_key long, gene_b_key long, p_value double, "
+        "q_value double",
+    ))
+    want = _on_grid(spec)
+    assert got.keys() == want.keys() == {r[:3] for r in rows}
+    assert [k for k in want if got[k] != want[k]] == []
+
+
+def test_fused_bh_matches_window_bh(spark):
+    """``_bh_q`` against the spec's two-window BH (``benjamini_hochberg``),
+    bit for bit, on families with tied p, p of 0 and 1, NULL and NaN p (both excluded
+    from m, both NULL q), a single-row family and an all-NULL family."""
+    import random
+
+    rng = random.Random(5)
+    rows = []
+    for fam in range(12):
+        for i in range(rng.randint(1, 40)):
+            r = rng.random()
+            p = (None if r < 0.1 else float("nan") if r < 0.2
+                 else rng.choice([0.0, 1.0]) if r < 0.3 else round(rng.random(), 2))
+            rows.append((fam, i, p))
+    rows += [(99, 0, None), (99, 1, None)]
+    got = {}
+    for fam in sorted({r[0] for r in rows}):
+        members = [r for r in rows if r[0] == fam]
+        q = corr_mod._bh_q(np.array([np.nan if r[2] is None else r[2] for r in members]))
+        got.update({r[:2]: None if np.isnan(qi) else float(qi) for r, qi in zip(members, q)})
+    df = spark.createDataFrame(rows, "fam long, idx long, p_value double")
+    want = {
+        (r["fam"], r["idx"]): r["q_value"]
+        for r in benjamini_hochberg(df, family_cols=["fam"]).collect()
+    }
+    assert got == want  # the same float operations: equal to the bit

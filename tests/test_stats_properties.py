@@ -6,11 +6,8 @@ from statistics import NormalDist
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from etl_for_all_studies_spark.functions.stats import (
-    _betainc_scalar,
-    t_two_sided_p,
-)
 from oracle import benjamini_hochberg as bh_oracle, rankdata_avg
+from spearman_reference import _betainc_scalar, t_two_sided_p
 
 
 # ---- incomplete beta / t-distribution ------------------------------------
@@ -134,7 +131,7 @@ def test_spark_bh_windows_match_oracle_many_families(spark):
             expected[(fam, i)] = q
     if not rows:
         return
-    from etl_for_all_studies_spark.functions.stats import benjamini_hochberg
+    from spearman_reference import benjamini_hochberg
 
     df = spark.createDataFrame(rows, "fam long, idx long, p_value double")
     out = benjamini_hochberg(df, family_cols=["fam"])
@@ -150,7 +147,7 @@ def test_spark_bh_windows_match_oracle_many_families(spark):
 def test_bh_nan_p_excluded_from_family(spark):
     # NaN p must behave like NULL: excluded from m, q=NULL — not inflate m
     # or propagate NaN through the running-min (reference correlation.py:72-79)
-    from etl_for_all_studies_spark.functions.stats import benjamini_hochberg
+    from spearman_reference import benjamini_hochberg
 
     rows = [(0, float("nan")), (1, 0.02), (2, 0.04), (3, None), (4, float("nan"))]
     df = spark.createDataFrame(rows, "idx long, p_value double")
@@ -217,7 +214,7 @@ def test_t_pvalue_expr_matches_scalar_grid(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_for_all_studies_spark.functions.stats import spearman_p_value_t_expr
+    from spearman_reference import spearman_p_value_t_expr
 
     rhos = [0.0, 1e-8, 0.05, 0.3, -0.3, 0.7, -0.9, 0.99, -0.999, 0.9999, 1.0, -1.0]
     ns = [3, 4, 5, 10, 30, 100, 1000, 100000]
@@ -330,10 +327,7 @@ def test_welch_t_test_matches_scalar_math_and_exact_t(spark):
     gate to NULL."""
     import statistics
 
-    from etl_for_all_studies_spark.functions.stats import (
-        _betainc_scalar,
-        welch_t_test,
-    )
+    from etl_for_all_studies_spark.functions.stats import welch_t_test
 
     a_vals = [1.0, 2.5, 3.5, 2.0, 4.0, 2.2, 3.1]
     b_vals = [5.0, 6.5, 4.5, 7.0, 5.5]

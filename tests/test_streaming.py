@@ -59,6 +59,12 @@ def event_files(spark, tmp_path):
         ],
         start_id=3,
     )
+    # the file source orders micro-batches by modification time; pin
+    # f1 < f2 so the two files are always the two batches in that order
+    import os
+
+    for i, name in enumerate(["f1.parquet", "f2.parquet"]):
+        os.utime(d / name, (1_700_000_000 + 100 * i,) * 2)
     return d
 
 

@@ -3,12 +3,15 @@
 Everything here runs JVM-side inside whole-stage codegen — the hot path stays
 vectorized even at 100 TB: average-rank ties, the A&S erf and normal CDF,
 the exact incomplete beta, and the per-group A/B tests built on them. The
-Spearman p-value and BH FDR run in numpy inside the correlation kernel
-(``plans/correlation.py``); their JVM forms are kept as the executable spec
-in ``tests/spearman_reference.py``.
+one exception is the Spearman p-value: ``spearman_p_normal`` and
+``spearman_p_student_t`` are numpy ports of the erf, ln Γ and incomplete-beta
+expressions here, kept beside them, and run inside the correlation kernel's
+task (``plans/correlation.py``), as does BH FDR. The JVM Spearman p and the
+window BH are the executable spec in ``tests/spearman_reference.py``.
 """
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -153,6 +156,100 @@ def betainc_expr(a: Column, b: Column, x: Column, *, n_iter: int = 200) -> Colum
         .when(use_direct, direct)
         .otherwise(swapped)
     )
+
+
+# The Spearman p-value in numpy, for the correlation kernel's task
+# (``plans/correlation.py``): term-for-term ports of ``erf_expr``,
+# ``lgamma_expr`` and ``betainc_expr`` above, the same constants and the
+# same operations in the same order, so p agrees with the JVM forms to an
+# ulp of each math call.
+
+
+def _erf_np(x: np.ndarray) -> np.ndarray:
+    """``erf_expr`` in numpy."""
+    ax = np.abs(x)
+    t = 1.0 / (1.0 + _P * ax)
+    poly = (
+        _A1 * t
+        + _A2 * np.power(t, 2.0)
+        + _A3 * np.power(t, 3.0)
+        + _A4 * np.power(t, 4.0)
+        + _A5 * np.power(t, 5.0)
+    )
+    return np.sign(x) * (1.0 - poly * np.exp(-ax * ax))
+
+
+def _lgamma_np(z: np.ndarray) -> np.ndarray:
+    """``lgamma_expr`` in numpy."""
+    zm1 = z - 1.0
+    series = _LANCZOS_C[0]
+    for i, c in enumerate(_LANCZOS_C[1:], start=1):
+        series = series + c / (zm1 + float(i))
+    t = zm1 + (_LANCZOS_G + 0.5)
+    return _HALF_LN_2PI + (zm1 + 0.5) * np.log(t) - t + np.log(series)
+
+
+def _betainc_cf_np(a, b, x, n_iter: int) -> np.ndarray:
+    """``_betainc_cf_expr`` in numpy: modified Lentz over a fixed
+    2·``n_iter`` half-steps, no early exit, |v| < 1e-300 guarded."""
+    def guard(v):
+        return np.where(np.abs(v) < 1e-300, 1e-300, v)
+
+    d = 1.0 / guard(1.0 - (a + b) * x / (a + 1.0))
+    c, h = 1.0, d
+    for e in range(1, 2 * n_iter + 1):
+        m = float((e + 1) // 2)
+        m2 = 2.0 * m
+        if e % 2 == 1:
+            aa = m * (b - m) * x / ((a - 1.0 + m2) * (a + m2))
+        else:
+            aa = -(a + m) * (a + b + m) * x / ((a + m2) * (a + 1.0 + m2))
+        d = 1.0 / guard(1.0 + aa * d)
+        c = guard(1.0 + aa / c)
+        h = h * d * c
+    return h
+
+
+def _p_gates(p: np.ndarray, rho: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Clip to [0, 1]; NaN (NULL) for n < 3; 0.0 at |ρ| ≥ 1. Spark orders
+    NaN above every number, so a NaN ρ counts as ≥ 1 and the clip takes a
+    NaN p to 1.0 (``fmin``), as ``least``/``greatest`` do."""
+    p = np.fmin(np.maximum(p, 0.0), 1.0)
+    return np.where(n < 3, np.nan, np.where(np.abs(rho) < 1.0, p, 0.0))
+
+
+def spearman_p_normal(rho: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Two-sided p of Spearman ρ over n samples via the t-statistic and
+    the normal approximation, the reference's no-SciPy fallback
+    (``correlation.py:50-61``). NaN is a NULL p."""
+    with np.errstate(all="ignore"):
+        t_stat = rho * np.sqrt((n - 2) / (1.0 - rho * rho))
+        cdf = 0.5 * (1.0 + _erf_np(np.abs(t_stat) / 2.0 ** 0.5))
+        return _p_gates(2.0 * (1.0 - cdf), rho, n)
+
+
+def spearman_p_student_t(
+    rho: np.ndarray, n: np.ndarray, n_iter: int = 200
+) -> np.ndarray:
+    """Two-sided exact Student-t p, ``I_{df/(df+t²)}(df/2, ½)`` with
+    ``df = n − 2`` (SciPy's semantics, ``correlation.py:11-12``), as
+    ``betainc_expr`` evaluates it: each row runs the continued fraction
+    once, on the side ``x < (a+1)/(a+b+2)`` picks. NaN is a NULL p."""
+    with np.errstate(all="ignore"):
+        df = n - 2.0
+        x = df / (df + rho * rho * df / (1.0 - rho * rho))
+        a, b = df / 2.0, 0.5
+        front = np.exp(
+            _lgamma_np(a + b) - _lgamma_np(a) - _lgamma_np(b)
+            + a * np.log(x) + b * np.log(1.0 - x)
+        )
+        direct = x < (a + 1.0) / (a + b + 2.0)
+        ca = np.where(direct, a, b)
+        cb, cx = np.where(direct, b, a), np.where(direct, x, 1.0 - x)
+        h = _betainc_cf_np(ca, cb, cx, n_iter)
+        inc = np.where(direct, front * h / ca, 1.0 - front * h / ca)
+        inc = np.where(x <= 0.0, 0.0, np.where(x >= 1.0, 1.0, inc))
+        return _p_gates(inc, rho, n)
 
 
 def average_rank(partition_cols: list[str], value_col: str) -> Column:
@@ -628,6 +725,8 @@ __all__ = [
     "normal_cdf_expr",
     "proportions_z_test",
     "round6",
+    "spearman_p_normal",
+    "spearman_p_student_t",
     "weighted_quantile",
     "welch_t_test",
 ]

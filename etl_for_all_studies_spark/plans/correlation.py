@@ -10,11 +10,12 @@ study (``_study_spearman``) after one exchange of the cells by
 ``study_key``. The kernel ranks each pair within its shared samples, as
 the reference does (``correlation.py:118``), and, since its task holds
 the study's whole BH family, finishes the family there too: p
-(``_p_normal`` or ``_p_student_t``) and BH q (``_bh_q``). A projection
-with no exchange adds the constant columns. The numpy p and BH are
-term-for-term ports of the JVM expressions kept as the executable spec
-in ``tests/spearman_reference.py``; tests pin the fused rows to that spec
-on the 1e-6 grid, and to the DuckDB oracle.
+(``functions/stats.py::spearman_p_normal`` or ``spearman_p_student_t``)
+and BH q (``_bh_q``). A projection with no exchange adds the constant
+columns. The numpy p and BH are term-for-term ports of the JVM
+expressions kept as the executable spec in ``tests/spearman_reference.py``;
+tests pin the fused rows to that spec on the 1e-6 grid, and to the DuckDB
+oracle.
 """
 from __future__ import annotations
 
@@ -26,9 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.stats import (
-    _A1, _A2, _A3, _A4, _A5, _HALF_LN_2PI, _LANCZOS_C, _LANCZOS_G, _P,
-)
+from ..functions.stats import spearman_p_normal, spearman_p_student_t
 
 MIN_SAMPLES_FOR_CORRELATION = 2  # reference correlation.py:65
 
@@ -41,91 +40,7 @@ def _utc_now_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds")
 
 
-def _erf(x: np.ndarray) -> np.ndarray:
-    """``stats.erf_expr`` in numpy: A&S 7.1.26, the same terms in the same
-    order, so p agrees with the JVM's to an ulp of each math call."""
-    ax = np.abs(x)
-    t = 1.0 / (1.0 + _P * ax)
-    poly = (
-        _A1 * t
-        + _A2 * np.power(t, 2.0)
-        + _A3 * np.power(t, 3.0)
-        + _A4 * np.power(t, 4.0)
-        + _A5 * np.power(t, 5.0)
-    )
-    return np.sign(x) * (1.0 - poly * np.exp(-ax * ax))
-
-
-def _p_gates(p: np.ndarray, rho: np.ndarray, n: np.ndarray) -> np.ndarray:
-    """Clip to [0, 1]; NaN (NULL) for n < 3; 0.0 at |ρ| ≥ 1. Spark orders
-    NaN above every number, so a NaN ρ counts as ≥ 1 and the clip takes a
-    NaN p to 1.0 (``fmin``), as ``least``/``greatest`` do."""
-    p = np.fmin(np.maximum(p, 0.0), 1.0)
-    return np.where(n < 3, np.nan, np.where(np.abs(rho) < 1.0, p, 0.0))
-
-
-def _p_normal(rho: np.ndarray, n: np.ndarray) -> np.ndarray:
-    """Two-sided p via the t-statistic and the normal approximation, the
-    reference's no-SciPy fallback (``correlation.py:50-61``)."""
-    with np.errstate(all="ignore"):
-        t_stat = rho * np.sqrt((n - 2) / (1.0 - rho * rho))
-        cdf = 0.5 * (1.0 + _erf(np.abs(t_stat) / 2.0 ** 0.5))
-        return _p_gates(2.0 * (1.0 - cdf), rho, n)
-
-
-def _lgamma(z: np.ndarray) -> np.ndarray:
-    """ln Γ(z), z > 0: the Lanczos sum of ``stats.lgamma_expr``."""
-    zm1 = z - 1.0
-    series = _LANCZOS_C[0]
-    for i, c in enumerate(_LANCZOS_C[1:], start=1):
-        series = series + c / (zm1 + float(i))
-    t = zm1 + (_LANCZOS_G + 0.5)
-    return _HALF_LN_2PI + (zm1 + 0.5) * np.log(t) - t + np.log(series)
-
-
-def _betainc_cf(a, b, x, n_iter: int) -> np.ndarray:
-    """``stats._betainc_cf_expr`` in numpy: modified Lentz over a fixed
-    2·``n_iter`` half-steps, no early exit, |v| < 1e-300 guarded."""
-    def guard(v):
-        return np.where(np.abs(v) < 1e-300, 1e-300, v)
-
-    d = 1.0 / guard(1.0 - (a + b) * x / (a + 1.0))
-    c, h = 1.0, d
-    for e in range(1, 2 * n_iter + 1):
-        m = float((e + 1) // 2)
-        m2 = 2.0 * m
-        if e % 2 == 1:
-            aa = m * (b - m) * x / ((a - 1.0 + m2) * (a + m2))
-        else:
-            aa = -(a + m) * (a + b + m) * x / ((a + m2) * (a + 1.0 + m2))
-        d = 1.0 / guard(1.0 + aa * d)
-        c = guard(1.0 + aa / c)
-        h = h * d * c
-    return h
-
-
-def _p_student_t(rho: np.ndarray, n: np.ndarray, n_iter: int = 200) -> np.ndarray:
-    """Two-sided exact Student-t p, ``I_{df/(df+t²)}(df/2, ½)`` with
-    ``df = n − 2`` (SciPy's semantics, ``correlation.py:11-12``), as
-    ``stats.betainc_expr`` evaluates it: each row runs the continued
-    fraction once, on the side ``x < (a+1)/(a+b+2)`` picks."""
-    with np.errstate(all="ignore"):
-        df = n - 2.0
-        x = df / (df + rho * rho * df / (1.0 - rho * rho))
-        a, b = df / 2.0, 0.5
-        front = np.exp(
-            _lgamma(a + b) - _lgamma(a) - _lgamma(b)
-            + a * np.log(x) + b * np.log(1.0 - x)
-        )
-        direct = x < (a + 1.0) / (a + b + 2.0)
-        ca = np.where(direct, a, b)
-        h = _betainc_cf(ca, np.where(direct, b, a), np.where(direct, x, 1.0 - x), n_iter)
-        inc = np.where(direct, front * h / ca, 1.0 - front * h / ca)
-        inc = np.where(x <= 0.0, 0.0, np.where(x >= 1.0, 1.0, inc))
-        return _p_gates(inc, rho, n)
-
-
-_P_VALUE = {"normal": _p_normal, "t": _p_student_t}
+_P_VALUE = {"normal": spearman_p_normal, "t": spearman_p_student_t}
 
 
 def _bh_q(p: np.ndarray) -> np.ndarray:
@@ -296,10 +211,10 @@ def compute_gene_pair_correlations(
     ``pvalue_dist`` pins the SURVEY §7.4.2 fork: ``"normal"`` (default) is
     the reference's no-SciPy fallback; ``"t"`` is SciPy's primary Student-t
     semantics (Lanczos ln Γ and the incomplete-beta continued fraction,
-    ``_p_student_t``; < 1e-12 vs SciPy). Both run in numpy inside the
-    kernel task, as does BH. The projection above the kernel has no
-    exchange: it stores a NULL p as 1.0 (O-39) and adds the constant
-    columns, which keeps strings out of the Arrow batches.
+    ``functions/stats.py::spearman_p_student_t``; < 1e-12 vs SciPy). Both
+    run in numpy inside the kernel task, as does BH. The projection above
+    the kernel has no exchange: it stores a NULL p as 1.0 (O-39) and adds
+    the constant columns, which keeps strings out of the Arrow batches.
     """
     sample = "sample_key" if "sample_key" in expression.columns else "gsm_accession"
     e = expression.select("study_key", "gene_key", sample, "expression_value")
